@@ -472,6 +472,17 @@ def _table_bytes(spark: SparkSession, sf_dir: str, name: str) -> int:
         return 0
 
 
+def _q21_large_bytes() -> int:
+    """tpch_q21's large-form threshold: SPARK_GRAFT_Q21_LARGE_BYTES, or
+    1 GiB when unset or malformed — a bad knob keeps the default form
+    rather than failing the query, as ``_table_bytes`` does."""
+
+    try:
+        return int(os.environ.get("SPARK_GRAFT_Q21_LARGE_BYTES", 1 << 30))
+    except ValueError:
+        return 1 << 30
+
+
 def q_tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H-Q3-shaped shipping-priority query driven through the
     PLAN DSL: segment/date Filters over three Scans, a two-step Join
@@ -1534,10 +1545,7 @@ def q_tpch_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
     # duplicate chain last measured cheaper. Identical multisets
     # either way (oracle-pinned); SPARK_GRAFT_Q21_LARGE_BYTES
     # overrides for the forced-large test.
-    large_bytes = int(
-        os.environ.get("SPARK_GRAFT_Q21_LARGE_BYTES", str(1 << 30))
-    )
-    if _table_bytes(spark, sf_dir, "lineitem") >= large_bytes:
+    if _table_bytes(spark, sf_dir, "lineitem") >= _q21_large_bytes():
         from pyspark.sql.window import Window as _W
 
         sole = (

@@ -16,10 +16,13 @@ not timestamps. Per epoch we build, for every touched binding i,
 as a Catalyst join chain (each pipeline compiles through the ordinary
 Hector compiler against a catalog of versioned snapshots), union the
 pipelines, and consolidate. Work per epoch is proportional to the
-CHANGE, not the accumulated state: every pipeline starts from a delta
-that Catalyst broadcasts when small. Snapshots are localCheckpoint-ed
-DataFrames (swap for Delta tables at cluster scale); lineage is
-truncated every epoch.
+CHANGE, not the accumulated state. A transacted batch is already on the
+driver, so ``epoch_deltas`` consolidates it there and ships each
+attribute's delta as an Arrow-built ``LocalRelation``: no Spark job
+runs before the pipelines, and the relation's exact size statistics
+let Catalyst broadcast the delta into every pipeline. Snapshots are
+localCheckpoint-ed DataFrames (swap for Delta tables at cluster scale),
+compacted every few epochs.
 
 Weighted multisets come for free: delta joins multiply ``diff``
 columns, so retractions (diff < 0) propagate through every pipeline
@@ -30,7 +33,9 @@ from __future__ import annotations
 
 from typing import Any, Iterable, Optional
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..engine import Datom
 from ..plan.compiler import (
@@ -42,12 +47,98 @@ from ..plan.compiler import (
     vcol,
 )
 from ..plan.plans import (
+    Aggregate,
     AggregationFn,
+    Antijoin,
     AntijoinBinding,
     AttributeBinding,
     Binding,
     Hector,
+    MatchA,
+    MatchAV,
+    MatchEA,
+    Negate,
+    Plan,
 )
+
+
+def local_frame(
+    spark: SparkSession, rows: list[tuple], names: list[str]
+) -> DataFrame:
+    """Driver-held rows as a ``LocalRelation`` built from one Arrow
+    table: creating it runs no Spark job, and its exact size statistics
+    let Catalyst broadcast it. The schema is the one
+    ``createDataFrame(rows)`` infers (Arrow's own inference differs,
+    e.g. decimal(3,2) where Spark gives decimal(38,18)), so the frame
+    unions with row-built attribute snapshots."""
+
+    schema = spark._inferSchemaFromList(rows, names=names)
+    table = pa.table(
+        dict(zip(names, map(list, zip(*rows)))),
+        schema=to_arrow_schema(schema),
+    )
+    return spark.createDataFrame(table, schema=schema)
+
+
+def epoch_deltas(
+    spark: SparkSession,
+    datoms: Iterable[Datom],
+    aids: set[str],
+    semantics: dict[str, "SemanticsDeltaSource"],
+) -> dict[str, DataFrame]:
+    """One epoch's (e, v, diff) delta per attribute in ``aids`` that
+    the batch changes. RAW attributes consolidate per (e, v) on the
+    driver and drop zero-weight rows, so an assert retracted in the
+    same batch yields no delta; LWW/Distinct attributes translate
+    through their ``semantics`` adapter (the collection delta is the
+    change of the EFFECTIVE view, not the raw datoms)."""
+
+    by_aid: dict[str, list[tuple[Any, Any, int]]] = {}
+    for d in datoms:
+        if d.a in aids:
+            by_aid.setdefault(d.a, []).append((d.e, d.v, d.diff))
+    out = {}
+    for aid, rows in by_aid.items():
+        if aid in semantics:
+            eff = semantics[aid].delta(rows)
+            if not eff.limit(1).isEmpty():
+                out[aid] = eff
+            continue
+        net: dict[tuple[Any, Any], int] = {}
+        for e, v, w in rows:
+            net[(e, v)] = net.get((e, v), 0) + w
+        live = [(e, v, w) for (e, v), w in net.items() if w]
+        if live:
+            out[aid] = local_frame(spark, live, ["e", "v", "diff"])
+    return out
+
+
+def _negated_attributes(plan, negated: bool = False) -> set[str]:
+    """Attributes ``plan`` reads in a non-monotone position: an
+    Antijoin's right side, an antijoin binding, or anywhere under
+    Negate or Aggregate. Adding a fact there can retract results."""
+
+    if isinstance(plan, (MatchA, MatchEA, MatchAV)):
+        return {plan.attribute} if negated else set()
+    if isinstance(plan, Hector):
+        return {
+            b.attribute
+            for b in plan.bindings
+            if isinstance(b, AntijoinBinding)
+            or (negated and isinstance(b, AttributeBinding))
+        }
+    if isinstance(plan, Antijoin):
+        return _negated_attributes(plan.left_plan, negated) | (
+            _negated_attributes(plan.right_plan, True)
+        )
+    negated = negated or isinstance(plan, (Negate, Aggregate))
+    out: set[str] = set()
+    for attr in getattr(plan, "__dataclass_fields__", {}):
+        v = getattr(plan, attr)
+        for item in v if isinstance(v, list) else [v]:
+            if isinstance(item, Plan):
+                out |= _negated_attributes(item, negated)
+    return out
 
 
 class SemanticsDeltaSource:
@@ -85,12 +176,10 @@ class SemanticsDeltaSource:
         """Effective-view changes caused by this epoch's datoms (which
         the engine has already transacted into the attribute)."""
 
-        spark = self.prev.sparkSession
-        touched = (
-            spark.createDataFrame([(r[0],) for r in batch_rows])
-            .toDF("e")
-            .distinct()
-            .localCheckpoint(eager=True)
+        touched = local_frame(
+            self.prev.sparkSession,
+            list(dict.fromkeys((r[0],) for r in batch_rows)),
+            ["e"],
         )
         hist = self._ta._raw_dataframe().join(touched, "e", "left_semi")
         new_eff = (
@@ -146,6 +235,12 @@ class DeltaJoin:
         self.attr_bindings = [
             b for b in self.core_bindings if isinstance(b, AttributeBinding)
         ]
+        # Attributes some binding references — a shared transaction
+        # stream may carry unrelated facts; tracking them would grow
+        # snapshots without ever affecting this query.
+        self.relevant = {b.attribute for b in self.attr_bindings} | {
+            b.attribute for b in self.anti_bindings
+        }
         # aid -> weighted (e, v, diff) snapshot of everything seen.
         # Snapshots append deltas LAZILY (a weighted union is the same
         # multiset as its consolidation) and compact+checkpoint every
@@ -173,26 +268,6 @@ class DeltaJoin:
             .agg(F.sum("diff").alias("diff"))
             .filter(F.col("diff") != 0)
         )
-
-    def _deltas(self, datoms: Iterable[Datom]) -> dict[str, DataFrame]:
-        by_aid: dict[str, list[tuple[Any, Any, int]]] = {}
-        for d in datoms:
-            by_aid.setdefault(d.a, []).append((d.e, d.v, d.diff))
-        out = {}
-        for aid, rows in by_aid.items():
-            if aid in self.semantics:
-                # LWW/Distinct: the collection delta is the change of
-                # the EFFECTIVE view, not the raw datoms.
-                eff = self.semantics[aid].delta(rows)
-                if not eff.limit(1).isEmpty():
-                    out[aid] = eff
-                continue
-            # Eagerly materialized: every pipeline references the
-            # delta, so one small checkpoint beats re-evaluating the
-            # consolidation per pipeline.
-            df = self.spark.createDataFrame(rows).toDF("e", "v", "diff")
-            out[aid] = self._consolidate(df).localCheckpoint(eager=True)
-        return out
 
     # -- the delta pipelines ---------------------------------------------
 
@@ -350,7 +425,9 @@ class DeltaJoin:
         as a DataFrame over ``variables + [diff]``. Cost is driven by
         the deltas, never by re-joining the full snapshots."""
 
-        return self._advance(self._deltas(datoms))
+        return self._advance(
+            epoch_deltas(self.spark, datoms, self.relevant, self.semantics)
+        )
 
     def transact_frame(self, batch_df: DataFrame) -> DataFrame:
         """Apply one transaction given as a DataFrame of datoms
@@ -371,13 +448,7 @@ class DeltaJoin:
         return self._advance(deltas)
 
     def _advance(self, deltas: dict[str, DataFrame]) -> DataFrame:
-        # Ignore attributes no binding references — a shared transaction
-        # stream may carry unrelated facts; tracking them would grow
-        # snapshots without ever affecting this query.
-        relevant = {b.attribute for b in self.attr_bindings} | {
-            b.attribute for b in self.anti_bindings
-        }
-        deltas = {a: df for a, df in deltas.items() if a in relevant}
+        deltas = {a: df for a, df in deltas.items() if a in self.relevant}
         news: dict[str, DataFrame] = {}
         for aid in set(self.snapshots) | set(deltas):
             if aid in deltas and aid in self.snapshots:
@@ -738,7 +809,8 @@ class IncrementalRecursion:
       eval(r over new inputs, cycle:=T) \\ T[r], then propagate
       D_{i+1}[r] = eval(delta step of r) \\ total[r] until every
       rule's delta is empty. Work tracks the delta, not |T|.
-    - retractions: DRed (delete-and-rederive) over the whole cycle.
+    - retractions, and any change to an attribute read under
+      negation: DRed (delete-and-rederive) over the whole cycle.
       Each T[r] is a fixpoint of the old inputs, so the one-step
       overdeletion seed is T[r] \\ eval(r over new inputs, cycle:=T);
       the closure then overdeletes tuples derivable only through
@@ -769,7 +841,6 @@ class IncrementalRecursion:
     ):
         from ..engine import _delta_step_plan
         from ..plan.compiler import Relation
-        from ..plan.plans import Plan
 
         if isinstance(rules, Plan):  # single self-recursive rule
             rules = {name: rules}
@@ -784,6 +855,9 @@ class IncrementalRecursion:
             rn: [vcol(v) for v in vs] for rn, vs in self.variables.items()
         }
         self.max_iterations = max_iterations
+        self.negated = set().union(
+            *(_negated_attributes(p) for p in self.rules.values())
+        )
         self.steps = {
             rn: _delta_step_plan(p, self.recursive)
             for rn, p in self.rules.items()
@@ -956,36 +1030,31 @@ class IncrementalRecursion:
     # -- epoch advancement ----------------------------------------------
 
     def transact(self, datoms: Iterable[Datom]) -> DataFrame:
-        by_aid: dict[str, list[tuple[Any, Any, int]]] = {}
-        relevant = set(self.snapshots)
-        for d in datoms:
-            if d.a in relevant:
-                by_aid.setdefault(d.a, []).append((d.e, d.v, d.diff))
+        datoms = list(datoms)
+        deltas = epoch_deltas(
+            self.spark, datoms, set(self.snapshots), self.semantics
+        )
+        rn0 = self.name
+        if not deltas:
+            return self._diffs(None, None)
 
+        # DRed runs when a fact may have lost support: a retraction, or
+        # any change to an attribute read under negation (adding a
+        # blocking fact retracts results).
+        retracted = {d.a for d in datoms if d.diff < 0}
         any_negative = False
-        for aid, rows_ in by_aid.items():
-            if aid in self.semantics:
-                # Rewrite-at-ingest semantics: the collection delta is
-                # the change of the effective view.
-                delta = self.semantics[aid].delta(rows_)
-                if delta.limit(1).isEmpty():
-                    continue
+        for aid, delta in deltas.items():
+            if aid in self.negated:
+                any_negative = True
+            elif aid in self.semantics:
                 if not delta.filter(F.col("diff") < 0).limit(1).isEmpty():
                     any_negative = True
-            else:
-                delta = DeltaJoin._consolidate(
-                    self.spark.createDataFrame(rows_).toDF("e", "v", "diff")
-                ).localCheckpoint(eager=True)
-                if any(r[2] < 0 for r in rows_):
-                    any_negative = True
+            elif aid in retracted:
+                any_negative = True
             merged = DeltaJoin._consolidate(
                 self.snapshots[aid].unionByName(delta)
             ).localCheckpoint(eager=True)
             self.snapshots[aid] = merged
-
-        rn0 = self.name
-        if not by_aid:
-            return self._diffs(None, None)
 
         views = self._views()
         t_old = dict(self.totals)
@@ -1171,13 +1240,6 @@ def incremental_recursion_for(engine, name: str):
     None otherwise."""
 
     from ..engine import InputSemantics, _is_monotone
-    from ..plan.plans import (
-        Hector as HectorPlan,
-        MatchA,
-        MatchAV,
-        MatchEA,
-        Plan,
-    )
 
     cycle = engine._recursive_rules(name)
     if not cycle or name not in cycle:
@@ -1196,7 +1258,7 @@ def incremental_recursion_for(engine, name: str):
         nonlocal unsupported
         if isinstance(p, (MatchA, MatchEA, MatchAV)):
             aids.add(p.attribute)
-        elif isinstance(p, HectorPlan):
+        elif isinstance(p, Hector):
             for b in p.bindings:
                 if isinstance(b, (AttributeBinding, AntijoinBinding)):
                     if isinstance(b, AntijoinBinding):

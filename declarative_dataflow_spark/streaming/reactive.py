@@ -13,9 +13,14 @@ previous epoch's snapshot with a distributed exceptAll — no
 driver-side relation state. For the streaming-source path the same
 diffing runs inside foreachBatch (see diff_sink).
 
-Scale notes: snapshots are cached DataFrames (swap for Delta tables at
-very large results); re-evaluation cost is one Catalyst job per epoch,
-which AQE sizes to the actual data.
+Scale notes: a transaction's datoms are on the driver already, so each
+maintainer's per-attribute deltas are consolidated there and shipped as
+Arrow-built LocalRelations (``incremental.epoch_deltas``) — no Spark job
+runs before the delta pipelines, and Catalyst broadcasts each delta on
+its exact statistics. Maintainer snapshots are localCheckpoint-ed,
+recompute snapshots cached DataFrames (swap for Delta tables at very
+large results); re-evaluation cost is one Catalyst job per epoch, which
+AQE sizes to the actual data.
 """
 
 from __future__ import annotations

@@ -728,20 +728,12 @@ def test_incremental_aggregate_over_recursion(engine):
     assert acc == expected
 
 
-def test_incremental_stratified_negation_randomized(engine):
-    """Gate: a recursive rule with negation over a STATIC-stratum
-    attribute (stratified, monotone w.r.t. its cycle) maintained
-    incrementally equals full recompute while BOTH the edge relation
-    and the negated relation churn."""
-
-    import random
+def _register_safe_reach(engine):
+    """Reachability that never enters a node with a ``blocked`` fact:
+    recursion with negation over a static-stratum attribute."""
 
     from declarative_dataflow_spark import Join, MatchA, NameExpr, Union
     from declarative_dataflow_spark.plan.plans import Antijoin, Project
-    from declarative_dataflow_spark.streaming.incremental import (
-        IncrementalRecursion,
-    )
-    from declarative_dataflow_spark.streaming.reactive import ReactiveSession
 
     engine.create_attribute("edge")
     engine.create_attribute("blocked")
@@ -767,6 +759,22 @@ def test_incremental_stratified_negation_randomized(engine):
             ],
         ),
     )
+
+
+def test_incremental_stratified_negation_randomized(engine):
+    """Gate: a recursive rule with negation over a STATIC-stratum
+    attribute (stratified, monotone w.r.t. its cycle) maintained
+    incrementally equals full recompute while BOTH the edge relation
+    and the negated relation churn."""
+
+    import random
+
+    from declarative_dataflow_spark.streaming.incremental import (
+        IncrementalRecursion,
+    )
+    from declarative_dataflow_spark.streaming.reactive import ReactiveSession
+
+    _register_safe_reach(engine)
     session = ReactiveSession(engine)
     session.interest("safe_reach")
     assert isinstance(
@@ -800,6 +808,25 @@ def test_incremental_stratified_negation_randomized(engine):
         {tuple(r): 1 for r in engine.interest("safe_reach").collect()}
     )
     assert acc == expected
+
+
+def test_incremental_recursion_blocking_add_retracts(engine):
+    """Adding a fact to an attribute read under negation retracts every
+    path it now blocks, even in a batch with no retraction at all."""
+
+    from declarative_dataflow_spark.streaming.reactive import ReactiveSession
+
+    _register_safe_reach(engine)
+    session = ReactiveSession(engine)
+    session.interest("safe_reach")
+    session.transact([Datom.add(1, "edge", 2), Datom.add(2, "edge", 3)])
+    session.transact([Datom.add(3, "blocked", 1)])
+
+    acc = _accumulate(session.interests["safe_reach"].history)
+    assert acc == Counter({(1, 2): 1})
+    assert acc == Counter(
+        tuple(r) for r in engine.interest("safe_reach").collect()
+    )
 
 
 def test_delta_join_lww_attribute(engine):
@@ -933,6 +960,116 @@ def test_incremental_recursion_lww_edges(engine):
     assert acc == expected
     # semantics: 2 now reaches 5, not 3/4
     assert (2, 5) in acc and (2, 3) not in acc and (1, 4) not in acc
+
+
+def test_epoch_delta_schema_matches_row_inference(spark):
+    """A driver-built delta has exactly the schema ``createDataFrame``
+    infers for the same rows, for every scalar wire value type — Arrow
+    alone would type the Real column decimal(3,2), which would not
+    union with a row-built decimal(38,18) snapshot — and plans as a
+    LocalRelation with exact row-count statistics."""
+
+    from declarative_dataflow_spark.plan.wire import decode_value
+    from declarative_dataflow_spark.streaming.incremental import epoch_deltas
+
+    values = {
+        "eid": [{"Eid": 5}, {"Eid": 7}],
+        "number": [{"Number": -3}, {"Number": 1 << 40}],
+        "string": [{"String": "x"}, {"String": "y"}],
+        "bool": [{"Bool": True}, {"Bool": False}],
+        "real": [{"Real": 81920}, {"Real": -98304}],
+    }
+    batch = [
+        Datom(e, aid, decode_value(v), None, w)
+        for aid, vs in values.items()
+        for e, (v, w) in enumerate(zip(vs, (1, -1)), start=1)
+    ]
+    deltas = epoch_deltas(spark, batch, set(values), {})
+    assert set(deltas) == set(values)
+    for aid, df in deltas.items():
+        rows = [(d.e, d.v, d.diff) for d in batch if d.a == aid]
+        inferred = spark.createDataFrame(rows).toDF("e", "v", "diff")
+        assert df.schema == inferred.schema, aid
+        assert sorted(df.collect()) == sorted(inferred.collect()), aid
+        qe = df._jdf.queryExecution()
+        assert qe.optimizedPlan().nodeName() == "LocalRelation", aid
+        assert qe.optimizedPlan().stats().rowCount().get() == 2, aid
+    assert dict(deltas["real"].dtypes)["v"] == "decimal(38,18)"
+
+
+def test_epoch_deltas_run_no_spark_job(spark):
+    """Building a DeltaJoin's epoch deltas runs no Spark job, and
+    attributes no binding references never become deltas."""
+
+    from declarative_dataflow_spark.streaming.incremental import epoch_deltas
+
+    dj = DeltaJoin(
+        spark,
+        ["?e", "?n", "?a"],
+        [
+            AttributeBinding("?e", "name", "?n"),
+            AttributeBinding("?e", "age", "?a"),
+        ],
+    )
+    batch = [Datom.add(e, "name", f"n{e}") for e in range(50)]
+    batch += [Datom.add(e, "age", e % 7) for e in range(50)]
+    batch += [Datom.add(e, "unrelated", "x") for e in range(50)]
+    sc = spark.sparkContext
+    group = "test_epoch_deltas_run_no_spark_job"
+    tracker = sc.statusTracker()
+    sc.setJobGroup(group, "epoch deltas", False)
+    try:
+        deltas = epoch_deltas(spark, batch, dj.relevant, dj.semantics)
+        assert list(tracker.getJobIdsForGroup(group)) == []
+        assert set(deltas) == {"name", "age"}
+        assert deltas["age"].count() == 50  # the group does count jobs
+        assert list(tracker.getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def test_cancelled_batch_yields_no_delta(spark, engine):
+    """A batch that asserts and retracts the same datom nets to zero on
+    the driver: no delta reaches the pipelines, and both a maintained
+    join and a maintained recursion still equal ``Engine.interest``."""
+
+    from declarative_dataflow_spark import Join, MatchA
+    from declarative_dataflow_spark.streaming.incremental import (
+        IncrementalRecursion,
+        epoch_deltas,
+    )
+    from declarative_dataflow_spark.streaming.reactive import ReactiveSession
+
+    cancelled = [Datom.add(3, "edge", 4), Datom.retract(3, "edge", 4)]
+    assert epoch_deltas(spark, cancelled, {"edge"}, {}) == {}
+
+    engine.create_attribute("edge")
+    engine.register("reach", _reach_rule())
+    engine.register(
+        "hop2",
+        Join(["?m"], MatchA("?x", "edge", "?m"), MatchA("?m", "edge", "?y")),
+    )
+    session = ReactiveSession(engine)
+    session.interest("reach")
+    session.interest("hop2")
+    assert isinstance(
+        session.interests["reach"].delta_join, IncrementalRecursion
+    )
+    assert isinstance(session.interests["hop2"].delta_join, DeltaJoin)
+
+    session.transact([Datom.add(1, "edge", 2), Datom.add(2, "edge", 3)])
+    session.transact(cancelled)
+    for name in ("reach", "hop2"):
+        assert session.interests[name].history[-1][1] == [], name
+    session.transact(cancelled + [Datom.add(3, "edge", 1)])
+
+    for name in ("reach", "hop2"):
+        acc = _accumulate(session.interests[name].history)
+        full = engine.interest(name)
+        if "diff" in full.columns:
+            full = full.drop("diff")
+        assert acc == Counter(tuple(r) for r in full.collect()), name
+        assert acc and max(acc.values()) == 1, name
 
 
 def test_incremental_aggregate_over_named_view(engine):

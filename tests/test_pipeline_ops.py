@@ -814,6 +814,50 @@ def test_jaccard_prefix_ceil_integral_product(spark):
     assert plain == filtered and plain
 
 
+def test_jaccard_group_identical_exact(spark):
+    """Grouping identical shingle sets before pairing returns EXACTLY
+    the ungrouped pairs: within-group pairs at 1.0 and cross-group
+    pairs at the representatives' Jaccard, on a corpus of exact
+    duplicates (reordered and with repeated words — the same set),
+    near-duplicates one word apart, and unrelated documents, at
+    thresholds up to 1.0, with and without the prefix filter."""
+
+    import random
+
+    rng = random.Random(29)
+    vocab = [f"w{i}" for i in range(24)]
+    rows = []
+    doc_id = 0
+    for _ in range(4):
+        base = rng.sample(vocab, 6)
+        variants = [
+            base,
+            list(reversed(base)),
+            base + base[:2],
+            base[:-1] + [rng.choice([w for w in vocab if w not in base])],
+        ]
+        for words in variants:
+            rows.append((doc_id, " ".join(words)))
+            doc_id += 1
+    for _ in range(4):
+        rows.append((doc_id, " ".join(rng.sample(vocab, 5))))
+        doc_id += 1
+    docs = spark.createDataFrame(rows, ["doc_id", "text"])
+
+    def pairs(**kw):
+        return {
+            (r["a"], r["b"], r["jaccard"])
+            for r in dedup.jaccard_pairs(docs, n=1, **kw).collect()
+        }
+
+    for t in (0.3, 0.7, 1.0):
+        for pf in (False, True):
+            plain = pairs(threshold=t, prefix_filter=pf)
+            grouped = pairs(threshold=t, prefix_filter=pf, group_identical=True)
+            assert grouped == plain, (t, pf)
+            assert any(j == 1.0 for _, _, j in plain), (t, pf)
+
+
 def test_simhash_neardup_banded_equals_bruteforce(spark):
     """The Manku-banded Hamming-LSH pairs equal exact all-pairs
     bit_count(xor) <= d for every d < bands (the pigeonhole lemma

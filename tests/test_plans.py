@@ -806,3 +806,18 @@ def test_tpch_q21_large_form_single_pairs_chain(spark, monkeypatch):
     large_scans = phys.count("lineitem.parquet")
     assert large_scans < small_scans, (large_scans, small_scans)
     assert "CartesianProduct" not in phys
+
+
+def test_tpch_q21_large_bytes_knob_fails_safe(monkeypatch):
+    """A malformed SPARK_GRAFT_Q21_LARGE_BYTES falls back to the 1 GiB
+    default instead of raising; a valid value still overrides it."""
+
+    import __spark_entry__ as entry_mod
+
+    monkeypatch.delenv("SPARK_GRAFT_Q21_LARGE_BYTES", raising=False)
+    assert entry_mod._q21_large_bytes() == 1 << 30
+    for bad in ("", "1GiB", "1e9", "not-a-number"):
+        monkeypatch.setenv("SPARK_GRAFT_Q21_LARGE_BYTES", bad)
+        assert entry_mod._q21_large_bytes() == 1 << 30, bad
+    monkeypatch.setenv("SPARK_GRAFT_Q21_LARGE_BYTES", "0")
+    assert entry_mod._q21_large_bytes() == 0
