@@ -3762,7 +3762,7 @@ def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hard-negative mining (NEW in r9): per probe, the top-5
     most-similar vectors with a DIFFERENT label — the contrastive-
-    training companion to cosine_topk. Same engine ladder and
+    training companion to cosine_topk. Same Arrow kernel and
     determinism contract; the label filter runs before the rank
     window, one corpus scan + broadcast probe labels."""
 

@@ -7,10 +7,11 @@ per-group top-k selection — the operations that turn a filtered
 document set into an actual training mix.
 
 All operators are pure DataFrame compositions of JVM-side SQL
-functions (no Python UDFs), each with an exact DuckDB-SQL twin for the
-correctness gate. Determinism rules match sampling.py: any "random"
-order comes from a content hash (md5), never RNG state, so results are
-identical across runs, engines, and cluster sizes.
+functions, except semdedup's per-cell pair kernel (Arrow-batched
+numpy), each with an exact DuckDB-SQL twin for the correctness gate.
+Determinism rules match sampling.py: any "random" order comes from a
+content hash (md5), never RNG state, so results are identical across
+runs, engines, and cluster sizes.
 
 Scale design per operator:
 
@@ -32,6 +33,8 @@ Scale design per operator:
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from .dedup import shingles
@@ -841,28 +844,17 @@ def winsorize(
     )
 
 
-def _numpy_cell_pairs(base, threshold: float, dim: int):
+def _numpy_cell_pairs(base: DataFrame, threshold: float, dim: int) -> DataFrame:
     """Within-cell cosine pairs via Arrow-batched numpy: (a, b, cos)
-    with a < b, rounded and thresholded JVM-side for bit-parity with
-    the all-JVM pair join (see the semdedup call site). ``dim`` is the
-    CORPUS-wide vector width (the same constant the JVM dot unrolls
-    over). Shorter-than-dim vectors DROP their pairs here — strictly
-    more tolerant than the JVM unroll, which raises
-    INVALID_ARRAY_INDEX on them under Spark 4's ANSI mode. Returns
-    None when numpy/pandas are unavailable."""
-
-    try:
-        import numpy as np  # noqa: F401
-        import pandas as pd  # noqa: F401
-    except ImportError:  # pragma: no cover - numpy is baked in here
-        return None
-    import numpy as np
+    with a < b and ``round(cos, 4) >= threshold``; the round and the
+    filter run JVM-side (see the semdedup call site). ``dim`` is the
+    CORPUS-wide vector width; longer vectors contribute their
+    dim-prefix, and NULL or shorter-than-dim vectors DROP their
+    pairs."""
 
     margin = threshold - 5e-5 - 1e-12
 
     def pairs(pdf):
-        import pandas as pd
-
         n = len(pdf)
         ids_raw = pdf["id"].to_numpy()
         if n < 2 or not dim:
@@ -901,11 +893,11 @@ def _numpy_cell_pairs(base, threshold: float, dim: int):
         iu, ju = np.triu_indices(n, 1)
         c = cos[iu, ju]
         keep = ok[iu] & ok[ju] & (c >= margin)
-        # The JVM pair join filters a < b by VALUE; triu pairs by
-        # POSITION after the id sort, so duplicate ids in a cell would
-        # emit a self-pair (a==b, cos=1.0) the JVM path never produces
-        # — StreamSemDeDup feeds state rows and batch rows through one
-        # cell group, and a re-sent id must not drop itself here.
+        # Pairs are a < b by VALUE; triu pairs by POSITION after the
+        # id sort, so duplicate ids in a cell would emit a self-pair
+        # (a==b, cos=1.0) — StreamSemDeDup feeds state rows and batch
+        # rows through one cell group, and a re-sent id must not drop
+        # itself here.
         keep &= ids[iu] != ids[ju]
         return pd.DataFrame(
             {"a": ids[iu[keep]], "b": ids[ju[keep]], "cos": c[keep]}
@@ -939,8 +931,9 @@ def semdedup(
     LSH families).
 
     Shape: assignments from :func:`kmeans_assign` (broadcast-centroid
-    passes, deterministic); the pair join is an equi-join on the cell
-    id; cosines are row-local array folds rounded to 4 decimals.
+    passes, deterministic); pairs are scored per cell by an
+    Arrow-batched numpy kernel (:func:`_numpy_cell_pairs`) over one
+    cell-keyed exchange, cosines rounded to 4 decimals.
     At 100 TB the cell count k scales with the corpus so per-cell
     membership stays bounded — k is the density lever, exactly like
     LSH planes and SimHash block width. ``k="auto"`` (the default,
@@ -951,12 +944,7 @@ def semdedup(
     join stays linear.
     """
 
-    from .similarity import (
-        _assign_cells,
-        density_cells,
-        ivf_centroids,
-        _norm,
-    )
+    from .similarity import _assign_cells, density_cells, ivf_centroids
 
     stats = embeddings.select(
         F.count(F.lit(1)).alias("n"),
@@ -968,85 +956,29 @@ def semdedup(
     # Fused assignment (r12): keep_vec rides the vector through the
     # argmax kernel, so the (id, v, cell) base table needs no corpus
     # join-back — the r11 shape paid one full exchange of the vector
-    # table plus one of the assignment for the equi-join here. The
-    # per-row norm is only needed by the JVM fallback pair join (the
-    # numpy pair kernel recomputes norms batch-side), so it moves
-    # into that branch instead of being computed for every row here.
+    # table plus one of the assignment for the equi-join here.
     cents = ivf_centroids(embeddings, k, iters, id_col, vec_col)
-    assigned = _assign_cells(embeddings, cents, id_col, vec_col, keep_vec=True)
-    if "v" in assigned.columns:
-        base = assigned.select(F.col("vec_id").alias("id"), "v", "cell")
-    else:
-        base = embeddings.select(
-            F.col(id_col).alias("id"), F.col(vec_col).alias("v")
-        ).join(assigned.withColumnRenamed("vec_id", "id"), "id")
-    # Both sides of the pair join derive from this table — checkpoint
-    # once (the materialize-once discipline).
-    base = base.localCheckpoint(eager=False)
+    base = (
+        _assign_cells(embeddings, cents, id_col, vec_col, keep_vec=True)
+        .select(F.col("vec_id").alias("id"), "v", "cell")
+        .localCheckpoint(eager=False)
+    )
 
-    # Preferred pair engine: Arrow-batched numpy per cell. The JVM
-    # equi-join path below is codegen-correct but its fused 64-term
-    # dot lands past HotSpot's huge-method JIT ceiling and evaluates
-    # as interpreted bytecode (~5µs/pair — measured ~25s of the sf1
-    # wall on 2.6M within-cell pairs; numpy: <1s). Bit-parity is by
-    # construction: the pair matrix accumulates one OUTER PRODUCT per
-    # dimension, ASCENDING — each pair's dot receives its terms in
-    # exactly the SQL chain's left-assoc order — norms accumulate the
-    # same way, and the numpy side emits RAW cosines with a sound
-    # candidate margin (cos >= threshold - 5e-5 - 1e-12, the widest
-    # value that can still round up to the threshold at 4 decimals);
-    # the exact round(.,4)+filter stays JVM-side so the kept set is
-    # bit-identical to the all-JVM path. Cell groups are the same
-    # shuffle the equi-join pays; per-cell memory is O(occupancy²)
-    # doubles, bounded by the density-derived k (~target_cell rows).
-    numpy_pairs = _numpy_cell_pairs(base, threshold, dim)
-    if numpy_pairs is not None:
-        return numpy_pairs
-    base = base.withColumn("nrm", _norm("v"))
-    left = base.select(
-        F.col("cell"),
-        F.col("id").alias("a"),
-        F.col("v").alias("va"),
-        F.col("nrm").alias("na"),
-    )
-    right = base.select(
-        F.col("cell"),
-        F.col("id").alias("b"),
-        F.col("v").alias("vb"),
-        F.col("nrm").alias("nb"),
-    )
-    # The per-pair dot is THE hot expression (it runs once per
-    # within-cell pair, not per row). A static positional sum is
-    # whole-stage-codegen arithmetic where the aggregate(zip_with)
-    # fold evaluates interpreted lambdas per element; the left-assoc
-    # `+` chain is the exact fold order of the aggregate form (0.0 +
-    # x0 is exactly x0), hence bit-identical doubles. NOTE: under
-    # Spark 4's ANSI mode an out-of-range index (ragged vector)
-    # RAISES INVALID_ARRAY_INDEX — ragged corpora are an input error
-    # on this JVM path (the numpy engine above tolerates them by
-    # dropping the affected pairs).
-    if dim:
-        dot = F.expr(
-            " + ".join(
-                f"CAST(va[{i}] AS DOUBLE) * CAST(vb[{i}] AS DOUBLE)"
-                for i in range(dim)
-            )
-        )
-    else:
-        dot = F.expr(
-            "aggregate(zip_with(va, vb, (x, y) -> x * y), "
-            "CAST(0.0 AS DOUBLE), (acc, z) -> acc + z)"
-        )
-    return (
-        left.join(right, "cell")
-        .filter(F.col("a") < F.col("b"))
-        .select(
-            "a",
-            "b",
-            F.round(dot / (F.col("na") * F.col("nb")), 4).alias("cos"),
-        )
-        .filter(F.col("cos") >= threshold)
-    )
+    # Pair engine: Arrow-batched numpy per cell. A JVM equi-join's
+    # fused 64-term dot lands past HotSpot's huge-method JIT ceiling
+    # and evaluates as interpreted bytecode (~5µs/pair — measured ~25s
+    # of the sf1 wall on 2.6M within-cell pairs; numpy: <1s). Parity
+    # with the SQL cosine is by construction: the pair matrix
+    # accumulates one OUTER PRODUCT per dimension, ASCENDING — each
+    # pair's dot receives its terms in exactly the SQL chain's
+    # left-assoc order — norms accumulate the same way, and the numpy
+    # side emits RAW cosines with a sound candidate margin (cos >=
+    # threshold - 5e-5 - 1e-12, the widest value that can still round
+    # up to the threshold at 4 decimals); the exact round(.,4)+filter
+    # stays JVM-side. Cell groups are one shuffle; per-cell memory is
+    # O(occupancy²) doubles, bounded by the density-derived k
+    # (~target_cell rows).
+    return _numpy_cell_pairs(base, threshold, dim)
 
 
 def snapshot_diff(

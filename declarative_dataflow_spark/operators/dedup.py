@@ -2,9 +2,9 @@
 
 Beyond-reference extensions (BASELINE.json): exact hash dedup,
 n-gram Jaccard near-dup, MinHash+LSH, SimHash. All built from JVM-side
-SQL primitives (md5, higher-order array functions, hash-joins) — no
-Python in the hot path — and each with an exact DuckDB twin for the
-correctness gate.
+SQL primitives (md5, higher-order array functions, hash-joins) except
+the SimHash fingerprint, an exact-integer Arrow-batched numpy kernel —
+and each with an exact DuckDB twin for the correctness gate.
 
 Scale design (100 TB):
 - exact dedup: one shuffle on the content hash.
@@ -19,6 +19,10 @@ Scale design (100 TB):
 
 from __future__ import annotations
 
+import hashlib
+
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
 
@@ -855,35 +859,40 @@ def fuzzy_match_groups(
     )
 
 
-def _numpy_simhash(docs: DataFrame, bits: int, text_col: str):
-    """Arrow-batched SimHash fingerprints: (doc_id, simhash) — the
-    numpy engine under :func:`simhash`. Exact-integer parity with the
-    SQL fold: hashlib.md5(token).hexdigest()[:nhex] equals
-    substring(md5(token), 1, nhex) (same UTF-8 MD5, same hex prefix),
-    the +1/-1 bit counters are an integer sum over the DISTINCT token
-    set (order-free, so set() is safe), and the fingerprint packs
-    s > 0 bits exactly like the SQL IF chain. NULL text yields a NULL
+def simhash(docs: DataFrame, bits: int = 32, text_col: str = "text") -> DataFrame:
+    """Per-document SimHash over the distinct word set: (doc_id, simhash).
+
+    For each bit b: sum +1/-1 over tokens by whether bit b of the
+    token's ``bits``-wide md5-prefix hash is set; the fingerprint sets
+    bit b iff the sum is positive. Pure integer arithmetic -> portable
+    to SQL. ``bits`` <= 60 (the fingerprint lives in a signed 64-bit
+    column); WIDER fingerprints are the density lever for banded
+    Hamming near-dup search — block width bits/bands fixes the bucket
+    count at 2^(bits/bands), so a corpus that outgrows its buckets
+    needs more bits, not more bands (more bands with the same distance
+    budget only loosens the pigeonhole filter).
+
+    Engine: an Arrow-batched numpy kernel, map-only. A SQL form is a
+    PER-TOKEN interpreted fold (aggregate over zip_with over ``bits``
+    counters — tokens x bits lambda evaluations per document); at sf1
+    it dominated simhash_neardup's 24s wall. The kernel is
+    EXACT-INTEGER end to end, so it matches the SQL twin bit for bit:
+    hashlib.md5(token).hexdigest()[:nhex] equals substring(md5(token),
+    1, nhex) (same UTF-8 MD5, same hex prefix), the +1/-1 bit counters
+    are an integer sum over the DISTINCT token set (order-free), and
+    the fingerprint packs s > 0 bits. NULL text yields a NULL
     fingerprint. Tokenization mirrors split(lower(text), ' ')
     verbatim: literal single-space split (consecutive spaces produce
-    empty tokens, kept once by distinct), Python str.lower vs Java
+    empty tokens, kept once by distinct); Python str.lower and Java
     toLowerCase diverge only on exotic locale-sensitive code points.
-    Returns None when numpy/pandas are unavailable."""
+    """
 
-    try:
-        import numpy as np  # noqa: F401
-        import pandas as pd  # noqa: F401
-    except ImportError:  # pragma: no cover - numpy is baked in here
-        return None
-    import hashlib
-
-    import numpy as np
-
+    if not 0 < bits <= 60:
+        raise ValueError(f"bits must be in 1..60 (got {bits})")
     nhex = (bits + 3) // 4
     shifts = None
 
     def fp(batches):
-        import pandas as pd
-
         nonlocal shifts
         if shifts is None:
             shifts = np.arange(bits, dtype=np.uint64)
@@ -931,55 +940,6 @@ def _numpy_simhash(docs: DataFrame, bits: int, text_col: str):
         src = src.repartition(par)
     id_type = dict(src.dtypes)["doc_id"]
     return src.mapInPandas(fp, f"doc_id {id_type}, simhash long")
-
-
-def simhash(docs: DataFrame, bits: int = 32, text_col: str = "text") -> DataFrame:
-    """Per-document SimHash over the distinct word set: (doc_id, simhash).
-
-    For each bit b: sum +1/-1 over tokens by whether bit b of the
-    token's ``bits``-wide md5-prefix hash is set; the fingerprint sets
-    bit b iff the sum is positive. Pure integer arithmetic -> portable
-    to SQL. ``bits`` <= 60 (the fingerprint lives in a signed 64-bit
-    column); WIDER fingerprints are the density lever for banded
-    Hamming near-dup search — block width bits/bands fixes the bucket
-    count at 2^(bits/bands), so a corpus that outgrows its buckets
-    needs more bits, not more bands (more bands with the same distance
-    budget only loosens the pigeonhole filter).
-    """
-
-    if not 0 < bits <= 60:
-        raise ValueError(f"bits must be in 1..60 (got {bits})")
-    # Preferred engine: Arrow-batched numpy. The SQL form below is a
-    # PER-TOKEN interpreted fold (aggregate over zip_with over `bits`
-    # counters — tokens x bits lambda evaluations per document); at
-    # sf1 it dominated simhash_neardup's 24s wall. The numpy kernel is
-    # EXACT-INTEGER end to end — md5 hex prefix == substring(md5(s)),
-    # popcount-style bit sums in int64, no float anywhere — so there
-    # is no fold-order question at all; the only shared semantics are
-    # lower() + single-space split + distinct, mirrored verbatim.
-    np_df = _numpy_simhash(docs, bits, text_col)
-    if np_df is not None:
-        return np_df
-    # Entirely row-local: hash the distinct word set, fold it once into
-    # a per-bit counter array, then collapse the counters into the
-    # fingerprint. Map-only — zero shuffle at any scale.
-    nhex = (bits + 3) // 4
-    hw = (
-        f"transform(array_distinct(split(lower({text_col}), ' ')), "
-        f"s -> CAST(conv(substring(md5(s), 1, {nhex}), 16, 10) AS BIGINT))"
-    )
-    zeros = f"transform(sequence(0, {bits - 1}), x -> CAST(0 AS BIGINT))"
-    counts = (
-        f"aggregate({hw}, {zeros}, (acc, h) -> "
-        f"zip_with(acc, sequence(0, {bits - 1}), "
-        "(c, b) -> c + CASE WHEN ((h >> b) & 1) = 1 THEN 1 ELSE -1 END))"
-    )
-    fingerprint = (
-        f"aggregate(zip_with({counts}, sequence(0, {bits - 1}), "
-        "(s, b) -> IF(s > 0, shiftleft(CAST(1 AS BIGINT), b), "
-        "CAST(0 AS BIGINT))), CAST(0 AS BIGINT), (acc, v) -> acc + v)"
-    )
-    return docs.select("doc_id", F.expr(fingerprint).alias("simhash"))
 
 
 def simhash_neardup_pairs(

@@ -379,7 +379,7 @@ def mmr_rerank(
     step 1 is the pure-relevance argmax (empty selected set).
 
     Scale shape: candidates come from :func:`..similarity.cosine_topk`
-    (probe-bounded, the engine ladder + tie discipline), so EVERY
+    (probe-bounded, the Arrow kernel + tie discipline), so EVERY
     table after the candidate pass is |queries| × depth or smaller —
     the candidate pair-sim table is |q|·depth² rows. Both are
     PROBE-BOUNDED, so (r12) they collect to the driver and the k-step

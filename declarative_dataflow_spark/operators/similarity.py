@@ -2,9 +2,12 @@
 
 Beyond-reference extensions (BASELINE.json): brute-force cosine top-k
 as the exact baseline, and an LSH-bucketed (random hyperplane) variant
-as the scale path. Embeddings are ``array<float>`` columns; all vector
-math uses built-in higher-order functions (zip_with + aggregate), which
-execute JVM-side — no Python UDFs.
+as the scale path. Embeddings are ``array<float>`` columns. The dense
+kernels (exact cosine scoring, k-means cell assignment, PQ codebook
+assignment) run as Arrow-batched numpy over ``mapInPandas``, folding
+dimensions in ascending order like the SQL helpers below; the rest of
+the vector math uses built-in higher-order functions (zip_with +
+aggregate), which execute JVM-side.
 
 Scale design (100 TB):
 - brute force is O(|Q| * |N|): correct for verification and small
@@ -20,6 +23,8 @@ from __future__ import annotations
 
 from typing import Optional, Union
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 
 
@@ -83,46 +88,22 @@ def cosine_topk(
 
     Returns (q, neighbor, sim, rank); sim rounded to 4 decimals and
     ties broken by neighbor id so results are deterministic across
-    engines. Queries are broadcast — one scan of the corpus; norms are
-    hoisted to per-row columns so each is computed once, not once per
+    engines. Queries are broadcast — one scan of the corpus; each
+    corpus row's norm is computed once per batch, not once per
     (query, neighbor) pair.
     """
 
     from pyspark.sql.window import Window
 
-    # Preferred scoring engine: Arrow-batched numpy (raw sims; the
-    # exact round(.,4) + ranking stays JVM-side). The zip_with/
-    # aggregate dot is an interpreted per-element lambda — on a 20k x
-    # 64 corpus with 32 probes it is the whole cost of retrieval_eval.
-    # Parity contract as everywhere: dots and norms accumulate
-    # dim-ascending in IEEE float64 (the aggregate fold's exact
-    # order), zero-norm or length-mismatched pairs drop exactly like
-    # the SQL NULL algebra drops them.
+    # Scoring engine: Arrow-batched numpy (raw sims; the exact
+    # round(.,4) + ranking stays JVM-side). The zip_with/aggregate dot
+    # is an interpreted per-element lambda — on a 20k x 64 corpus with
+    # 32 probes it was the whole cost of retrieval_eval. Parity
+    # contract as everywhere: dots and norms accumulate dim-ascending
+    # in IEEE float64 (the aggregate fold's exact order), zero-norm or
+    # length-mismatched pairs drop exactly like the SQL NULL algebra
+    # drops them.
     scored = _numpy_cosine_scores(embeddings, query_ids, id_col, vec_col)
-    if scored is None:
-        q = embeddings.filter(F.col(id_col).isin(query_ids)).select(
-            F.col(id_col).alias("q"),
-            F.col(vec_col).alias("qv"),
-            _norm(vec_col).alias("q_norm"),
-        )
-        n = embeddings.select(
-            F.col(id_col).alias("neighbor"),
-            F.col(vec_col).alias("nv"),
-            _norm(vec_col).alias("n_norm"),
-        )
-        scored = (
-            n.crossJoin(F.broadcast(q))
-            .filter(F.col("q") != F.col("neighbor"))
-            .withColumn(
-                "sim",
-                # nullif guards zero-norm vectors (ANSI divide-by-
-                # zero); they have no meaningful cosine neighbors and
-                # drop out.
-                _dot("qv", "nv")
-                / F.nullif(F.col("q_norm") * F.col("n_norm"), F.lit(0.0)),
-            )
-            .select("q", "neighbor", "sim")
-        )
     sims = scored.withColumn("sim", F.round(F.col("sim"), 4)).filter(
         F.col("sim").isNotNull()
     )
@@ -153,12 +134,12 @@ def hard_negatives(
     (round(sim, 4), neighbor-id tiebreak), rows with a NULL label on
     either side drop (SQL != algebra, identical in any engine).
 
-    Scoring rides the same engine ladder as cosine_topk (Arrow numpy
-    kernel, JVM broadcast fallback); labels attach via one id-keyed
-    equi-join on the corpus side plus a broadcast of the probe-sized
-    query-label table, so the pass stays one corpus scan. The
-    label filter runs BEFORE the rank window, so the per-query
-    partition the window sorts is candidate-sized, never appended-k.
+    Scoring rides the same Arrow numpy kernel as cosine_topk; labels
+    attach via one id-keyed equi-join on the corpus side plus a
+    broadcast of the probe-sized query-label table, so the pass stays
+    one corpus scan. The label filter runs BEFORE the rank window, so
+    the per-query partition the window sorts is candidate-sized, never
+    appended-k.
     """
 
     from pyspark.sql.window import Window
@@ -170,27 +151,6 @@ def hard_negatives(
         F.col(id_col).alias("q"), F.col(label_col).alias("q_label")
     )
     scored = _numpy_cosine_scores(embeddings, query_ids, id_col, vec_col)
-    if scored is None:
-        q = embeddings.filter(F.col(id_col).isin(query_ids)).select(
-            F.col(id_col).alias("q"),
-            F.col(vec_col).alias("qv"),
-            _norm(vec_col).alias("q_norm"),
-        )
-        n = embeddings.select(
-            F.col(id_col).alias("neighbor"),
-            F.col(vec_col).alias("nv"),
-            _norm(vec_col).alias("n_norm"),
-        )
-        scored = (
-            n.crossJoin(F.broadcast(q))
-            .filter(F.col("q") != F.col("neighbor"))
-            .withColumn(
-                "sim",
-                _dot("qv", "nv")
-                / F.nullif(F.col("q_norm") * F.col("n_norm"), F.lit(0.0)),
-            )
-            .select("q", "neighbor", "sim")
-        )
     sims = (
         scored.withColumn("sim", F.round(F.col("sim"), 4))
         .filter(F.col("sim").isNotNull())
@@ -213,18 +173,10 @@ def _numpy_cosine_scores(
     query_ids: list[int],
     id_col: str,
     vec_col: str,
-) -> Optional[DataFrame]:
+) -> DataFrame:
     """(q, neighbor, sim): RAW cosine of every (probe, corpus) pair,
     self-pairs and undefined cosines (zero norms, length mismatches)
-    dropped — the numpy engine under :func:`cosine_topk`. Returns
-    None when numpy/pandas are unavailable."""
-
-    try:
-        import numpy as np  # noqa: F401
-        import pandas as pd  # noqa: F401
-    except ImportError:  # pragma: no cover - numpy is baked in here
-        return None
-    import numpy as np
+    dropped — the numpy engine under :func:`cosine_topk`."""
 
     spark = embeddings.sparkSession
     q_rows = (
@@ -236,7 +188,7 @@ def _numpy_cosine_scores(
     for r in q_rows:
         qv = r[vec_col]
         if qv is None:
-            continue  # JVM: every dot NULL -> every pair drops
+            continue  # SQL: every dot NULL -> every pair drops
         v = np.array([float(x) for x in qv], dtype=np.float64)
         qn = 0.0
         for x in v:  # dim-ascending, like _norm's fold
@@ -245,8 +197,6 @@ def _numpy_cosine_scores(
     bQ = spark.sparkContext.broadcast(probes)
 
     def score(batches):
-        import pandas as pd
-
         qs = bQ.value
         for pdf in batches:
             if len(pdf) == 0 or not qs:
@@ -491,7 +441,7 @@ def _numpy_assign_cells(
     dim: int,
     keep_vec: bool = False,
     with_sim: bool = False,
-) -> Optional[DataFrame]:
+) -> DataFrame:
     """Arrow-batched argmax-cosine assignment: (vec_id, cell), plus
     optionally the input vector passed through (``keep_vec`` — column
     ``v``, saving the Lloyd means pass a full corpus join-back) and
@@ -501,30 +451,24 @@ def _numpy_assign_cells(
     i.e. NULL/short/zero-norm vectors or an all-zero-norm centroid
     set — the rescore's NULL, mapped by the caller).
 
-    The large-k scoring engine behind :func:`_assign_cells` — see the
-    call site for why the JVM paths cap out (janino's 64 KB method
-    limit, then HotSpot's huge-method JIT ceiling). Bit-parity with
-    the SQL chains is by construction: dots and norms accumulate
-    dim-ASCENDING in IEEE float64 (`acc += V[:, i] * c[i]` is the
-    left-assoc fold, vectorized across rows, not a reordered BLAS
-    reduction), float->double casts are exact, zero-norm rows score
-    -inf everywhere and fall to the lowest cell id via the ascending
-    strict-> scan. NULL and shorter-than-dim vectors also land in the
-    lowest cell — strictly MORE tolerant than the JVM literal unroll,
-    which raises INVALID_ARRAY_INDEX on short vectors under Spark 4's
-    ANSI mode (pinned in test_numpy_assign_edge_semantics_match_jvm).
-    Returns None when numpy/pandas are unavailable so the caller can
-    fall back to the JVM broadcast path."""
-
-    try:
-        import numpy as np  # noqa: F401
-        import pandas as pd  # noqa: F401
-    except ImportError:  # pragma: no cover - numpy is baked in here
-        return None
-    import numpy as np
+    ``rows`` are the centroid rows (``cell``, ``cv``) sorted by cell;
+    ``dim`` is the width the dots run over. Bit-parity with the SQL
+    cosine (``_dot`` / ``_norm``) is by construction: dots and norms
+    accumulate dim-ASCENDING in IEEE float64 (`acc += V[:, i] * c[i]`
+    is the left-assoc fold, vectorized across rows, not a reordered
+    BLAS reduction), float->double casts are exact, and cells scan
+    ascending with a strict >, so ties keep the lowest cell id. Rows
+    that score -inf everywhere fall to the lowest cell: zero-norm,
+    NULL and shorter-than-dim vectors. A NULL centroid scores -inf in
+    its cell (the SQL NULL algebra); an empty centroid set yields an
+    empty assignment. Pinned in
+    test_numpy_assign_edge_semantics_match_bruteforce."""
 
     spark = embeddings.sparkSession
-    C = np.array([[float(x) for x in r["cv"]] for r in rows], dtype=np.float64)
+    C = np.zeros((len(rows), dim))
+    for j, r in enumerate(rows):
+        if r["cv"] is not None:  # a NULL centroid keeps norm 0
+            C[j] = [float(x) for x in r["cv"]]
     cellids = np.array([int(r["cell"]) for r in rows], dtype=np.int64)
     cn = np.zeros(len(rows))
     for i in range(dim):
@@ -533,19 +477,17 @@ def _numpy_assign_cells(
     bC = spark.sparkContext.broadcast((C, cellids, cn))
 
     def score(batches):
-        import pandas as pd
-
         Cb, cells_b, cn_b = bC.value
         kk, d = Cb.shape
         for pdf in batches:
-            if len(pdf) == 0:
+            if len(pdf) == 0 or kk == 0:
                 continue
             vals = pdf[vec_col].tolist()
-            # Mirror the SQL paths' null algebra: a NULL or
-            # shorter-than-dim vector makes every per-term v[i]
-            # reference NULL, poisoning the dot AND the norm, so the
-            # row scores -inf in every cell and lands in the lowest
-            # cell id; longer vectors contribute their dim-prefix.
+            # Mirror the SQL null algebra: a NULL or shorter-than-dim
+            # vector makes every per-term v[i] reference NULL,
+            # poisoning the dot AND the norm, so the row scores -inf
+            # in every cell and lands in the lowest cell id; longer
+            # vectors contribute their dim-prefix.
             ok = np.array(
                 [x is not None and len(x) >= d for x in vals], dtype=bool
             )
@@ -563,7 +505,7 @@ def _numpy_assign_cells(
                 vn += V[:, i] * V[:, i]
             vn = np.sqrt(vn)
             best_s = np.full(n, -np.inf)
-            best_c = np.full(n, cells_b[0] if kk else 0, dtype=np.int64)
+            best_c = np.full(n, cells_b[0], dtype=np.int64)
             for j in range(kk):  # ascending: strict > keeps lowest cell
                 dot = np.zeros(n)
                 cj = Cb[j]
@@ -606,226 +548,39 @@ def _assign_cells(
 ) -> DataFrame:
     """(vec_id, cell): each vector's argmax-cosine centroid, ties
     broken by lowest cell id. ``keep_vec`` rides the input vector
-    through as ``v``; ``with_sim`` adds the winning cosine as ``csim``
-    (engine-dependent — callers MUST check the returned columns and
-    fall back to a join/rescore when absent).
+    through as ``v``; ``with_sim`` adds the winning cosine as ``csim``.
 
-    Engine ladder (r11): the ARROW-BATCHED numpy argmax is preferred
-    at EVERY shape, not just past the 512-term codegen budget — the
-    Lloyd-ladder attribution (SCALE.md round-11) measured the JVM
-    literal unroll's per-pass cost as ANALYSIS + codegen of a fresh
-    k x dim literal tree every iteration (centroid literals change
-    each pass, so the codegen cache never hits), at parity with numpy
-    per pass at the largest compiled shape (k=8, dim=64) and ~15x
-    behind it at k=79 — and only the numpy kernel can carry the
-    vector and the winning cosine through the argmax, which deletes
-    the means pass's corpus join-back and embed_prune's n x 1 rescore
-    join. Bit-parity is by construction (dim-ascending IEEE
-    accumulation, strict-> ascending cell scan; see
-    :func:`_numpy_assign_cells`).
+    Scoring is the Arrow-batched numpy argmax
+    (:func:`_numpy_assign_cells`) at every shape, with ``dim`` taken
+    from the first non-NULL centroid. A JVM scorer re-analyzes and
+    re-compiles a fresh k x dim literal tree every Lloyd pass (the
+    centroid literals change, so the codegen cache never hits), and
+    past janino's 64 KB method limit and HotSpot's huge-method JIT
+    ceiling it runs interpreted — the SCALE.md round-11 Lloyd-ladder
+    attribution measured it ~15x behind the kernel at k=79. Only the
+    kernel can carry the vector and the winning cosine through the
+    argmax, which deletes the means pass's corpus join-back and
+    embed_prune's n x 1 rescore join."""
 
-    JVM fallbacks when pandas/numpy are unavailable: k x dim <= 512
-    compiles a literal-unrolled scoring array (honors keep_vec, not
-    with_sim); larger shapes score against the broadcast centroid
-    table with dim-sized positional dots and pre-reduce the argmax in
-    a max(struct(csim, -cell)) HASH aggregate — the one exchange
-    carries ~n pre-reduced SKINNY rows (never the n x k expansion),
-    and nothing sorts. The max-struct is all-primitive on purpose: an
-    array field in the aggregate buffer silently downgrades Spark to
-    SortAggregate. A NULL cosine (zero-norm vector) coalesces to -inf
-    so such vectors fall back to the lowest cell id. (A fully
-    shuffle-free variant — folding a literal centroid array per row
-    with transform/aggregate — measured 1.5x SLOWER at sf0.1: nested
-    higher-order lambdas evaluate interpreted.)"""
-
-    import math
-
-    rows = sorted(cents.collect(), key=lambda r: r["cell"])
     # Probe-bound guard (VERDICT r12 #9): the centroid table is
-    # collected and (on the numpy path) broadcast per task — keep it
-    # provably cell-count-bounded whatever DataFrame a caller passes.
+    # collected and broadcast per task — keep it provably
+    # cell-count-bounded whatever DataFrame a caller passes, and
+    # never collect more than one row past the bound.
+    rows = sorted(cents.limit(65537).collect(), key=lambda r: r["cell"])
     if len(rows) > 65536:
         raise ValueError(
-            f"_assign_cells: {len(rows)} centroid rows exceed the "
-            "65536 driver-side bound"
+            "_assign_cells: more than 65536 centroid rows exceed the "
+            "driver-side bound"
         )
-    if rows and rows[0]["cv"] is not None:
-        numpy_assign = _numpy_assign_cells(
-            embeddings,
-            rows,
-            id_col,
-            vec_col,
-            len(rows[0]["cv"]),
-            keep_vec=keep_vec,
-            with_sim=with_sim,
-        )
-        if numpy_assign is not None:
-            return numpy_assign
-    if not rows or rows[0]["cv"] is None:
-        scored = (
-            embeddings.select(
-                F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v")
-            )
-            .crossJoin(F.broadcast(cents))
-            .withColumn(
-                "csim",
-                _dot("v", "cv")
-                / F.nullif(_norm("v") * _norm("cv"), F.lit(0.0)),
-            )
-        )
-        best = scored.groupBy("vec_id").agg(
-            F.max(
-                F.struct(
-                    F.coalesce(F.col("csim"), F.lit(float("-inf"))).alias("s"),
-                    (-F.col("cell")).alias("nc"),
-                    F.col("cell").alias("cell"),
-                )
-            ).alias("b")
-        )
-        # keep_vec is honored by the caller joining v back (this path
-        # aggregates, so the vector cannot ride through the argmax).
-        return best.select("vec_id", F.col("b.cell").alias("cell"))
-
-    # Centroids are k x dim and ALREADY driver-side by construction
-    # (every Lloyd pass collects them to re-broadcast), so the scoring
-    # unrolls to literal multiply-adds: dim products per cell, summed
-    # left-to-right — the exact fold order of the aggregate(zip_with)
-    # form, hence bit-identical doubles — but all plain arithmetic
-    # that whole-stage codegen compiles, where nested higher-order
-    # lambdas evaluate interpreted (measured ~3x on the Lloyd passes).
-    # No crossJoin, no exchange at all: the argmax is a per-row CASE
-    # chain over k scalar columns (ties keep the LOWEST cell id, the
-    # max(struct(s, -cell)) order of the fallback path above).
-    # Expressions are built as SQL STRINGS and parsed with one
-    # F.expr per column: building k x dim literal terms as Column
-    # objects costs thousands of py4j round-trips (~8s of driver
-    # chatter for k=8, dim=64), where string assembly is free.
-    # Double literals go through CAST('<repr>' AS DOUBLE) — repr is
-    # shortest-round-trip, so the parsed double is bit-identical.
-    dim = len(rows[0]["cv"])
-
-    if len(rows) * dim > 512:
-        # Large-k path: the literal unroll below grows the generated
-        # method with k x dim terms, falls past Janino's JIT budget,
-        # and Spark silently evaluates the whole expression tree
-        # INTERPRETED — measured ~50x slower at k=79, dim=64 (the
-        # density-derived SemDeDup cell counts). The budget is far
-        # tighter than the raw term count suggests: once the scoring
-        # column fuses into a larger whole-stage method (join +
-        # window downstream), subexpression elimination inflates the
-        # generated code and 1,024 terms (k=16, dim=64) already hits
-        # janino's `Code grows beyond 64 KB` — reproduced on the
-        # declared ann_ivf query, a 3x interpreted-fallback slowdown.
-        # 512 terms is the largest shape verified to compile fused.
-        # (The preferred engine at EVERY shape is the Arrow-batched
-        # numpy argmax, attempted at the top of this function — this
-        # branch only runs when pandas/numpy are unavailable. The
-        # broadcast-table alternative here compiles at any k, but its
-        # fused consume method lands past HotSpot's huge-method JIT
-        # ceiling and runs INTERPRETED: measured ~9s for 20k x 79 x 64
-        # vs 0.6s numpy on identical results.)
-        #
-        # Score against the BROADCAST centroid table with
-        # positionally-unrolled dots: every expression stays dim-sized
-        # (codegen-friendly at any k), the n x k expansion is
-        # map-side, and the argmax pre-reduces in the same max-struct
-        # hash aggregate as the dynamic fallback. Bit-identical to the
-        # unroll: SQL left-assoc sums == the Python-accumulated
-        # literal norms, ties and zero-norm rows resolve to the lowest
-        # cell id through the same (s, -cell) order.
-        def psum(a: str, b: str) -> str:
-            return " + ".join(
-                f"CAST({a}[{i}] AS DOUBLE) * CAST({b}[{i}] AS DOUBLE)"
-                for i in range(dim)
-            )
-
-        pre = embeddings.select(
-            F.col(id_col).alias("vec_id"),
-            F.col(vec_col).alias("v"),
-            F.expr(f"sqrt({psum('v', 'v')})").alias("__vn"),
-        )
-        # The n x k expansion parallelizes per INPUT partition; a
-        # small corpus can arrive as one parquet split and serialize
-        # the whole scoring pass on one core (measured 33s vs 2s at
-        # n=20k, k=79). Widen to the session parallelism only when
-        # the scan is narrower — at real scale (thousands of splits)
-        # this is a no-op, so no shuffle is added at 100 TB. The
-        # partition probe runs on the RAW input, not on `pre`:
-        # df.rdd forces full optimization of the probed plan, and
-        # paying that for the psum-widened projection added ~2s of
-        # driver time PER LLOYD PASS at dim=64 (the raw scan plan
-        # optimizes in milliseconds).
-        spark = embeddings.sparkSession
-        par = spark.sparkContext.defaultParallelism
-        if embeddings.rdd.getNumPartitions() < par:
-            pre = pre.repartition(par)
-        cb = cents.select(
-            "cell", "cv", F.expr(f"sqrt({psum('cv', 'cv')})").alias("__cn")
-        )
-        scored = pre.crossJoin(F.broadcast(cb)).withColumn(
-            "csim",
-            F.expr(psum("v", "cv"))
-            / F.nullif(F.col("__vn") * F.col("__cn"), F.lit(0.0)),
-        )
-        best = scored.groupBy("vec_id").agg(
-            F.max(
-                F.struct(
-                    F.coalesce(F.col("csim"), F.lit(float("-inf"))).alias("s"),
-                    (-F.col("cell")).alias("nc"),
-                    F.col("cell").alias("cell"),
-                )
-            ).alias("b")
-        )
-        # keep_vec is honored by the caller joining v back (this path
-        # aggregates, so the vector cannot ride through the argmax).
-        return best.select("vec_id", F.col("b.cell").alias("cell"))
-
-    def dlit(x: float) -> str:
-        return f"CAST('{x!r}' AS DOUBLE)"
-
-    vterm = " + ".join(
-        f"CAST(v[{i}] AS DOUBLE) * CAST(v[{i}] AS DOUBLE)"
-        for i in range(dim)
-    )
-    pre = embeddings.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("v"),
-        F.expr(f"sqrt({vterm})").alias("__vn"),
-    )
-    sims = []
-    for r in rows:
-        cv = [float(x) for x in r["cv"]]
-        acc = 0.0
-        for x in cv:
-            acc += x * x
-        cnorm = math.sqrt(acc)
-        dot = " + ".join(
-            f"CAST(v[{i}] AS DOUBLE) * {dlit(cv[i])}" for i in range(dim)
-        )
-        sims.append(
-            f"coalesce(({dot}) / nullif(__vn * {dlit(cnorm)}, "
-            f"CAST(0.0 AS DOUBLE)), CAST('-Infinity' AS DOUBLE))"
-        )
-    # One aliased sims array; the argmax is first-max position (cells
-    # sorted ascending, so double ties AND the all--inf zero-norm row
-    # both resolve to the LOWEST cell id — the fallback path's
-    # max(struct(s, -cell)) order). Each expression tree stays
-    # cell-sized (a when-chained running argmax nests the previous
-    # best into every step — tree growth is exponential in k and
-    # Janino rejects the generated method).
-    cells = ", ".join(f"CAST({int(r['cell'])} AS BIGINT)" for r in rows)
-    scored = pre.select(
-        "vec_id",
-        *(["v"] if keep_vec else []),
-        F.expr("array(" + ", ".join(sims) + ")").alias("__sims"),
-    )
-    return scored.select(
-        "vec_id",
-        *(["v"] if keep_vec else []),
-        F.expr(
-            f"element_at(array({cells}), "
-            "CAST(array_position(__sims, array_max(__sims)) AS INT))"
-        ).alias("cell"),
+    dim = next((len(r["cv"]) for r in rows if r["cv"] is not None), 0)
+    return _numpy_assign_cells(
+        embeddings,
+        rows,
+        id_col,
+        vec_col,
+        dim,
+        keep_vec=keep_vec,
+        with_sim=with_sim,
     )
 
 
@@ -851,19 +606,20 @@ def ivf_centroids(
     instead of ``dim`` round(avg(getItem)) trees — the wide form's
     per-step re-analysis measured 1.7s against 0.8s for this one at
     dim=64 (r12, driver-side serial cost that no executor count
-    hides). On the preferred numpy assignment engine the input vector
-    rides THROUGH the argmax kernel (keep_vec), so each Lloyd step is
-    ONE job — kernel into map-side-combined means — with no checkpoint
-    and no corpus join-back shuffle (the r11 Lloyd-ladder fusion; the
-    JVM fallback paths keep the checkpoint + vec_id join-back). New
+    hides). The input vector rides THROUGH the argmax kernel
+    (keep_vec), so each Lloyd step is ONE job — kernel into
+    map-side-combined means — with no checkpoint and no corpus
+    join-back shuffle (the r11 Lloyd-ladder fusion). New
     components are rounded to 6 decimals each step so refinement is
     reproducible across engines and cluster layouts; cells that
     capture no vectors keep their previous centroid. The centroid
     table lives driver-side across steps (k x dim doubles — the same
     structure Spark MLlib's KMeans collects per iteration); each step
     collects only the k x dim mean rows, and the seed/dim probe jobs
-    of the r11 shape are gone: dim comes off the collected seed rows
-    instead of a separate ``first()`` pass.
+    of the r11 shape are gone: dim comes off the first non-NULL
+    collected seed row instead of a separate ``first()`` pass. A NULL
+    seed stays a NULL centroid until a refinement step gives its cell
+    members with a vector.
     """
 
     spark = embeddings.sparkSession
@@ -883,43 +639,21 @@ def ivf_centroids(
         )
     ]
     if dim is None:
-        dim = len(rows[0][1]) if rows and rows[0][1] is not None else 0
+        dim = next((len(cv) for _, cv in rows if cv is not None), 0)
     if n_centroids * max(dim, 1) > 8_388_608:
         raise ValueError(
             f"ivf_centroids: k*dim = {n_centroids}*{dim} exceeds the "
             "2^23 driver-side state bound — lower k or the dimension"
         )
     for _ in range(max(0, iters)):
-        assigned = None
-        if rows and rows[0][1] is not None:
-            assigned = _numpy_assign_cells(
-                embeddings,
-                [{"cell": c, "cv": cv} for c, cv in rows],
-                id_col,
-                vec_col,
-                dim,
-                keep_vec=True,
-            )
-        if assigned is None:
-            cents = spark.createDataFrame(rows, "cell long, cv array<double>")
-            assigned = _assign_cells(
-                embeddings, cents, id_col, vec_col, keep_vec=True
-            )
-            if "v" not in assigned.columns:
-                # Aggregating argmax path drops the vector. Checkpoint
-                # the SKINNY (vec_id, cell) table before joining
-                # vectors back: without the boundary the means job
-                # below re-executes AND re-optimizes the whole n x k
-                # scoring expansion fused with the means aggregate —
-                # measured ~12s of the ~20s Lloyd pass at n=20k, k=79
-                # (the assignment itself runs in ~2s).
-                assigned = assigned.localCheckpoint(eager=False).join(
-                    embeddings.select(
-                        F.col(id_col).alias("vec_id"),
-                        F.col(vec_col).alias("v"),
-                    ),
-                    "vec_id",
-                )
+        assigned = _numpy_assign_cells(
+            embeddings,
+            [{"cell": c, "cv": cv} for c, cv in rows],
+            id_col,
+            vec_col,
+            dim,
+            keep_vec=True,
+        )
         mrows = (
             assigned.select("cell", F.posexplode("v").alias("__i", "__x"))
             .groupBy("cell", "__i")
@@ -1311,44 +1045,15 @@ def _pq_assign(sv: DataFrame, books: DataFrame) -> DataFrame:
     lowest squared L2, ties to the lowest code. Codebooks broadcast
     (m x n_codes x d doubles — always tiny).
 
-    Preferred engine: an Arrow-batched numpy argmin — the JVM
-    zip_with/aggregate fold is an interpreted per-element lambda
-    (~1µs/subvector-code pair; the n x m x n_codes expansion makes it
-    the dominant cost of PQ training AND encoding). Bit-parity by
+    Engine: an Arrow-batched numpy argmin — the JVM zip_with/aggregate
+    fold is an interpreted per-element lambda (~1µs/subvector-code
+    pair; the n x m x n_codes expansion made it the dominant cost of
+    PQ training AND encoding). Parity with the :func:`_l2sq` fold by
     construction: squared-difference terms accumulate dim-ASCENDING
     (the aggregate fold's order), codes scan ascending with a strict
     < so ties keep the lowest code, and a NULL/short subvector (whose
-    JVM distance is NULL, which struct-min sorts first — every code's
-    dist is NULL, so the tie falls to the lowest code) maps to +inf
-    distances, landing in the lowest code identically."""
-
-    np_assign = _numpy_pq_assign(sv, books)
-    if np_assign is not None:
-        return np_assign
-    scored = sv.join(F.broadcast(books), "sub").withColumn(
-        "__d", _l2sq("sv", "cv")
-    )
-    # argmin as a hash-aggregate min-of-struct — (vid, sub) groups hold
-    # n_codes rows each, and a partial-aggregating HashAggregate beats
-    # sorting every group in a rank window (no Sort in the plan).
-    return scored.groupBy("vid", "sub").agg(
-        F.min(F.struct("__d", "code")).getField("code").alias("code"),
-        F.first("sv").alias("sv"),
-    ).select("vid", "sub", "code", "sv")
-
-
-def _numpy_pq_assign(sv: DataFrame, books: DataFrame) -> Optional[DataFrame]:
-    """Arrow-batched nearest-codebook assignment (see
-    :func:`_pq_assign` for the parity contract). Returns None when
-    numpy/pandas are unavailable so the caller falls back to the JVM
-    scored-join path."""
-
-    try:
-        import numpy as np  # noqa: F401
-        import pandas as pd  # noqa: F401
-    except ImportError:  # pragma: no cover - numpy is baked in here
-        return None
-    import numpy as np
+    SQL distance is NULL for every code) maps to +inf distances,
+    landing in the lowest code."""
 
     spark = sv.sparkSession
     book_rows = books.select("sub", "code", "cv").collect()
@@ -1367,8 +1072,6 @@ def _numpy_pq_assign(sv: DataFrame, books: DataFrame) -> Optional[DataFrame]:
     bB = spark.sparkContext.broadcast(packed)
 
     def assign(batches):
-        import pandas as pd
-
         bk = bB.value
         for pdf in batches:
             if len(pdf) == 0:
@@ -1584,15 +1287,11 @@ def embed_prune(
     Spark/DuckDB disagree on default NULL order), and the cut count
     is floor(cell_size * frac) — exact and engine-free.
 
-    Cost over kmeans_assign (numpy engine, the preferred path): ZERO
-    extra corpus passes — the final assignment kernel already
-    computed cosine(v, own centroid) to pick the cell, and rides it
-    out as ``csim`` (the r11 Lloyd-ladder fusion), leaving only a
-    cell-partitioned window whose partitions are CELL-sized. JVM
-    fallback: one id-keyed join to re-attach vectors, one broadcast
-    of the k x dim centroid table, ONE dot per row (n x 1, never
-    n x k). Either way the wall is linear in n while k tracks the
-    corpus.
+    Cost over kmeans_assign: ZERO extra corpus passes — the final
+    assignment kernel already computed cosine(v, own centroid) to pick
+    the cell, and rides it out as ``csim`` (the r11 Lloyd-ladder
+    fusion), leaving only a cell-partitioned window whose partitions
+    are CELL-sized. The wall is linear in n while k tracks the corpus.
     ``k="auto"`` (the default, and the declared query's form) derives
     ``k = density_cells(n, target_cell)``, capping expected cell
     occupancy at ~``target_cell`` rows: each row_number partition is
@@ -1604,79 +1303,27 @@ def embed_prune(
 
     from pyspark.sql.window import Window
 
-    # One stats pass: corpus count for the density-derived k, and the
-    # dimension bounds for the unrolled rescore below. min==max probes
-    # the uniform-dimension precondition the kmeans machinery already
-    # assumes — inferring dim from an arbitrary first() row would, on
-    # a mixed-length corpus, index out of bounds and preferentially
-    # prune the NULL-sim rows of every other length.
-    stats = embeddings.select(
-        F.count(F.lit(1)).alias("n"),
-        F.min(F.size(F.col(vec_col))).alias("dmin"),
-        F.max(F.size(F.col(vec_col))).alias("dmax"),
-    ).first()
     if k == "auto":
-        k = density_cells(stats["n"], target_cell)
+        k = density_cells(embeddings.count(), target_cell)
 
     cents = ivf_centroids(embeddings, k, iters, id_col, vec_col)
     assign = _assign_cells(
         embeddings, cents, id_col, vec_col, with_sim=True
     )
-    if "csim" in assign.columns:
-        # Fused path (numpy engine): the winning cosine IS the
-        # rescore value — the kernel computed cosine(v, own centroid)
-        # to pick the cell, so the n x 1 rescore join + centroid
-        # broadcast disappear (the r11 Lloyd-ladder fusion). -inf
-        # marks rows whose every score poisoned (NULL/zero-norm
-        # vectors) — exactly the rows the SQL rescore nulls via
-        # nullif(den, 0), mapped back to NULL here.
-        scored = assign.select(
-            "vec_id",
-            "cell",
-            F.round(
-                F.when(
-                    F.col("csim") == F.lit(float("-inf")), F.lit(None)
-                ).otherwise(F.col("csim")),
-                4,
-            ).alias("sim_c"),
-        )
-    else:
-        vecs = embeddings.select(
-            F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v")
-        )
-        # n x 1 rescore (each vector against its OWN centroid only).
-        # The zip_with/aggregate fold evaluates as an interpreted
-        # per-element lambda (~3s of the sf1 wall for 50k x 64);
-        # positionally-unrolled dim-sized sums stay inside whole-stage
-        # codegen and are bit-identical (same left-assoc dim-ascending
-        # order). Falls back to the fold if the corpus is empty (no
-        # dim to unroll) or the dimension varies (the unroll would
-        # index out of bounds).
-        if stats["dmin"] is not None and stats["dmin"] == stats["dmax"]:
-            dim = stats["dmax"]
-
-            def psum(a: str, b: str) -> str:
-                return " + ".join(
-                    f"CAST({a}[{i}] AS DOUBLE) * CAST({b}[{i}] AS DOUBLE)"
-                    for i in range(dim)
-                )
-
-            sim = F.expr(
-                f"round(({psum('v', 'cv')}) / "
-                f"nullif(sqrt({psum('v', 'v')}) * "
-                f"sqrt({psum('cv', 'cv')}), 0.0), 4)"
-            )
-        else:
-            sim = F.round(
-                _dot("v", "cv")
-                / F.nullif(_norm("v") * _norm("cv"), F.lit(0.0)),
-                4,
-            )
-        scored = (
-            vecs.join(assign, "vec_id")
-            .join(F.broadcast(cents), "cell")
-            .select("vec_id", "cell", sim.alias("sim_c"))
-        )
+    # The winning cosine IS the rescore value: the kernel computed
+    # cosine(v, own centroid) to pick the cell. -inf marks rows whose
+    # every score poisoned (NULL/zero-norm vectors) — exactly the rows
+    # a SQL rescore nulls via nullif(den, 0), mapped back to NULL here.
+    scored = assign.select(
+        "vec_id",
+        "cell",
+        F.round(
+            F.when(
+                F.col("csim") == F.lit(float("-inf")), F.lit(None)
+            ).otherwise(F.col("csim")),
+            4,
+        ).alias("sim_c"),
+    )
     w = Window.partitionBy("cell").orderBy(
         F.coalesce(F.col("sim_c"), F.lit(-2.0)).asc(), F.asc("vec_id")
     )
@@ -1867,8 +1514,8 @@ def truncation_recall(
     full-top-k| / |full-top-k|, denominator = the exact side's actual
     result size (== k unless the corpus is smaller).
 
-    Shape: two :func:`cosine_topk` passes (same engine ladder and
-    determinism contract — ties by neighbor id in both engines), the
+    Shape: two :func:`cosine_topk` passes (same kernel and
+    determinism contract — ties by neighbor id on both sides), the
     truncated side over a row-local array slice (map-side, no extra
     shuffle); the intersection joins two |queries| x k result sets.
     Probe-bounded like ann_recall."""
@@ -1963,18 +1610,19 @@ def knn_graph(
 
     Scale shape: cells come from the shared Lloyd machinery
     (:func:`kmeans_assign`, ``k="auto"`` density-derived so expected
-    cell occupancy caps at ~``target_cell``); pair cosines come from
-    semdedup's Arrow-batched per-cell numpy kernel
-    (curation._numpy_cell_pairs — a JVM pair join scoring ~n·cell
-    pairs through the interpreted aggregate/zip_with fold measured
-    51 s at sf1 where the kernel path takes ~3 s; bit-parity by the
-    kernel's dim-ascending accumulation, round-4 applied JVM-side so
-    the rank sees the same values as the SQL fallback), the per-node
-    rank window partitions by node over ≤ target_cell candidates
-    (each node's candidates all live in its one cell), and the mutual
+    cell occupancy caps at ~``target_cell``); on a uniform-width
+    corpus, pair cosines come from semdedup's Arrow-batched per-cell
+    numpy kernel (curation._numpy_cell_pairs — a JVM pair join
+    scoring ~n·cell pairs through the interpreted aggregate/zip_with
+    fold measured 51 s at sf1 where the kernel path takes ~3 s;
+    bit-parity by the kernel's dim-ascending accumulation, round-4
+    applied JVM-side). A ragged corpus, which the kernel does not
+    cover, takes the SQL within-cell pair join. The per-node rank
+    window partitions by node over ≤ target_cell candidates (each
+    node's candidates all live in its one cell), and the mutual
     filter is a self-join on the REDUCED k-NN edge set
     (≤ n·k_neighbors rows). Zero-norm/NULL vectors drop their pairs
-    (sim IS NULL in the SQL form — filtered in both engines). Nothing
+    (sim IS NULL in the SQL form — filtered on both paths). Nothing
     global, nothing quadratic off-cell."""
 
     stats = embeddings.select(
@@ -1988,22 +1636,13 @@ def knn_graph(
     # through (keep_vec), so the (vec_id, cell, v) side table needs NO
     # corpus join-back — the kmeans_assign + vecs equi-join of the r11
     # shape (one full exchange of the vector table plus one of the
-    # assignment) is gone; the JVM fallback keeps the join.
+    # assignment) is gone.
     cents = ivf_centroids(embeddings, k, iters, id_col, vec_col)
-    assigned = _assign_cells(
-        embeddings, cents, id_col, vec_col, keep_vec=True
+    side = (
+        _assign_cells(embeddings, cents, id_col, vec_col, keep_vec=True)
+        .select("vec_id", "cell", "v")
+        .localCheckpoint(eager=False)
     )
-    if "v" in assigned.columns:
-        side = assigned.select("vec_id", "cell", "v")
-    else:
-        side = assigned.select("vec_id", "cell").join(
-            embeddings.select(
-                F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v")
-            ),
-            "vec_id",
-        )
-    side = side.localCheckpoint(eager=False)
-    pairs = None
     if stats["dmin"] is not None and stats["dmin"] == stats["dmax"]:
         from .curation import _numpy_cell_pairs
 
@@ -2012,17 +1651,16 @@ def knn_graph(
             threshold=-2.0,  # keep every pair; -1 <= cosine
             dim=stats["dmax"],
         )
-        if tri is not None:
-            # the kernel emits the a < b triangle once; the per-node
-            # rank needs both directions
-            pairs = tri.select("a", "b", F.col("cos").alias("sim")).unionByName(
-                tri.select(
-                    F.col("b").alias("a"),
-                    F.col("a").alias("b"),
-                    F.col("cos").alias("sim"),
-                )
+        # the kernel emits the a < b triangle once; the per-node rank
+        # needs both directions
+        pairs = tri.select("a", "b", F.col("cos").alias("sim")).unionByName(
+            tri.select(
+                F.col("b").alias("a"),
+                F.col("a").alias("b"),
+                F.col("cos").alias("sim"),
             )
-    if pairs is None:
+        )
+    else:
         a = side.select(
             "cell", F.col("vec_id").alias("a"), F.col("v").alias("va")
         )

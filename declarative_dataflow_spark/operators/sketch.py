@@ -63,17 +63,6 @@ def _bitlen_case_sql(col: str, bits: int) -> str:
     return f"(CASE {branches} ELSE 0 END)"
 
 
-def hll_register_sql(term: str, hash32: str) -> tuple[str, str]:
-    """(bucket_expr, rho_expr) over a term column given the engine's
-    md5-uint32 expression for it. rho = 1 + leading zeros of the
-    remaining VBITS bits = VBITS + 1 - bitlen(v)."""
-
-    bucket = f"({hash32} % {HLL_M})"
-    v = f"(CAST({hash32} AS BIGINT) // {HLL_M})"
-    rho = f"({HLL_VBITS + 1} - {_bitlen_case_sql(v, HLL_VBITS)})"
-    return bucket, rho
-
-
 _SPARK_H32 = "CAST(conv(substring(md5({t}), 1, 8), 16, 10) AS BIGINT)"
 
 

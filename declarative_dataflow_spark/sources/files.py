@@ -113,23 +113,6 @@ def json_fields(
     ).drop(json_col)
 
 
-def stream_csv_source(
-    spark: SparkSession,
-    path: str,
-    schema: str,
-    max_files_per_trigger: int = 1,
-) -> DataFrame:
-    """Streaming CSV directory source (re-polling ≈ file discovery;
-    ``fuel`` ≈ maxFilesPerTrigger)."""
-
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .option("header", False)
-        .csv(path)
-    )
-
-
 def stream_datom_source(
     spark: SparkSession,
     path: str,

@@ -409,9 +409,9 @@ class StreamSemDeDup:
             # A batch row whose id is ALREADY accepted is a literal
             # re-send of an accepted doc: suppress it explicitly
             # (first-accepted wins) and keep it out of the pair engine
-            # — the numpy kernel matches the JVM's strict a < b and
-            # emits NO pair for equal ids, so the old implicit
-            # self-pair side effect no longer exists (ADVICE r8).
+            # — the pair kernel keeps a strict a < b and emits NO
+            # pair for equal ids, so the old implicit self-pair side
+            # effect no longer exists (ADVICE r8).
             resent = b.select("id").join(
                 state.select("id"), "id", "left_semi"
             )
@@ -422,11 +422,6 @@ class StreamSemDeDup:
         pairs = curation_ops._numpy_cell_pairs(
             allr, self.threshold, self.dim
         )
-        if pairs is None:  # pragma: no cover - numpy is baked in here
-            raise RuntimeError(
-                "StreamSemDeDup needs numpy/pandas (the Arrow pair "
-                "engine); install them or use the batch semdedup"
-            )
         flags = allr.select("id", "__new")
         p = (
             pairs.join(flags.toDF("a", "__na"), "a")

@@ -86,10 +86,3 @@ def record_bounded(history, on_evict, epoch_id: int, rows: list) -> None:
     if on_evict is not None and len(history) == history.maxlen:
         on_evict(*history[0])
     history.append((epoch_id, rows))
-
-
-def the_void(batch_df: DataFrame, epoch_id: int) -> None:
-    """Benchmark sink: force compute, keep nothing
-    (reference: TheVoid, src/sinks/mod.rs:56-58)."""
-
-    batch_df.write.format("noop").mode("overwrite").save()

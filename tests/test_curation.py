@@ -226,29 +226,54 @@ def test_semdedup_within_cluster_pairs_match_brute_force(spark):
     assert not any(a < 10 <= b < 100 for a, b in got)
 
 
-def test_semdedup_numpy_and_jvm_pair_engines_agree(spark):
-    # The Arrow-batched numpy pair engine accumulates outer products
+def test_semdedup_pairs_match_bruteforce_cosines(spark):
+    # The Arrow-batched pair kernel accumulates outer products
     # dim-ascending — the SQL chain's exact fold order — so the kept
-    # (a, b, cos) set must be BIT-identical to the all-JVM equi-join
-    # path (forced here by stubbing the numpy engine out).
+    # (a, b, cos) set must be BIT-identical to pure-Python within-cell
+    # pair cosines, rounded like Spark's round(): HALF_UP on the
+    # double's shortest decimal repr (Scala BigDecimal(double)).
+    import math
     import random
+    from decimal import ROUND_HALF_UP, Decimal
+
+    from declarative_dataflow_spark.operators import similarity
 
     rng = random.Random(23)
     rows = [
         (i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(60)
     ]
     df = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    out_np = curation.semdedup(df, k=3, iters=1, threshold=0.6)
-    got_np = sorted(tuple(r) for r in out_np.collect())
-    real = curation._numpy_cell_pairs
-    curation._numpy_cell_pairs = lambda *a, **k: None
-    try:
-        out_jvm = curation.semdedup(df, k=3, iters=1, threshold=0.6)
-        got_jvm = sorted(tuple(r) for r in out_jvm.collect())
-    finally:
-        curation._numpy_cell_pairs = real
-    assert got_np == got_jvm
-    assert len(got_np) > 0  # the comparison must be load-bearing
+    got = sorted(
+        tuple(r)
+        for r in curation.semdedup(df, k=3, iters=1, threshold=0.6).collect()
+    )
+    cell = {
+        r["vec_id"]: r["cell"]
+        for r in similarity.kmeans_assign(df, k=3, iters=1).collect()
+    }
+
+    def fold(x, y):
+        acc = 0.0
+        for i in range(8):
+            acc += x[i] * y[i]
+        return acc
+
+    want = []
+    for a, va in rows:
+        for b, vb in rows:
+            if a < b and cell[a] == cell[b]:
+                cos = fold(va, vb) / (
+                    math.sqrt(fold(va, va)) * math.sqrt(fold(vb, vb))
+                )
+                r4 = float(
+                    Decimal(repr(cos)).quantize(
+                        Decimal("0.0001"), ROUND_HALF_UP
+                    )
+                )
+                if r4 >= 0.6:
+                    want.append((a, b, r4))
+    assert got == sorted(want)
+    assert len(got) > 0  # the comparison must be load-bearing
 
 
 def test_semdedup_no_cartesian(spark):

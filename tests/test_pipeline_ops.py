@@ -245,6 +245,54 @@ def test_ivf_kmeans_refinement_moves_centroids(spark):
         assert cents[cell] == want
 
 
+def test_kmeans_null_lowest_id_vector_keeps_dim(spark):
+    # A NULL lowest-id vector seeds a NULL centroid. Refinement must
+    # take dim from the first non-NULL seed (not the NULL one, which
+    # collapsed every refined centroid to [] and every vector into
+    # cell 0), the NULL vector lands in the lowest cell, and every
+    # other vector's cell is the argmax against the returned
+    # centroids: dim-ascending fold, strict >, lowest cell on ties.
+    import math
+    import random
+
+    rng = random.Random(5)
+    rows = [(0, None)] + [
+        (i, [rng.uniform(-1, 1) for _ in range(4)]) for i in range(1, 40)
+    ]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    cents = sorted(
+        ((r["cell"], r["cv"]) for r in similarity.ivf_centroids(emb, 4, 2).collect()),
+        key=lambda t: t[0],
+    )
+    refined = [cv for _, cv in cents if cv is not None]
+    assert len(refined) == 3 and all(len(cv) == 4 for cv in refined)
+    got = {
+        r["vec_id"]: r["cell"]
+        for r in similarity.kmeans_assign(emb, k=4, iters=2).collect()
+    }
+    assert got[0] == cents[0][0]
+
+    def norm(x):
+        acc = 0.0
+        for i in range(4):
+            acc += x[i] * x[i]
+        return math.sqrt(acc)
+
+    for vid, v in rows[1:]:
+        best_s, best_c = float("-inf"), cents[0][0]
+        for cell, cv in cents:
+            if cv is None:
+                continue  # a NULL centroid scores -inf
+            dot = 0.0
+            for i in range(4):
+                dot += v[i] * cv[i]
+            s = dot / (norm(v) * norm(cv))
+            if s > best_s:
+                best_s, best_c = s, cell
+        assert got[vid] == best_c, vid
+    assert len(set(got.values())) > 1
+
+
 def test_resize_and_features(docs):
     b = multimodal.attach_binary(docs)
     resized = multimodal.resize_image(b, width=8, height=4).collect()
@@ -938,38 +986,52 @@ def test_pq_adc_equals_reconstructed_distance(spark):
         assert abs(r["adist"] - round(expect, 4)) <= 1e-9, (q, n)
 
 
-def test_pq_assign_numpy_and_jvm_engines_agree(spark):
-    # The Arrow-batched numpy argmin accumulates squared differences
-    # dim-ascending (the zip_with/aggregate fold's exact order) and
-    # scans codes ascending with a strict <, so codebooks, encodings,
-    # and the final top-k must be identical to the JVM scored-join
-    # path (forced here by stubbing the numpy engine out).
+def test_pq_assign_matches_bruteforce_argmin(spark):
+    # The Arrow-batched argmin accumulates squared differences
+    # dim-ascending (the _l2sq fold's order) and scans codes ascending
+    # with a strict <, so every (vector, subspace) code must equal a
+    # pure-Python argmin against the same books, seed books and
+    # refined books alike: exact ties (a duplicated seed) keep the
+    # lowest code, and a NULL vector, whose distance is undefined for
+    # every code, lands in the lowest code.
     import random
 
     rng = random.Random(11)
     rows = [
         (i, [rng.uniform(-1, 1) for _ in range(16)]) for i in range(50)
     ]
-    emb = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    got_np = sorted(
-        tuple(r)
-        for r in similarity.pq_topk(
-            emb, [0, 1, 2], k=4, m=4, n_codes=8, iters=1, dim=16
-        ).collect()
-    )
-    real = similarity._numpy_pq_assign
-    similarity._numpy_pq_assign = lambda *a, **k: None
-    try:
-        got_jvm = sorted(
-            tuple(r)
-            for r in similarity.pq_topk(
-                emb, [0, 1, 2], k=4, m=4, n_codes=8, iters=1, dim=16
-            ).collect()
+    rows[1] = (1, list(rows[0][1]))  # duplicate seed -> tied codes
+    rows.append((50, None))
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    for iters in (0, 1):
+        books = similarity.pq_codebooks(
+            emb, m=4, n_codes=8, iters=iters, dim=16
         )
-    finally:
-        similarity._numpy_pq_assign = real
-    assert got_np == got_jvm
-    assert len(got_np) == 12
+        by_sub: dict = {}
+        for r in books.collect():
+            by_sub.setdefault(r["sub"], []).append((r["code"], r["cv"]))
+        got = {
+            (r["vec_id"], r["sub"]): r["code"]
+            for r in similarity.pq_encode(emb, books, m=4, dim=16).collect()
+        }
+        assert len(got) == 51 * 4
+        for vid, v in rows:
+            for sub, entries in by_sub.items():
+                entries = sorted(entries)
+                best_d, best_c = float("inf"), entries[0][0]
+                if v is not None:
+                    sv = v[sub * 4 : sub * 4 + 4]
+                    for code, cv in entries:
+                        d = 0.0
+                        for a, b in zip(sv, cv):
+                            d += (a - b) * (a - b)
+                        if d < best_d:
+                            best_d, best_c = d, code
+                assert got[(vid, sub)] == best_c, (iters, vid, sub)
+        assert all(got[(50, sub)] == 0 for sub in range(4))  # NULL row
+        if iters == 0:
+            # seed codes 0 and 1 are the same vector: the tie keeps 0
+            assert all(got[(1, sub)] == 0 for sub in range(4))
 
 
 def test_pq_compression_shape_and_validation(spark):
@@ -1763,9 +1825,10 @@ def test_kcore_matches_bruteforce(spark):
 
 
 def test_assign_cells_large_k_path_matches_bruteforce(spark):
-    """k*dim above the unroll budget takes the broadcast-scored path;
-    its argmax must equal the literal-unroll semantics exactly
-    (lowest cell id on ties, zero-norm rows to the lowest cell)."""
+    """At large k (k*dim = 4800, far past any JVM codegen budget) the
+    Arrow argmax kernel must equal a pure-Python brute-force argmax
+    exactly (lowest cell id on ties, zero-norm rows to the lowest
+    cell)."""
 
     import math
     import random
@@ -1776,7 +1839,7 @@ def test_assign_cells_large_k_path_matches_bruteforce(spark):
     )
 
     rng = random.Random(3)
-    dim, n = 16, 300  # k = n seeds -> k*dim = 4800 > 4096 budget
+    dim, n = 16, 300  # k = n seeds -> k*dim = 4800
     rows = [
         (i, [rng.uniform(-1, 1) for _ in range(dim)]) for i in range(n)
     ]

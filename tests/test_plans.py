@@ -496,13 +496,46 @@ def test_hll_registers_aggregate_partially(spark):
     assert "Sort [" not in phys, phys
 
 
-def test_numpy_assign_edge_semantics_match_jvm(spark):
-    """The corners where the numpy argmax could silently diverge from
+def _fold_cell(v, cents, dim):
+    """Pure-Python argmax-cosine reference: dots and norms fold
+    dim-ascending in float64, cells scan ascending with a strict >,
+    and a NULL/short vector, a NULL centroid or a zero norm scores
+    -inf, so an all--inf row keeps the lowest cell."""
+
+    import math
+
+    def norm(x):
+        acc = 0.0
+        for i in range(dim):
+            acc += x[i] * x[i]
+        return math.sqrt(acc)
+
+    ok = v is not None and len(v) >= dim
+    best_s, best_c = float("-inf"), cents[0][0]
+    for cell, cv in cents:
+        s = float("-inf")
+        if ok and cv is not None:
+            dot = 0.0
+            for i in range(dim):
+                dot += v[i] * cv[i]
+            den = norm(v) * norm(cv)
+            if den != 0.0:
+                s = dot / den
+        if s > best_s:
+            best_s, best_c = s, cell
+    return best_c
+
+
+def test_numpy_assign_edge_semantics_match_bruteforce(spark):
+    """The corners where the argmax kernel could silently diverge from
     the SQL NULL algebra: exact cosine TIES (duplicate centroids must
     resolve to the LOWEST cell id), zero-norm vectors (undefined
-    cosine everywhere -> lowest cell id), NULL vectors, and
-    shorter-than-dim vectors (poisoned dot -> lowest cell id). Both
-    engines must agree row for row."""
+    cosine everywhere -> lowest cell id), NULL vectors,
+    shorter-than-dim vectors (poisoned dot -> lowest cell id), longer
+    vectors (their dim-prefix scores), a NULL centroid (-inf in its
+    cell, dim from the first non-NULL centroid) and an empty centroid
+    table (empty assignment). Checked row for row against a
+    pure-Python dim-ascending fold."""
 
     from declarative_dataflow_spark.operators import similarity
 
@@ -513,76 +546,106 @@ def test_numpy_assign_edge_semantics_match_jvm(spark):
         (3, [2.0, 0.0, 0.0, 0.0]),   # ties between cells 0 and 1
         (4, [0.0, 0.0, 0.0, 0.0]),   # zero norm -> lowest cell
         (5, None),                   # NULL vector -> lowest cell
+        (6, [0.5, 0.5]),             # shorter than dim -> lowest cell
         (7, [0.0, 3.0, 0.1, 0.0]),   # clear cell-2 winner
+        (8, [0.0, 0.0, 0.0, 0.0, 9.0]),  # prefix is zero norm
+        (9, [0.1, 2.0, 0.0, 0.0, -9.0]),  # prefix wins cell 2
     ]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    # 3 centroids x 4 dims = 12 terms routes _assign_cells to the
-    # literal-unroll JVM path, so calling the numpy engine directly
-    # and _assign_cells with numpy stubbed compares the two
-    # independent implementations on identical centroids.
-    cents = similarity._seed_centroids(emb, 3, "vec_id", "embedding")
-    rows_c = sorted(cents.collect(), key=lambda r: r["cell"])
-    np_df = similarity._numpy_assign_cells(emb, rows_c, "vec_id", "embedding", 4)
-    got_np = {r["vec_id"]: r["cell"] for r in np_df.collect()}
-    real = similarity._numpy_assign_cells
-    similarity._numpy_assign_cells = lambda *a, **k: None
-    try:
-        jvm_df = similarity._assign_cells(emb, cents, "vec_id", "embedding")
-        # force the broadcast path regardless of term count by calling
-        # through _assign_cells with the numpy engine stubbed: 3x4=12
-        # terms routes to the literal unroll, which is ALSO a JVM
-        # reference implementation -- compare against both.
-        got_lit = {r["vec_id"]: r["cell"] for r in jvm_df.collect()}
-    finally:
-        similarity._numpy_assign_cells = real
-    assert got_np == got_lit
-    # the reasoned outcomes, pinned explicitly
-    assert got_np[3] == 0        # tie between duplicate centroids -> 0
-    assert got_np[4] == 0        # zero norm -> lowest cell id
-    assert got_np[5] == 0        # NULL vector -> lowest cell id
-    assert got_np[7] == 2        # clear winner
 
-    # Shorter-than-dim vectors: the JVM literal unroll RAISES under
-    # Spark 4's ANSI mode (INVALID_ARRAY_INDEX on v[i]); the numpy
-    # engine is strictly more tolerant — the row scores -inf
-    # everywhere and lands in the lowest cell. Pin the numpy behavior
-    # (the JVM contract for ragged corpora is "an error", so there is
-    # no value-parity to assert).
-    ragged = spark.createDataFrame(
-        [(0, [1.0, 0.0, 0.0, 0.0]), (1, [0.5, 0.5]), (2, [0.0, 1.0, 0.0, 0.0])],
+    def check(df, n_centroids):
+        cents = similarity._seed_centroids(df, n_centroids, "vec_id", "embedding")
+        cent_rows = sorted(
+            ((r["cell"], r["cv"]) for r in cents.collect()), key=lambda t: t[0]
+        )
+        dim = next((len(cv) for _, cv in cent_rows if cv is not None), 0)
+        got = {
+            r["vec_id"]: r["cell"]
+            for r in similarity._assign_cells(
+                df, cents, "vec_id", "embedding"
+            ).collect()
+        }
+        want = {
+            vid: _fold_cell(v, cent_rows, dim) for vid, v in df.collect()
+        }
+        assert got == want
+        return got
+
+    got = check(emb, 3)
+    # the reasoned outcomes, pinned explicitly
+    assert got[3] == 0        # tie between duplicate centroids -> 0
+    assert got[4] == 0        # zero norm -> lowest cell id
+    assert got[5] == 0        # NULL vector -> lowest cell id
+    assert got[6] == 0        # short vector -> lowest cell id
+    assert got[7] == 2        # clear winner
+    assert got[8] == 0        # zero-norm prefix -> lowest cell id
+    assert got[9] == 2        # dim-prefix decides
+
+    # NULL lowest-id vector: its seed is a NULL centroid, which scores
+    # -inf, so only all--inf rows stay in cell 0.
+    null_first = spark.createDataFrame(
+        [(0, None)] + [(vid, v) for vid, v in rows if vid not in (0, 5)],
         "vec_id long, embedding array<double>",
     )
-    rc = sorted(
-        similarity._seed_centroids(ragged, 1, "vec_id", "embedding").collect(),
-        key=lambda r: r["cell"],
+    got = check(null_first, 3)
+    assert got[0] == 0 and got[4] == 0 and got[6] == 0
+    assert got[3] == 1 and got[7] == 2
+
+    # An empty centroid table assigns nothing, with the same schema.
+    empty = similarity._assign_cells(
+        emb,
+        similarity._seed_centroids(emb, 0, "vec_id", "embedding"),
+        "vec_id",
+        "embedding",
+        keep_vec=True,
+        with_sim=True,
     )
-    got_ragged = {
-        r["vec_id"]: r["cell"]
-        for r in similarity._numpy_assign_cells(
-            ragged, rc, "vec_id", "embedding", 4
-        ).collect()
-    }
-    assert got_ragged[1] == rc[0]["cell"]
+    assert empty.collect() == []
+    assert empty.dtypes == [
+        ("vec_id", "bigint"),
+        ("cell", "bigint"),
+        ("v", "array<double>"),
+        ("csim", "double"),
+    ]
+
+
+def test_assign_cells_collects_at_most_one_row_past_the_bound(spark):
+    """The centroid table is collected to the driver: past 65536 rows
+    _assign_cells raises ValueError, and it never collects more than
+    65537 rows to find that out (rows past that would raise here)."""
+
+    from pyspark.sql import functions as F
+
+    from declarative_dataflow_spark.operators import similarity
+
+    emb = spark.createDataFrame(
+        [(0, [1.0]), (1, [0.5])], "vec_id long, embedding array<double>"
+    )
+    cents = spark.range(0, 70000, 1, 1).select(
+        F.col("id").alias("cell"),
+        F.when(
+            F.col("id") > 66000, F.raise_error(F.lit("collected past the bound"))
+        )
+        .otherwise(F.array(F.lit(1.0)))
+        .alias("cv"),
+    )
+    with pytest.raises(ValueError, match="65536"):
+        similarity._assign_cells(emb, cents, "vec_id", "embedding")
 
 
 def test_cell_assignment_combines_before_exchange(spark):
-    """The k-means/IVF cell assignment must rank with an aggregate
-    struct-max, never a window: the partial max combines the n x k
-    scored expansion down to one skinny (vec_id, cell) row per vector
-    BEFORE the single shuffle exchange (the old form shuffled the full
-    expansion — corpus x k x dim bytes — and ranked it with a vec_id
-    window). Any Sort left is the local pre-aggregation run sort
-    inside SortAggregate (struct-max has no mutable hash buffer), not
-    a post-shuffle ranking."""
+    """The k-means/IVF cell assignment must never rank with a window
+    or shuffle the n x k scored expansion: the Arrow-batched argmax
+    kernel scores every centroid per row and emits one skinny
+    (vec_id, cell) row per vector, MAP-ONLY at every k — no window,
+    no join, no hash shuffle."""
 
     from declarative_dataflow_spark.operators import similarity
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
 
-    # Small k, preferred engine (r11: the Arrow-batched numpy argmax
-    # at EVERY shape — fresh centroid literals defeat the codegen
-    # cache per Lloyd pass): MAP-ONLY — no window, no join, no hash
-    # shuffle; the only permissible Exchange is the
+    # Small k: fresh centroid literals would defeat a JVM codegen cache
+    # per Lloyd pass; the only permissible Exchange is the
     # under-parallelized-input round-robin widening.
     cents = similarity.ivf_centroids(emb, n_centroids=4, iters=0)
     df = similarity._assign_cells(emb, cents, "vec_id", "embedding")
@@ -592,23 +655,7 @@ def test_cell_assignment_combines_before_exchange(spark):
     assert "Exchange hashpartitioning" not in phys, phys
     assert "CartesianProduct" not in phys, phys
 
-    # Small k, JVM literal-unroll fallback (numpy unavailable): a pure
-    # per-row Project — NO exchange, no window, no join at all.
-    real_small = similarity._numpy_assign_cells
-    similarity._numpy_assign_cells = lambda *a, **k: None
-    try:
-        udf_ = similarity._assign_cells(emb, cents, "vec_id", "embedding")
-        uphys = _executed(udf_).split("== Initial Plan ==")[0]
-    finally:
-        similarity._numpy_assign_cells = real_small
-    assert "Window" not in uphys, uphys
-    assert "Exchange" not in uphys, uphys
-    assert "CartesianProduct" not in uphys, uphys
-
-    # Large k (k*dim past the budget): the Arrow-batched numpy argmax
-    # is MAP-ONLY — no window, no join, no hash shuffle at all (the
-    # only permissible Exchange is the under-parallelized-input
-    # round-robin widening).
+    # Large k (k*dim far past any JVM codegen budget): still MAP-ONLY.
     big = spark.createDataFrame(
         [
             (i, [float((i * 7 + j) % 5 - 2) for j in range(16)])
@@ -623,25 +670,6 @@ def test_cell_assignment_combines_before_exchange(spark):
     assert "Window" not in bphys, bphys
     assert "Exchange hashpartitioning" not in bphys, bphys
     assert "CartesianProduct" not in bphys, bphys
-
-    # JVM fallback (numpy unavailable): broadcast-scored expansion,
-    # argmax pre-reduced by a partial max BEFORE the one exchange.
-    real = similarity._numpy_assign_cells
-    similarity._numpy_assign_cells = lambda *a, **k: None
-    try:
-        jdf = similarity._assign_cells(big, bcents, "vec_id", "embedding")
-        jphys = _executed(jdf).split("== Initial Plan ==")[0]
-    finally:
-        similarity._numpy_assign_cells = real
-    assert "Window" not in jphys, jphys
-    assert "partial_max" in jphys, jphys  # map-side combine
-    assert jphys.count("Exchange hashpartitioning") == 1, jphys
-    assert "Exchange hashpartitioning(vec_id" in jphys, jphys
-    assert "CartesianProduct" not in jphys, jphys
-    # both engines produce the same assignment
-    got_np = {(r["vec_id"], r["cell"]) for r in bdf.collect()}
-    got_jvm = {(r["vec_id"], r["cell"]) for r in jdf.collect()}
-    assert got_np == got_jvm
 
 
 def test_corpus_profile_is_one_pass(spark):

@@ -1,21 +1,24 @@
-"""Round-12 optimization profiler: isolated per-query measurement.
+"""Optimization profiler: isolated per-query measurement.
 
 Usage:
-    python tools/profile_r12.py <query> [query ...] [--sf DIR] [--plans SUFFIX]
+    python tools/profile.py <round> <query> [query ...] --sf DIR [--plans SUFFIX]
 
-For each named query (a key of __spark_entry__.queries()):
-  - captures .explain("formatted") to plans/r12/<query>_<SUFFIX>.txt
+``<round>`` labels the run (e.g. r14). For each named query (a key of
+__spark_entry__.queries()):
+  - captures .explain("formatted") to plans/<round>/<query>_<SUFFIX>.txt
     when --plans is given (e.g. --plans before / --plans after)
   - times the query with the bench's own action (.count()) min-of-2
     after one untimed warmup of the host probe, and with the noop
     sink (guide §1.4, full-column evaluation) min-of-2
   - prints one JSON line per query with both numbers.
 
-Isolated, label-set (guide §1.5), GC between runs (bench discipline).
+``--sf`` defaults to $SPARK_GRAFT_SF_DIR. Isolated, label-set (guide
+§1.5), GC between runs (bench discipline).
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
@@ -23,27 +26,21 @@ import time
 
 
 def main() -> None:
-    args = [a for a in sys.argv[1:]]
-    sf_dir = "/root/testdata/sf0.1"
-    plans_suffix = None
-    names = []
-    i = 0
-    while i < len(args):
-        if args[i] == "--sf":
-            sf_dir = args[i + 1]
-            i += 2
-        elif args[i] == "--plans":
-            plans_suffix = args[i + 1]
-            i += 2
-        else:
-            names.append(args[i])
-            i += 1
+    parser = argparse.ArgumentParser(description="isolated per-query profiler")
+    parser.add_argument("round", help="run label, e.g. r14")
+    parser.add_argument("names", nargs="+", metavar="query")
+    parser.add_argument("--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR"))
+    parser.add_argument("--plans", default=None, metavar="SUFFIX")
+    args = parser.parse_args()
+    if not args.sf:
+        parser.error("--sf is required when $SPARK_GRAFT_SF_DIR is unset")
+    rnd, names, sf_dir, plans_suffix = args.round, args.names, args.sf, args.plans
 
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     os.chdir(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from declarative_dataflow_spark.session import build_session
 
-    spark = build_session("profile_r12")
+    spark = build_session(f"profile_{rnd}")
     import bench
     import __spark_entry__ as entry_mod
 
@@ -56,14 +53,14 @@ def main() -> None:
     probe = bench.host_speed_probe(spark)
     print(json.dumps({"host_probe": probe, "sf_dir": sf_dir}), flush=True)
 
-    plans_dir = os.path.join("plans", "r12")
+    plans_dir = os.path.join("plans", rnd)
     os.makedirs(plans_dir, exist_ok=True)
 
     for name in names:
         if name not in qs:
             print(json.dumps({"query": name, "error": "unknown"}), flush=True)
             continue
-        spark.sparkContext.setJobDescription(f"r12-profile:{name}")
+        spark.sparkContext.setJobDescription(f"{rnd}-profile:{name}")
         if plans_suffix:
             df = qs[name](spark, sf_dir)
             plan = df._sc._jvm.PythonSQLUtils.explainString(
