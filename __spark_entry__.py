@@ -4496,143 +4496,112 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # The driver's correctness run records the FIRST 50 keys only
-    # (CORRECTNESS_r01..r05 each hold exactly 50 rows). With 86+
-    # declared queries the ordering therefore rotates per round so
-    # every key gets a driver-recorded oracle row regularly;
-    # ORACLE_LOCAL.md checks in a full run each round (python
-    # oracle_check.py — the same compare the driver performs).
-    # Round 6 front-loads the CHANGED queries (embed_neardup /
-    # embed_groups — now density-adjusted planes="auto" in both
-    # engines; ngram_jaccard — prefix-ceil epsilon; shortest_cost —
-    # adaptive relaxation step), the THIRTY-SIX queries NEW this
-    # round (simhash_neardup, pq_topk, gopher_rules, line_dedup,
-    # bm25_topk, ngram_lm_score, bpe_merges, mix_weights, tfidf_topk,
-    # hll_distinct, cms_topk, hist_quantiles, corpus_profile,
-    # bpe_encode, chunk_docs, rrf_fusion, lm_buckets, dup_spans,
-    # nb_quality, kmeans, dsir_weights, bloom_contam, weighted_sample,
-    # interval_join, rolling_stats, tok_fertility, asof_join,
-    # zorder_key, char_entropy, blocklist, quality_calibrate,
-    # semdedup, hash_embed, sessionize, funnel, retention), then the
-    # 36 keys r05 deferred.
-    # 40 + 36 = 76 > the driver's 50-row cap, so the 26 tail keys of
-    # the deferred block
-    # (all UNCHANGED since their r04 driver-green rows, all green in
-    # the r05 and r06 full local oracle runs, the simplest operators
-    # of the block) defer once more to r07; never-driver-checked and
-    # changed keys take priority.
-    #
-    # Round 8 rotation (see _R08_FRONT below the dict): the r7 verdict
-    # counted 85 keys with no r07 driver row and ONE key (tpch_q3)
-    # with no driver row in ANY round, so the front 50 this round are
-    # exactly the stalest: tpch_q3 first, then every key whose latest
-    # driver-green row is r04, then the oldest r05 keys — computed
-    # from the union of CORRECTNESS_r01..r07. The literal dict below
-    # keeps its historical grouping as documentation; the returned
-    # ordering is what the driver samples.
+    # Returned order: the 50 keys of ``front`` first, in the order
+    # listed, then every other key in declaration order below. A
+    # correctness run that records only the first 50 keys samples
+    # exactly ``front``; ``oracle_check.py`` checks every key.
     q = {
         "embed_neardup": q_embed_neardup,
         "embed_groups": q_embed_groups,
-        "kcore": q_kcore,  # NEW in r6
-        "graph_cc": q_graph_cc,  # NEW in r6
-        "retrieval_eval": q_retrieval_eval,  # NEW in r6
-        "tpch_q5": q_tpch_q5,  # NEW in r6
-        "tpch_q4": q_tpch_q4,  # NEW in r6
-        "tpch_q12": q_tpch_q12,  # NEW in r6
-        "tpch_q19": q_tpch_q19,  # NEW in r6
-        "tpch_q6": q_tpch_q6,  # NEW in r8
-        "tpch_q10": q_tpch_q10,  # NEW in r8
-        "tpch_q14": q_tpch_q14,  # NEW in r8
-        "tpch_q18": q_tpch_q18,  # NEW in r8
-        "tpch_q1": q_tpch_q1,  # NEW in r8
-        "tpch_q7": q_tpch_q7,  # NEW in r8
-        "tpch_q8": q_tpch_q8,  # NEW in r8
-        "tpch_q13": q_tpch_q13,  # NEW in r8
-        "tpch_q15": q_tpch_q15,  # NEW in r8
-        "tpch_q17": q_tpch_q17,  # NEW in r8
-        "tpch_q21": q_tpch_q21,  # NEW in r8
-        "tpch_q22": q_tpch_q22,  # NEW in r8
-        "sorted_neighborhood": q_sorted_neighborhood,  # NEW in r6
-        "simhash_neardup": q_simhash_neardup,  # NEW in r6
-        "pq_topk": q_pq_topk,  # NEW in r6
-        "gopher_rules": q_gopher_rules,  # NEW in r6
-        "line_dedup": q_line_dedup,  # NEW in r6
-        "bm25_topk": q_bm25_topk,  # NEW in r6
-        "ngram_lm_score": q_ngram_lm_score,  # NEW in r6
-        "bpe_merges": q_bpe_merges,  # NEW in r6
-        "mix_weights": q_mix_weights,  # NEW in r6
-        "tfidf_topk": q_tfidf_topk,  # NEW in r6
-        "hll_distinct": q_hll_distinct,  # NEW in r6
-        "cms_topk": q_cms_topk,  # NEW in r6
-        "hist_quantiles": q_hist_quantiles,  # NEW in r6
-        "corpus_profile": q_corpus_profile,  # NEW in r6
-        "bpe_encode": q_bpe_encode,  # NEW in r6
-        "chunk_docs": q_chunk_docs,  # NEW in r6
-        "rrf_fusion": q_rrf_fusion,  # NEW in r6
-        "lm_buckets": q_lm_buckets,  # NEW in r6
-        "dup_spans": q_dup_spans,  # NEW in r6
-        "nb_quality": q_nb_quality,  # NEW in r6
-        "kmeans": q_kmeans,  # NEW in r6
-        "embed_prune": q_embed_prune,  # NEW in r9
-        "edge_support": q_edge_support,  # NEW in r9
-        "ktruss": q_ktruss,  # NEW in r11
-        "ewma": q_ewma,  # NEW in r11
-        "twap": q_twap,  # NEW in r11
-        "markov_trans": q_markov_trans,  # NEW in r11
-        "burstiness": q_burstiness,  # NEW in r11
-        "rfm": q_rfm,  # NEW in r11
-        "hits": q_hits,  # NEW in r11
-        "ppr": q_ppr,  # NEW in r11
-        "knn_graph": q_knn_graph,  # NEW in r11
-        "readability": q_readability,  # NEW in r11
-        "langid_eval": q_langid_eval,  # NEW in r11
-        "pivot_counts": q_pivot_counts,  # NEW in r11
-        "unpivot_metrics": q_unpivot_metrics,  # NEW in r11
-        "agg_grouping_sets": q_agg_grouping_sets,  # NEW in r11
-        "top_paths": q_top_paths,  # NEW in r11 (batch 2)
-        "seasonality": q_seasonality,  # NEW in r11 (batch 2)
-        "group_quantiles": q_group_quantiles,  # NEW in r11 (batch 2)
-        "label_noise": q_label_noise,  # NEW in r11 (batch 2)
-        "incremental_asof_churn": q_incremental_asof_churn,  # NEW in r12
-        "incremental_sessionize_churn": q_incremental_sessionize_churn,  # NEW in r12
-        "incremental_funnel_churn": q_incremental_funnel_churn,  # NEW in r12
-        "clustering_coef": q_clustering_coef,  # NEW in r10
-        "cdc_chunks": q_cdc_chunks,  # NEW in r10
-        "collocations": q_collocations,  # NEW in r10
-        "vocab_coverage": q_vocab_coverage,  # NEW in r10
-        "pca_top1": q_pca_top1,  # NEW in r10
-        "trunc_recall": q_trunc_recall,  # NEW in r10
-        "mmr_rerank": q_mmr_rerank,  # NEW in r10
-        "assortativity": q_assortativity,  # NEW in r10
-        "attribution": q_attribution,  # NEW in r10
-        "period_coalesce": q_period_coalesce,  # NEW in r10
-        "ngram_novelty": q_ngram_novelty,  # NEW in r10
-        "cluster_sample": q_cluster_sample,  # NEW in r10
-        "node_sim": q_node_sim,  # NEW in r10
-        "window_count": q_window_count,  # NEW in r10
-        "dsir_weights": q_dsir_weights,  # NEW in r6
-        "bloom_contam": q_bloom_contam,  # NEW in r6
-        "weighted_sample": q_weighted_sample,  # NEW in r6
-        "interval_join": q_interval_join,  # NEW in r6
-        "rolling_stats": q_rolling_stats,  # NEW in r6
-        "resample_locf": q_resample_locf,  # NEW in r6
-        "anomalies": q_anomalies,  # NEW in r6
-        "tok_fertility": q_tok_fertility,  # NEW in r6
-        "asof_join": q_asof_join,  # NEW in r6
-        "zorder_key": q_zorder_key,  # NEW in r6
-        "char_entropy": q_char_entropy,  # NEW in r6
-        "blocklist": q_blocklist,  # NEW in r6
-        "quality_calibrate": q_quality_calibrate,  # NEW in r6
-        "winsorize": q_winsorize,  # NEW in r6
-        "json_props": q_json_props,  # NEW in r6
-        "semdedup": q_semdedup,  # NEW in r6
-        "hash_embed": q_hash_embed,  # NEW in r6
-        "sessionize": q_sessionize,  # NEW in r6
-        "funnel": q_funnel,  # NEW in r6
-        "retention": q_retention,  # NEW in r6
-        # --- the 36 keys deferred in r05 (green r04 + local r05) ---
+        "kcore": q_kcore,
+        "graph_cc": q_graph_cc,
+        "retrieval_eval": q_retrieval_eval,
+        "tpch_q5": q_tpch_q5,
+        "tpch_q4": q_tpch_q4,
+        "tpch_q12": q_tpch_q12,
+        "tpch_q19": q_tpch_q19,
+        "tpch_q6": q_tpch_q6,
+        "tpch_q10": q_tpch_q10,
+        "tpch_q14": q_tpch_q14,
+        "tpch_q18": q_tpch_q18,
+        "tpch_q1": q_tpch_q1,
+        "tpch_q7": q_tpch_q7,
+        "tpch_q8": q_tpch_q8,
+        "tpch_q13": q_tpch_q13,
+        "tpch_q15": q_tpch_q15,
+        "tpch_q17": q_tpch_q17,
+        "tpch_q21": q_tpch_q21,
+        "tpch_q22": q_tpch_q22,
+        "sorted_neighborhood": q_sorted_neighborhood,
+        "simhash_neardup": q_simhash_neardup,
+        "pq_topk": q_pq_topk,
+        "gopher_rules": q_gopher_rules,
+        "line_dedup": q_line_dedup,
+        "bm25_topk": q_bm25_topk,
+        "ngram_lm_score": q_ngram_lm_score,
+        "bpe_merges": q_bpe_merges,
+        "mix_weights": q_mix_weights,
+        "tfidf_topk": q_tfidf_topk,
+        "hll_distinct": q_hll_distinct,
+        "cms_topk": q_cms_topk,
+        "hist_quantiles": q_hist_quantiles,
+        "corpus_profile": q_corpus_profile,
+        "bpe_encode": q_bpe_encode,
+        "chunk_docs": q_chunk_docs,
+        "rrf_fusion": q_rrf_fusion,
+        "lm_buckets": q_lm_buckets,
+        "dup_spans": q_dup_spans,
+        "nb_quality": q_nb_quality,
+        "kmeans": q_kmeans,
+        "embed_prune": q_embed_prune,
+        "edge_support": q_edge_support,
+        "ktruss": q_ktruss,
+        "ewma": q_ewma,
+        "twap": q_twap,
+        "markov_trans": q_markov_trans,
+        "burstiness": q_burstiness,
+        "rfm": q_rfm,
+        "hits": q_hits,
+        "ppr": q_ppr,
+        "knn_graph": q_knn_graph,
+        "readability": q_readability,
+        "langid_eval": q_langid_eval,
+        "pivot_counts": q_pivot_counts,
+        "unpivot_metrics": q_unpivot_metrics,
+        "agg_grouping_sets": q_agg_grouping_sets,
+        "top_paths": q_top_paths,
+        "seasonality": q_seasonality,
+        "group_quantiles": q_group_quantiles,
+        "label_noise": q_label_noise,
+        "incremental_asof_churn": q_incremental_asof_churn,
+        "incremental_sessionize_churn": q_incremental_sessionize_churn,
+        "incremental_funnel_churn": q_incremental_funnel_churn,
+        "clustering_coef": q_clustering_coef,
+        "cdc_chunks": q_cdc_chunks,
+        "collocations": q_collocations,
+        "vocab_coverage": q_vocab_coverage,
+        "pca_top1": q_pca_top1,
+        "trunc_recall": q_trunc_recall,
+        "mmr_rerank": q_mmr_rerank,
+        "assortativity": q_assortativity,
+        "attribution": q_attribution,
+        "period_coalesce": q_period_coalesce,
+        "ngram_novelty": q_ngram_novelty,
+        "cluster_sample": q_cluster_sample,
+        "node_sim": q_node_sim,
+        "window_count": q_window_count,
+        "dsir_weights": q_dsir_weights,
+        "bloom_contam": q_bloom_contam,
+        "weighted_sample": q_weighted_sample,
+        "interval_join": q_interval_join,
+        "rolling_stats": q_rolling_stats,
+        "resample_locf": q_resample_locf,
+        "anomalies": q_anomalies,
+        "tok_fertility": q_tok_fertility,
+        "asof_join": q_asof_join,
+        "zorder_key": q_zorder_key,
+        "char_entropy": q_char_entropy,
+        "blocklist": q_blocklist,
+        "quality_calibrate": q_quality_calibrate,
+        "winsorize": q_winsorize,
+        "json_props": q_json_props,
+        "semdedup": q_semdedup,
+        "hash_embed": q_hash_embed,
+        "sessionize": q_sessionize,
+        "funnel": q_funnel,
+        "retention": q_retention,
         "agg_multi": q_agg_multi,
-        "tpch_q3": q_tpch_q3,  # NEW in r6
+        "tpch_q3": q_tpch_q3,
         "agg_global": q_agg_global,
         "tclosure": q_tclosure,
         "tclosure_nonlinear": q_tclosure_nonlinear,
@@ -4642,11 +4611,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "triangle_count": q_triangle_count,
         "triangle_wco": q_triangle_wco,
         "wco_4clause": q_wco_4clause,
-        # --- 50-key cap lands here: the 26 below (unchanged since
-        # their r04 driver rows, green in every local full run — the
-        # simplest, most stable of the deferred block) defer to r07;
-        # brand-new keys (dsir_weights..retention) take the front
-        # slots ---
         "wco_clique4": q_wco_clique4,
         "confusion_filter": q_confusion_filter,
         "confusion_agg": q_confusion_agg,
@@ -4657,20 +4621,20 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "image_meta_ppm": q_image_meta_ppm,
         "contamination": q_contamination,
         "dup_ngram_frac": q_dup_ngram_frac,
-        "cross_neardup": q_cross_neardup,  # NEW in r9
-        "token_kl_shift": q_token_kl_shift,  # NEW in r9
-        "embed_drift": q_embed_drift,  # NEW in r9
-        "snapshot_diff": q_snapshot_diff,  # NEW in r9
-        "fuzzy_match": q_fuzzy_match,  # NEW in r9
-        "minhash_est": q_minhash_est,  # NEW in r9
-        "graph_scc": q_graph_scc,  # NEW in r9
-        "c4_rules": q_c4_rules,  # NEW in r9
-        "fuzzy_groups": q_fuzzy_groups,  # NEW in r9
-        "lsh_pr": q_lsh_pr,  # NEW in r9
-        "text_norm": q_text_norm,  # NEW in r9
-        "link_pred": q_link_pred,  # NEW in r9
-        "dedup_keep_best": q_dedup_keep_best,  # NEW in r9
-        "changepoint": q_changepoint,  # NEW in r9
+        "cross_neardup": q_cross_neardup,
+        "token_kl_shift": q_token_kl_shift,
+        "embed_drift": q_embed_drift,
+        "snapshot_diff": q_snapshot_diff,
+        "fuzzy_match": q_fuzzy_match,
+        "minhash_est": q_minhash_est,
+        "graph_scc": q_graph_scc,
+        "c4_rules": q_c4_rules,
+        "fuzzy_groups": q_fuzzy_groups,
+        "lsh_pr": q_lsh_pr,
+        "text_norm": q_text_norm,
+        "link_pred": q_link_pred,
+        "dedup_keep_best": q_dedup_keep_best,
+        "changepoint": q_changepoint,
         "global_shuffle": q_global_shuffle,
         "token_budget_mix": q_token_budget_mix,
         "topk_per_group": q_topk_per_group,
@@ -4684,12 +4648,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "text_subwords": q_text_subwords,
         "simhash": q_simhash,
         "cosine_topk": q_cosine_topk,
-        "hard_negatives": q_hard_negatives,  # NEW in r9
+        "hard_negatives": q_hard_negatives,
         "ann_quantized": q_ann_quantized,
         "ann_ivf": q_ann_ivf,
         "ann_ivf_kmeans": q_ann_ivf_kmeans,
-        "ann_recall": q_ann_recall,  # NEW in r8
-        # --- r05-front keys filling the remaining driver slots ---
+        "ann_recall": q_ann_recall,
         "embed_quantize": q_embed_quantize,
         "wco_clique5": q_wco_clique5,
         "window_tumbling": q_window_tumbling,
@@ -4700,7 +4663,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "text_quality": q_text_quality,
         "lang_id": q_lang_id,
         "ann_lsh": q_ann_lsh,
-        # --- deferred this round (driver cap); all green in r05 ---
         "ngram_jaccard": q_ngram_jaccard,
         "shortest_cost": q_shortest_cost,
         "graphql": q_graphql,
@@ -4740,37 +4702,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "topk_plan": q_topk_plan,
         "agg_rollup": q_agg_rollup,
     }
-    # Stalest-first driver rotation for round 9. Two freshness debts
-    # compete for the 50 recorded slots: the SEVENTEEN r9-new keys
-    # with no driver row in ANY round (cross_neardup .. edge_support),
-    # and the 48 keys whose latest driver-green row is r05 (VERDICT
-    # r8 ask #2). Never-sampled beats 4-rounds-stale — the r8
-    # verdict's headline coverage metric is "every declared key has a
-    # driver-green row", and tpch_q3's row-less streak was the one
-    # blemish it called out — so the 17 new keys lead, then semdedup
-    # (its Arrow pair engine gained the a != b id guard this round),
-    # then the 32 stalest r05 keys. The SIXTEEN r05 keys with the
-    # most historical green rows (hector_fused, agg_median, match_a,
-    # match_av, project, join_binary, antijoin, filter_lt at 5 rows;
-    # match_ea, union, negate_setdiff, filter_vars, agg_variance,
-    # transform_truncate/add/subtract at 4) defer to the r10 front
-    # alongside sorted_neighborhood; all are hash-verified in this
-    # round's full local oracle runs (ORACLE_LOCAL.md, 164/164 OK +
-    # edge_support in its own gated runs at three scale factors).
-    # Round-10 rotation (history): the 14 r10-new keys, embed_prune
-    # (declared k moved to "auto"), the 16 r05-stale core keys, then
-    # the 19 stalest r07 keys.
-    # Round-11 rotation (VERDICT r10 ask #1): the THIRTY keys whose
-    # latest driver row is r07 lead (after r11 every declared key's
-    # latest driver row is <= 2 rounds old — the rotation debt is
-    # fully amortized), then the FOURTEEN r11-new keys (first-ever
-    # driver rows: ktruss + the r11 operator batch), then embed_prune
-    # and semdedup (their shared Lloyd machinery changed this round —
-    # the assignment kernel now carries the vector and winning cosine
-    # through; re-verify under the driver), then the 4 stalest r08
-    # keys by queries() order.
     front = [
-        # the 30 r07-stale keys (VERDICT r10 ask #1, named list)
         "anomalies", "asof_join", "blocklist", "bloom_contam",
         "bpe_encode", "char_entropy", "chunk_docs", "cms_topk",
         "corpus_profile", "dsir_weights", "dup_spans", "funnel",
@@ -4779,14 +4711,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "nb_quality", "quality_calibrate", "resample_locf",
         "retention", "rolling_stats", "rrf_fusion", "sessionize",
         "tok_fertility", "weighted_sample", "winsorize", "zorder_key",
-        # r11-new keys — first-ever driver rows
         "ktruss", "ewma", "twap", "markov_trans", "burstiness",
         "rfm", "hits", "ppr", "knn_graph", "readability",
         "langid_eval", "pivot_counts", "unpivot_metrics",
         "agg_grouping_sets",
-        # Lloyd machinery changed this round (fused kernel) — re-verify
         "embed_prune", "semdedup",
-        # stalest r08 keys by queries() order
         "tpch_q6", "tpch_q10", "tpch_q14", "tpch_q18",
     ]
     assert len(front) == 50 and set(front) <= set(q), "rotation list drift"

@@ -31,7 +31,10 @@ from dataclasses import dataclass, field
 from enum import Enum
 from typing import Any, Iterable, Optional
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import _parse_datatype_string
 from pyspark.sql.window import Window
 
 from .plan.compiler import (
@@ -251,12 +254,43 @@ class Rule:
     plan: Plan
 
 
+def local_frame(
+    spark: SparkSession,
+    rows: list[tuple],
+    names: list[str],
+    schema: Optional[str] = None,
+) -> DataFrame:
+    """Rows held in Python as a ``LocalRelation`` built from one Arrow
+    table: creating it runs no Spark job, and its exact size statistics
+    let Catalyst broadcast it. ``schema`` is a DDL string over
+    ``names``; without one the schema is the one ``createDataFrame(rows)``
+    infers (Arrow's own inference differs, e.g. decimal(3,2) where
+    Spark gives decimal(38,18)), so frames built here union with
+    row-built ones. Spark keeps the relation local up to
+    ``spark.sql.execution.arrow.localRelationThreshold`` (48 MB by
+    default) of Arrow data and ships anything larger as an RDD scan.
+    ``rows`` must be non-empty."""
+
+    struct = (
+        spark._inferSchemaFromList(rows, names=names)
+        if schema is None
+        else _parse_datatype_string(schema)
+    )
+    table = pa.table(
+        dict(zip(names, map(list, zip(*rows)))),
+        schema=to_arrow_schema(struct),
+    )
+    return spark.createDataFrame(table, schema=struct)
+
+
 class _TransactedAttribute:
     """Accumulates datom batches for one attribute.
 
     Recent rows live in a driver-side list (cheap for the protocol /
-    test path); once the list passes ``SPILL_ROWS`` it is flushed to a
-    parquet spill directory and read back as an ordinary scan, so a
+    test path) and are read as one Arrow-built ``LocalRelation``
+    (``local_frame``), so Catalyst sizes every read of them exactly;
+    once the list passes ``SPILL_ROWS`` it is flushed to a parquet
+    spill directory and read back as an ordinary scan, so a
     long-lived attribute's history is bounded on the driver by one
     spill threshold regardless of total volume (the streaming
     ``transact_frame`` path never touches the driver at all).
@@ -308,11 +342,11 @@ class _TransactedAttribute:
         # Types are inferred from the data (values may be ints for
         # entity refs, strings for scalars — consistent per attribute)
         # except for CAS ops, whose struct schema is explicit.
-        schema = self._schema()
-        if schema is not None:
-            return self.spark.createDataFrame(self.rows, schema=schema)
-        return self.spark.createDataFrame(self.rows).toDF(
-            "e", "v", "t", "diff", "__seq"
+        return local_frame(
+            self.spark,
+            self.rows,
+            ["e", "v", "t", "diff", "__seq"],
+            self._schema(),
         )
 
     def _flush(self) -> None:

@@ -17,15 +17,29 @@ ROCKSDB_PROVIDER = (
 )
 
 
+def _positive_int_env(name: str, default: int) -> int:
+    """``name`` from the environment as a positive int, or ``default``
+    when it is unset, empty, malformed or not positive — a bad knob
+    keeps the default rather than failing session start."""
+
+    try:
+        value = int(os.environ.get(name, default))
+    except ValueError:
+        return default
+    return value if value > 0 else default
+
+
 def build_session(
     app_name: str = "declarative-dataflow-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     rocksdb_state: bool = False,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = _positive_int_env("SPARK_GRAFT_CPUS", 32)
     master = master or f"local[{cpus}]"
-    shuffle = shuffle_partitions or int(os.environ.get("SPARK_SHUFFLE_PARTITIONS", cpus))
+    shuffle = shuffle_partitions or _positive_int_env(
+        "SPARK_SHUFFLE_PARTITIONS", cpus
+    )
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)

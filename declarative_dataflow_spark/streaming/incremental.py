@@ -33,11 +33,9 @@ from __future__ import annotations
 
 from typing import Any, Iterable, Optional
 
-import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.pandas.types import to_arrow_schema
 
-from ..engine import Datom
+from ..engine import Datom, local_frame
 from ..plan.compiler import (
     DIFF,
     AttributeSource,
@@ -60,24 +58,6 @@ from ..plan.plans import (
     Negate,
     Plan,
 )
-
-
-def local_frame(
-    spark: SparkSession, rows: list[tuple], names: list[str]
-) -> DataFrame:
-    """Driver-held rows as a ``LocalRelation`` built from one Arrow
-    table: creating it runs no Spark job, and its exact size statistics
-    let Catalyst broadcast it. The schema is the one
-    ``createDataFrame(rows)`` infers (Arrow's own inference differs,
-    e.g. decimal(3,2) where Spark gives decimal(38,18)), so the frame
-    unions with row-built attribute snapshots."""
-
-    schema = spark._inferSchemaFromList(rows, names=names)
-    table = pa.table(
-        dict(zip(names, map(list, zip(*rows)))),
-        schema=to_arrow_schema(schema),
-    )
-    return spark.createDataFrame(table, schema=schema)
 
 
 def epoch_deltas(
@@ -422,8 +402,20 @@ class DeltaJoin:
 
     def transact(self, datoms: Iterable[Datom]) -> DataFrame:
         """Apply one transaction; return the result diffs of this epoch
-        as a DataFrame over ``variables + [diff]``. Cost is driven by
-        the deltas, never by re-joining the full snapshots."""
+        as a DataFrame over ``variables + [diff]``.
+
+        Each pipeline is the ordinary Hector join chain in binding
+        order, so pipeline i > 0 starts from binding 0's NEW snapshot
+        and meets its delta only at hop i, and every hop scans its
+        snapshot whole. Catalyst picks each join from statistics. The
+        Arrow-built delta and snapshots seeded from the transacted
+        store carry exact ones, so while the snapshots fit under the
+        broadcast threshold every hop is a broadcast hash join and the
+        epoch's only shuffle is the final consolidation. A hop over a
+        snapshot Catalyst cannot size, or one past the threshold, is
+        planned as a sort-merge join, and the whole snapshot is
+        shuffled. Per-epoch cost therefore grows with the snapshots,
+        not only with the delta."""
 
         return self._advance(
             epoch_deltas(self.spark, datoms, self.relevant, self.semantics)

@@ -13,14 +13,20 @@ previous epoch's snapshot with a distributed exceptAll — no
 driver-side relation state. For the streaming-source path the same
 diffing runs inside foreachBatch (see diff_sink).
 
-Scale notes: a transaction's datoms are on the driver already, so each
-maintainer's per-attribute deltas are consolidated there and shipped as
-Arrow-built LocalRelations (``incremental.epoch_deltas``) — no Spark job
-runs before the delta pipelines, and Catalyst broadcasts each delta on
-its exact statistics. Maintainer snapshots are localCheckpoint-ed,
-recompute snapshots cached DataFrames (swap for Delta tables at very
-large results); re-evaluation cost is one Catalyst job per epoch, which
-AQE sizes to the actual data.
+Scale notes: every frame built from rows held in Python is an Arrow-built
+``LocalRelation`` with exact size statistics (``engine.local_frame``).
+That covers each transacted attribute's heap, which ad-hoc reads,
+interest replays and maintainer seed snapshots all plan over, and each
+maintainer's per-attribute epoch deltas (``incremental.epoch_deltas``),
+so no Spark job runs before the delta pipelines. Catalyst broadcasts
+these relations on their statistics instead of sort-merge joining an
+RDD scan it cannot size. Spark keeps a relation local up to
+``spark.sql.execution.arrow.localRelationThreshold`` (48 MB by default),
+well above a heap of at most ``SPILL_ROWS`` short rows; older history
+lives in the parquet spill tier. Maintainer snapshots are
+localCheckpoint-ed, recompute snapshots cached DataFrames (swap for
+Delta tables at very large results); re-evaluation cost is one Catalyst
+job per epoch, which AQE sizes to the actual data.
 """
 
 from __future__ import annotations
