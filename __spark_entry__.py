@@ -1746,7 +1746,7 @@ def q_tclosure_nonlinear(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Transitive closure via a NON-LINEAR rule (reach . reach) — two
     recursive references in one branch. Exercises the generalized
     semi-naive evaluator (one delta-rewritten variant per recursive
-    occurrence; engine._run_semi_naive) and converges in O(log
+    occurrence; engine.semi_naive) and converges in O(log
     diameter) iterations where the linear rule needs O(diameter). The
     oracle is the independently-formulated LINEAR closure — same
     fixpoint, different derivation."""

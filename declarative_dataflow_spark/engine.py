@@ -29,7 +29,7 @@ import tempfile
 import dataclasses
 from dataclasses import dataclass, field
 from enum import Enum
-from typing import Any, Iterable, Optional
+from typing import Any, Callable, Iterable, Optional
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -1125,19 +1125,9 @@ class Engine:
     def _run_semi_naive(
         self, recursive: set[str], max_iterations: int
     ) -> dict[str, Relation]:
-        """Generalized semi-naive evaluation for monotone recursion.
-
-        delta_0[r] = base(r); per iteration, each rule evaluates one
-        rewritten branch per recursive occurrence — that occurrence
-        reads the previous delta, every other recursive reference reads
-        the accumulated total — and anti-joins the result against its
-        total, so derivations pairing new facts with old AND new facts
-        are all covered (the classic non-linear semi-naive rewrite;
-        differential's Variables give the reference the same asymptotic,
-        src/lib.rs:943-1019). Work per iteration is proportional to the
-        delta-derived facts, not the accumulated fixpoint. All rules
-        advance together, matching the reference's iterative scope.
-        """
+        """Generalized semi-naive evaluation for monotone recursion
+        (:func:`semi_naive`), seeded with every rule's base case.
+        Static subtrees compile and checkpoint once per fixpoint."""
 
         static_cache: dict[str, Relation] = {}
         dynamic = self._dynamic_rules(recursive)
@@ -1157,87 +1147,117 @@ class Engine:
                 dynamic_rules=dynamic,
             )
 
-        totals: dict[str, Relation] = {}
-        deltas: dict[str, Relation] = {}
-
-        # Iteration 0: base cases — recursive references drop as
-        # unbound (Union treats those branches as empty).
-        for rn in sorted(recursive):
-            try:
-                rel = compile_plan(
-                    self.rules[rn], cat({}, set(recursive))
-                ).distinct()
-            except UnboundRule:
-                continue  # pure-recursive rule: empty until deps fire
-            # Eager (kept, r12): the limit(1) probe EARLY-EXITS on
-            # non-empty deltas, leaving most partitions uncached for
-            # the two downstream consumers (next round's step + the
-            # totals union) to recompute — measured +25-40% on
-            # tclosure at sf0.1 when flipped lazy.
-            df = rel.df.localCheckpoint(eager=True)
-            if df.limit(1).isEmpty():
-                continue
-            totals[rn] = Relation(rel.variables, df, False)
-            deltas[rn] = totals[rn]
-
+        # Base cases: recursive references drop as unbound (Union
+        # treats those branches as empty).
+        base = new_facts(
+            {rn: self.rules[rn] for rn in recursive},
+            cat({}, set(recursive)),
+            {},
+        )
         steps = {
             rn: _delta_step_plan(self.rules[rn], recursive)
             for rn in recursive
         }
+        totals, _ = semi_naive(steps, {}, base, cat, max_iterations)
+        return totals
 
-        for _ in range(max_iterations):
-            bound: dict[str, Relation] = {}
-            unbound: set[str] = set()
-            for rn in recursive:
-                if rn in totals:
-                    bound[f"{rn}@new"] = totals[rn]
-                else:
-                    unbound.add(f"{rn}@new")
-                if rn in deltas:
-                    bound[f"{rn}@delta"] = deltas[rn]
-                else:
-                    unbound.add(f"{rn}@delta")
-            new_deltas: dict[str, Relation] = {}
-            for rn in sorted(recursive):
-                try:
-                    new_rel = compile_plan(
-                        steps[rn], cat(bound, unbound)
-                    ).distinct()
-                except UnboundRule:
-                    continue  # no referenced delta exists yet
-                new_df = new_rel.df
-                total = totals.get(rn)
-                if total is not None:
-                    cols = list(total.df.columns)
-                    new_df = new_df.select(*cols).join(
-                        total.df, on=cols, how="left_anti"
-                    )
-                # Eager (kept, r12): same early-exit hazard as the
-                # iteration-0 checkpoint above — lazy measured slower.
-                delta_df = new_df.localCheckpoint(eager=True)
-                if delta_df.limit(1).isEmpty():
-                    continue
-                new_deltas[rn] = Relation(
-                    new_rel.variables, delta_df, False
+
+def delta_bindings(
+    recursive: Iterable[str],
+    deltas: dict[str, Relation],
+    totals: dict[str, Relation],
+) -> tuple[dict[str, Relation], set[str]]:
+    """Catalog bindings for delta step plans (:func:`_delta_step_plan`):
+    each rule's ``@delta`` occurrence reads ``deltas``, its ``@new``
+    occurrences read ``totals``. A rule missing from either is unbound,
+    so the branches reading it drop."""
+
+    bound: dict[str, Relation] = {}
+    unbound: set[str] = set()
+    for rn in recursive:
+        for suffix, rels in (("@delta", deltas), ("@new", totals)):
+            if rn in rels:
+                bound[rn + suffix] = rels[rn]
+            else:
+                unbound.add(rn + suffix)
+    return bound, unbound
+
+
+def new_facts(
+    plans: dict[str, Plan],
+    catalog: Catalog,
+    totals: dict[str, Relation],
+) -> dict[str, Relation]:
+    """Per rule, the distinct result of its plan minus the rule's
+    total: eagerly checkpointed, probed once, and kept only when
+    non-empty. A plan reading only unbound rules yields nothing."""
+
+    out: dict[str, Relation] = {}
+    for rn in sorted(plans):
+        try:
+            rel = compile_plan(plans[rn], catalog).distinct()
+        except UnboundRule:
+            continue
+        cols = [vcol(v) for v in rel.variables]
+        df = rel.df.select(*cols)
+        if rn in totals:
+            df = df.join(totals[rn].df, on=cols, how="left_anti")
+        # Eager (kept, r12): the limit(1) probe EARLY-EXITS on
+        # non-empty deltas, leaving most partitions uncached for the
+        # two downstream consumers (next round's step + the totals
+        # union) to recompute — measured +25-40% on tclosure at sf0.1
+        # when flipped lazy.
+        df = df.localCheckpoint(eager=True)
+        if not df.limit(1).isEmpty():
+            out[rn] = Relation(rel.variables, df, False)
+    return out
+
+
+def semi_naive(
+    steps: dict[str, Plan],
+    totals: dict[str, Relation],
+    deltas: dict[str, Relation],
+    catalog: Callable[[dict[str, Relation], set[str]], Catalog],
+    max_iterations: int,
+) -> tuple[dict[str, Relation], dict[str, Relation]]:
+    """Generalized semi-naive insertion, the one set-semantics fixpoint
+    loop: fold the per-rule ``deltas`` (checkpointed, non-empty,
+    disjoint from ``totals``) and everything derivable from them into
+    the totals. Returns (totals, added).
+
+    Per iteration each rule evaluates its delta step plan — one
+    rewritten branch per recursive occurrence; that occurrence reads
+    the previous delta, every other recursive reference reads the
+    accumulated total — and anti-joins the result against its total,
+    so derivations pairing new facts with old AND new facts are all
+    covered (the classic non-linear semi-naive rewrite; differential's
+    Variables give the reference the same asymptotic,
+    src/lib.rs:943-1019). Work per iteration is proportional to the
+    delta-derived facts, not the accumulated fixpoint. All rules
+    advance together, matching the reference's iterative scope.
+    ``catalog(bound, unbound)`` is the caller's Catalog factory."""
+
+    totals = dict(totals)
+    added: dict[str, Relation] = {}
+    rounds = 0
+    while deltas:
+        if rounds == max_iterations:
+            raise RuntimeError(
+                f"semi-naive fixpoint did not converge in "
+                f"{max_iterations} iterations"
+            )
+        rounds += 1
+        # Totals are shallow unions of already-checkpointed deltas —
+        # lineage stays O(iterations) deep with no extra
+        # materialization.
+        for rn, d in deltas.items():
+            for acc in (totals, added):
+                prev = acc.get(rn)
+                acc[rn] = d if prev is None else Relation(
+                    prev.variables,
+                    prev.df.unionByName(d.df),
+                    False,
                 )
-            if not new_deltas:
-                return totals
-            # Advance all Variables together. Totals are shallow unions
-            # of already-checkpointed deltas — lineage stays
-            # O(iterations) deep with no extra materialization.
-            for rn, d in new_deltas.items():
-                total = totals.get(rn)
-                if total is None:
-                    totals[rn] = d
-                else:
-                    totals[rn] = Relation(
-                        total.variables,
-                        total.df.unionByName(
-                            d.df.select(*total.df.columns)
-                        ),
-                        False,
-                    )
-            deltas = new_deltas
-        raise RuntimeError(
-            f"semi-naive fixpoint did not converge in {max_iterations} iterations"
-        )
+        bound, unbound = delta_bindings(steps, deltas, totals)
+        deltas = new_facts(steps, catalog(bound, unbound), totals)
+    return totals, added

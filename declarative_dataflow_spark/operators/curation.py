@@ -108,7 +108,7 @@ def dup_ngram_frac(
 
     from .dedup import shingle_arrays
 
-    arr = shingle_arrays(docs, n, text_col).localCheckpoint(eager=False)
+    arr = shingle_arrays(docs, n, text_col)
     totals = arr.select(
         "doc_id", F.size("sarr").cast("long").alias("n_ngrams")
     )
@@ -1046,7 +1046,7 @@ def ngram_novelty(
 
     from .dedup import shingle_arrays
 
-    arr = shingle_arrays(docs, n, text_col).localCheckpoint(eager=False)
+    arr = shingle_arrays(docs, n, text_col)
     totals = arr.select(
         "doc_id", F.size("sarr").cast("long").alias("n_shingles")
     )

@@ -64,18 +64,17 @@ def shingle_arrays(
     """Distinct word n-gram shingles per document as ONE row-local
     ARRAY row: (doc_id, sarr). The doc-scale form of :func:`shingles`
     — consumers that need both a per-document size and the exploded
-    stream checkpoint THIS table once and re-derive the explode
-    map-side (the r12 base-array discipline), paying the tokenize a
-    single time with only doc-scale state materialized.
+    stream read this lazily checkpointed table and re-derive the
+    explode map-side (the r12 base-array discipline), paying the
+    tokenize a single time with only doc-scale state materialized.
 
-    CONSUMERS MUST localCheckpoint this table BEFORE exploding it:
-    the transform subscripts w[i+j] and is only safe on rows passing
-    the size filter; an explode directly over the expression lets
-    Catalyst evaluate its inferred `size(...) > 0` predicate ahead of
-    the size filter (INVALID_ARRAY_INDEX under ANSI mode — observed).
-    The checkpoint is a plan barrier, so post-checkpoint explodes
-    only ever see materialized arrays. (A CASE-guarded total
-    expression was tried instead and REJECTED: conditionals disable
+    The returned table is checkpointed because the transform
+    subscripts w[i+j] and is only safe on rows passing the size
+    filter: an explode directly over the expression lets Catalyst
+    evaluate its inferred `size(...) > 0` predicate ahead of that
+    filter (INVALID_ARRAY_INDEX under ANSI mode). The checkpoint is a
+    plan barrier, so explodes only ever see materialized arrays. (A
+    CASE-guarded total expression was REJECTED: conditionals disable
     codegen subexpression elimination, and the un-cached
     double-evaluation under generate + inferred filter measured 10x
     on contamination.)"""
@@ -91,7 +90,9 @@ def shingle_arrays(
         sh = F.expr(
             f"transform(sequence(0, size(w) - {n}), i -> concat_ws('_', {parts}))"
         )
-    return base.select("doc_id", F.array_distinct(sh).alias("sarr"))
+    return base.select(
+        "doc_id", F.array_distinct(sh).alias("sarr")
+    ).localCheckpoint(eager=False)
 
 
 def shingles(

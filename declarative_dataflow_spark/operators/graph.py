@@ -15,7 +15,7 @@ Spark-first shape (delta Bellmann-Ford):
 Each round is one join + one min-combine shuffle (map-side partial
 aggregation), work proportional to the improved rows, and
 ``localCheckpoint`` truncates lineage per round — the same recursion
-discipline as the engine fixpoint (engine.py::_run_semi_naive).
+discipline as the engine fixpoint (engine.py::semi_naive).
 Convergence in <= graph-diameter rounds.
 
 The connected-components operator lives in dedup.py
@@ -69,8 +69,9 @@ def shortest_hops(
     sources: DataFrame | None = None,
 ) -> DataFrame:
     """Minimum hop count between every reachable (x, y) pair:
-    (x, y, hops). Delta-driven relaxation; terminates on any graph
-    (cycles included) because hop counts only improve.
+    (x, y, hops) — :func:`shortest_paths` over unit costs, one
+    relaxation per round. Terminates on any graph (cycles included)
+    because hop counts only improve.
 
     The OUTPUT is all-pairs distances — inherently quadratic in
     reachable pairs. ``sources`` (a one-column frame of start nodes)
@@ -81,62 +82,12 @@ def shortest_hops(
     the diameter, not the data size.
     """
 
-    e = edges.select(
-        F.col(src).alias("s"), F.col(dst).alias("t")
-    ).distinct()
-    seed = e
-    if sources is not None:
-        src_col = sources.columns[0]
-        seed = e.join(
-            sources.select(F.col(src_col).alias("s")).distinct(), "s"
-        )
-    dist = (
-        seed.select(
-            F.col("s").alias("x"),
-            F.col("t").alias("y"),
-            F.lit(1).alias("hops"),
-        )
-        # Lazy (r12, the scc defer discipline): round 1's merge job
-        # materializes it.
-        .localCheckpoint(eager=False)
+    unit = edges.select(
+        F.col(src).alias("s"), F.col(dst).alias("t"), F.lit(1).alias("w")
     )
-    delta = dist
-    for _ in range(max_iters):
-        # Change detection via the tag column riding through the
-        # min-combine (the connected_components / shortest_paths
-        # shape, r12): candidate rows carry a NULL tag, min(tag)
-        # recovers the round-start hop count, and the improved set is
-        # a filter over the materialized merge — no per-round
-        # anti-join against the full distance table, no separate
-        # delta checkpoint.
-        cand = (
-            delta.join(e, delta["y"] == e["s"])
-            .select(
-                "x",
-                F.col("t").alias("y"),
-                (F.col("hops") + 1).alias("hops"),
-                F.expr("CAST(NULL AS INT)").alias("__old"),
-            )
-        )
-        merged = (
-            dist.select("x", "y", "hops", F.col("hops").alias("__old"))
-            .unionByName(cand)
-            .groupBy("x", "y")
-            .agg(
-                F.min("hops").alias("hops"),
-                F.min("__old").alias("__old"),
-            )
-            # Lazy (r12): the emptiness probe below is the first
-            # consumer — materialization folds into its job.
-            .localCheckpoint(eager=False)
-        )
-        delta = merged.filter(
-            F.col("__old").isNull() | (F.col("hops") < F.col("__old"))
-        ).select("x", "y", "hops")
-        dist = merged.select("x", "y", "hops")
-        if delta.limit(1).isEmpty():
-            return dist
-    raise RuntimeError(f"shortest_hops did not converge in {max_iters} rounds")
+    return shortest_paths(
+        unit, "s", "t", "w", max_iters=max_iters, sources=sources, step=1
+    ).withColumnRenamed("cost", "hops")
 
 
 def pagerank(
@@ -218,12 +169,10 @@ def shortest_paths(
     max_iters: int = 100,
     sources: DataFrame | None = None,
     step: int = 4,
-    max_step: Optional[int] = None,
 ) -> DataFrame:
     """Minimum total cost between reachable (x, y) pairs over a
-    non-negative cost column: (x, y, cost). Same delta-driven
-    relaxation as :func:`shortest_hops` (its cost-1 special case);
-    non-negative costs guarantee termination.
+    non-negative cost column: (x, y, cost). Delta-driven relaxation
+    (:func:`_relax`); non-negative costs guarantee termination.
 
     Unlike hop counts (which converge in diameter rounds), min-cost
     tables keep improving for as many rounds as the HOP LENGTH of the
@@ -235,22 +184,11 @@ def shortest_paths(
     min-combines WITHIN each hop extension (the per-step groupBy) but
     does not re-prune against the accumulated minimum until the final
     merge, so on dense graphs one job can expand candidates by up to
-    fanout^step before merging.
-
-    ``max_step > step`` opts into ADAPTIVE unrolling: step doubles
-    (capped at max_step) while the delta frontier shrinks and halves
-    when it grows. Measured on the sf0.1 benchmark graph (cheapest
-    paths ~17-20 hops, deltas collapsing 2394→1610→826→120→0), this
-    is a LOSS: total join count is what the job pays — every inner
-    step is a shuffle, and steps joined past convergence are pure
-    waste (cap 64 burned ~60 unneeded shuffles in its last round and
-    doubled wall time; even cap 8 ran 1.5x slower than fixed 4). So
-    the DEFAULT is fixed step: adaptivity pays off only when the
-    cheapest paths are far longer than the per-round frontier is wide
-    (deep thin chain graphs, where rounds are pure scheduling
-    overhead) — that caller sets max_step explicitly. The delta count
-    that drives adaptation is read off the already-materialized
-    checkpoint the emptiness test needs anyway."""
+    fanout^step before merging. A fixed step beats adapting it to the
+    frontier size: every inner step is a shuffle, and steps joined
+    past convergence are pure waste (measured on the sf0.1 benchmark
+    graph, cheapest paths ~17-20 hops: an adaptive step capped at 8
+    ran 1.5x slower than fixed 4)."""
 
     e = edges.select(
         F.col(src).alias("s"),
@@ -268,10 +206,22 @@ def shortest_paths(
     # Lazy (r12, the scc defer discipline): round 1's merge job
     # materializes it.
     ).localCheckpoint(eager=False)
-    delta = dist
-    step = max(1, step)
-    max_step = step if max_step is None else max(step, max_step)
-    prev_count: int | None = None
+    return _relax(dist, dist, e, max(1, step), max_iters)
+
+
+def _relax(
+    dist: DataFrame,
+    delta: DataFrame,
+    edges: DataFrame,
+    step: int,
+    max_iters: int,
+) -> DataFrame:
+    """The one min-lattice relaxation loop: extend the improved rows
+    ``delta`` of the (x, y, cost) table ``dist`` along the (s, t, w)
+    ``edges`` until no pair improves; returns the converged table.
+    ``delta`` must already be merged into ``dist``. Each round unrolls
+    ``step`` extensions into one Spark job."""
+
     ctype = dict(dist.dtypes)["cost"]
     for _ in range(max_iters):
         # The round-start cost rides along as a tag column that
@@ -288,17 +238,16 @@ def shortest_paths(
             "x", "y", "cost", F.col("cost").alias("__old")
         )
         ext = delta
-        for _ in range(step):
-            ext = (
-                ext.join(e, ext["y"] == e["s"])
-                .select(
-                    "x",
-                    F.col("t").alias("y"),
-                    (F.col("cost") + F.col("w")).alias("cost"),
-                )
-                .groupBy("x", "y")
-                .agg(F.min("cost").alias("cost"))
+        for i in range(step):
+            ext = ext.join(edges, ext["y"] == edges["s"]).select(
+                "x",
+                F.col("t").alias("y"),
+                (F.col("cost") + F.col("w")).alias("cost"),
             )
+            if i < step - 1:
+                # The last extension needs no min-combine of its own:
+                # the merge below takes the minimum over its rows.
+                ext = ext.groupBy("x", "y").agg(F.min("cost").alias("cost"))
             acc = acc.unionByName(
                 ext.select(
                     "x",
@@ -321,25 +270,9 @@ def shortest_paths(
             F.col("__old").isNull() | (F.col("cost") < F.col("__old"))
         ).select("x", "y", "cost")
         dist = merged.select("x", "y", "cost")
-        if max_step == step and prev_count is None:
-            # Fixed-step mode never reads the delta SIZE — the cheap
-            # limit(1) emptiness probe beats a full count() on the
-            # checkpointed merge by ~1.5s across a 5-round sf0.1 run
-            # (count scans every cached partition; limit(1) stops at
-            # the first non-empty one).
-            if delta.limit(1).isEmpty():
-                return dist
-            continue
-        n_delta = delta.count()  # scans the materialized merge
-        if n_delta == 0:
+        if delta.limit(1).isEmpty():
             return dist
-        if prev_count is not None:
-            if n_delta < prev_count:
-                step = min(step * 2, max_step)
-            elif n_delta > prev_count:
-                step = max(1, step // 2)
-        prev_count = n_delta
-    raise RuntimeError(f"shortest_paths did not converge in {max_iters} rounds")
+    raise RuntimeError(f"relaxation did not converge in {max_iters} rounds")
 
 
 def kcore(

@@ -35,11 +35,19 @@ from typing import Any, Iterable, Optional
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..engine import Datom, local_frame
+from ..engine import (
+    Datom,
+    _delta_step_plan,
+    delta_bindings,
+    local_frame,
+    new_facts,
+    semi_naive,
+)
 from ..plan.compiler import (
     DIFF,
     AttributeSource,
     Catalog,
+    Relation,
     UnboundRule,
     compile_plan,
     vcol,
@@ -794,8 +802,8 @@ class IncrementalRecursion:
     re-running them (src/lib.rs:943-1019). Spark-first equivalent over
     the maintained per-rule fixpoints T[r] — every rule in the
     recursive cycle advances together, mutual recursion and non-linear
-    rules included (delta steps come from the same occurrence-level
-    rewrite the batch evaluator uses, engine._delta_step_plan):
+    rules included. The seed and every insertion run the batch
+    evaluator's own loop, engine.semi_naive:
 
     - additions: delta-seeded generalized semi-naive — D0[r] =
       eval(r over new inputs, cycle:=T) \\ T[r], then propagate
@@ -831,9 +839,6 @@ class IncrementalRecursion:
         max_iterations: int = 200,
         semantics: Optional[dict[str, "SemanticsDeltaSource"]] = None,
     ):
-        from ..engine import _delta_step_plan
-        from ..plan.compiler import Relation
-
         if isinstance(rules, Plan):  # single self-recursive rule
             rules = {name: rules}
         self.spark = spark
@@ -864,17 +869,12 @@ class IncrementalRecursion:
                 DeltaJoin._consolidate(df.select("e", "v", "diff"))
                 .localCheckpoint(eager=True)
             )
-        self._Relation = Relation
         # Seed T with a full generalized semi-naive fixpoint.
-        views = self._views()
-        d0 = {}
-        for rn in self.recursive:
-            base = self._eval_base(rn, views)
-            if base is not None:
-                d0[rn] = base.dropDuplicates(self.cols[rn]).localCheckpoint(
-                    eager=True
-                )
-        self.totals, _ = self._propagate(views, {}, d0)
+        cat = self._catalog()
+        base = new_facts(self.rules, cat({}, set(self.recursive)), {})
+        self.totals, _ = semi_naive(
+            self.steps, {}, base, cat, max_iterations
+        )
 
     # -- helpers ---------------------------------------------------------
 
@@ -882,138 +882,36 @@ class IncrementalRecursion:
         schema = ", ".join(f"`{c}` string" for c in self.cols[rn])
         return self.spark.createDataFrame([], schema=schema)
 
-    def _views(self) -> dict[str, DataFrame]:
-        """Present facts per attribute (net weight > 0, set view)."""
+    def _catalog(self):
+        """Catalog factory over the present facts per attribute (net
+        weight > 0, set view)."""
 
-        return {
-            aid: df.filter(F.col("diff") > 0).select("e", "v")
+        attrs = {
+            aid: AttributeSource(
+                loader=(
+                    lambda d=df.filter(F.col("diff") > 0).select("e", "v"): d
+                ),
+                has_diff=False,
+            )
             for aid, df in self.snapshots.items()
         }
-
-    def _attr_catalog(self, views: dict[str, DataFrame]) -> dict:
-        return {
-            aid: AttributeSource(loader=(lambda d=df: d), has_diff=False)
-            for aid, df in views.items()
-        }
-
-    def _eval_base(self, rn: str, views) -> Optional[DataFrame]:
-        """Non-recursive derivations of ``rn`` (cycle names unbound)."""
-
-        cat = Catalog(
-            self._attr_catalog(views), self.rules, {}, set(self.recursive)
+        return lambda bound, unbound: Catalog(
+            attrs, self.rules, bound, unbound
         )
-        try:
-            rel = compile_plan(self.rules[rn], cat).distinct()
-        except UnboundRule:
-            return None  # pure-recursive rule: no base case
-        return rel.df.select(*self.cols[rn])
 
-    def _eval_full(
-        self, rn: str, views, bound: dict[str, DataFrame]
-    ) -> Optional[DataFrame]:
-        """One derivation step of ``rn`` with cycle rules bound to the
-        given iterates (missing ones unbound -> branch drops)."""
-
-        bound_rules = {
-            m: self._Relation(self.variables[m], df, False)
-            for m, df in bound.items()
-        }
-        cat = Catalog(
-            self._attr_catalog(views),
-            self.rules,
-            bound_rules,
-            self.recursive - set(bound),
-        )
+    @staticmethod
+    def _eval(plan: Plan, catalog: Catalog) -> Optional[DataFrame]:
         try:
-            rel = compile_plan(self.rules[rn], cat).distinct()
+            return compile_plan(plan, catalog).distinct().df
         except UnboundRule:
             return None
-        return rel.df.select(*self.cols[rn])
-
-    def _eval_delta(
-        self,
-        rn: str,
-        views,
-        deltas: dict[str, DataFrame],
-        news: dict[str, DataFrame],
-    ) -> Optional[DataFrame]:
-        """One delta step of ``rn``: each recursive occurrence reads its
-        rule's delta in one variant, the accumulated totals elsewhere."""
-
-        bound_rules = {}
-        unbound = set()
-        for m in self.recursive:
-            if m in deltas:
-                bound_rules[f"{m}@delta"] = self._Relation(
-                    self.variables[m], deltas[m], False
-                )
-            else:
-                unbound.add(f"{m}@delta")
-            if m in news:
-                bound_rules[f"{m}@new"] = self._Relation(
-                    self.variables[m], news[m], False
-                )
-            else:
-                unbound.add(f"{m}@new")
-        cat = Catalog(
-            self._attr_catalog(views), self.rules, bound_rules, unbound
-        )
-        try:
-            rel = compile_plan(self.steps[rn], cat).distinct()
-        except UnboundRule:
-            return None
-        return rel.df.select(*self.cols[rn])
-
-    def _propagate(
-        self,
-        views: dict[str, DataFrame],
-        totals: dict[str, DataFrame],
-        deltas: dict[str, DataFrame],
-    ) -> tuple[dict[str, DataFrame], dict[str, DataFrame]]:
-        """Generalized semi-naive insertion: fold per-rule deltas
-        (disjoint from totals) and everything derivable from them in.
-        Returns (new_totals, all_added)."""
-
-        totals = dict(totals)
-        added: dict[str, DataFrame] = {}
-        for _ in range(self.max_iterations):
-            deltas = {
-                rn: d
-                for rn, d in deltas.items()
-                if not d.limit(1).isEmpty()
-            }
-            if not deltas:
-                return totals, added
-            for rn, d in deltas.items():
-                totals[rn] = (
-                    totals[rn].unionByName(d) if rn in totals else d
-                )
-                added[rn] = (
-                    added[rn].unionByName(d) if rn in added else d
-                )
-            nxt: dict[str, DataFrame] = {}
-            for rn in sorted(self.recursive):
-                step = self._eval_delta(rn, views, deltas, totals)
-                if step is None:
-                    continue
-                d = step
-                if rn in totals:
-                    d = d.join(totals[rn], self.cols[rn], "left_anti")
-                d = d.dropDuplicates(self.cols[rn]).localCheckpoint(
-                    eager=True
-                )
-                nxt[rn] = d
-            deltas = nxt
-        raise RuntimeError(
-            f"incremental fixpoint did not converge in {self.max_iterations}"
-        )
 
     def current(self) -> DataFrame:
         """The maintained fixpoint of the subscribed rule as
         (variables..., diff=1) — used to replay state on subscription."""
 
         rn = self.name
-        total = self.totals.get(rn, self._empty_df(rn))
+        total = self.totals[rn].df if rn in self.totals else self._empty_df(rn)
         out = total.select(
             *[F.col(vcol(v)).alias(str(v)) for v in self.variables[rn]]
         )
@@ -1048,7 +946,7 @@ class IncrementalRecursion:
             ).localCheckpoint(eager=True)
             self.snapshots[aid] = merged
 
-        views = self._views()
+        cat = self._catalog()
         t_old = dict(self.totals)
         overdeleted: dict[str, DataFrame] = {}
 
@@ -1056,91 +954,86 @@ class IncrementalRecursion:
             # One-step lost support per rule: T was a fixpoint of the
             # old inputs, so anything not re-derivable from (new
             # inputs, T) lost a derivation through a deleted fact.
-            o_cur: dict[str, DataFrame] = {}
+            o_cur: dict[str, Relation] = {}
             base_new: dict[str, DataFrame] = {}
-            remaining = dict(t_old)
-            for rn in sorted(self.recursive):
-                if rn not in t_old:
-                    continue
-                one_step = self._eval_full(rn, views, t_old)
+            remaining = {rn: t.df for rn, t in t_old.items()}
+            one_step_cat = cat(t_old, self.recursive - set(t_old))
+            base_cat = cat({}, set(self.recursive))
+            for rn in sorted(t_old):
+                cols = self.cols[rn]
+                one_step = self._eval(self.rules[rn], one_step_cat)
                 lost = (
-                    t_old[rn]
+                    t_old[rn].df
                     if one_step is None
-                    else t_old[rn].join(one_step, self.cols[rn], "left_anti")
+                    else t_old[rn].df.join(one_step, cols, "left_anti")
                 )
                 lost = lost.localCheckpoint(eager=True)
                 if not lost.limit(1).isEmpty():
-                    o_cur[rn] = lost
-                b = self._eval_base(rn, views)
-                base_new[rn] = (
-                    self._empty_df(rn) if b is None else b
-                )
+                    o_cur[rn] = Relation(t_old[rn].variables, lost)
+                b = self._eval(self.rules[rn], base_cat)
+                base_new[rn] = self._empty_df(rn) if b is None else b
             for _ in range(self.max_iterations):
                 if not o_cur:
                     break
                 for rn, o in o_cur.items():
                     overdeleted[rn] = (
-                        overdeleted[rn].unionByName(o)
+                        overdeleted[rn].unionByName(o.df)
                         if rn in overdeleted
-                        else o
+                        else o.df
                     )
                     remaining[rn] = remaining[rn].join(
-                        o, self.cols[rn], "left_anti"
+                        o.df, self.cols[rn], "left_anti"
                     )
-                nxt: dict[str, DataFrame] = {}
-                for rn in sorted(self.recursive):
-                    if rn not in remaining:
-                        continue
-                    # Tuples derivable through an overdeleted tuple of
-                    # any cycle rule; an intact non-recursive
-                    # derivation shields a tuple from overdeletion,
-                    # which keeps the closure delta-sized.
-                    derived = self._eval_delta(rn, views, o_cur, t_old)
+                # Tuples derivable through an overdeleted tuple of any
+                # cycle rule; an intact non-recursive derivation
+                # shields a tuple from overdeletion, which keeps the
+                # closure delta-sized.
+                step_cat = cat(*delta_bindings(self.recursive, o_cur, t_old))
+                nxt: dict[str, Relation] = {}
+                for rn in sorted(remaining):
+                    cols = self.cols[rn]
+                    derived = self._eval(self.steps[rn], step_cat)
                     if derived is None:
                         continue
                     o = (
-                        derived.join(remaining[rn], self.cols[rn], "left_semi")
-                        .join(base_new[rn], self.cols[rn], "left_anti")
-                        .dropDuplicates(self.cols[rn])
+                        derived.join(remaining[rn], cols, "left_semi")
+                        .join(base_new[rn], cols, "left_anti")
                         .localCheckpoint(eager=True)
                     )
                     if not o.limit(1).isEmpty():
-                        nxt[rn] = o
+                        nxt[rn] = Relation(t_old[rn].variables, o)
                 o_cur = nxt
             else:
                 raise RuntimeError("overdeletion closure did not converge")
             t1 = {
                 rn: (
-                    t_old[rn].join(
-                        overdeleted[rn], self.cols[rn], "left_anti"
-                    ).localCheckpoint(eager=True)
+                    Relation(
+                        t.variables,
+                        t.df.join(
+                            overdeleted[rn], self.cols[rn], "left_anti"
+                        ).localCheckpoint(eager=True),
+                    )
                     if rn in overdeleted
-                    else t_old[rn]
+                    else t
                 )
-                for rn in t_old
+                for rn, t in t_old.items()
             }
         else:
             t1 = t_old
 
         # Insertion phase re-derives overdeleted survivors AND folds in
         # new-input derivations in one delta-seeded pass.
-        d0: dict[str, DataFrame] = {}
-        for rn in sorted(self.recursive):
-            step = self._eval_full(rn, views, t1)
-            if step is None:
-                continue
-            d = step
-            if rn in t1:
-                d = d.join(t1[rn], self.cols[rn], "left_anti")
-            d = d.dropDuplicates(self.cols[rn]).localCheckpoint(eager=True)
-            if not d.limit(1).isEmpty():
-                d0[rn] = d
-        new_totals, added = self._propagate(views, t1, d0)
+        d0 = new_facts(self.rules, cat(t1, self.recursive - set(t1)), t1)
+        new_totals, added = semi_naive(
+            self.steps, t1, d0, cat, self.max_iterations
+        )
         self.totals = {
-            rn: df.localCheckpoint(eager=True)
-            for rn, df in new_totals.items()
+            rn: Relation(t.variables, t.df.localCheckpoint(eager=True))
+            for rn, t in new_totals.items()
         }
-        return self._diffs(added.get(rn0), overdeleted.get(rn0))
+        return self._diffs(
+            added[rn0].df if rn0 in added else None, overdeleted.get(rn0)
+        )
 
     def _diffs(
         self,
@@ -1302,11 +1195,12 @@ class IncrementalShortestPaths:
 
     - additions / weight decreases (monotone): seed candidates from
       the improving edges and their one-step compositions with the
-      maintained distance table, then run the same delta relaxation as
-      the batch operator — only improving rows propagate.
+      maintained distance table, then run the batch operators' own
+      relaxation loop (graph.py::_relax) — only improving rows
+      propagate, and an epoch with no improving row runs no round.
     - retractions (DRed for the min lattice; the set-semantics
-      analogue is IncrementalRecursion's delete-rederive,
-      incremental.py:726): a pair (x, y) is AFFECTED iff some minimal
+      analogue is IncrementalRecursion's delete-rederive in
+      ``IncrementalRecursion.transact``): a pair (x, y) is AFFECTED iff some minimal
       path routes through a removed edge (s, t) — exactly
       d(x,s) + w(s,t) + d(t,y) == d(x,y) with d(v,v) = 0 — computed by
       two joins against the maintained table, never a graph scan.
@@ -1332,29 +1226,14 @@ class IncrementalShortestPaths:
         sources: Optional[DataFrame] = None,
         max_iters: int = 100,
     ) -> None:
-        from ..operators.graph import shortest_hops, shortest_paths
+        from ..operators.graph import shortest_paths
 
         self.max_iters = max_iters
         self.weighted = cost is not None
         self.val = "cost" if self.weighted else "hops"
-        if self.weighted:
-            self.edges = (
-                edges.select(
-                    F.col(src).alias("s"),
-                    F.col(dst).alias("t"),
-                    F.col(cost).alias("w"),
-                )
-                .groupBy("s", "t")
-                .agg(F.min("w").alias("w"))
-                .localCheckpoint(eager=True)
-            )
-        else:
-            self.edges = (
-                edges.select(F.col(src).alias("s"), F.col(dst).alias("t"))
-                .distinct()
-                .withColumn("w", F.lit(1))
-                .localCheckpoint(eager=True)
-            )
+        self.edges = self._norm_add(
+            edges.select(src, dst, *([cost] if self.weighted else []))
+        ).localCheckpoint(eager=True)
         self.sources = (
             sources.select(
                 F.col(sources.columns[0]).alias("s")
@@ -1362,17 +1241,15 @@ class IncrementalShortestPaths:
             if sources is not None
             else None
         )
-        if self.weighted:
-            init = shortest_paths(
-                self.edges, src="s", dst="t", cost="w",
-                max_iters=max_iters, sources=self.sources,
+        # Unit costs relax one hop per round, as shortest_hops does.
+        self.dist = (
+            shortest_paths(
+                self.edges, "s", "t", "w", max_iters=max_iters,
+                sources=self.sources, step=4 if self.weighted else 1,
             )
-        else:
-            init = shortest_hops(
-                self.edges.drop("w"), src="s", dst="t",
-                max_iters=max_iters, sources=self.sources,
-            )
-        self.dist = init.localCheckpoint(eager=True)
+            .withColumnRenamed("cost", self.val)
+            .localCheckpoint(eager=True)
+        )
 
     def current(self) -> DataFrame:
         return self.dist
@@ -1507,6 +1384,8 @@ class IncrementalShortestPaths:
         """One epoch: apply edge additions/retractions, advance the
         maintained table, return weighted diffs (x, y, val, diff)."""
 
+        from ..operators.graph import _relax
+
         val = self.val
         add = self._norm_add(added)
         rem = self._norm_rem(retracted)
@@ -1595,56 +1474,45 @@ class IncrementalShortestPaths:
                 )
                 .join(affected, ["x", "y"], "left_semi")
             )
-        if not seeds:
+        delta = None
+        if seeds:
+            cand0 = seeds[0]
+            for s in seeds[1:]:
+                cand0 = cand0.unionByName(s)
+            cand0 = cand0.groupBy("x", "y").agg(F.min(val).alias(val))
+            # improvements vs surviving state only
+            delta = (
+                cand0.join(
+                    surviving.select("x", "y", F.col(val).alias("__h")),
+                    ["x", "y"], "left",
+                )
+                .filter(F.col("__h").isNull() | (F.col(val) < F.col("__h")))
+                .select("x", "y", val)
+                .localCheckpoint(eager=True)
+            )
+            if delta.limit(1).isEmpty():
+                delta = None
+        if delta is None and affected is None:
             self.edges = new_edges
             return old_dist.limit(0).withColumn("diff", F.lit(1))
 
-        cand0 = seeds[0]
-        for s in seeds[1:]:
-            cand0 = cand0.unionByName(s)
-        cand0 = cand0.groupBy("x", "y").agg(F.min(val).alias(val))
-        # improvements vs surviving state only
-        delta = (
-            cand0.join(
-                surviving.select("x", "y", F.col(val).alias("__h")),
-                ["x", "y"], "left",
+        dist = surviving
+        if delta is not None:
+            # -- the batch operators' relaxation, seeded with the
+            # improving rows --
+            dist = (
+                _relax(
+                    surviving.unionByName(delta)
+                    .groupBy("x", "y")
+                    .agg(F.min(val).alias("cost")),
+                    delta.withColumnRenamed(val, "cost"),
+                    new_edges,
+                    1,
+                    self.max_iters,
+                )
+                .withColumnRenamed("cost", val)
+                .localCheckpoint(eager=True)
             )
-            .filter(F.col("__h").isNull() | (F.col(val) < F.col("__h")))
-            .select("x", "y", val)
-            .localCheckpoint(eager=True)
-        )
-        dist = (
-            surviving.unionByName(delta)
-            .groupBy("x", "y")
-            .agg(F.min(val).alias(val))
-            .localCheckpoint(eager=False)
-        )
-
-        # -- same delta relaxation as the batch operators --
-        for _ in range(self.max_iters):
-            if delta.limit(1).isEmpty():
-                break
-            cand = delta.join(new_edges, delta["y"] == new_edges["s"]).select(
-                "x", F.col("t").alias("y"),
-                (F.col(val) + F.col("w")).alias(val),
-            )
-            merged = (
-                dist.unionByName(cand)
-                .groupBy("x", "y")
-                .agg(F.min(val).alias(val))
-                .localCheckpoint(eager=False)
-            )
-            delta = merged.join(
-                dist, ["x", "y", val], "left_anti"
-            ).localCheckpoint(eager=True)
-            dist = merged
-        else:
-            raise RuntimeError(
-                f"incremental shortest paths did not converge in "
-                f"{self.max_iters} rounds"
-            )
-
-        dist = dist.localCheckpoint(eager=True)
         removed_rows = old_dist.exceptAll(dist).withColumn("diff", F.lit(-1))
         added_rows = dist.exceptAll(old_dist).withColumn("diff", F.lit(1))
         self.dist = dist

@@ -1569,6 +1569,89 @@ def test_incremental_shortest_paths_weighted_sources(spark):
         assert got == expect, (sorted(current.items()), _epoch)
 
 
+def test_incremental_shortest_paths_loop_bound_raises(spark):
+    """The maintainer's relaxation raises instead of keeping a partial
+    table, both when seeding and when an epoch's improvements need
+    more rounds than ``max_iters``."""
+
+    from declarative_dataflow_spark.streaming.incremental import (
+        IncrementalShortestHops,
+    )
+
+    chain = [(1, 2), (2, 3), (3, 4)]
+    with pytest.raises(RuntimeError, match="did not converge"):
+        IncrementalShortestHops(
+            spark.createDataFrame(chain, ["src", "dst"]), max_iters=1
+        )
+    inc = IncrementalShortestHops(
+        spark.createDataFrame(chain[:1], ["src", "dst"]), max_iters=1
+    )
+    with pytest.raises(RuntimeError, match="did not converge"):
+        inc.apply(added=spark.createDataFrame(chain[1:], ["src", "dst"]))
+
+
+def test_incremental_shortest_paths_non_improving_edge(spark, monkeypatch):
+    """An epoch whose only change is an edge that improves no pair
+    emits no diffs and runs no relaxation round, and the maintained
+    table still equals the batch operator on the new edge set."""
+
+    from declarative_dataflow_spark.operators import graph
+    from declarative_dataflow_spark.streaming.incremental import (
+        IncrementalShortestPaths,
+    )
+
+    chain = [(1, 2, 1.0), (2, 3, 1.0), (3, 4, 1.0)]
+    extra = [(1, 3, 5.0)]  # (1, 3) already costs 2.0 via 2
+    inc = IncrementalShortestPaths(
+        spark.createDataFrame(chain, ["src", "dst", "cost"]), cost="cost"
+    )
+    expect = {
+        (r["x"], r["y"]): r["cost"]
+        for r in graph.shortest_paths(
+            spark.createDataFrame(chain + extra, ["src", "dst", "cost"])
+        ).collect()
+    }
+
+    def no_round(*args, **kwargs):
+        raise AssertionError("relaxation ran for a non-improving edge")
+
+    monkeypatch.setattr(graph, "_relax", no_round)
+    diffs = inc.apply(
+        added=spark.createDataFrame(extra, ["src", "dst", "cost"])
+    )
+    assert diffs.count() == 0
+    got = {(r["x"], r["y"]): r["cost"] for r in inc.current().collect()}
+    assert got == expect
+    assert inc.edges.count() == 4
+
+
+def test_incremental_recursion_loop_bound_raises(spark):
+    """IncrementalRecursion's seed and insertion phase share the batch
+    semi-naive loop and its bound: both raise instead of keeping a
+    partial fixpoint."""
+
+    from declarative_dataflow_spark.streaming.incremental import (
+        IncrementalRecursion,
+    )
+
+    def edges(pairs):
+        return spark.createDataFrame(
+            [(a, b, 1) for a, b in pairs], "e long, v long, diff long"
+        )
+
+    with pytest.raises(RuntimeError, match="did not converge"):
+        IncrementalRecursion(
+            spark, "reach", _reach_rule(),
+            {"edge": edges([(1, 2), (2, 3), (3, 4)])}, max_iterations=1,
+        )
+    ir = IncrementalRecursion(
+        spark, "reach", _reach_rule(), {"edge": edges([(1, 2)])},
+        max_iterations=2,
+    )
+    with pytest.raises(RuntimeError, match="did not converge"):
+        ir.transact([Datom.add(a, "edge", a + 1) for a in (2, 3, 4)])
+
+
 def _batch_pagerank(spark, edges):
     from declarative_dataflow_spark.operators.graph import pagerank
 

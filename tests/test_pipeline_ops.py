@@ -597,6 +597,51 @@ def test_shortest_paths_weighted(spark):
     assert out[(1, 1)] == 3.0  # full loop
 
 
+def test_relaxation_loop_bound_raises(spark):
+    """The relaxation loop raises instead of returning a partial
+    table: a 4-node chain needs three unit-cost rounds (two that
+    improve, one that confirms), so a budget of two cannot converge."""
+
+    from declarative_dataflow_spark.operators import graph
+
+    chain = spark.createDataFrame(
+        [(1, 2, 1.0), (2, 3, 1.0), (3, 4, 1.0)], ["src", "dst", "cost"]
+    )
+    hops = chain.drop("cost")
+    with pytest.raises(RuntimeError, match="did not converge"):
+        graph.shortest_hops(hops, max_iters=2)
+    assert graph.shortest_hops(hops, max_iters=3).count() == 6
+    # one unrolled round reaches every pair but cannot confirm it
+    with pytest.raises(RuntimeError, match="did not converge"):
+        graph.shortest_paths(chain, max_iters=1)
+    assert graph.shortest_paths(chain, max_iters=2).count() == 6
+
+
+def test_shingle_arrays_explode_under_ansi(spark):
+    """shingle_arrays returns a checkpointed table, so exploding it
+    directly under ANSI mode never subscripts the word array of a
+    document shorter than ``n`` words."""
+
+    from pyspark.sql import functions as F
+
+    docs = spark.createDataFrame(
+        [(1, "a b"), (2, "one two three four"), (3, "x"), (4, "")],
+        ["doc_id", "text"],
+    )
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        got = sorted(
+            tuple(r)
+            for r in dedup.shingle_arrays(docs, n=3)
+            .select("doc_id", F.explode("sarr").alias("shingle"))
+            .collect()
+        )
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+    assert got == [(2, "one_two_three"), (2, "two_three_four")]
+
+
 def test_vocab_topk(spark):
     docs = spark.createDataFrame(
         [(1, "aa bb aa"), (2, "aa cc 7")], ["doc_id", "text"]

@@ -459,3 +459,31 @@ def test_tclosure_negative_edge_cancels_derived_path(engine):
     )
     df = engine.interest("reach", ["x", "y"])
     assert rows(df) == [(0, 0), (0, 2), (2, 1)]
+
+
+def test_semi_naive_loop_bound_raises(engine):
+    """The semi-naive loop raises instead of returning a partial
+    fixpoint: a 4-edge chain needs four delta steps (three that derive
+    longer paths, one that derives nothing)."""
+
+    import pytest
+
+    _edges(engine, [(1, 2), (2, 3), (3, 4), (4, 5)])
+    engine.register(
+        "reach",
+        Union(
+            ["?x", "?y"],
+            [
+                MatchA("?x", "edge", "?y"),
+                Join(
+                    ["?m"],
+                    NameExpr(["?x", "?m"], "reach"),
+                    MatchA("?m", "edge", "?y"),
+                ),
+            ],
+        ),
+    )
+    with pytest.raises(RuntimeError, match="did not converge"):
+        engine._fixpoint("reach", {"reach"}, max_iterations=3)
+    rel = engine._fixpoint("reach", {"reach"}, max_iterations=4)
+    assert rel.df.count() == 10
