@@ -59,6 +59,7 @@ from declarative_dataflow_spark.operators import (
 from declarative_dataflow_spark.operators.bitemporal import as_of
 from declarative_dataflow_spark.plan import graphql
 from declarative_dataflow_spark.plan.plans import Scan
+from declarative_dataflow_spark.scratch import materialize
 from declarative_dataflow_spark.sources.testdata import load_engine, load_table
 
 DEFAULT_SF = "/root/testdata/sf0.001"
@@ -1376,7 +1377,7 @@ def q_tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
     # gate invocations don't accumulate registered checkpoint frames,
     # and no future query can silently collide with the name. The
     # compiled plan keeps its DataFrame reference after deregistration.
-    view_df = eng.implement(sums, ["s", "rev"]).localCheckpoint(eager=False)
+    view_df = materialize(eng.implement(sums, ["s", "rev"]), eager=False)
     vname = f"__q15_rev_view_{id(view_df)}"
     eng.register_table(vname, view_df)
     try:
@@ -1554,7 +1555,7 @@ def q_tpch_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .filter(F.col("__nlate") == 1)
             .drop("__nlate")
-            .localCheckpoint(eager=False)
+            .transform(materialize, eager=False)
         )
         n_late_df = sole.select("o")
         late_joined = sole

@@ -12,7 +12,6 @@ Streaming for live inputs — never mimicking timely scheduling or
 differential arrangements.
 """
 
-from . import scratch as _scratch  # installs the scratch router (no-op by default)
 from .engine import (
     AttributeConfig,
     Datom,

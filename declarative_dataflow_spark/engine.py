@@ -48,6 +48,7 @@ from .plan.compiler import (
     vcol,
 )
 from .plan.plans import Aggregate, Antijoin, NameExpr, Negate, Plan, Union
+from .scratch import materialize_count
 
 
 def _self_ref_count(plan: Plan, name: str) -> int:
@@ -1047,7 +1048,7 @@ class Engine:
         Mirrors the reference's iterative scope where each rule gets a
         differential Variable and all advance together
         (src/lib.rs:943-1019, distinct per Variable at 1012-1017).
-        ``localCheckpoint`` truncates lineage each iteration so the plan
+        ``scratch.materialize`` truncates lineage each iteration so the plan
         does not grow unboundedly — the plan-blowup hazard called out in
         SURVEY §7 Phase 3.
 
@@ -1102,11 +1103,8 @@ class Engine:
                     # outside a Union base case; try again next pass.
                     changed = True
                     continue
-                # Lazy (r12, the scc defer discipline): the count()
-                # below materializes it in the same job.
-                df = new_rel.df.localCheckpoint(eager=False)
+                df, new_count = materialize_count(new_rel.df)
                 new_rel = Relation(new_rel.variables, df, new_rel.has_diff)
-                new_count = df.count()
                 old = current.get(rn)
                 if (
                     old is None
@@ -1189,8 +1187,9 @@ def new_facts(
     totals: dict[str, Relation],
 ) -> dict[str, Relation]:
     """Per rule, the distinct result of its plan minus the rule's
-    total: eagerly checkpointed, probed once, and kept only when
-    non-empty. A plan reading only unbound rules yields nothing."""
+    total: eagerly checkpointed, counted by the checkpoint's own jobs,
+    and kept only when non-empty. A plan reading only unbound rules
+    yields nothing."""
 
     out: dict[str, Relation] = {}
     for rn in sorted(plans):
@@ -1202,13 +1201,8 @@ def new_facts(
         df = rel.df.select(*cols)
         if rn in totals:
             df = df.join(totals[rn].df, on=cols, how="left_anti")
-        # Eager (kept, r12): the limit(1) probe EARLY-EXITS on
-        # non-empty deltas, leaving most partitions uncached for the
-        # two downstream consumers (next round's step + the totals
-        # union) to recompute — measured +25-40% on tclosure at sf0.1
-        # when flipped lazy.
-        df = df.localCheckpoint(eager=True)
-        if not df.limit(1).isEmpty():
+        df, n = materialize_count(df)
+        if n:
             out[rn] = Relation(rel.variables, df, False)
     return out
 

@@ -37,6 +37,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from ..scratch import materialize
 from .dedup import shingles
 
 
@@ -505,8 +506,8 @@ def dsir_weights(
     # materializing the corpus-token-scale explode was (the
     # simhash/embedding-neardup materialize-once discipline, sharpened
     # by the cdc_chunks row-local lesson).
-    arr = dsir_feature_arrays(docs, n_buckets, n, text_col).localCheckpoint(
-        eager=False
+    arr = materialize(
+        dsir_feature_arrays(docs, n_buckets, n, text_col), eager=False
     )
     feats = arr.select("doc_id", F.explode("barr").alias("bucket"))
     tgt_feats = dsir_features(target, n_buckets, n, text_col)
@@ -961,7 +962,7 @@ def semdedup(
     base = (
         _assign_cells(embeddings, cents, id_col, vec_col, keep_vec=True)
         .select(F.col("vec_id").alias("id"), "v", "cell")
-        .localCheckpoint(eager=False)
+        .transform(materialize, eager=False)
     )
 
     # Pair engine: Arrow-batched numpy per cell. A JVM equi-join's

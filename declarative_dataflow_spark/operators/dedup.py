@@ -26,6 +26,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
 
+from ..scratch import materialize, materialize_count
+
 # uint32 from the first 8 hex chars of md5 — portable to DuckDB as
 # ('0x' || substr(md5(x),1,8))::BIGINT.
 def _h32(col: Column) -> Column:
@@ -92,7 +94,7 @@ def shingle_arrays(
         )
     return base.select(
         "doc_id", F.array_distinct(sh).alias("sarr")
-    ).localCheckpoint(eager=False)
+    ).transform(materialize, eager=False)
 
 
 def shingles(
@@ -213,7 +215,7 @@ def jaccard_pairs(
             )
             # Feeds the rep pipeline AND the member expansion —
             # materialize once (the minhash discipline).
-            .localCheckpoint(eager=False)
+            .transform(materialize, eager=False)
         )
         members = groups.select(
             F.col("gid"), F.explode("ds").alias("doc_id")
@@ -226,7 +228,7 @@ def jaccard_pairs(
 
         # Feeds the frequency count, the prefix explode, and both
         # verify sides — materialize once (the minhash discipline).
-        ss = ss.localCheckpoint(eager=False)
+        ss = materialize(ss, eager=False)
         sh = ss.select(
             "doc_id", F.size("ss").alias("sz"), F.explode("ss").alias("shingle")
         )
@@ -479,7 +481,7 @@ def minhash_lsh_pairs(
     if docs.rdd.getNumPartitions() < target:
         docs = docs.repartition(target)
 
-    sets = hashed_shingle_sets(docs, n, text_col).localCheckpoint(eager=False)
+    sets = materialize(hashed_shingle_sets(docs, n, text_col), eager=False)
     sig = sets.select("doc_id", _sig_array(k).alias("sig"))
     # The band key is the xxhash64 of (band, slice): a fixed 8-byte
     # join key instead of shuffling rows-wide signature arrays. A hash
@@ -564,9 +566,8 @@ def cross_neardup(
     rows = k // bands
 
     def banded_side(docs: DataFrame, out: str):
-        sets = hashed_shingle_sets(docs, n, text_col).localCheckpoint(
-            eager=False
-        )  # two consumers: band keys + exact verify
+        # two consumers: band keys + exact verify
+        sets = materialize(hashed_shingle_sets(docs, n, text_col), eager=False)
         sig = sets.select("doc_id", _sig_array(k).alias("sig"))
         b = sig.select(
             F.col("doc_id").alias(out),
@@ -636,7 +637,7 @@ def connected_components(
     discipline) — min-combine is monotone and idempotent, so
     over-pushing past convergence is harmless and driver rounds drop
     to ceil(diameter/step). Each materialized round is one eager
-    localCheckpoint; the convergence probe reads a CHANGE FLAG
+    checkpoint whose own jobs count a CHANGE FLAG
     computed inside the round's FINAL hop (each vertex's
     before-last-hop label rides along as a tag column that never
     crosses edges — pushed rows carry NULL — so min(tag) recovers it
@@ -665,12 +666,12 @@ def connected_components(
     # every caller's pair PIPELINE (banded MinHash verify, fuzzy
     # deletion-variant join, ...) computes twice. Lazy — sym's round-1
     # materialization pulls it in.
-    edges = edges.localCheckpoint(eager=False)
+    edges = materialize(edges, eager=False)
     sym = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .union(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(materialize, eager=False)
     )
     # Lazy (r12, the scc defer discipline): the vertex table is
     # consumed only by round 1's hop chain — its materialization folds
@@ -679,7 +680,7 @@ def connected_components(
         sym.select(F.col("u").alias("id"))
         .distinct()
         .select("id", F.col("id").alias("component"))
-        .localCheckpoint(eager=False)
+        .transform(materialize, eager=False)
     )
     ctype = dict(labels.dtypes)["component"]
     for _ in range(max_iters):
@@ -701,24 +702,15 @@ def connected_components(
             "component",
             F.expr(f"CAST(NULL AS {ctype})").alias("__old"),
         )
-        new = (
+        new, changed = materialize_count(
             tagged.select("id", "component", "__old")
             .union(pushed)
             .groupBy("id")
             .agg(
                 F.min("component").alias("component"),
                 F.min("__old").alias("__old"),
-            )
-            # Lazy (r12): the convergence probe right below is the
-            # first consumer, so the round's materialization runs
-            # inside the probe's job rather than as a separate eager
-            # checkpoint job — one fewer job launch per round. On the
-            # final round the probe scans every partition (it finds no
-            # improved row), fully materializing the result table.
-            .localCheckpoint(eager=False)
-        )
-        changed = (
-            new.filter(F.col("component") < F.col("__old")).limit(1).count()
+            ),
+            F.col("component") < F.col("__old"),
         )
         labels = new.drop("__old")
         if changed == 0:
@@ -738,12 +730,12 @@ def connected_components(
         # the AQE skew-join splits the fat side cleanly at scale.
         # Lazy (r12, the scc defer discipline): the jump reads only the
         # already-materialized round table; deferring its own
-        # materialization into the next round's probe job removes one
+        # materialization into the next round's checkpoint job removes one
         # job launch per non-final round without re-computation.
         labels = (
             labels.join(labels.toDF("component", "__c2"), "component")
             .select("id", F.col("__c2").alias("component"))
-            .localCheckpoint(eager=False)
+            .transform(materialize, eager=False)
         )
     else:
         if strict:
@@ -992,7 +984,7 @@ def simhash_neardup_pairs(
         # checkpoint each side re-runs the interpreted per-token
         # fingerprint fold — measured 3.5x wall at sf0.1 (8.5s -> 2.4s).
         # Lazy (r12): the self-join's first side materializes it.
-        .localCheckpoint(eager=False)
+        .transform(materialize, eager=False)
     )
     a = banded.toDF("a", "ha", "band", "key")
     b = banded.toDF("b", "hb", "band", "key")
@@ -1031,7 +1023,7 @@ def global_row_number(
         df.repartitionByRange(n, *[F.col(c) for c in order_cols])
         .sortWithinPartitions(*[F.col(c) for c in order_cols])
         .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint(eager=False)
+        .transform(materialize, eager=False)
     )
     sizes = {
         r["__pid"]: r["cnt"]
@@ -1174,8 +1166,8 @@ def fuzzy_match_pairs(
     # per-row deletion-variant explode + hash re-runs per side.
     keyed = base.select(
         "id", "s", F.explode(variants).alias("__v")
-    ).select("id", "s", F.xxhash64("__v").alias("__k")).localCheckpoint(
-        eager=False
+    ).select("id", "s", F.xxhash64("__v").alias("__k")).transform(
+        materialize, eager=False
     )
     left = keyed.select(
         F.col("id").alias("a"), F.col("s").alias("__sa"), "__k"
@@ -1236,7 +1228,7 @@ def minhash_est_error(
     sig = (
         hashed_shingle_sets(docs, n, text_col)
         .select("doc_id", "hs", _sig_array(k).alias("sig"))
-        .localCheckpoint(eager=False)
+        .transform(materialize, eager=False)
     )
     banded = sig.select(
         "doc_id",
@@ -1448,7 +1440,7 @@ def cdc_chunks(
             F.size("c.toks").cast("bigint").alias("n_tokens"),
             F.md5(F.concat_ws(" ", F.col("c.toks"))).alias("chunk_hash"),
         )
-        .localCheckpoint(eager=False)  # feeds the sharing count AND the join
+        .transform(materialize, eager=False)  # sharing count AND the join
     )
     shared = chunks.groupBy("chunk_hash").agg(
         F.countDistinct("doc_id").alias("n_docs")

@@ -14,7 +14,7 @@ Spark-first shape (delta Bellmann-Ford):
 
 Each round is one join + one min-combine shuffle (map-side partial
 aggregation), work proportional to the improved rows, and
-``localCheckpoint`` truncates lineage per round — the same recursion
+``materialize`` truncates lineage per round — the same recursion
 discipline as the engine fixpoint (engine.py::semi_naive).
 Convergence in <= graph-diameter rounds.
 
@@ -27,6 +27,8 @@ from __future__ import annotations
 from typing import Optional
 
 from pyspark.sql import DataFrame, functions as F
+
+from ..scratch import materialize, materialize_count
 
 # PageRank update arithmetic, shared verbatim by the batch operator,
 # the DuckDB oracle, and the incremental maintainer so all three agree
@@ -119,15 +121,11 @@ def pagerank(
     e = edges.select(
         F.col(src).alias("s"), F.col(dst).alias("t")
     ).distinct()
-    nodes = (
+    nodes, n = materialize_count(
         e.select(F.col("s").alias("node"))
         .unionByName(e.select(F.col("t").alias("node")))
         .distinct()
-        # Lazy (r12): the count() right below materializes it in the
-        # same job instead of two.
-        .localCheckpoint(eager=False)
     )
-    n = nodes.count()
     outdeg = e.groupBy(F.col("s").alias("node")).agg(
         F.count(F.lit(1)).alias("deg")
     )
@@ -156,7 +154,7 @@ def pagerank(
             # needed; the checkpoint still truncates lineage when the
             # final action runs, but the 10 rounds execute as one job
             # instead of ten serial materializations.
-            .localCheckpoint(eager=False)
+            .transform(materialize, eager=False)
         )
     return ranks
 
@@ -205,7 +203,7 @@ def shortest_paths(
         F.col("s").alias("x"), F.col("t").alias("y"), F.col("w").alias("cost")
     # Lazy (r12, the scc defer discipline): round 1's merge job
     # materializes it.
-    ).localCheckpoint(eager=False)
+    ).transform(materialize, eager=False)
     return _relax(dist, dist, e, max(1, step), max_iters)
 
 
@@ -256,22 +254,18 @@ def _relax(
                     F.expr(f"CAST(NULL AS {ctype})").alias("__old"),
                 )
             )
-        merged = (
-            acc.groupBy("x", "y")
-            .agg(
+        improved = F.col("__old").isNull() | (F.col("cost") < F.col("__old"))
+        merged, n_improved = materialize_count(
+            acc.groupBy("x", "y").agg(
                 F.min("cost").alias("cost"),
                 F.min("__old").alias("__old"),
-            )
-            # Lazy (r12): the convergence probe below is the first
-            # consumer — materialization folds into its job.
-            .localCheckpoint(eager=False)
+            ),
+            improved,
         )
-        delta = merged.filter(
-            F.col("__old").isNull() | (F.col("cost") < F.col("__old"))
-        ).select("x", "y", "cost")
         dist = merged.select("x", "y", "cost")
-        if delta.limit(1).isEmpty():
+        if not n_improved:
             return dist
+        delta = merged.filter(improved).select("x", "y", "cost")
     raise RuntimeError(f"relaxation did not converge in {max_iters} rounds")
 
 
@@ -297,10 +291,9 @@ def kcore(
     round: one uniform-key degree aggregation + two equi-joins that
     restrict edges to surviving endpoints — all shuffle-partitioned
     by node id, no broadcast of anything data-sized, AQE sizes the
-    shrinking edge table. ``localCheckpoint`` truncates lineage per
-    round (the shortest-paths discipline); convergence probes the
-    NODE-sized degree table for any entry under k (limit(1) — never a
-    full edge count). Rounds are bounded by the peel depth — for real
+    shrinking edge table. Each round's degree table is materialized
+    eagerly, and the same jobs count its entries under k (never a full
+    edge count). Rounds are bounded by the peel depth — for real
     graphs a handful — never by node count.
     """
 
@@ -310,23 +303,20 @@ def kcore(
         .filter(F.col("src") != F.col("dst"))
         .distinct()
         # Lazy (r12): round 1's degree aggregate materializes it.
-        .localCheckpoint(eager=False)
+        .transform(materialize, eager=False)
     )
     deg = None
     converged = False
     for _ in range(max_iters):
-        # Convergence probes the NODE-sized degree table for any entry
-        # under k — limit(1) stops at the first hit — instead of
-        # counting the full edge state per round, and detects the
-        # fixpoint BEFORE paying a no-op restriction join. The lazy
-        # checkpoint materializes deg once and serves the probe, the
-        # keep-filter, and (on convergence) the final result.
-        deg = (
-            und.groupBy("src")
-            .agg(F.count(F.lit(1)).alias("deg"))
-            .localCheckpoint(eager=False)
+        # The NODE-sized degree table counts its entries under k while
+        # it is materialized, so the fixpoint is detected BEFORE paying
+        # a no-op restriction join; the table then serves the
+        # keep-filter and (on convergence) the final result.
+        deg, under_k = materialize_count(
+            und.groupBy("src").agg(F.count(F.lit(1)).alias("deg")),
+            F.col("deg") < k,
         )
-        if deg.filter(F.col("deg") < k).limit(1).isEmpty():
+        if not under_k:
             converged = True
             break
         keep = deg.filter(F.col("deg") >= k).select("src")
@@ -336,7 +326,7 @@ def kcore(
             .select("src", "dst")
             # Lazy (r12): the next round's degree aggregate is the
             # first consumer.
-            .localCheckpoint(eager=False)
+            .transform(materialize, eager=False)
         )
     if require_convergence and not converged:
         raise RuntimeError(
@@ -418,14 +408,14 @@ def scc(
         .filter(F.col("a") != F.col("b"))
         .distinct()
         # Lazy (r12): the nodes distinct below is the first consumer.
-        .localCheckpoint(eager=False)
+        .transform(materialize, eager=False)
     )
     nodes = (
         E.select(F.col("a").alias("v"))
         .union(E.select(F.col("b").alias("v")))
         .distinct()
         # Lazy (r12): the first trim round materializes it.
-        .localCheckpoint(eager=False)
+        .transform(materialize, eager=False)
     )
     spark = edges.sparkSession
     out_schema = "v long, scc long"
@@ -478,10 +468,10 @@ def scc(
                         F.min("__old").alias("__old"),
                     )
                 )
-            # Lazy (r12): the change probe on the next line is the
-            # first consumer — materialization folds into its job.
-            cur = work.localCheckpoint(eager=False)
-            if cur.filter(F.col("c") < F.col("__old")).limit(1).isEmpty():
+            cur, changed = materialize_count(
+                work, F.col("c") < F.col("__old")
+            )
+            if not changed:
                 return cur.select("v", "c")
             cur = cur.select("v", "c")
             # pointer jump: c <- c(c) (inner self-join; every label is
@@ -495,7 +485,7 @@ def scc(
             cur = (
                 cur.join(cur.toDF("c", "__c2"), "c")
                 .select("v", F.col("__c2").alias("c"))
-                .localCheckpoint(eager=False)
+                .transform(materialize, eager=False)
             )
         return cur
 
@@ -527,18 +517,18 @@ def scc(
                     .select("a", "b")
                 )
             # Lazy (r12): the trivial-set probe below materializes it.
-            new_nodes = nodes.join(cyc, "v").localCheckpoint(eager=False)
+            new_nodes = materialize(nodes.join(cyc, "v"), eager=False)
             trivial = nodes.join(new_nodes, "v", "left_anti")
             if trivial.limit(1).isEmpty():
                 break
             done = done.union(
                 trivial.select("v", F.col("v").alias("scc"))
-            ).localCheckpoint(eager=False)
+            ).transform(materialize, eager=False)
             nodes = new_nodes
             # Lazy (r12): materializes inside the next trim round's
             # nodes-checkpoint job (or the forward fixpoint's first
             # round) instead of as its own job.
-            E = work_e.localCheckpoint(eager=False)
+            E = materialize(work_e, eager=False)
         if nodes.limit(1).isEmpty():
             converged = True
             break
@@ -569,7 +559,7 @@ def scc(
             # Lazy (r12): the backward fixpoint's first-round
             # checkpoint job materializes it; later rounds reuse the
             # cached blocks.
-            .localCheckpoint(eager=False)
+            .transform(materialize, eager=False)
         )
         # Backward pass as a MIN fixpoint rather than a frontier BFS so
         # it pointer-jumps too: bc(v) = min id reachable FROM v along
@@ -588,10 +578,10 @@ def scc(
             .join(colors, "v")
             .filter(F.col("bc") == F.col("c"))
             .select("v")
-            .localCheckpoint(eager=False)
+            .transform(materialize, eager=False)
         )
         found = colors.join(marked, "v").select("v", F.col("c").alias("scc"))
-        done = done.union(found).localCheckpoint(eager=False)
+        done = materialize(done.union(found), eager=False)
         # Round boundary: rebase the shrunken node set so the next
         # round's trim/color chains start from a clean relation.
         nodes = _rebase(nodes.join(marked, "v", "left_anti"))
@@ -601,7 +591,7 @@ def scc(
             .select("a", "b")
             # Lazy (r12): first consumer in the next outer round's
             # trim materializes it; empty-graph exits never pay it.
-            .localCheckpoint(eager=False)
+            .transform(materialize, eager=False)
         )
     try:
         if require_convergence and not converged:
@@ -612,7 +602,7 @@ def scc(
         # reads the rebased parquet generations.
         return done.select(
             F.col("v").alias("node"), "scc"
-        ).localCheckpoint()
+        ).transform(materialize)
     finally:
         if own_dir:
             shutil.rmtree(base, ignore_errors=True)
@@ -663,7 +653,7 @@ def link_prediction(
         .union(edges.select(F.col(dst).alias("src"), F.col(src).alias("dst")))
         .filter(F.col("src") != F.col("dst"))
         .distinct()
-        .localCheckpoint(eager=False)  # feeds deg, two wedge sides, anti-join
+        .transform(materialize, eager=False)  # deg, two wedge sides, anti-join
     )
     deg = und.groupBy(F.col("src").alias("v")).agg(
         F.count(F.lit(1)).alias("d")
@@ -735,7 +725,7 @@ def edge_triangle_support(
         .union(edges.select(F.col(dst).alias("src"), F.col(src).alias("dst")))
         .filter(F.col("src") != F.col("dst"))
         .distinct()
-        .localCheckpoint(eager=False)  # feeds canon + both wedge sides
+        .transform(materialize, eager=False)  # feeds canon + both wedge sides
     )
     canon = und.filter(F.col("src") < F.col("dst")).select(
         F.col("src").alias("a"), F.col("dst").alias("b")
@@ -800,7 +790,8 @@ def clustering_coefficient(
         .union(edges.select(F.col(dst).alias("src"), F.col(src).alias("dst")))
         .filter(F.col("src") != F.col("dst"))
         .distinct()
-        .localCheckpoint(eager=False)  # feeds deg, both wedge sides, closure probe
+        # feeds deg, both wedge sides, closure probe
+        .transform(materialize, eager=False)
     )
     deg = und.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).alias("degree")
@@ -853,7 +844,8 @@ def ktruss(
     support), so this is kcore's shrink-to-fixpoint loop with
     :func:`edge_triangle_support` as the per-round measure: recompute
     support on the surviving edges, drop those under ``t``, stop when
-    a limit(1) probe finds nothing under threshold. Rounds are bounded
+    the support table's own materialization counts nothing under
+    threshold. Rounds are bounded
     by peel depth; each round is the triangle-enumeration joins on a
     SHRINKING edge set, lineage truncated per round.
 
@@ -868,13 +860,15 @@ def ktruss(
     cur = (
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
         .filter(F.col("src") != F.col("dst"))
-        .localCheckpoint(eager=False)
+        .transform(materialize, eager=False)
     )
     sup = None
     converged = False
     for _ in range(max_iters):
-        sup = edge_triangle_support(cur).localCheckpoint(eager=False)
-        if sup.filter(F.col("support") < t).limit(1).isEmpty():
+        sup, under_t = materialize_count(
+            edge_triangle_support(cur), F.col("support") < t
+        )
+        if not under_t:
             converged = True
             break
         cur = (
@@ -882,7 +876,7 @@ def ktruss(
             .select(F.col("a").alias("src"), F.col("b").alias("dst"))
             # Lazy (r12): next round's support computation is the
             # first consumer.
-            .localCheckpoint(eager=False)
+            .transform(materialize, eager=False)
         )
     if require_convergence and not converged:
         raise RuntimeError(f"ktruss: no fixpoint within {max_iters} rounds")
@@ -920,7 +914,7 @@ def degree_assortativity(
         .union(edges.select(F.col(dst).alias("src"), F.col(src).alias("dst")))
         .filter(F.col("src") != F.col("dst"))
         .distinct()
-        .localCheckpoint(eager=False)  # feeds deg + the pair scan
+        .transform(materialize, eager=False)  # feeds deg + the pair scan
     )
     deg = und.groupBy(F.col("src").alias("n")).agg(
         F.count(F.lit(1)).alias("d")
@@ -993,7 +987,7 @@ def node_similarity(
         .union(edges.select(F.col(dst).alias("src"), F.col(src).alias("dst")))
         .filter(F.col("src") != F.col("dst"))
         .distinct()
-        .localCheckpoint(eager=False)  # feeds deg + both wedge sides
+        .transform(materialize, eager=False)  # feeds deg + both wedge sides
     )
     deg = und.groupBy(F.col("src").alias("n")).agg(
         F.count(F.lit(1)).alias("d")
@@ -1079,7 +1073,7 @@ def personalized_pagerank(
         .unionByName(e.select(F.col("t").alias("node")))
         .distinct()
         # Lazy (r12): iteration 1's contribution join materializes it.
-        .localCheckpoint(eager=False)
+        .transform(materialize, eager=False)
     )
     outdeg = e.groupBy(F.col("s").alias("node")).agg(
         F.count(F.lit(1)).alias("deg")
@@ -1152,14 +1146,14 @@ def hits(
         edges.select(F.col(src).alias("s"), F.col(dst).alias("t"))
         .filter(F.col("s") != F.col("t"))
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(materialize, eager=False)
     )
     nodes = (
         e.select(F.col("s").alias("node"))
         .unionByName(e.select(F.col("t").alias("node")))
         .distinct()
         # Lazy (r12): half-iteration 1's hub join materializes it.
-        .localCheckpoint(eager=False)
+        .transform(materialize, eager=False)
     )
     dec = "DECIMAL(18,6)"
     hub = nodes.select("node", F.expr(f"CAST(1 AS {dec})").alias("h"))
@@ -1172,7 +1166,7 @@ def hits(
             e.join(hub.withColumnRenamed("node", "s"), "s")
             .groupBy(F.col("t").alias("node"))
             .agg(F.sum("h").alias("a_raw"))
-            .localCheckpoint(eager=False)
+            .transform(materialize, eager=False)
         )
         amax = asum.agg(F.max("a_raw").alias("mx"))
         auth = (
@@ -1187,14 +1181,14 @@ def hits(
             )
             # Lazy (r12): consumed by hsum and (last iteration) the
             # final projection — cache the node-scale table.
-            .localCheckpoint(eager=False)
+            .transform(materialize, eager=False)
         )
         # Lazy (r12): same double-compute as asum.
         hsum = (
             e.join(auth.withColumnRenamed("node", "t"), "t")
             .groupBy(F.col("s").alias("node"))
             .agg(F.sum("a").alias("h_raw"))
-            .localCheckpoint(eager=False)
+            .transform(materialize, eager=False)
         )
         hmax = hsum.agg(F.max("h_raw").alias("mx"))
         hub = (
@@ -1207,7 +1201,7 @@ def hits(
                     f"CAST(mx AS DOUBLE), 6) AS {dec})"
                 ).alias("h"),
             )
-            .localCheckpoint(eager=False)
+            .transform(materialize, eager=False)
         )
     return (
         nodes.join(hub, "node", "left")

@@ -21,6 +21,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..scratch import materialize
+
 
 def bm25_topk(
     docs: DataFrame,
@@ -78,7 +80,7 @@ def bm25_topk(
             "doc_id",
             F.split(F.trim(F.lower(F.col(text_col))), r"\s+").alias("__t"),
         )
-        .localCheckpoint(eager=False)
+        .transform(materialize, eager=False)
     )
     dl = base.select("doc_id", F.size("__t").cast("long").alias("dl"))
     stats = dl.agg(
@@ -191,7 +193,7 @@ def tfidf_topk_terms(
     # — exactly the batch-12 "boundary pays" criterion. The df partial
     # aggregate scans every partition, so the lazy checkpoint
     # materializes fully (no early-exit hazard).
-    tf = tf.localCheckpoint(eager=False)
+    tf = materialize(tf, eager=False)
     # count(*) per term == the old per-term row count of tf (each row
     # is one distinct (doc, term) pair) — identical df.
     dft = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
@@ -403,7 +405,7 @@ def mmr_rerank(
     cand = cosine_topk(
         embeddings, query_ids, k=depth, id_col=id_col, vec_col=vec_col
     ).select("q", "neighbor", F.col("sim").alias("rel"))
-    cand = cand.localCheckpoint(eager=False)
+    cand = materialize(cand, eager=False)
 
     vecs = embeddings.select(
         F.col(id_col).alias("__id"), F.col(vec_col).alias("__v")

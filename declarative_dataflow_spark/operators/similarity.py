@@ -27,6 +27,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ..scratch import materialize
+
 
 def density_planes(n: int, target_bucket: int = 32) -> int:
     """Density-adjusted hyperplane count: ``ceil(log2(n /
@@ -395,7 +397,7 @@ def embedding_neardup(
         base = _with_bucket(base, planes, dim, "v").select(
             "id", "v", "nrm", "bucket"
         # Lazy (r12): the self-join's first side materializes it.
-        ).localCheckpoint(eager=False)
+        ).transform(materialize, eager=False)
         left = base.toDF("a", "va", "na", "bucket")
         right = base.toDF("b", "vb", "nb", "bucket")
         pairs = left.join(right, "bucket").filter(F.col("a") < F.col("b"))
@@ -872,7 +874,7 @@ def lsh_topk(
         emb = _with_bucket(base, planes, dim, "v").select(
             "id", "v", "nrm", "bucket"
         )
-    emb = emb.localCheckpoint(eager=False)
+    emb = materialize(emb, eager=False)
     q = emb.filter(F.col("id").isin(query_ids)).select(
         F.col("id").alias("q"),
         F.col("v").alias("qv"),
@@ -1423,7 +1425,7 @@ def top_component(
     spark_ctx = embeddings.sparkSession.sparkContext
     if base.rdd.getNumPartitions() < spark_ctx.defaultParallelism:
         base = base.repartition(spark_ctx.defaultParallelism)
-    base = base.localCheckpoint(eager=False)
+    base = materialize(base, eager=False)
 
     def dot_expr(vlits: list) -> str:
         # left-assoc ascending — list_dot_product's exact fold order
@@ -1641,7 +1643,7 @@ def knn_graph(
     side = (
         _assign_cells(embeddings, cents, id_col, vec_col, keep_vec=True)
         .select("vec_id", "cell", "v")
-        .localCheckpoint(eager=False)
+        .transform(materialize, eager=False)
     )
     if stats["dmin"] is not None and stats["dmin"] == stats["dmax"]:
         from .curation import _numpy_cell_pairs
@@ -1692,7 +1694,7 @@ def knn_graph(
         pairs.withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= k_neighbors)
         .select("a", "b", "sim")
-        .localCheckpoint(eager=False)
+        .transform(materialize, eager=False)
     )
     if not mutual:
         return knn

@@ -36,6 +36,8 @@ import math
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..scratch import materialize
+
 # ---------------------------------------------------------------------------
 # Shared md5-uint32 hash (engine-portable; see operators.dedup)
 # ---------------------------------------------------------------------------
@@ -148,9 +150,7 @@ def hll_distinct(docs: DataFrame, text_col: str = "text") -> DataFrame:
     the streaming maintainer folds raw tokens.
     """
 
-    terms = (
-        _tokens(docs, text_col).distinct().localCheckpoint(eager=False)
-    )
+    terms = materialize(_tokens(docs, text_col).distinct(), eager=False)
     sk = hll_estimate_from_registers(_registers_from_terms(terms))
     exact = terms.agg(F.count(F.lit(1)).alias("exact"))
     return sk.crossJoin(F.broadcast(exact)).select(
@@ -238,7 +238,7 @@ def cms_topk(
         _tokens(docs, text_col)
         .groupBy("term")
         .agg(F.count(F.lit(1)).alias("exact"))
-        .localCheckpoint(eager=False)
+        .transform(materialize, eager=False)
     )
     cells = F.array(
         *[
@@ -437,7 +437,7 @@ def group_hist_quantiles(
     )
     cum = hist.select(
         "k", "bucket", F.sum("cnt").over(w).alias("n_le")
-    ).localCheckpoint(eager=False)
+    ).transform(materialize, eager=False)
     tot = hist.groupBy("k").agg(F.sum("cnt").alias("n"))
     fracs = [Fraction(str(q)) for q in qs]
     qarr = F.array(

@@ -12,6 +12,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ..scratch import materialize, materialize_count
+
 # Deliberately small, deterministic marker sets: the point is the
 # dataflow shape (tokenize -> filter -> argmax), not linguistics.
 STOPWORDS = ("the", "a", "and", "of", "to", "in", "is", "on", "for")
@@ -342,9 +344,7 @@ def ngram_lm_score(
     # (model counts, scoring join) re-derive their explodes MAP-SIDE
     # from the cached arrays — the shuffles downstream are identical.
     warr = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
-    base = docs.select("doc_id", warr.alias("__w")).localCheckpoint(
-        eager=False
-    )
+    base = materialize(docs.select("doc_id", warr.alias("__w")), eager=False)
     toks = base.select(F.col("doc_id"), F.explode("__w").alias("w"))
     # Bigrams form ROW-LOCALLY (consecutive pairs of the token array)
     # — a (doc_id, pos) self-join would shuffle the whole token table
@@ -370,8 +370,8 @@ def ngram_lm_score(
     # there removes a second full countDistinct pass over the token
     # table (r12; one corpus-token scan + two-stage distinct shuffle
     # gone at any scale — guide §2.4).
-    c1 = toks.groupBy("w").agg(F.count(F.lit(1)).alias("c1")).localCheckpoint(
-        eager=False
+    c1 = materialize(
+        toks.groupBy("w").agg(F.count(F.lit(1)).alias("c1")), eager=False
     )
     vocab = c1.select(F.count(F.lit(1)).alias("v"))
     model = c2.join(c1, "w").crossJoin(F.broadcast(vocab)).select(
@@ -500,7 +500,7 @@ def _bpe_train(
                 F.lit(f" {row['l']}  {row['r']} "),
                 F.lit(f" {row['l']}{row['r']} "),
             ),
-        ).localCheckpoint(eager=False)
+        ).transform(materialize, eager=False)
     return merges, words
 
 
@@ -536,7 +536,7 @@ def bpe_encode(
     per_doc = (
         toks.groupBy("doc_id", "word")
         .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=False)  # feeds training AND the join
+        .transform(materialize, eager=False)  # feeds training AND the join
     )
     words = per_doc.groupBy("word").agg(F.sum("c").alias("cnt")).select(
         "word", _spell_seq("word").alias("seq"), "cnt"
@@ -585,12 +585,11 @@ def lm_quality_buckets(
     # TakeOrdered pass per cut point, and the output projection) —
     # materialize once or the whole LM pipeline re-runs per consumer
     # (measured at the 10x bench scale: 10.1s -> ~6s).
-    scored = (
-        ngram_lm_score(docs, alpha=alpha, text_col=text_col)
-        .select("doc_id", "avg_logp")
-        .localCheckpoint(eager=False)
+    scored, n = materialize_count(
+        ngram_lm_score(docs, alpha=alpha, text_col=text_col).select(
+            "doc_id", "avg_logp"
+        )
     )
-    n = scored.count()
     tup = F.struct("avg_logp", "doc_id")
     bucket = F.lit(1)
     out = scored
@@ -670,7 +669,7 @@ def nb_quality_score(
         "doc_id",
         "label",
         F.split(F.trim(F.lower(F.col(text_col))), r"\s+").alias("__t"),
-    ).localCheckpoint(eager=False)
+    ).transform(materialize, eager=False)
     toks = base.select(
         "doc_id", "label", F.explode("__t").alias("term")
     )
@@ -683,7 +682,7 @@ def nb_quality_score(
     counts = toks.groupBy("term").agg(
         F.sum(F.when(F.col("label"), 1).otherwise(0)).alias("cp"),
         F.sum(F.when(F.col("label"), 0).otherwise(1)).alias("cf"),
-    ).localCheckpoint(eager=False)
+    ).transform(materialize, eager=False)
     vocab = counts.select(F.count(F.lit(1)).alias("v"))
     tot = base.agg(
         F.sum(
@@ -728,7 +727,7 @@ def nb_quality_score(
             F.count(F.lit(1)).alias("n_tokens"),
             F.sum("w").cast("double").alias("__s"),
         )
-        .localCheckpoint(eager=False)
+        .transform(materialize, eager=False)
     )
     cls = per_doc.agg(
         F.sum(F.when(F.col("label"), 1).otherwise(0)).alias("d_pass"),
@@ -1140,7 +1139,7 @@ def collocations(
     # base-array discipline): materialize the doc-scale token-array
     # table; unigrams and bigrams re-derive map-side.
     warr = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
-    base = docs.select(warr.alias("__w")).localCheckpoint(eager=False)
+    base = materialize(docs.select(warr.alias("__w")), eager=False)
     toks = base.select(F.explode("__w").alias("w"))
     bigrams = (
         base.filter(F.size("__w") >= 2)
@@ -1165,7 +1164,7 @@ def collocations(
     c1 = (
         toks.groupBy("w")
         .agg(F.count(F.lit(1)).alias("c_x"))
-        .localCheckpoint(eager=False)
+        .transform(materialize, eager=False)
     )
     n = c1.select(F.sum("c_x").alias("n_tokens"))
     scored = (
@@ -1227,7 +1226,7 @@ def vocab_coverage(
     counts = (
         toks.groupBy("w")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint(eager=False)
+        .transform(materialize, eager=False)
     )
     top = counts.orderBy(F.col("cnt").desc(), F.col("w")).limit(max_k)
     w_rk = Window.orderBy(F.col("cnt").desc(), F.col("w"))
@@ -1321,7 +1320,7 @@ def langid_eval(
     # prediction pass runs corpus-wide twice.
     counts = preds.groupBy("true_lang", "pred_lang").agg(
         F.count(F.lit(1)).alias("n")
-    ).localCheckpoint(eager=False)
+    ).transform(materialize, eager=False)
     totals = counts.groupBy("true_lang").agg(F.sum("n").alias("tot"))
     return counts.join(F.broadcast(totals), "true_lang").select(
         "true_lang",

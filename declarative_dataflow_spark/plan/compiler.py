@@ -30,6 +30,7 @@ from typing import Any, Callable, Optional
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
 
+from ..scratch import materialize
 from .plans import (
     Aggregate,
     AggregationFn,
@@ -286,7 +287,7 @@ def compile_plan(plan: Plan, catalog: Catalog) -> Relation:
 
     When ``catalog.static_cache`` is set (fixpoint compilation), any
     maximal subtree that references no dynamic rule compiles once and
-    is lazily ``localCheckpoint``-ed; later iterations reuse the
+    is lazily ``materialize``-d; later iterations reuse the
     materialized blocks instead of re-scanning the inputs — the Spark
     analog of differential dataflow's shared arrangements for static
     collections inside an iterative scope.
@@ -315,7 +316,7 @@ def compile_plan(plan: Plan, catalog: Catalog) -> Relation:
                         rel.variables, rel.df.dropDuplicates(), False
                     )
                 )
-            ckpt = rel.df.localCheckpoint(eager=False)
+            ckpt = materialize(rel.df, eager=False)
             rel = Relation(rel.variables, ckpt, rel.has_diff)
             cache[key] = rel
             return rel

@@ -1,79 +1,55 @@
-"""Scratch-materialization router: one switch between executor-local
-and cluster-reliable lineage truncation.
+"""Scratch materialization: the one way this package truncates lineage
+on a scratch table (shingle sets, fixpoint rounds, both sides of
+self-joins, maintainer state).
 
-Every operator in this package truncates lineage on scratch tables
-(shingle sets, fixpoint rounds, both sides of self-joins) via
-``DataFrame.localCheckpoint`` — the right default locally AND the
-right mechanics generally: blocks are reaped by the ContextCleaner as
-soon as the caller drops the result, where a ``persist()`` holds a
-strong CacheManager reference a lazy operator can never unpersist
-(the r7 marathon leak). But localCheckpoint blocks are EXECUTOR-LOCAL
-and unreplicated: on a real cluster, losing one executor kills every
-job whose truncated lineage lived there instead of recomputing
-(documented trade, operators/dedup.py). A 1000-executor deployment
-that wants recompute-on-loss sets::
+Local or reliable. By default :func:`materialize` is a stock
+``DataFrame.localCheckpoint``: its blocks are reaped by the
+ContextCleaner as soon as the caller drops the result, where a
+``persist()`` holds a strong CacheManager reference that a lazy
+operator can never unpersist. But local checkpoint blocks are
+executor-local and unreplicated: on a real cluster, losing one
+executor fails every job whose truncated lineage lived there instead
+of recomputing it. A deployment that wants recompute-on-loss sets::
 
     spark.conf.set("spark.declarativeDataflow.reliableScratch", "true")
-    # optional; defaults to a temp dir locally — point it at the
+    # optional; defaults to a temp dir locally -- point it at the
     # cluster FS (HDFS/S3) in a real deployment:
     spark.conf.set("spark.declarativeDataflow.scratchDir", "hdfs://...")
 
-and every scratch materialization in the package routes through
-RELIABLE ``DataFrame.checkpoint`` (written to the checkpoint dir,
-re-readable after executor loss) instead. Default is off — behavior
-is bit-identical to stock localCheckpoint.
+and every scratch table of the package becomes a reliable
+``DataFrame.checkpoint`` in the checkpoint dir, re-readable after an
+executor loss. The flag is read per call, so it can be flipped per
+session or per operator block. A user's own ``df.localCheckpoint()``
+is never rerouted.
 
-DISK-GROWTH TRADE (reliable mode): Spark never deletes reliable
-checkpoint files on its own — the ContextCleaner only reaps them when
-``spark.cleaner.referenceTracking.cleanCheckpoints=true`` was set at
-SparkContext CREATION time (it is a static conf; it cannot be flipped
-mid-session, so :func:`ensure_checkpoint_dir` can only verify it, not
-set it). With ~170 scratch sites per workload, a long-running flagged
-session without that conf grows the checkpoint dir without bound —
-the exact leak class the localCheckpoint default was chosen to avoid.
-A deployment that flips ``reliableScratch`` on MUST either start the
-context with the cleaner conf::
+Reliable mode grows the disk. Spark deletes reliable checkpoint files
+only when ``spark.cleaner.referenceTracking.cleanCheckpoints=true``
+was set when the SparkContext was created. It is a static conf, so
+:func:`ensure_checkpoint_dir` can only check it, not set it. Without
+it, a long-running session grows the checkpoint dir without bound. A
+deployment that turns ``reliableScratch`` on must either start the
+context with::
 
     SparkSession.builder.config(
         "spark.cleaner.referenceTracking.cleanCheckpoints", "true")
 
-or reap the scratchDir externally (ttl'd bucket / cron). In local
-mode :func:`ensure_checkpoint_dir` emits a one-time warning when the
-flag is on and the cleaner conf is not.
-
-Scope note: because the router is a process-wide class-attribute
-patch, a session that sets ``reliableScratch=true`` also reroutes the
-USER'S OWN ``df.localCheckpoint()`` calls in that session to reliable
-checkpoints (same storage-level caveat as below). That is usually
-what a cluster deployment wants — all lineage truncation survives
-executor loss — but it is a behavior change beyond this package's
-operators; flip the flag per operator block if user scratch should
-stay executor-local.
-
-Mechanism: the package has ~170 scratch sites; rather than threading
-a flag through every operator signature, :func:`install` (called once
-at package import) replaces ``DataFrame.localCheckpoint`` with a
-router that reads the session conf PER CALL — so the flag can be
-flipped per session, mid-session, or per operator block, and code
-that never sets it sees the stock method's exact semantics (the
-original bound method handles the default path). The patch is
-process-wide by construction (it is a class attribute), which is the
-deliberate trade for zero signature churn; it is idempotent and keeps
-a handle to the original for tests.
+or reap the scratchDir externally (ttl'd bucket, cron).
+:func:`ensure_checkpoint_dir` warns once when the flag is on and the
+cleaner conf is not.
 """
 
 from __future__ import annotations
 
 import os
+import sys
 import tempfile
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
+from pyspark.sql import functions as F
 
 RELIABLE_FLAG = "spark.declarativeDataflow.reliableScratch"
 SCRATCH_DIR = "spark.declarativeDataflow.scratchDir"
-
-# The stock method, kept for the default path and for tests.
-_stock_local_checkpoint = None
+_DESCRIPTION = "spark.job.description"
 
 
 def reliable_scratch_enabled(spark) -> bool:
@@ -92,7 +68,7 @@ def _warn_if_no_cleaner(sc) -> None:
     """One-time warning when reliable scratch will leak checkpoint
     files: spark.cleaner.referenceTracking.cleanCheckpoints is a
     STATIC conf (read at context creation — cannot be set here), so
-    the best the router can do at runtime is tell the operator the
+    the best this module can do at runtime is tell the operator the
     dir will grow without bound until it is reaped externally."""
 
     global _cleaner_warned
@@ -143,56 +119,51 @@ def ensure_checkpoint_dir(spark) -> str:
     return d
 
 
-def install() -> None:
-    """Install the scratch router onto DataFrame.localCheckpoint.
-    Idempotent; called at package import (declarative_dataflow_spark
-    and .session both import this module).
+def _caller() -> str:
+    """Qualified name of the nearest calling function outside this
+    module and pyspark (``DataFrame.transform`` sits between a chained
+    call site and :func:`materialize`)."""
 
-    Spark 4 note: ``pyspark.sql.DataFrame`` is the ABSTRACT parent —
-    classic-mode instances are ``pyspark.sql.classic.dataframe.
-    DataFrame``, whose own ``localCheckpoint`` would shadow a patch on
-    the base class (verified: a base-class patch never routes). The
-    router therefore lands on the concrete classic class, falling back
-    to the base for older/newer layouts."""
+    f = sys._getframe(2)
+    while f.f_back is not None and (
+        f.f_globals.get("__name__", "").startswith("pyspark")
+        or f.f_globals.get("__name__") == __name__
+    ):
+        f = f.f_back
+    return f.f_code.co_qualname
 
-    global _stock_local_checkpoint
-    if _stock_local_checkpoint is not None:
-        return
-    target = DataFrame
+
+def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
+    """Truncate ``df``'s lineage into a scratch table: a stock
+    ``localCheckpoint``, or a reliable ``checkpoint`` when the session
+    sets ``reliableScratch``. Jobs run here (``eager``) carry the
+    calling function's name as their description; the job group and
+    the previous description are left as they were."""
+
+    spark = df.sparkSession
+    if reliable_scratch_enabled(spark):
+        ensure_checkpoint_dir(spark)
+        checkpoint = df.checkpoint
+    else:
+        checkpoint = df.localCheckpoint
+    if not eager:
+        return checkpoint(eager=False)
+    sc = spark.sparkContext
+    previous = sc.getLocalProperty(_DESCRIPTION)
+    sc.setLocalProperty(_DESCRIPTION, _caller())
     try:
-        from pyspark.sql.classic.dataframe import (  # type: ignore
-            DataFrame as _ClassicDataFrame,
-        )
-
-        if "localCheckpoint" in vars(_ClassicDataFrame):
-            target = _ClassicDataFrame
-    except ImportError:
-        pass
-    _stock_local_checkpoint = target.localCheckpoint
-
-    def _routed_local_checkpoint(self, eager: bool = True, storageLevel=None):
-        spark = self.sparkSession
-        if reliable_scratch_enabled(spark):
-            # reliable checkpoint has no storage-level knob (blocks go
-            # to the checkpoint dir, not the block manager) — the
-            # caller's preference is moot on this path by construction.
-            ensure_checkpoint_dir(spark)
-            return self.checkpoint(eager=eager)
-        if storageLevel is not None:
-            return _stock_local_checkpoint(
-                self, eager=eager, storageLevel=storageLevel
-            )
-        return _stock_local_checkpoint(self, eager=eager)
-
-    _routed_local_checkpoint.__doc__ = (
-        "Scratch router (declarative_dataflow_spark.scratch): stock "
-        "localCheckpoint unless the session sets "
-        f"{RELIABLE_FLAG}=true, in which case a RELIABLE checkpoint "
-        "to the checkpoint dir (cluster-FS recompute-on-loss). See "
-        "the module docstring."
-    )
-    _routed_local_checkpoint.__name__ = "localCheckpoint"
-    target.localCheckpoint = _routed_local_checkpoint
+        return checkpoint(eager=True)
+    finally:
+        sc.setLocalProperty(_DESCRIPTION, previous)
 
 
-install()
+def materialize_count(df: DataFrame, where=None) -> tuple[DataFrame, int]:
+    """Eagerly :func:`materialize` ``df`` and count its rows (those
+    matching the Column ``where``, if given) inside the same jobs,
+    through an ``Observation``. Always eager: an Observation on a lazy
+    checkpoint reports 0 even after a later action."""
+
+    obs = Observation()
+    hit = F.lit(1) if where is None else F.when(where, 1)
+    out = materialize(df.observe(obs, F.count(hit).alias("n")))
+    return out, obs.get["n"]

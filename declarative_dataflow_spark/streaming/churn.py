@@ -40,6 +40,8 @@ import tempfile
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..scratch import materialize
+
 CHURN_EPOCHS = 4
 RETRACT_MOD = 5
 
@@ -99,7 +101,7 @@ def drive(maint, rows: DataFrame, id_col: str = "event_id",
             )
         maint.process_batch(adds, retracts, epoch=i)
     out = maint.current()
-    return out.localCheckpoint(eager=True)
+    return materialize(out)
 
 
 def run_churn(maint_factory, rows: DataFrame, id_col: str = "event_id",

@@ -44,6 +44,7 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators.dedup import shingles
+from ..scratch import materialize
 
 
 class _GenerationalState:
@@ -265,9 +266,8 @@ class IncrementalDupNgram(_GenerationalState):
         ``epoch`` id for retry-idempotent state writes (use one mode
         consistently per state_dir)."""
 
-        sh = shingles(batch, self.n, self.text_col).localCheckpoint(
-            eager=True
-        )  # (doc_id, shingle), distinct per doc
+        # (doc_id, shingle), distinct per doc
+        sh = materialize(shingles(batch, self.n, self.text_col))
 
         counts = self._read_counts()
         index = self._read_versioned("index")
@@ -292,7 +292,7 @@ class IncrementalDupNgram(_GenerationalState):
                     .alias("new_n"),
                 )
             )
-        merged_touched = merged_touched.localCheckpoint(eager=True)
+        merged_touched = materialize(merged_touched)
 
         # n-grams that BECAME duplicated this epoch: old docs holding
         # them change their numerator.
@@ -342,7 +342,7 @@ class IncrementalDupNgram(_GenerationalState):
                     "dup_frac"
                 ),
             )
-            .localCheckpoint(eager=True)
+            .transform(materialize)
         )
 
         # -- advance state: O(batch) appends only --
@@ -498,7 +498,7 @@ class IncrementalContamination:
         """Ingest documents; returns their scores against the CURRENT
         eval set and appends them to the shared inverted index."""
 
-        sh = shingles(batch, self.n, self.text_col).localCheckpoint(eager=True)
+        sh = materialize(shingles(batch, self.n, self.text_col))
         self._io._append("index", sh)  # O(batch) append-only
         return self._score(sh, self._io._read_versioned("eval"))
 
@@ -511,7 +511,7 @@ class IncrementalContamination:
             shingles(eval_docs, self.n, self.text_col)
             .select("shingle")
             .distinct()
-            .localCheckpoint(eager=True)
+            .transform(materialize)
         )
         ev_old = self._io._read_versioned("eval")
         additions = (
@@ -630,7 +630,7 @@ class IncrementalLineDedup(_GenerationalState):
         for every document whose output changed: the batch's own docs
         plus old docs holding a line that just crossed min_docs."""
 
-        lines = self._explode_lines(batch).localCheckpoint(eager=True)
+        lines = materialize(self._explode_lines(batch))
         dn = lines.select("doc_id", "norm").distinct()
 
         counts = self._read_counts()
@@ -653,7 +653,7 @@ class IncrementalLineDedup(_GenerationalState):
                 .cast("long")
                 .alias("new_n"),
             )
-        touched = touched.localCheckpoint(eager=True)
+        touched = materialize(touched)
 
         crossing = touched.filter(
             (F.col("old_n") < self.min_docs)
@@ -680,7 +680,7 @@ class IncrementalLineDedup(_GenerationalState):
             upd = upd.unionByName(
                 counts.join(touched.select("norm"), "norm", "left_anti")
             )
-        out = self._assemble(doc_lines, upd).localCheckpoint(eager=True)
+        out = materialize(self._assemble(doc_lines, upd))
 
         # -- advance state: O(batch) appends --
         self._append(

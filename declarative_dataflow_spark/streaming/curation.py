@@ -27,6 +27,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from ..operators import dedup as dedup_ops
 from ..operators import text as text_ops
+from ..scratch import materialize
 
 
 def stream_exact_dedup(
@@ -169,7 +170,7 @@ class StreamNearDedup:
 
         sigs = dedup_ops.minhash_signatures(
             batch, self.k, self.n, self.text_col
-        ).localCheckpoint(eager=True)  # one hashing pass, reused 3x
+        ).transform(materialize)  # one hashing pass, reused 3x
         banded = self._band_keys(sigs)
 
         dropped = None
@@ -399,7 +400,7 @@ class StreamSemDeDup:
                 F.col(self.vec_col).cast("array<double>").alias("v"),
             )
             .join(assign.withColumnRenamed("vec_id", "id"), "id")
-            .localCheckpoint(eager=True)  # reused: pairs + survivors
+            .transform(materialize)  # reused: pairs + survivors
         )
         state = self._state(exclude_epoch=epoch)
         if state is None:
@@ -443,7 +444,7 @@ class StreamSemDeDup:
         # batch's own append lands there (a re-listed read would pair
         # the batch against its own survivors — ADVICE r8). The set is
         # one id column, bounded by the batch.
-        dropped = dropped.localCheckpoint(eager=True)
+        dropped = materialize(dropped)
         kept_rows = b.join(dropped, "id", "left_anti").select("id", "v", "cell")
         if epoch is not None:
             kept_rows.write.mode("overwrite").parquet(
@@ -530,20 +531,16 @@ class IncrementalDedupGroups:
         base = docs.select(
             F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
         )
-        self.sets = dedup_ops.hashed_shingle_sets(base, n).localCheckpoint(
-            eager=True
-        )
-        self.bkeys = self._band_keys(self.sets).localCheckpoint(eager=True)
+        self.sets = materialize(dedup_ops.hashed_shingle_sets(base, n))
+        self.bkeys = materialize(self._band_keys(self.sets))
         self.pairs = (
             dedup_ops.minhash_lsh_pairs(base, k, bands, n, threshold)
             .select("a", "b")
-            .localCheckpoint(eager=True)
+            .transform(materialize)
         )
         self.cc = IncrementalCC(self.pairs, "a", "b")
-        self.live = base.select("doc_id").distinct().localCheckpoint(
-            eager=True
-        )
-        self.result = self._derive(self.live).localCheckpoint(eager=True)
+        self.live = materialize(base.select("doc_id").distinct())
+        self.result = materialize(self._derive(self.live))
 
     # -- helpers -----------------------------------------------------
     def _band_keys(self, sets: DataFrame) -> DataFrame:
@@ -620,7 +617,7 @@ class IncrementalDedupGroups:
             ).distinct()
             if retracted is not None
             else spark.createDataFrame([], "doc_id long")
-        ).localCheckpoint(eager=True)
+        ).transform(materialize)
         add = (
             added.select(
                 F.col(added.columns[0]).alias("doc_id"),
@@ -631,12 +628,12 @@ class IncrementalDedupGroups:
         )
         new_sets = dedup_ops.hashed_shingle_sets(add, self.n)
         sets1 = self.sets.join(ret_ids, "doc_id", "left_anti")
-        sets2 = sets1.unionByName(new_sets).localCheckpoint(eager=True)
+        sets2 = materialize(sets1.unionByName(new_sets))
         new_bk = self._band_keys(new_sets)
         bk2 = (
             self.bkeys.join(ret_ids, "doc_id", "left_anti")
             .unionByName(new_bk)
-            .localCheckpoint(eager=True)
+            .transform(materialize)
         )
         cand = (
             new_bk.toDF("x", "key")
@@ -648,7 +645,7 @@ class IncrementalDedupGroups:
             )
             .dropDuplicates(["a", "b"])
         )
-        add_pairs = self._verify(cand, sets2).localCheckpoint(eager=True)
+        add_pairs = materialize(self._verify(cand, sets2))
         ret_pairs = (
             self.pairs.join(
                 ret_ids.withColumnRenamed("doc_id", "a"), "a", "left_semi"
@@ -661,21 +658,21 @@ class IncrementalDedupGroups:
                 )
             )
             .dropDuplicates(["a", "b"])
-            .localCheckpoint(eager=True)
+            .transform(materialize)
         )
         ccdiffs = self.cc.apply(added=add_pairs, retracted=ret_pairs)
         pairs2 = (
             self.pairs.join(ret_pairs, ["a", "b"], "left_anti")
             .unionByName(add_pairs)
             .dropDuplicates(["a", "b"])
-            .localCheckpoint(eager=True)
+            .transform(materialize)
         )
         add_ids = add.select("doc_id").distinct()
         live2 = (
             self.live.join(ret_ids, "doc_id", "left_anti")
             .unionByName(add_ids)
             .distinct()
-            .localCheckpoint(eager=True)
+            .transform(materialize)
         )
         touched = (
             add_ids.unionByName(ret_ids)
@@ -692,12 +689,12 @@ class IncrementalDedupGroups:
             .groupBy("doc_id", "canonical")
             .agg(F.sum("diff").alias("diff"))
             .filter(F.col("diff") != 0)
-            .localCheckpoint(eager=True)
+            .transform(materialize)
         )
         self.result = (
             self.result.join(touched, "doc_id", "left_anti")
             .unionByName(new_res)
-            .localCheckpoint(eager=True)
+            .transform(materialize)
         )
         self.sets, self.bkeys = sets2, bk2
         self.pairs, self.live = pairs2, live2
@@ -837,7 +834,7 @@ class StreamFuzzyDedup:
             F.col(self.id_col).alias("id"), F.col(self.s_col).alias("s")
         )
         keyed = named.filter(F.col("s").isNotNull())
-        bvar = self._variants(keyed).localCheckpoint(eager=True)
+        bvar = materialize(self._variants(keyed))
         state = self._state(exclude_epoch=epoch)
         dropped = None
         if state is not None:

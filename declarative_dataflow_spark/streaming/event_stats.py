@@ -44,6 +44,7 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators.timeseries import funnel_us, retention_from_activity
+from ..scratch import materialize
 from .corpus_stats import _GenerationalState
 
 
@@ -141,7 +142,7 @@ class IncrementalFunnel(_GenerationalState):
             delta.groupBy("k", "t", "tu")
             .agg(F.sum("cnt").alias("cnt"))
             .filter(F.col("cnt") != 0)
-            .localCheckpoint(eager=True)
+            .transform(materialize)
         )
         touched = delta.select("k").distinct()
         before = self._events_state()
@@ -153,7 +154,7 @@ class IncrementalFunnel(_GenerationalState):
             if before is None
             else self._funnel_of(
                 before.join(touched, "k", "left_semi")
-            ).localCheckpoint(eager=True)
+            ).transform(materialize)
         )
         self._append("events", delta, epoch=epoch)
         self._epochs = getattr(self, "_epochs", 0) + 1
@@ -274,14 +275,14 @@ class IncrementalRetention(_GenerationalState):
             raw.groupBy("k", "bucket")
             .agg(F.sum("cnt").alias("cnt"))
             .filter(F.col("cnt") != 0)
-            .localCheckpoint(eager=True)
+            .transform(materialize)
         )
         touched = delta.select("k").distinct()
         old = self._contrib(self._activity_state(), touched)
         if old is not None:
             # materialize before the append (retried epochs overwrite
             # their own partition in place)
-            old = old.localCheckpoint(eager=True)
+            old = materialize(old)
         self._append("activity", delta, epoch=epoch)
         self._epochs = getattr(self, "_epochs", 0) + 1
         if self._epochs % self.compact_every == 0:
@@ -395,7 +396,7 @@ class IncrementalSessionize(_GenerationalState):
             delta.groupBy("k", "tu", "eid")
             .agg(F.sum("cnt").alias("cnt"))
             .filter(F.col("cnt") != 0)
-            .localCheckpoint(eager=True)
+            .transform(materialize)
         )
         touched = delta.select("k").distinct()
         before = self._events_state()
@@ -404,7 +405,7 @@ class IncrementalSessionize(_GenerationalState):
             if before is None
             else self._stats_of(
                 before.join(touched, "k", "left_semi")
-            ).localCheckpoint(eager=True)
+            ).transform(materialize)
         )
         self._append("events", delta, epoch=epoch)
         self._epochs = getattr(self, "_epochs", 0) + 1
@@ -529,7 +530,7 @@ class IncrementalResample(_GenerationalState):
             delta.groupBy("k", "tu", "eid", "value")
             .agg(F.sum("cnt").alias("cnt"))
             .filter(F.col("cnt") != 0)
-            .localCheckpoint(eager=True)
+            .transform(materialize)
         )
         touched = delta.select("k").distinct()
         before = self._events_state()
@@ -538,7 +539,7 @@ class IncrementalResample(_GenerationalState):
             if before is None
             else self._series_of(
                 before.join(touched, "k", "left_semi")
-            ).localCheckpoint(eager=True)
+            ).transform(materialize)
         )
         self._append("events", delta, epoch=epoch)
         self._epochs = getattr(self, "_epochs", 0) + 1
@@ -667,7 +668,7 @@ class IncrementalAnomalies(_GenerationalState):
             delta.groupBy("k", "tu", "eid", "value")
             .agg(F.sum("cnt").alias("cnt"))
             .filter(F.col("cnt") != 0)
-            .localCheckpoint(eager=True)
+            .transform(materialize)
         )
         touched = delta.select("k").distinct()
         before = self._events_state()
@@ -676,7 +677,7 @@ class IncrementalAnomalies(_GenerationalState):
             if before is None
             else self._flags_of(
                 before.join(touched, "k", "left_semi")
-            ).localCheckpoint(eager=True)
+            ).transform(materialize)
         )
         self._append("events", delta, epoch=epoch)
         self._epochs = getattr(self, "_epochs", 0) + 1
@@ -819,7 +820,7 @@ class IncrementalChangepoint(_GenerationalState):
                 F.sum("c").alias("c"),
             )
             .filter((F.col("c") != 0) | (F.col("s") != 0))
-            .localCheckpoint(eager=True)
+            .transform(materialize)
         )
         touched = delta.select("k").distinct()
         before = self._bins_state()
@@ -828,7 +829,7 @@ class IncrementalChangepoint(_GenerationalState):
             if before is None
             else self._profile_of(
                 before.join(touched, "k", "left_semi")
-            ).localCheckpoint(eager=True)
+            ).transform(materialize)
         )
         self._append("bins", delta, epoch=epoch)
         self._epochs = getattr(self, "_epochs", 0) + 1
@@ -960,7 +961,7 @@ class IncrementalAttribution(_GenerationalState):
             delta.groupBy("k", "event_id", "t", "tu")
             .agg(F.sum("cnt").alias("cnt"))
             .filter(F.col("cnt") != 0)
-            .localCheckpoint(eager=True)
+            .transform(materialize)
         )
         touched = delta.select("k").distinct()
         before = self._events_state()
@@ -969,7 +970,7 @@ class IncrementalAttribution(_GenerationalState):
             if before is None
             else self._attrib_of(
                 before.join(touched, "k", "left_semi")
-            ).localCheckpoint(eager=True)
+            ).transform(materialize)
         )
         self._append("events", delta, epoch=epoch)
         self._epochs = getattr(self, "_epochs", 0) + 1
@@ -1121,7 +1122,7 @@ class IncrementalAsOf(_GenerationalState):
             delta.groupBy(*self._cols)
             .agg(F.sum("cnt").alias("cnt"))
             .filter(F.col("cnt") != 0)
-            .localCheckpoint(eager=True)
+            .transform(materialize)
         )
         touched = delta.select("e").distinct()
         before = self._facts_state()
@@ -1130,7 +1131,7 @@ class IncrementalAsOf(_GenerationalState):
             if before is None
             else self._view_of(
                 before.join(touched, "e", "left_semi")
-            ).localCheckpoint(eager=True)
+            ).transform(materialize)
         )
         self._append("facts", delta, epoch=epoch)
         self._epochs = getattr(self, "_epochs", 0) + 1

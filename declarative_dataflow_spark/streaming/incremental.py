@@ -66,6 +66,7 @@ from ..plan.plans import (
     Negate,
     Plan,
 )
+from ..scratch import materialize, materialize_count
 
 
 def epoch_deltas(
@@ -89,7 +90,7 @@ def epoch_deltas(
     for aid, rows in by_aid.items():
         if aid in semantics:
             eff = semantics[aid].delta(rows)
-            if not eff.limit(1).isEmpty():
+            if eff is not None:
                 out[aid] = eff
             continue
         net: dict[tuple[Any, Any], int] = {}
@@ -151,18 +152,17 @@ class SemanticsDeltaSource:
 
         self._ta = ta
         self._apply = _apply_input_semantics
-        self.prev = (
-            ta.dataframe().select("e", "v").localCheckpoint(eager=True)
-        )
+        self.prev = materialize(ta.dataframe().select("e", "v"))
 
     def initial(self) -> DataFrame:
         """Current effective rows as a weighted snapshot."""
 
         return self.prev.withColumn("diff", F.lit(1).cast("long"))
 
-    def delta(self, batch_rows: list[tuple]) -> DataFrame:
+    def delta(self, batch_rows: list[tuple]) -> Optional[DataFrame]:
         """Effective-view changes caused by this epoch's datoms (which
-        the engine has already transacted into the attribute)."""
+        the engine has already transacted into the attribute); None
+        when the effective view did not change."""
 
         touched = local_frame(
             self.prev.sparkSession,
@@ -173,7 +173,7 @@ class SemanticsDeltaSource:
         new_eff = (
             self._apply(hist, self._ta.config)
             .select("e", "v")
-            .localCheckpoint(eager=True)
+            .transform(materialize)
         )
         old_eff = self.prev.join(touched, "e", "left_semi")
         plus = new_eff.join(old_eff, ["e", "v"], "left_anti").withColumn(
@@ -185,9 +185,10 @@ class SemanticsDeltaSource:
         self.prev = (
             self.prev.join(touched, "e", "left_anti")
             .unionByName(new_eff)
-            .localCheckpoint(eager=True)
+            .transform(materialize)
         )
-        return plus.unionByName(minus).localCheckpoint(eager=True)
+        eff, n = materialize_count(plus.unionByName(minus))
+        return eff if n else None
 
 
 class DeltaJoin:
@@ -242,9 +243,7 @@ class DeltaJoin:
         # datom batches translate to effective-view deltas first.
         self.semantics = dict(semantics or {})
         for aid, df in (initial or {}).items():
-            self.snapshots[aid] = df.select("e", "v", "diff").localCheckpoint(
-                eager=True
-            )
+            self.snapshots[aid] = materialize(df.select("e", "v", "diff"))
         self.epoch = 0
 
     # -- snapshot algebra ------------------------------------------------
@@ -373,8 +372,8 @@ class DeltaJoin:
                     if keys_minus is None
                     else keys_from.join(keys_minus, ["e", "v"], "left_anti")
                 )
-                flipped = flipped.localCheckpoint(eager=True)
-                if flipped.limit(1).isEmpty():
+                flipped, n_flipped = materialize_count(flipped)
+                if not n_flipped:
                     continue
                 core = self._core_at(self.snapshots)
                 if core is None:
@@ -441,9 +440,8 @@ class DeltaJoin:
         aids = [r["a"] for r in base.select("a").distinct().collect()]
         deltas = {}
         for aid in aids:
-            deltas[aid] = (
+            deltas[aid] = materialize(
                 self._consolidate(base.filter(F.col("a") == aid).drop("a"))
-                .localCheckpoint(eager=True)
             )
         return self._advance(deltas)
 
@@ -455,9 +453,7 @@ class DeltaJoin:
                 merged = self.snapshots[aid].unionByName(deltas[aid])
                 appends = self._appends.get(aid, 0) + 1
                 if appends >= self.compact_every:
-                    merged = self._consolidate(merged).localCheckpoint(
-                        eager=True
-                    )
+                    merged = materialize(self._consolidate(merged))
                     appends = 0
                 news[aid] = merged
                 self._appends[aid] = appends
@@ -592,7 +588,7 @@ class IncrementalAggregate:
                 .groupBy(*self.keys, "__v")
                 .agg(F.sum("__w").alias("__w"))
                 .filter(F.col("__w") != 0)
-                .localCheckpoint(eager=True)
+                .transform(materialize)
             )
         elif seed_from_snapshots and delta_join.snapshots:
             core = delta_join._core_at(delta_join.snapshots)
@@ -607,7 +603,7 @@ class IncrementalAggregate:
                     .groupBy(*self.keys, "__v")
                     .agg(F.sum("__w").alias("__w"))
                     .filter(F.col("__w") != 0)
-                    .localCheckpoint(eager=True)
+                    .transform(materialize)
                 )
 
     def _aggregate(self, slice_df: DataFrame) -> DataFrame:
@@ -666,7 +662,7 @@ class IncrementalAggregate:
             .groupBy(*self.keys, "__v")
             .agg(F.sum("__w").alias("__w"))
             .filter(F.col("__w") != 0)
-            .localCheckpoint(eager=True)
+            .transform(materialize)
         )
         affected = dproj.select(*self.keys).distinct()
 
@@ -680,7 +676,7 @@ class IncrementalAggregate:
             merged.groupBy(*self.keys, "__v")
             .agg(F.sum("__w").alias("__w"))
             .filter(F.col("__w") != 0)
-            .localCheckpoint(eager=True)
+            .transform(materialize)
         )
         new_slice = new_state.join(affected, self.keys, "inner")
 
@@ -732,7 +728,7 @@ class IncrementalTopK:
                     .groupBy(*self.vars)
                     .agg(F.sum("__w").alias("__w"))
                     .filter(F.col("__w") != 0)
-                    .localCheckpoint(eager=True)
+                    .transform(materialize)
                 )
 
     def _order_cols(self):
@@ -764,7 +760,7 @@ class IncrementalTopK:
             .groupBy(*self.vars)
             .agg(F.sum("__w").alias("__w"))
             .filter(F.col("__w") != 0)
-            .localCheckpoint(eager=True)
+            .transform(materialize)
         )
         merged = (
             dproj if self.state is None else self.state.unionByName(dproj)
@@ -773,7 +769,7 @@ class IncrementalTopK:
             merged.groupBy(*self.vars)
             .agg(F.sum("__w").alias("__w"))
             .filter(F.col("__w") != 0)
-            .localCheckpoint(eager=True)
+            .transform(materialize)
         )
         if self.partition_by:
             touched = dproj.select(*self.partition_by).distinct()
@@ -865,9 +861,8 @@ class IncrementalRecursion:
         self.semantics = dict(semantics or {})
         self.snapshots: dict[str, DataFrame] = {}
         for aid, df in (initial or {}).items():
-            self.snapshots[aid] = (
+            self.snapshots[aid] = materialize(
                 DeltaJoin._consolidate(df.select("e", "v", "diff"))
-                .localCheckpoint(eager=True)
             )
         # Seed T with a full generalized semi-naive fixpoint.
         cat = self._catalog()
@@ -943,7 +938,7 @@ class IncrementalRecursion:
                 any_negative = True
             merged = DeltaJoin._consolidate(
                 self.snapshots[aid].unionByName(delta)
-            ).localCheckpoint(eager=True)
+            ).transform(materialize)
             self.snapshots[aid] = merged
 
         cat = self._catalog()
@@ -967,8 +962,8 @@ class IncrementalRecursion:
                     if one_step is None
                     else t_old[rn].df.join(one_step, cols, "left_anti")
                 )
-                lost = lost.localCheckpoint(eager=True)
-                if not lost.limit(1).isEmpty():
+                lost, n_lost = materialize_count(lost)
+                if n_lost:
                     o_cur[rn] = Relation(t_old[rn].variables, lost)
                 b = self._eval(self.rules[rn], base_cat)
                 base_new[rn] = self._empty_df(rn) if b is None else b
@@ -995,12 +990,11 @@ class IncrementalRecursion:
                     derived = self._eval(self.steps[rn], step_cat)
                     if derived is None:
                         continue
-                    o = (
+                    o, n_o = materialize_count(
                         derived.join(remaining[rn], cols, "left_semi")
                         .join(base_new[rn], cols, "left_anti")
-                        .localCheckpoint(eager=True)
                     )
-                    if not o.limit(1).isEmpty():
+                    if n_o:
                         nxt[rn] = Relation(t_old[rn].variables, o)
                 o_cur = nxt
             else:
@@ -1011,7 +1005,7 @@ class IncrementalRecursion:
                         t.variables,
                         t.df.join(
                             overdeleted[rn], self.cols[rn], "left_anti"
-                        ).localCheckpoint(eager=True),
+                        ).transform(materialize),
                     )
                     if rn in overdeleted
                     else t
@@ -1028,7 +1022,7 @@ class IncrementalRecursion:
             self.steps, t1, d0, cat, self.max_iterations
         )
         self.totals = {
-            rn: Relation(t.variables, t.df.localCheckpoint(eager=True))
+            rn: Relation(t.variables, materialize(t.df))
             for rn, t in new_totals.items()
         }
         return self._diffs(
@@ -1233,11 +1227,11 @@ class IncrementalShortestPaths:
         self.val = "cost" if self.weighted else "hops"
         self.edges = self._norm_add(
             edges.select(src, dst, *([cost] if self.weighted else []))
-        ).localCheckpoint(eager=True)
+        ).transform(materialize)
         self.sources = (
             sources.select(
                 F.col(sources.columns[0]).alias("s")
-            ).distinct().localCheckpoint(eager=True)
+            ).distinct().transform(materialize)
             if sources is not None
             else None
         )
@@ -1248,7 +1242,7 @@ class IncrementalShortestPaths:
                 sources=self.sources, step=4 if self.weighted else 1,
             )
             .withColumnRenamed("cost", self.val)
-            .localCheckpoint(eager=True)
+            .transform(materialize)
         )
 
     def current(self) -> DataFrame:
@@ -1395,10 +1389,8 @@ class IncrementalShortestPaths:
         if rem is not None:
             # inner join both restricts rem to stored edges AND
             # attaches their weight: (s, t, w) actually removed
-            rem_w = rem.join(old_edges, ["s", "t"]).localCheckpoint(
-                eager=True
-            )
-            if rem_w.limit(1).isEmpty():
+            rem_w, n_rem = materialize_count(rem.join(old_edges, ["s", "t"]))
+            if not n_rem:
                 rem = rem_w = None
         else:
             rem_w = None
@@ -1408,7 +1400,7 @@ class IncrementalShortestPaths:
         if add is not None:
             # effective additions: new pairs, or strictly lower weight
             # than the (post-retraction) stored edge.
-            add = (
+            add, n_add = materialize_count(
                 add.join(
                     base_edges.select(
                         "s", "t", F.col("w").alias("__wb")
@@ -1417,9 +1409,8 @@ class IncrementalShortestPaths:
                 )
                 .filter(F.col("__wb").isNull() | (F.col("w") < F.col("__wb")))
                 .select("s", "t", "w")
-                .localCheckpoint(eager=True)
             )
-            if add.limit(1).isEmpty():
+            if not n_add:
                 add = None
         new_edges = base_edges
         if add is not None:
@@ -1428,14 +1419,14 @@ class IncrementalShortestPaths:
                 .groupBy("s", "t")
                 .agg(F.min("w").alias("w"))
             )
-        new_edges = new_edges.localCheckpoint(eager=True)
+        new_edges = materialize(new_edges)
 
         # -- delete phase (DRed over-delete) --
         if rem_w is not None:
-            affected = self._affected(rem_w).localCheckpoint(eager=True)
+            affected = materialize(self._affected(rem_w))
             surviving = old_dist.join(
                 affected, ["x", "y"], "left_anti"
-            ).localCheckpoint(eager=True)
+            ).transform(materialize)
         else:
             affected = None
             surviving = old_dist
@@ -1481,16 +1472,15 @@ class IncrementalShortestPaths:
                 cand0 = cand0.unionByName(s)
             cand0 = cand0.groupBy("x", "y").agg(F.min(val).alias(val))
             # improvements vs surviving state only
-            delta = (
+            delta, n_delta = materialize_count(
                 cand0.join(
                     surviving.select("x", "y", F.col(val).alias("__h")),
                     ["x", "y"], "left",
                 )
                 .filter(F.col("__h").isNull() | (F.col(val) < F.col("__h")))
                 .select("x", "y", val)
-                .localCheckpoint(eager=True)
             )
-            if delta.limit(1).isEmpty():
+            if not n_delta:
                 delta = None
         if delta is None and affected is None:
             self.edges = new_edges
@@ -1511,7 +1501,7 @@ class IncrementalShortestPaths:
                     self.max_iters,
                 )
                 .withColumnRenamed("cost", val)
-                .localCheckpoint(eager=True)
+                .transform(materialize)
             )
         removed_rows = old_dist.exceptAll(dist).withColumn("diff", F.lit(-1))
         added_rows = dist.exceptAll(old_dist).withColumn("diff", F.lit(1))
@@ -1585,13 +1575,12 @@ class IncrementalCC:
 
         self.max_iters = max_iters
         self.step = step
-        self.edges = (
+        self.edges = materialize(
             self._norm(edges.select(F.col(src), F.col(dst)))
-            .localCheckpoint(eager=True)
         )
         self.labels = connected_components(
             self.edges, "u", "v", max_iters=max_iters, step=step
-        ).localCheckpoint(eager=True)
+        ).transform(materialize)
 
     @staticmethod
     def _norm(df: DataFrame) -> DataFrame:
@@ -1624,7 +1613,7 @@ class IncrementalCC:
             self.edges.unionByName(add_e)
             .distinct()
             .join(ret_e, ["u", "v"], "left_anti")
-            .localCheckpoint(eager=True)
+            .transform(materialize)
         )
         delta_verts = (
             add_e.select(F.col("u").alias("id"))
@@ -1640,7 +1629,7 @@ class IncrementalCC:
         )
         old_sub = self.labels.join(
             touched_comps, "component", "left_semi"
-        ).localCheckpoint(eager=True)
+        ).transform(materialize)
         affected = (
             old_sub.select("id").unionByName(delta_verts).distinct()
         )
@@ -1649,7 +1638,7 @@ class IncrementalCC:
         )
         new_sub = connected_components(
             sub_edges, "u", "v", max_iters=self.max_iters, step=self.step
-        ).localCheckpoint(eager=True)
+        ).transform(materialize)
         diffs = (
             old_sub.select("id", "component", F.lit(-1).alias("diff"))
             .unionByName(
@@ -1658,12 +1647,12 @@ class IncrementalCC:
             .groupBy("id", "component")
             .agg(F.sum("diff").alias("diff"))
             .filter(F.col("diff") != 0)
-            .localCheckpoint(eager=True)
+            .transform(materialize)
         )
         self.labels = (
             self.labels.join(old_sub, "id", "left_anti")
             .unionByName(new_sub)
-            .localCheckpoint(eager=True)
+            .transform(materialize)
         )
         self.edges = new_edges
         return diffs
@@ -1719,7 +1708,7 @@ class IncrementalPageRank:
         self.edges = (
             edges.select(F.col(src).alias("s"), F.col(dst).alias("t"))
             .distinct()
-            .localCheckpoint(eager=True)
+            .transform(materialize)
         )
         self.last_epoch_mode: Optional[str] = None
         self._full_build()
@@ -1736,24 +1725,22 @@ class IncrementalPageRank:
         from ..operators.graph import PR_CONTRIB_SQL, pr_rank_sql
 
         e = self.edges
-        self.nodes = (
+        self.nodes, self.n = materialize_count(
             e.select(F.col("s").alias("node"))
             .unionByName(e.select(F.col("t").alias("node")))
             .distinct()
-            .localCheckpoint(eager=True)
         )
-        self.n = self.nodes.count()
         self.outdeg = (
             e.groupBy(F.col("s").alias("node"))
             .agg(F.count(F.lit(1)).alias("deg"))
-            .localCheckpoint(eager=True)
+            .transform(materialize)
         )
         self._base = (
             f"{round((1.0 - self.damping) / self.n, self.scale):.{self.scale}f}"
         )
         pr = self.nodes.select(
             "node", F.lit(round(1.0 / self.n, self.scale)).alias("rank")
-        ).localCheckpoint(eager=True)
+        ).transform(materialize)
         self.prs = [pr]
         for _ in range(self.iters):
             contrib = (
@@ -1776,7 +1763,7 @@ class IncrementalPageRank:
                         pr_rank_sql(self._base, self.damping, self.scale)
                     ).alias("rank"),
                 )
-                .localCheckpoint(eager=True)
+                .transform(materialize)
             )
             self.prs.append(pr)
 
@@ -1827,22 +1814,15 @@ class IncrementalPageRank:
         old_final = self.prs[-1]
 
         # Effective change sets (no-op adds/removes drop out).
-        add_eff = (
-            add.join(old_edges, ["s", "t"], "left_anti").localCheckpoint(
-                eager=True
+        add_eff = rem_eff = None
+        if add is not None:
+            add_eff, n = materialize_count(
+                add.join(old_edges, ["s", "t"], "left_anti")
             )
-            if add is not None
-            else None
-        )
-        if add_eff is not None and add_eff.limit(1).isEmpty():
-            add_eff = None
-        rem_eff = (
-            rem.join(old_edges, ["s", "t"]).localCheckpoint(eager=True)
-            if rem is not None
-            else None
-        )
-        if rem_eff is not None and rem_eff.limit(1).isEmpty():
-            rem_eff = None
+            add_eff = add_eff if n else None
+        if rem is not None:
+            rem_eff, n = materialize_count(rem.join(old_edges, ["s", "t"]))
+            rem_eff = rem_eff if n else None
         if add_eff is None and rem_eff is None:
             self.last_epoch_mode = "noop"
             return self._diffs(old_final, old_final)
@@ -1852,7 +1832,7 @@ class IncrementalPageRank:
             new_edges = new_edges.join(rem_eff, ["s", "t"], "left_anti")
         if add_eff is not None:
             new_edges = new_edges.unionByName(add_eff)
-        self.edges = new_edges.localCheckpoint(eager=True)
+        self.edges = materialize(new_edges)
 
         # Node-set change => N changes => every node's base term and
         # seed rank change: rebuild (the well-defined fallback).
@@ -1873,7 +1853,7 @@ class IncrementalPageRank:
         self.outdeg = (
             self.edges.groupBy(F.col("s").alias("node"))
             .agg(F.count(F.lit(1)).alias("deg"))
-            .localCheckpoint(eager=True)
+            .transform(materialize)
         )
         deg_changed = (
             self.outdeg.join(
@@ -1900,7 +1880,7 @@ class IncrementalPageRank:
         d_struct = parts[0]
         for p in parts[1:]:
             d_struct = d_struct.unionByName(p)
-        d_struct = d_struct.distinct().localCheckpoint(eager=True)
+        d_struct = materialize(d_struct.distinct())
 
         from ..operators.graph import PR_CONTRIB_SQL, pr_rank_sql
 
@@ -1960,13 +1940,12 @@ class IncrementalPageRank:
                     ).alias("new_rank"),
                 )
             )
-            changed = (
+            changed, n_changed = materialize_count(
                 new_vals.join(self.prs[i], "node")
                 .filter(F.col("new_rank") != F.col("rank"))
                 .select("node", "new_rank")
-                .localCheckpoint(eager=True)
             )
-            if changed.limit(1).isEmpty():
+            if not n_changed:
                 changed = None
                 new_pr = self.prs[i]
             else:
@@ -1979,7 +1958,7 @@ class IncrementalPageRank:
                             F.col("new_rank"), F.col("rank")
                         ).alias("rank"),
                     )
-                    .localCheckpoint(eager=True)
+                    .transform(materialize)
                 )
             new_prs.append(new_pr)
         self.prs = new_prs
@@ -2061,8 +2040,8 @@ class IncrementalEdgeSupport:
         st = self._edges_state()
         if st is None:
             return None
-        st = st.localCheckpoint(eager=False)
-        return support_of(self._und(st).localCheckpoint(eager=False), st)
+        st = materialize(st, eager=False)
+        return support_of(materialize(self._und(st), eager=False), st)
 
     # -- epochs ----------------------------------------------------------
     def _restricted(
@@ -2072,7 +2051,7 @@ class IncrementalEdgeSupport:
 
         if st is None:
             return None
-        st = st.localCheckpoint(eager=False)
+        st = materialize(st, eager=False)
         # re-select (a, b) after each semijoin: a string-key join puts
         # the JOIN KEY first, so a positional union of the "a"-keyed
         # and "b"-keyed sides would swap pairs.
@@ -2083,7 +2062,7 @@ class IncrementalEdgeSupport:
             touched.withColumnRenamed("node", "b"), "b", "left_semi"
         ).select("a", "b")
         tc = t_a.union(t_b).distinct()
-        return support_of(self._und(st).localCheckpoint(eager=False), tc)
+        return support_of(materialize(self._und(st), eager=False), tc)
 
     def process_batch(
         self,
@@ -2107,13 +2086,13 @@ class IncrementalEdgeSupport:
             delta.groupBy("a", "b")
             .agg(F.sum("cnt").alias("cnt"))
             .filter(F.col("cnt") != 0)
-            .localCheckpoint(eager=True)
+            .transform(materialize)
         )
         touched = (
             delta.select(F.col("a").alias("node"))
             .union(delta.select(F.col("b").alias("node")))
             .distinct()
-            .localCheckpoint(eager=True)
+            .transform(materialize)
         )
         before = self._edges_state()
         # Materialize the OLD restricted result BEFORE the append: a
@@ -2121,7 +2100,7 @@ class IncrementalEdgeSupport:
         # lazy plan would list the replaced files.
         old = self._restricted(before, touched)
         if old is not None:
-            old = old.localCheckpoint(eager=True)
+            old = materialize(old)
         self._gs._append("edges", delta, epoch=epoch)
         self._epochs = getattr(self, "_epochs", 0) + 1
         if self._epochs % self.compact_every == 0:
