@@ -45,197 +45,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators.dedup import shingles
 from ..scratch import materialize
-
-
-class _GenerationalState:
-    """Shared crash-safe parquet state for the incremental corpus
-    maintainers: versioned generations behind a pointer file
-    (write-then-swap commits), epoch-keyed append-only increments
-    (retry-idempotent under foreachBatch's at-least-once), a
-    folded-epoch manifest so compaction never double-counts a retried
-    epoch, and periodic count compaction. ``KEY_COL`` names the count
-    table's key column; subclasses own the semantics."""
-
-    #: key column of the ``counts`` state table
-    KEY_COL = "shingle"
-
-    # -- state io ----------------------------------------------------
-    #
-    # Per-epoch persistence is APPEND-ONLY and O(batch): counts are
-    # stored as increment rows consolidated on read (groupBy sum), the
-    # inverted index and per-doc denominators are append-only facts.
-    # Every ``compact_every`` epochs the count increments fold into one
-    # consolidated generation via a write-then-swap of a versioned dir
-    # + pointer file (the poor man's Delta commit; a transactional
-    # table format replaces this at cluster scale). Without compaction
-    # an epoch would still be correct — just reading ever more
-    # increment files.
-
-    compact_every = 8
-
-    def _dir(self, name: str) -> Optional[str]:
-        import os
-
-        ptr = f"{self.state_dir}/{name}.version"
-        if not os.path.exists(ptr):
-            return None
-        with open(ptr) as f:
-            return f"{self.state_dir}/{name}_v{int(f.read().strip())}"
-
-    def _next_version(self, name: str) -> int:
-        import os
-
-        ptr = f"{self.state_dir}/{name}.version"
-        if os.path.exists(ptr):
-            with open(ptr) as f:
-                return int(f.read().strip()) + 1
-        return 0
-
-    def _commit_version(self, name: str, version: int) -> None:
-        """Point the generation pointer at ``version`` — the COMMIT of
-        the write-then-swap: called only after the new generation's
-        data (and manifest, if any) is fully on disk, so a crash
-        mid-write leaves the pointer on the old, complete generation."""
-
-        import os
-
-        os.makedirs(self.state_dir, exist_ok=True)
-        with open(f"{self.state_dir}/{name}.version", "w") as f:
-            f.write(str(version))
-
-    def _bump(self, name: str) -> str:
-        version = self._next_version(name)
-        self._commit_version(name, version)
-        return f"{self.state_dir}/{name}_v{version}"
-
-    # Compacted generations store the folded base under this reserved
-    # epoch partition so increments and the base share ONE layout
-    # (mixing flat files with epoch=*/ subdirs makes Spark's partition
-    # discovery silently drop the flat side).
-    BASE_EPOCH = -1
-
-    def _append(
-        self, name: str, df: DataFrame, epoch: Optional[int] = None
-    ) -> None:
-        d = self._dir(name)
-        if d is None:
-            d = self._bump(name)
-        if epoch is not None:
-            # Epoch-keyed overwrite: a RETRIED micro-batch replaces its
-            # own contribution instead of double-appending (exactly-once
-            # state under foreachBatch's at-least-once retries, the
-            # same pattern as StreamNearDedup). An epoch already FOLDED
-            # into a compacted generation is dropped outright — its
-            # contribution lives in the epoch=-1 base, and re-writing
-            # its partition would double-count it.
-            if epoch in self._folded(d):
-                return
-            df.write.mode("overwrite").parquet(f"{d}/epoch={epoch}")
-        else:
-            df.write.mode("append").parquet(d)
-
-    # -- folded-epoch manifest (underscore prefix => ignored by Spark's
-    # parquet reader, like _SUCCESS) --------------------------------
-    def _folded(self, d: str) -> set:
-        import json
-        import os
-
-        p = f"{d}/_folded_epochs.json"
-        if not os.path.exists(p):
-            return set()
-        with open(p) as f:
-            return set(json.load(f))
-
-    def _write_folded(self, d: str, epochs: set) -> None:
-        import json
-
-        with open(f"{d}/_folded_epochs.json", "w") as f:
-            json.dump(sorted(epochs), f)
-
-    def _epoch_ids(self, d: str) -> list:
-        import os
-
-        if not os.path.isdir(d):
-            return []
-        out = []
-        for entry in os.listdir(d):
-            if entry.startswith("epoch="):
-                val = entry.split("=", 1)[1]
-                try:
-                    out.append(int(val))
-                except ValueError:
-                    continue
-        return out
-
-    def _read_versioned(self, name: str) -> Optional[DataFrame]:
-        d = self._dir(name)
-        if d is None:
-            return None
-        df = self.spark.read.parquet(d)
-        return df.drop("epoch") if "epoch" in df.columns else df
-
-    def _overwrite(self, name: str, df: DataFrame) -> None:
-        df.write.mode("overwrite").parquet(
-            f"{self.state_dir}/__stage_{name}"
-        )
-        staged = self.spark.read.parquet(
-            f"{self.state_dir}/__stage_{name}"
-        )
-        # data first, pointer commit last (crash-safe swap)
-        version = self._next_version(name)
-        staged.write.mode("overwrite").parquet(
-            f"{self.state_dir}/{name}_v{version}"
-        )
-        self._commit_version(name, version)
-
-    def _read_counts(self) -> Optional[DataFrame]:
-        inc = self._read_versioned("counts")
-        if inc is None:
-            return None
-        return inc.groupBy(self.KEY_COL).agg(F.sum("n").alias("n"))
-
-    def _compact(self, name: str, consolidated: Optional[DataFrame]) -> None:
-        """Fold increments into one consolidated generation, preserving
-        the layout mode: epoch-keyed state writes the folded base as
-        the reserved ``epoch=-1`` partition of the NEW generation (so
-        later ``epoch=N`` increments keep a uniform partitioned layout)
-        and records every folded epoch id in the generation's manifest
-        (a retry of a folded epoch is then dropped, not re-applied);
-        flat state compacts to a flat generation as before."""
-
-        if consolidated is None:
-            return
-        cur = self._dir(name)
-        epoch_ids = self._epoch_ids(cur) if cur else []
-        prior_folded = self._folded(cur) if cur else set()
-        # Stage first: the consolidated frame READS the current
-        # generation, so it must materialize before the swap. The
-        # version pointer commits LAST — only after the new
-        # generation's data and manifest are fully written — so a
-        # crash anywhere in between leaves the pointer on the old,
-        # complete generation (no window where a folded-epoch retry
-        # could double-count against a manifest-less base).
-        stage = f"{self.state_dir}/__stage_{name}"
-        consolidated.write.mode("overwrite").parquet(stage)
-        staged = self.spark.read.parquet(stage)
-        version = self._next_version(name)
-        new = f"{self.state_dir}/{name}_v{version}"
-        if epoch_ids or prior_folded:
-            staged.write.mode("overwrite").parquet(
-                f"{new}/epoch={self.BASE_EPOCH}"
-            )
-            folded = prior_folded | {
-                e for e in epoch_ids if e != self.BASE_EPOCH
-            }
-            self._write_folded(new, folded)
-        else:
-            staged.write.mode("overwrite").parquet(new)
-        self._commit_version(name, version)
-
-    def _maybe_compact(self) -> None:
-        self._epochs = getattr(self, "_epochs", 0) + 1
-        if self._epochs % self.compact_every == 0:
-            self._compact("counts", self._read_counts())
+from .generational import _fold, _GenerationalState, foreach_epoch
 
 
 class IncrementalDupNgram(_GenerationalState):
@@ -244,6 +54,8 @@ class IncrementalDupNgram(_GenerationalState):
     rows; accumulated state answers exactly like the batch operator
     run on everything ingested so far (gated in tests)."""
 
+    WEIGHTS = {"counts": ("n",)}
+
     def __init__(
         self,
         spark: SparkSession,
@@ -251,10 +63,12 @@ class IncrementalDupNgram(_GenerationalState):
         n: int = 3,
         text_col: str = "text",
     ) -> None:
-        self.spark = spark
-        self.state_dir = state_dir.rstrip("/")
+        super().__init__(spark, state_dir)
         self.n = n
         self.text_col = text_col
+
+    def _read_counts(self) -> Optional[DataFrame]:
+        return self._consolidated("counts")
 
     # -- one epoch ---------------------------------------------------
     def process_batch(
@@ -357,7 +171,7 @@ class IncrementalDupNgram(_GenerationalState):
             sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_ngrams")),
             epoch,
         )
-        self._maybe_compact()
+        self._end_epoch()
         return stats
 
     def current(self) -> Optional[DataFrame]:
@@ -389,20 +203,20 @@ class IncrementalDupNgram(_GenerationalState):
         )
 
 
-class IncrementalVocab:
+class IncrementalVocab(_GenerationalState):
     """Differentially-maintained tokenizer vocabulary: corpus-wide
     subword-piece counts as storage-backed state; each epoch merges
     only the batch's piece counts (uniform-key aggregation over the
     batch), and ``topk`` ranks the |vocab|-sized state — never the
     corpus. The streaming form of operators/text.py::vocab_topk."""
 
+    WEIGHTS = {"vocab": ("n",)}
+
     def __init__(
         self, spark: SparkSession, state_dir: str, text_col: str = "text"
     ) -> None:
-        self.spark = spark
-        self.state_dir = state_dir.rstrip("/")
+        super().__init__(spark, state_dir)
         self.text_col = text_col
-        self._io = IncrementalDupNgram(spark, self.state_dir)  # reuse io
 
     def process_batch(self, batch: DataFrame) -> None:
         from ..operators.text import SUBWORD_PATTERN
@@ -419,21 +233,13 @@ class IncrementalVocab:
         )
         # O(batch) append; reads consolidate (groupBy sum) and the
         # shared compaction folds increments periodically.
-        self._io._append("vocab", bc)
-        self._io._epochs = getattr(self._io, "_epochs", 0) + 1
-        if self._io._epochs % self._io.compact_every == 0:
-            self._io._compact("vocab", self._vocab())
-
-    def _vocab(self) -> Optional[DataFrame]:
-        inc = self._io._read_versioned("vocab")
-        if inc is None:
-            return None
-        return inc.groupBy("token").agg(F.sum("n").alias("n"))
+        self._append("vocab", bc)
+        self._end_epoch()
 
     def topk(self, k: int = 100) -> Optional[DataFrame]:
         from pyspark.sql import Window
 
-        cur = self._vocab()
+        cur = self._consolidated("vocab")
         if cur is None:
             return None
         # TakeOrderedAndProject first; the rank window sees k rows only
@@ -447,7 +253,7 @@ class IncrementalVocab:
         )
 
 
-class IncrementalContamination:
+class IncrementalContamination(_GenerationalState):
     """Retroactive benchmark decontamination: when a NEW benchmark
     lands, previously-clean documents may become contaminated. This
     maintainer shares the corpus inverted index (ngram -> doc_id) with
@@ -464,11 +270,9 @@ class IncrementalContamination:
         n: int = 3,
         text_col: str = "text",
     ) -> None:
-        self.spark = spark
-        self.state_dir = state_dir.rstrip("/")
+        super().__init__(spark, state_dir)
         self.n = n
         self.text_col = text_col
-        self._io = IncrementalDupNgram(spark, self.state_dir, n, text_col)
 
     def _score(self, doc_ngrams: DataFrame, ev: Optional[DataFrame]) -> DataFrame:
         hit = (
@@ -499,8 +303,8 @@ class IncrementalContamination:
         eval set and appends them to the shared inverted index."""
 
         sh = materialize(shingles(batch, self.n, self.text_col))
-        self._io._append("index", sh)  # O(batch) append-only
-        return self._score(sh, self._io._read_versioned("eval"))
+        self._append("index", sh)  # O(batch) append-only
+        return self._score(sh, self._read_versioned("eval"))
 
     def add_eval(self, eval_docs: DataFrame) -> DataFrame:
         """Add a benchmark; returns UPDATED scores for exactly the
@@ -513,15 +317,15 @@ class IncrementalContamination:
             .distinct()
             .transform(materialize)
         )
-        ev_old = self._io._read_versioned("eval")
+        ev_old = self._read_versioned("eval")
         additions = (
             ev_new
             if ev_old is None
             else ev_new.join(ev_old, "shingle", "left_anti")
         )
         merged = ev_new if ev_old is None else ev_old.unionByName(additions)
-        self._io._overwrite("eval", merged.distinct())
-        index = self._io._read_versioned("index")
+        self._overwrite("eval", merged.distinct())
+        index = self._read_versioned("index")
         if index is None:
             return self.spark.createDataFrame(
                 [], "doc_id long, n_ngrams long, n_hit long, contamination double"
@@ -532,15 +336,15 @@ class IncrementalContamination:
             .distinct()
         )
         slice_ = index.join(affected, "doc_id", "left_semi")
-        return self._score(slice_, self._io._read_versioned("eval"))
+        return self._score(slice_, self._read_versioned("eval"))
 
     def current(self) -> Optional[DataFrame]:
         """Scores for every ingested document from state alone."""
 
-        index = self._io._read_versioned("index")
+        index = self._read_versioned("index")
         if index is None:
             return None
-        return self._score(index, self._io._read_versioned("eval"))
+        return self._score(index, self._read_versioned("eval"))
 
 
 class IncrementalLineDedup(_GenerationalState):
@@ -569,7 +373,7 @@ class IncrementalLineDedup(_GenerationalState):
     across deterministic and randomized epoch sequences.
     """
 
-    KEY_COL = "norm"
+    WEIGHTS = {"counts": ("n",)}
 
     def __init__(
         self,
@@ -578,10 +382,12 @@ class IncrementalLineDedup(_GenerationalState):
         min_docs: int = 2,
         text_col: str = "text",
     ) -> None:
-        self.spark = spark
-        self.state_dir = state_dir.rstrip("/")
+        super().__init__(spark, state_dir)
         self.min_docs = min_docs
         self.text_col = text_col
+
+    def _read_counts(self) -> Optional[DataFrame]:
+        return self._consolidated("counts")
 
     # -- helpers ------------------------------------------------------
     def _explode_lines(self, batch: DataFrame) -> DataFrame:
@@ -690,7 +496,7 @@ class IncrementalLineDedup(_GenerationalState):
         )
         self._append("index", dn, epoch)
         self._append("lines", lines, epoch)
-        self._maybe_compact()
+        self._end_epoch()
         return out
 
     def current(self) -> Optional[DataFrame]:
@@ -703,7 +509,7 @@ class IncrementalLineDedup(_GenerationalState):
             return None
         return self._assemble(stored, counts)
 
-class IncrementalHLL:
+class IncrementalHLL(_GenerationalState):
     """Streaming HyperLogLog distinct-token cardinality: the
     constant-state sketch maintained across epochs. Each micro-batch
     contributes its own <= m-row register table (an O(batch) map +
@@ -720,13 +526,14 @@ class IncrementalHLL:
     side, gated equal to it in tests/test_streaming.py.
     """
 
+    WEIGHTS = {"hll": ("r",)}
+    FOLD = staticmethod(F.max)
+
     def __init__(
         self, spark: SparkSession, state_dir: str, text_col: str = "text"
     ) -> None:
-        self.spark = spark
-        self.state_dir = state_dir.rstrip("/")
+        super().__init__(spark, state_dir)
         self.text_col = text_col
-        self._io = IncrementalDupNgram(spark, self.state_dir)  # reuse io
 
     def process_batch(
         self, batch: DataFrame, epoch: Optional[int] = None
@@ -734,16 +541,11 @@ class IncrementalHLL:
         from ..operators.sketch import hll_registers
 
         regs = hll_registers(batch, self.text_col)
-        self._io._append("hll", regs, epoch=epoch)
-        self._io._epochs = getattr(self._io, "_epochs", 0) + 1
-        if self._io._epochs % self._io.compact_every == 0:
-            self._io._compact("hll", self.registers())
+        self._append("hll", regs, epoch=epoch)
+        self._end_epoch()
 
     def registers(self) -> Optional[DataFrame]:
-        inc = self._io._read_versioned("hll")
-        if inc is None:
-            return None
-        return inc.groupBy("bucket").agg(F.max("r").alias("r"))
+        return self._consolidated("hll")
 
     def estimate(self) -> Optional[DataFrame]:
         from ..operators.sketch import hll_estimate_from_registers
@@ -753,7 +555,7 @@ class IncrementalHLL:
             return None
         return hll_estimate_from_registers(regs)
 
-class IncrementalCMS:
+class IncrementalCMS(_GenerationalState):
     """Differential Count-Min sketch: the counter grid is LINEAR —
     cells are sums of per-token contributions — so unlike HLL it
     maintains under RETRACTIONS too (a removed document subtracts the
@@ -768,6 +570,8 @@ class IncrementalCMS:
     O(d*w * epochs-since-compaction) and compacts to <= d*w rows.
     """
 
+    WEIGHTS = {"cms": ("cnt",)}
+
     def __init__(
         self,
         spark: SparkSession,
@@ -776,12 +580,10 @@ class IncrementalCMS:
         width: int = 512,
         text_col: str = "text",
     ) -> None:
-        self.spark = spark
-        self.state_dir = state_dir.rstrip("/")
+        super().__init__(spark, state_dir)
         self.depth = depth
         self.width = width
         self.text_col = text_col
-        self._io = IncrementalDupNgram(spark, self.state_dir)  # reuse io
 
     def _cells(self, docs: DataFrame) -> DataFrame:
         from ..operators.sketch import cms_sketch
@@ -805,21 +607,11 @@ class IncrementalCMS:
         if delta is None:
             return
         # Consolidate the epoch's own adds+retracts before writing.
-        delta = delta.groupBy("j", "c").agg(F.sum("cnt").alias("cnt"))
-        self._io._append("cms", delta, epoch=epoch)
-        self._io._epochs = getattr(self._io, "_epochs", 0) + 1
-        if self._io._epochs % self._io.compact_every == 0:
-            self._io._compact("cms", self.sketch())
+        self._append("cms", _fold(delta, ("cnt",)), epoch=epoch)
+        self._end_epoch()
 
     def sketch(self) -> Optional[DataFrame]:
-        inc = self._io._read_versioned("cms")
-        if inc is None:
-            return None
-        return (
-            inc.groupBy("j", "c")
-            .agg(F.sum("cnt").alias("cnt"))
-            .filter(F.col("cnt") != 0)
-        )
+        return self._consolidated("cms")
 
     def estimate(self, terms: list[str]) -> Optional[DataFrame]:
         """(term, est) for a probe list: min over the d rows' cells
@@ -855,7 +647,7 @@ class IncrementalCMS:
             )
         )
 
-class IncrementalHistogram:
+class IncrementalHistogram(_GenerationalState):
     """Differential log-bucket histogram: bucket counts are LINEAR
     (sums of per-row contributions), so the state maintains under
     retractions exactly like the CMS grid — a removed row subtracts
@@ -871,6 +663,8 @@ class IncrementalHistogram:
     compaction) and compacts to <= bits+1 rows.
     """
 
+    WEIGHTS = {"hist": ("cnt",)}
+
     def __init__(
         self,
         spark: SparkSession,
@@ -878,11 +672,9 @@ class IncrementalHistogram:
         value_col: str = "n_chars",
         bits: int = 40,
     ) -> None:
-        self.spark = spark
-        self.state_dir = state_dir.rstrip("/")
+        super().__init__(spark, state_dir)
         self.value_col = value_col
         self.bits = bits
-        self._io = IncrementalDupNgram(spark, self.state_dir)  # reuse io
 
     def _buckets(self, rows: DataFrame) -> DataFrame:
         from ..operators.sketch import hist_buckets
@@ -905,21 +697,11 @@ class IncrementalHistogram:
             delta = neg if delta is None else delta.unionByName(neg)
         if delta is None:
             return
-        delta = delta.groupBy("bucket").agg(F.sum("cnt").alias("cnt"))
-        self._io._append("hist", delta, epoch=epoch)
-        self._io._epochs = getattr(self._io, "_epochs", 0) + 1
-        if self._io._epochs % self._io.compact_every == 0:
-            self._io._compact("hist", self.histogram())
+        self._append("hist", _fold(delta, ("cnt",)), epoch=epoch)
+        self._end_epoch()
 
     def histogram(self) -> Optional[DataFrame]:
-        inc = self._io._read_versioned("hist")
-        if inc is None:
-            return None
-        return (
-            inc.groupBy("bucket")
-            .agg(F.sum("cnt").alias("cnt"))
-            .filter(F.col("cnt") != 0)
-        )
+        return self._consolidated("hist")
 
     def quantiles(
         self, qs: tuple[float, ...] = (0.5, 0.9, 0.99)
@@ -932,7 +714,7 @@ class IncrementalHistogram:
         return hist_quantiles_from(hist, qs)
 
 
-class IncrementalBM25:
+class IncrementalBM25(_GenerationalState):
     """Maintained BM25 index for a FIXED probe query (the curation
     monitor: "which documents most match this benchmark / domain
     probe right now"). BM25's corpus statistics are global — every
@@ -952,6 +734,12 @@ class IncrementalBM25:
     batch bm25_topk on the net corpus every epoch.
     """
 
+    WEIGHTS = {
+        "bm25_scalars": ("n", "sdl"),
+        "bm25_qdl": ("dl",),
+        "bm25_qtf": ("tf",),
+    }
+
     def __init__(
         self,
         spark: SparkSession,
@@ -961,13 +749,11 @@ class IncrementalBM25:
         b: float = 0.75,
         text_col: str = "text",
     ) -> None:
-        self.spark = spark
-        self.state_dir = state_dir.rstrip("/")
+        super().__init__(spark, state_dir)
         self.query_terms = list(query_terms)
         self.k1 = k1
         self.b = b
         self.text_col = text_col
-        self._io = IncrementalDupNgram(spark, self.state_dir)  # reuse io
 
     def _toks(self, docs: DataFrame) -> DataFrame:
         return docs.select(
@@ -1010,51 +796,15 @@ class IncrementalBM25:
             qtf = tf if qtf is None else qtf.unionByName(tf)
         if scal is None:
             return
-        self._io._append("bm25_scalars", scal, epoch=epoch)
-        self._io._append("bm25_qdl", qdl, epoch=epoch)
-        self._io._append("bm25_qtf", qtf, epoch=epoch)
-        self._io._epochs = getattr(self._io, "_epochs", 0) + 1
-        if self._io._epochs % self._io.compact_every == 0:
-            for name, cur in (
-                ("bm25_scalars", self._scalars_df()),
-                ("bm25_qdl", self._qdl()),
-                ("bm25_qtf", self._qtf()),
-            ):
-                self._io._compact(name, cur)
-
-    def _scalars_df(self) -> Optional[DataFrame]:
-        inc = self._io._read_versioned("bm25_scalars")
-        if inc is None:
-            return None
-        return inc.agg(
-            F.sum("n").cast("long").alias("n"),
-            F.sum("sdl").cast("long").alias("sdl"),
-        )
-
-    def _qdl(self) -> Optional[DataFrame]:
-        inc = self._io._read_versioned("bm25_qdl")
-        if inc is None:
-            return None
-        return (
-            inc.groupBy("doc_id")
-            .agg(F.sum("dl").cast("long").alias("dl"))
-            .filter(F.col("dl") > 0)
-        )
-
-    def _qtf(self) -> Optional[DataFrame]:
-        inc = self._io._read_versioned("bm25_qtf")
-        if inc is None:
-            return None
-        return (
-            inc.groupBy("doc_id", "term")
-            .agg(F.sum("tf").cast("long").alias("tf"))
-            .filter(F.col("tf") > 0)
-        )
+        self._append("bm25_scalars", scal, epoch=epoch)
+        self._append("bm25_qdl", qdl, epoch=epoch)
+        self._append("bm25_qtf", qtf, epoch=epoch)
+        self._end_epoch()
 
     def topk(self, k: int = 20) -> Optional[DataFrame]:
         from ..operators.retrieval import rank_bm25
 
-        scal = self._scalars_df()
+        scal = self._consolidated("bm25_scalars")
         if scal is None:
             return None
         # avgdl exactly as batch's F.avg over longs: exact long sum,
@@ -1063,13 +813,12 @@ class IncrementalBM25:
             F.col("n").alias("n_docs"),
             (F.col("sdl").cast("double") / F.col("n")).alias("avgdl"),
         )
-        qtf = self._qtf()
+        qtf = self._consolidated("bm25_qtf").filter(F.col("tf") > 0)
+        qdl = self._consolidated("bm25_qdl").filter(F.col("dl") > 0)
         df_ = qtf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-        return rank_bm25(
-            qtf, df_, self._qdl(), stats, k=k, k1=self.k1, b=self.b
-        )
+        return rank_bm25(qtf, df_, qdl, stats, k=k, k1=self.k1, b=self.b)
 
-class IncrementalNB:
+class IncrementalNB(_GenerationalState):
     """Maintained Naive-Bayes quality classifier (the streaming twin
     of operators/text.py::nb_quality_score with explicit labels): all
     model state — per-term conditional counts, per-class token totals,
@@ -1086,6 +835,8 @@ class IncrementalNB:
     structure.
     """
 
+    WEIGHTS = {"nb_terms": ("cp", "cf"), "nb_docs": ("d_pass", "d_fail")}
+
     def __init__(
         self,
         spark: SparkSession,
@@ -1094,12 +845,10 @@ class IncrementalNB:
         text_col: str = "text",
         label_col: str = "label",
     ) -> None:
-        self.spark = spark
-        self.state_dir = state_dir.rstrip("/")
+        super().__init__(spark, state_dir)
         self.alpha = alpha
         self.text_col = text_col
         self.label_col = label_col
-        self._io = IncrementalDupNgram(spark, self.state_dir)  # reuse io
 
     def _toks(self, docs: DataFrame) -> DataFrame:
         return docs.select(
@@ -1141,34 +890,9 @@ class IncrementalNB:
             dc = d if dc is None else dc.unionByName(d)
         if tc is None:
             return
-        self._io._append("nb_terms", tc, epoch=epoch)
-        self._io._append("nb_docs", dc, epoch=epoch)
-        self._io._epochs = getattr(self._io, "_epochs", 0) + 1
-        if self._io._epochs % self._io.compact_every == 0:
-            self._io._compact("nb_terms", self._terms())
-            self._io._compact("nb_docs", self._docs())
-
-    def _terms(self) -> Optional[DataFrame]:
-        inc = self._io._read_versioned("nb_terms")
-        if inc is None:
-            return None
-        return (
-            inc.groupBy("term")
-            .agg(
-                F.sum("cp").cast("long").alias("cp"),
-                F.sum("cf").cast("long").alias("cf"),
-            )
-            .filter((F.col("cp") > 0) | (F.col("cf") > 0))
-        )
-
-    def _docs(self) -> Optional[DataFrame]:
-        inc = self._io._read_versioned("nb_docs")
-        if inc is None:
-            return None
-        return inc.agg(
-            F.sum("d_pass").cast("long").alias("d_pass"),
-            F.sum("d_fail").cast("long").alias("d_fail"),
-        )
+        self._append("nb_terms", tc, epoch=epoch)
+        self._append("nb_docs", dc, epoch=epoch)
+        self._end_epoch()
 
     def score(self, probe: DataFrame) -> Optional[DataFrame]:
         """(doc_id, n_tokens, score) for a probe document frame under
@@ -1176,9 +900,10 @@ class IncrementalNB:
         (9-decimal log-odds weights, DECIMAL(24,9) sums, 6-decimal
         final round)."""
 
-        terms = self._terms()
+        terms = self._consolidated("nb_terms")
         if terms is None:
             return None
+        terms = terms.filter((F.col("cp") > 0) | (F.col("cf") > 0))
         alpha = self.alpha
         tot = terms.agg(
             F.sum("cp").cast("long").alias("n_pass"),
@@ -1220,7 +945,7 @@ class IncrementalNB:
                 F.count(F.lit(1)).alias("n_tokens"),
                 F.sum("w").cast("double").alias("__s"),
             )
-            .crossJoin(F.broadcast(self._docs()))
+            .crossJoin(F.broadcast(self._consolidated("nb_docs")))
             .select(
                 "doc_id",
                 "n_tokens",
@@ -1255,15 +980,10 @@ def attach_epochs(
         if sink is not None:
             sink(inc, epoch)
 
-    return (
-        stream.writeStream.foreachBatch(_on_batch)
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
+    return foreach_epoch(stream, _on_batch, checkpoint, query_name)
 
 
-class IncrementalBloom:
+class IncrementalBloom(_GenerationalState):
     """Maintained decontamination Bloom filter: benchmarks land over
     time (and are occasionally withdrawn), and every probe of the
     corpus must see the filter for ALL eval docs so far. State is the
@@ -1282,6 +1002,8 @@ class IncrementalBloom:
     gated in tests/test_streaming.py.
     """
 
+    WEIGHTS = {"bloom": ("cnt",)}
+
     def __init__(
         self,
         spark: SparkSession,
@@ -1291,12 +1013,11 @@ class IncrementalBloom:
         k_hashes: int = 3,
         text_col: str = "text",
     ) -> None:
-        self.spark = spark
+        super().__init__(spark, state_dir)
         self.n = n
         self.m_bits = m_bits
         self.k_hashes = k_hashes
         self.text_col = text_col
-        self._io = IncrementalDupNgram(spark, state_dir.rstrip("/"))
 
     def _bit_counts(self, eval_docs: DataFrame) -> DataFrame:
         from ..operators.curation import bloom_bits
@@ -1326,21 +1047,12 @@ class IncrementalBloom:
             delta = neg if delta is None else delta.unionByName(neg)
         if delta is None:
             return
-        delta = delta.groupBy("bit").agg(F.sum("cnt").alias("cnt"))
-        self._io._append("bloom", delta, epoch=epoch)
-        self._io._epochs = getattr(self._io, "_epochs", 0) + 1
-        if self._io._epochs % self._io.compact_every == 0:
-            self._io._compact("bloom", self.bit_counts())
+        self._append("bloom", _fold(delta, ("cnt",)), epoch=epoch)
+        self._end_epoch()
 
     def bit_counts(self) -> Optional[DataFrame]:
-        inc = self._io._read_versioned("bloom")
-        if inc is None:
-            return None
-        return (
-            inc.groupBy("bit")
-            .agg(F.sum("cnt").alias("cnt"))
-            .filter(F.col("cnt") > 0)
-        )
+        counts = self._consolidated("bloom")
+        return None if counts is None else counts.filter(F.col("cnt") > 0)
 
     def set_bits(self) -> Optional[DataFrame]:
         counts = self.bit_counts()
@@ -1357,7 +1069,7 @@ class IncrementalBloom:
         )
 
 
-class IncrementalDSIR:
+class IncrementalDSIR(_GenerationalState):
     """Maintained DSIR importance model: the raw-corpus and target
     bucket-count tables are signed LINEAR counters (the IncrementalNB
     discipline), so both sides maintain under adds AND retracts, and
@@ -1372,6 +1084,8 @@ class IncrementalDSIR:
     across randomized add/retract epochs.
     """
 
+    WEIGHTS = {"dsir_raw": ("c",), "dsir_tgt": ("c",)}
+
     def __init__(
         self,
         spark: SparkSession,
@@ -1381,12 +1095,11 @@ class IncrementalDSIR:
         n: int = 2,
         text_col: str = "text",
     ) -> None:
-        self.spark = spark
+        super().__init__(spark, state_dir)
         self.n_buckets = n_buckets
         self.alpha = alpha
         self.n = n
         self.text_col = text_col
-        self._io = IncrementalDupNgram(spark, state_dir.rstrip("/"))
 
     def _bucket_counts(self, docs: DataFrame) -> DataFrame:
         from ..operators.curation import dsir_features
@@ -1410,7 +1123,7 @@ class IncrementalDSIR:
             delta = neg if delta is None else delta.unionByName(neg)
         if delta is None:
             return None
-        return delta.groupBy("bucket").agg(F.sum("c").alias("c"))
+        return _fold(delta, ("c",))
 
     def process_batch(
         self,
@@ -1423,36 +1136,22 @@ class IncrementalDSIR:
         wrote = False
         raw = self._delta(raw_adds, raw_retracts)
         if raw is not None:
-            self._io._append("dsir_raw", raw, epoch=epoch)
+            self._append("dsir_raw", raw, epoch=epoch)
             wrote = True
         tgt = self._delta(target_adds, target_retracts)
         if tgt is not None:
-            self._io._append("dsir_tgt", tgt, epoch=epoch)
+            self._append("dsir_tgt", tgt, epoch=epoch)
             wrote = True
-        if not wrote:
-            return
-        self._io._epochs = getattr(self._io, "_epochs", 0) + 1
-        if self._io._epochs % self._io.compact_every == 0:
-            self._io._compact("dsir_raw", self._state("dsir_raw"))
-            self._io._compact("dsir_tgt", self._state("dsir_tgt"))
-
-    def _state(self, name: str) -> Optional[DataFrame]:
-        inc = self._io._read_versioned(name)
-        if inc is None:
-            return None
-        return (
-            inc.groupBy("bucket")
-            .agg(F.sum("c").alias("c"))
-            .filter(F.col("c") != 0)
-        )
+        if wrote:
+            self._end_epoch()
 
     def model(self) -> Optional[DataFrame]:
         from ..operators.curation import dsir_model
 
-        raw = self._state("dsir_raw")
+        raw = self._consolidated("dsir_raw")
         if raw is None:
             return None
-        tgt = self._state("dsir_tgt")
+        tgt = self._consolidated("dsir_tgt")
         if tgt is None:
             tgt = raw.limit(0)
         return dsir_model(
@@ -1473,7 +1172,7 @@ class IncrementalDSIR:
         )
 
 
-class IncrementalTokenKL:
+class IncrementalTokenKL(_GenerationalState):
     """Differentially-maintained token-distribution drift: the
     maintained twin of operators/profile.py::token_kl_shift. State is
     the pair of (token, count) tables — O(vocab), storage-backed via
@@ -1485,12 +1184,13 @@ class IncrementalTokenKL:
     aggregation over the batch; the |vocab|-sized fold only runs when
     the monitor is read."""
 
+    WEIGHTS = {"kl_a": ("n",), "kl_b": ("n",)}
+
     def __init__(
         self, spark: SparkSession, state_dir: str, text_col: str = "text"
     ) -> None:
-        self.spark = spark
+        super().__init__(spark, state_dir)
         self.text_col = text_col
-        self._io = IncrementalDupNgram(spark, state_dir.rstrip("/"))
 
     def _delta(
         self,
@@ -1511,11 +1211,8 @@ class IncrementalTokenKL:
             .groupBy("token")
             .agg((F.count(F.lit(1)) * sign).cast("long").alias("n"))
         )
-        name = f"kl_{side}"
-        self._io._append(name, counts, epoch=epoch)
-        self._io._epochs = getattr(self._io, "_epochs", 0) + 1
-        if self._io._epochs % self._io.compact_every == 0:
-            self._io._compact(name, self._counts(side, "n"))
+        self._append(f"kl_{side}", counts, epoch=epoch)
+        self._end_epoch()
 
     def add(
         self, batch: DataFrame, side: str, epoch: Optional[int] = None
@@ -1546,25 +1243,18 @@ class IncrementalTokenKL:
         epoch-keyed, so retries are idempotent. Run one attach per
         slice; read ``current()`` between epochs for the live drift."""
 
-        def _on_batch(df: DataFrame, epoch: int) -> None:
-            self.add(df, side, epoch=epoch)
-
-        return (
-            stream.writeStream.foreachBatch(_on_batch)
-            .queryName(query_name)
-            .option("checkpointLocation", checkpoint)
-            .start()
+        return foreach_epoch(
+            stream,
+            lambda df, epoch: self.add(df, side, epoch=epoch),
+            checkpoint,
+            query_name,
         )
 
     def _counts(self, side: str, out: str) -> DataFrame:
-        inc = self._io._read_versioned(f"kl_{side}")
-        if inc is None:
+        counts = self._consolidated(f"kl_{side}")
+        if counts is None:
             return self.spark.createDataFrame([], f"token string, {out} long")
-        return (
-            inc.groupBy("token")
-            .agg(F.sum("n").alias(out))
-            .filter(F.col(out) > 0)
-        )
+        return counts.filter(F.col("n") > 0).withColumnRenamed("n", out)
 
     def current(self, round_to: int = 6) -> DataFrame:
         from ..operators.profile import kl_from_counts
@@ -1574,7 +1264,7 @@ class IncrementalTokenKL:
         )
 
 
-class IncrementalEmbedDrift:
+class IncrementalEmbedDrift(_GenerationalState):
     """Differentially-maintained embedding-space drift: the maintained
     twin of operators/profile.py::embed_drift. State per slice is the
     d-row (dim, sum, count) table — constant-size regardless of corpus
@@ -1583,12 +1273,13 @@ class IncrementalEmbedDrift:
     Per-epoch work is one posexplode aggregate over the batch (d keys,
     map-side combine)."""
 
+    WEIGHTS = {"ed_a": ("s", "c"), "ed_b": ("s", "c")}
+
     def __init__(
         self, spark: SparkSession, state_dir: str, vec_col: str = "embedding"
     ) -> None:
-        self.spark = spark
+        super().__init__(spark, state_dir)
         self.vec_col = vec_col
-        self._io = IncrementalDupNgram(spark, state_dir.rstrip("/"))
 
     def _delta(
         self,
@@ -1609,7 +1300,8 @@ class IncrementalEmbedDrift:
                 (F.count(F.lit(1)) * sign).cast("long").alias("c"),
             )
         )
-        self._io._append(f"ed_{side}", d, epoch=epoch)
+        self._append(f"ed_{side}", d, epoch=epoch)
+        self._end_epoch()
 
     def add(
         self, batch: DataFrame, side: str, epoch: Optional[int] = None
@@ -1631,28 +1323,21 @@ class IncrementalEmbedDrift:
         """Fold a streaming embedding source into one slice's sums —
         epoch-keyed, retry-idempotent (one delta per epoch per side)."""
 
-        def _on_batch(df: DataFrame, epoch: int) -> None:
-            self.add(df, side, epoch=epoch)
-
-        return (
-            stream.writeStream.foreachBatch(_on_batch)
-            .queryName(query_name)
-            .option("checkpointLocation", checkpoint)
-            .start()
+        return foreach_epoch(
+            stream,
+            lambda df, epoch: self.add(df, side, epoch=epoch),
+            checkpoint,
+            query_name,
         )
 
     def _side(self, side: str, mean_out: str, n_out: str):
-        inc = self._io._read_versioned(f"ed_{side}")
-        if inc is None:
+        cons = self._consolidated(f"ed_{side}")
+        if cons is None:
             return (
                 self.spark.createDataFrame([], f"dim int, {mean_out} double"),
                 self.spark.createDataFrame([(0,)], f"{n_out} long"),
             )
-        cons = (
-            inc.groupBy("dim")
-            .agg(F.sum("s").alias("s"), F.sum("c").alias("c"))
-            .filter(F.col("c") > 0)
-        )
+        cons = cons.filter(F.col("c") > 0)
         means = cons.select("dim", (F.col("s") / F.col("c")).alias(mean_out))
         n = cons.agg(F.coalesce(F.max("c"), F.lit(0)).alias(n_out))
         return means, n

@@ -28,6 +28,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from ..operators import dedup as dedup_ops
 from ..operators import text as text_ops
 from ..scratch import materialize
+from .generational import foreach_epoch
 
 
 def stream_exact_dedup(
@@ -227,14 +228,11 @@ class StreamNearDedup:
         micro-batch is deduped against all previously-accepted
         documents, then handed to ``sink(kept_df, epoch_id)``."""
 
-        def _on_batch(df: DataFrame, epoch: int) -> None:
-            sink(self.process_batch(df, epoch=epoch), epoch)
-
-        return (
-            stream.writeStream.foreachBatch(_on_batch)
-            .queryName(query_name)
-            .option("checkpointLocation", checkpoint)
-            .start()
+        return foreach_epoch(
+            stream,
+            lambda df, epoch: sink(self.process_batch(df, epoch=epoch), epoch),
+            checkpoint,
+            query_name,
         )
 
 
@@ -467,14 +465,11 @@ class StreamSemDeDup:
         micro-batch is deduped against all previously-accepted
         embeddings, then handed to ``sink(kept_df, epoch_id)``."""
 
-        def _on_batch(df: DataFrame, epoch: int) -> None:
-            sink(self.process_batch(df, epoch=epoch), epoch)
-
-        return (
-            stream.writeStream.foreachBatch(_on_batch)
-            .queryName(query_name)
-            .option("checkpointLocation", checkpoint)
-            .start()
+        return foreach_epoch(
+            stream,
+            lambda df, epoch: sink(self.process_batch(df, epoch=epoch), epoch),
+            checkpoint,
+            query_name,
         )
 
 
@@ -731,12 +726,7 @@ class IncrementalDedupGroups:
             self._last_epoch = epoch
             sink(diffs, epoch)
 
-        return (
-            stream.writeStream.foreachBatch(_on_batch)
-            .queryName(query_name)
-            .option("checkpointLocation", checkpoint)
-            .start()
-        )
+        return foreach_epoch(stream, _on_batch, checkpoint, query_name)
 
 
 class StreamFuzzyDedup:
@@ -895,12 +885,9 @@ class StreamFuzzyDedup:
         checkpoint: str,
         query_name: str = "fuzzy_dedup",
     ):
-        def _on_batch(df: DataFrame, epoch: int) -> None:
-            sink(self.process_batch(df, epoch=epoch), epoch)
-
-        return (
-            stream.writeStream.foreachBatch(_on_batch)
-            .queryName(query_name)
-            .option("checkpointLocation", checkpoint)
-            .start()
+        return foreach_epoch(
+            stream,
+            lambda df, epoch: sink(self.process_batch(df, epoch=epoch), epoch),
+            checkpoint,
+            query_name,
         )

@@ -67,6 +67,7 @@ from ..plan.plans import (
     Plan,
 )
 from ..scratch import materialize, materialize_count
+from .generational import _TouchedKeyMaintainer
 
 
 def epoch_deltas(
@@ -1966,24 +1967,25 @@ class IncrementalPageRank:
         return self._diffs(old_final, self.prs[-1])
 
 
-class IncrementalEdgeSupport:
+class IncrementalEdgeSupport(_TouchedKeyMaintainer):
     """Maintained per-edge triangle support (the k-truss measure,
     operators/graph.py::edge_triangle_support) under streaming edge
     adds AND retractions — the graph twin of the touched-key
-    maintainers: a delta edge {a, b} changes N(a) and N(b) ONLY, so
-    support can move only for edges INCIDENT to a or b, and the epoch
-    recounts exactly those through the shared batch core
-    (graph.support_of — wedge joins over the FULL adjacency state,
-    canon restricted to the touched edges), so maintained and batch
-    semantics cannot drift. Emits (a, b, support, diff) with -1
-    retracting an edge's previous support row and +1 asserting the new
-    one; an untouched edge emits nothing.
+    maintainers (ADR 0011): a delta edge {a, b} changes N(a) and N(b)
+    ONLY, so support can move only for edges INCIDENT to a or b. The
+    touched keys are those endpoints, and the slice recounts exactly
+    the incident edges through the shared batch core (graph.support_of
+    — wedge joins over the FULL adjacency state, canon restricted to
+    the slice). Emits (a, b, support, diff) with -1 retracting an
+    edge's previous support row and +1 asserting the new one; an
+    untouched edge emits nothing.
 
     Per-epoch compute is O(batch + sum of touched endpoints' degrees)
     — never a full-graph triangle recount; state is the signed
-    canonical edge multiset on the generational parquet machinery
-    (epoch-keyed retry-idempotent appends, folded-epoch manifests,
-    periodic compaction — the _GenerationalState contract)."""
+    canonical edge multiset (a, b, cnt) on the generational store."""
+
+    WEIGHTS = {"edges": ("cnt",)}
+    OUT_KEY = None
 
     def __init__(
         self,
@@ -1992,36 +1994,15 @@ class IncrementalEdgeSupport:
         src: str = "src",
         dst: str = "dst",
     ) -> None:
-        from .corpus_stats import _GenerationalState
-
-        self.spark = spark
-        self.state_dir = state_dir.rstrip("/")
+        super().__init__(spark, state_dir)
         self.src = src
         self.dst = dst
-        # borrow the generational state io verbatim (composition, not
-        # inheritance: KEY_COL/_read_counts don't apply here)
-        self._gs = _GenerationalState()
-        self._gs.spark = spark
-        self._gs.state_dir = self.state_dir
-        self.compact_every = self._gs.compact_every
 
-    # -- state ---------------------------------------------------------
     def _project(self, edges: DataFrame) -> DataFrame:
         return edges.select(
             F.least(F.col(self.src), F.col(self.dst)).alias("a"),
             F.greatest(F.col(self.src), F.col(self.dst)).alias("b"),
         ).filter(F.col("a") != F.col("b"))
-
-    def _edges_state(self) -> Optional[DataFrame]:
-        inc = self._gs._read_versioned("edges")
-        if inc is None:
-            return None
-        return (
-            inc.groupBy("a", "b")
-            .agg(F.sum("cnt").alias("cnt"))
-            .filter(F.col("cnt") > 0)
-            .select("a", "b")
-        )
 
     @staticmethod
     def _und(canon: DataFrame) -> DataFrame:
@@ -2031,27 +2012,18 @@ class IncrementalEdgeSupport:
             canon.select(F.col("b").alias("src"), F.col("a").alias("dst"))
         )
 
-    def current(self) -> Optional[DataFrame]:
-        """The full maintained result recomputed from state — the
-        equality-gate read; per-epoch diffs never take this path."""
+    def _touched(self, delta: DataFrame) -> DataFrame:
+        return (
+            delta.select(F.col("a").alias("node"))
+            .union(delta.select(F.col("b").alias("node")))
+            .distinct()
+            .transform(materialize)
+        )
 
+    def _slice(self, state: DataFrame, touched: DataFrame) -> DataFrame:
         from ..operators.graph import support_of
 
-        st = self._edges_state()
-        if st is None:
-            return None
-        st = materialize(st, eager=False)
-        return support_of(materialize(self._und(st), eager=False), st)
-
-    # -- epochs ----------------------------------------------------------
-    def _restricted(
-        self, st: Optional[DataFrame], touched: DataFrame
-    ) -> Optional[DataFrame]:
-        from ..operators.graph import support_of
-
-        if st is None:
-            return None
-        st = materialize(st, eager=False)
+        st = materialize(state.select("a", "b"), eager=False)
         # re-select (a, b) after each semijoin: a string-key join puts
         # the JOIN KEY first, so a positional union of the "a"-keyed
         # and "b"-keyed sides would swap pairs.
@@ -2064,69 +2036,8 @@ class IncrementalEdgeSupport:
         tc = t_a.union(t_b).distinct()
         return support_of(materialize(self._und(st), eager=False), tc)
 
-    def process_batch(
-        self,
-        adds: Optional[DataFrame] = None,
-        retracts: Optional[DataFrame] = None,
-        epoch: Optional[int] = None,
-    ) -> Optional[DataFrame]:
-        delta = None
-        if adds is not None:
-            delta = self._project(adds).select(
-                "a", "b", F.lit(1).alias("cnt")
-            )
-        if retracts is not None:
-            neg = self._project(retracts).select(
-                "a", "b", F.lit(-1).alias("cnt")
-            )
-            delta = neg if delta is None else delta.unionByName(neg)
-        if delta is None:
-            return None
-        delta = (
-            delta.groupBy("a", "b")
-            .agg(F.sum("cnt").alias("cnt"))
-            .filter(F.col("cnt") != 0)
-            .transform(materialize)
-        )
-        touched = (
-            delta.select(F.col("a").alias("node"))
-            .union(delta.select(F.col("b").alias("node")))
-            .distinct()
-            .transform(materialize)
-        )
-        before = self._edges_state()
-        # Materialize the OLD restricted result BEFORE the append: a
-        # retried epoch overwrites its own partition in place and a
-        # lazy plan would list the replaced files.
-        old = self._restricted(before, touched)
-        if old is not None:
-            old = materialize(old)
-        self._gs._append("edges", delta, epoch=epoch)
-        self._epochs = getattr(self, "_epochs", 0) + 1
-        if self._epochs % self.compact_every == 0:
-            inc = self._gs._read_versioned("edges")
-            if inc is not None:
-                self._gs._compact(
-                    "edges",
-                    inc.groupBy("a", "b")
-                    .agg(F.sum("cnt").alias("cnt"))
-                    .filter(F.col("cnt") != 0),
-                )
-        new = self._restricted(self._edges_state(), touched)
+    def _core(self, state: DataFrame) -> DataFrame:
+        from ..operators.graph import support_of
 
-        def tag(df: Optional[DataFrame], w: int) -> Optional[DataFrame]:
-            if df is None:
-                return None
-            return df.select("a", "b", "support", F.lit(w).alias("diff"))
-
-        olds, news = tag(old, -1), tag(new, 1)
-        if olds is None and news is None:
-            return None
-        both = news if olds is None else (
-            olds if news is None else olds.unionByName(news)
-        )
-        return (
-            both.groupBy("a", "b", "support")
-            .agg(F.sum("diff").alias("diff"))
-            .filter(F.col("diff") != 0)
-        )
+        st = materialize(state.select("a", "b"), eager=False)
+        return support_of(materialize(self._und(st), eager=False), st)

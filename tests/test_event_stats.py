@@ -835,3 +835,177 @@ def test_incremental_asof_randomized_corrections_equal_batch(
         }
         assert got == want, f"current() drift at epoch {epoch}"
         assert folded == want, f"diff-fold drift at epoch {epoch}"
+
+
+# ---------------------------------------------------------------------------
+# The touched-key epoch, written once: every maintainer on it
+# ---------------------------------------------------------------------------
+
+import collections  # noqa: E402
+import concurrent.futures  # noqa: E402
+import pathlib  # noqa: E402
+import re  # noqa: E402
+
+from declarative_dataflow_spark.streaming import event_stats  # noqa: E402
+from declarative_dataflow_spark.streaming.generational import (  # noqa: E402
+    _TouchedKeyMaintainer,
+)
+from declarative_dataflow_spark.streaming.incremental import (  # noqa: E402
+    IncrementalEdgeSupport,
+)
+
+_T0 = dt.datetime(2024, 1, 1)
+_TYPES = ["view", "click", "buy", "purchase"]
+# user 7's view + purchase on day 21: retracted in epoch 0 BEFORE they
+# are added in epoch 1, so their net support is zero at any compaction
+# schedule.
+_LATE = [
+    (99, _T0 + dt.timedelta(days=20), 7, "view", 6.0),
+    (98, _T0 + dt.timedelta(days=20, hours=1), 7, "purchase", 2.0),
+]
+_EDGES = [(a, b) for a in range(8) for b in range(a + 1, 8)]
+
+
+def _rows(ids):
+    return [
+        (i, _T0 + dt.timedelta(hours=3 * i), i % 3, _TYPES[i % 4],
+         float(i % 7))
+        for i in ids
+    ]
+
+
+def _events(spark, rows):
+    return spark.createDataFrame(
+        rows,
+        "event_id long, ts timestamp, user_id long, event_type string, "
+        "value double",
+    )
+
+
+def _facts(spark, rows):
+    return spark.createDataFrame(
+        [(r[2], r[0] % 4, r[0], r[4]) for r in rows],
+        "e long, ev_t long, sys_t long, v double",
+    )
+
+
+def _edge_rows(spark, rows):
+    """Row i is edge i of the complete graph on 8 nodes; the _LATE rows
+    get edges of their own."""
+
+    return spark.createDataFrame(
+        [_EDGES[r[0] % len(_EDGES)] if r[0] < 90 else (r[0], r[0] + 1)
+         for r in rows],
+        "src long, dst long",
+    )
+
+
+_TOUCHED_KEY = {
+    "funnel": (lambda s, d: IncrementalFunnel(s, d, ["view", "click", "buy"]),
+               _events),
+    "retention": (lambda s, d: IncrementalRetention(s, d), _events),
+    "sessionize": (lambda s, d: event_stats.IncrementalSessionize(s, d),
+                   _events),
+    "resample": (lambda s, d: event_stats.IncrementalResample(s, d),
+                 _events),
+    "anomalies": (lambda s, d: event_stats.IncrementalAnomalies(
+        s, d, min_n=2, threshold=1.0), _events),
+    "changepoint": (lambda s, d: event_stats.IncrementalChangepoint(
+        s, d, window=2), _events),
+    "attribution": (lambda s, d: event_stats.IncrementalAttribution(s, d),
+                    _events),
+    "asof": (lambda s, d: event_stats.IncrementalAsOf(s, d), _facts),
+    "edge_support": (lambda s, d: IncrementalEdgeSupport(s, d), _edge_rows),
+}
+
+# (epoch, add rows, retract rows): adds, retractions, a retract-before-
+# add, and a retried epoch id (same payload, foreachBatch's replay).
+_SCRIPT = [
+    (0, _rows(range(0, 10)), _LATE),
+    (1, _rows(range(10, 20)) + _LATE, _rows(range(0, 3))),
+    (2, _rows(range(20, 30)), _rows(range(10, 13))),
+    (2, _rows(range(20, 30)), _rows(range(10, 13))),
+]
+
+
+def _drive(spark, state_dir, name, compact_every):
+    """Run the fixed script; return (current() multiset, folded diff
+    multiset) with a count-valued result column carried as the row's
+    multiplicity."""
+
+    make, frame = _TOUCHED_KEY[name]
+    m = make(spark, state_dir)
+    m.compact_every = compact_every
+    folded = collections.Counter()
+    for epoch, adds, rets in _SCRIPT:
+        d = m.process_batch(
+            frame(spark, adds), frame(spark, rets), epoch=epoch
+        )
+        for r in [] if d is None else d.collect():
+            folded[tuple(r)[:-1]] += r["diff"]
+    weight = m.DIFF_WEIGHT
+    current = collections.Counter()
+    for r in m.current().collect():
+        key = tuple(v for c, v in r.asDict().items() if c != weight)
+        current[key] += 1 if weight is None else r[weight]
+    return dict(current), {k: w for k, w in folded.items() if w != 0}
+
+
+@pytest.fixture(scope="module")
+def _script_runs(spark, tmp_path_factory):
+    """Every maintainer under both schedules — after every epoch and
+    never — side by side: independent state dirs, and Spark schedules
+    concurrent jobs from driver threads. Each case reads its own two
+    futures, so one maintainer's failure fails only its case."""
+
+    root = tmp_path_factory.mktemp("touched_key")
+    pool = concurrent.futures.ThreadPoolExecutor(4)
+    runs = {
+        (name, every): pool.submit(
+            _drive, spark, str(root / f"{name}_{every}"), name, every
+        )
+        for name in _TOUCHED_KEY
+        for every in (1, 100)
+    }
+    pool.shutdown(wait=False)
+    return runs
+
+
+@pytest.mark.parametrize("name", sorted(_TOUCHED_KEY))
+def test_diff_stream_folds_to_current_at_any_compaction(_script_runs, name):
+    """For every touched-key maintainer: the folded diff stream equals
+    current() — across retractions, a retract-before-add and a retried
+    epoch — and compaction is lossless: compacting after every epoch
+    and never compacting give the same current()."""
+
+    always, always_folded = _script_runs[name, 1].result(timeout=900)
+    never, never_folded = _script_runs[name, 100].result(timeout=900)
+    assert always_folded == always
+    assert never_folded == never
+    assert always == never
+    assert never, "the script must leave a non-empty result"
+
+
+def test_touched_key_epoch_is_written_once():
+    """The eight event maintainers and the edge support run the base
+    epoch and read; the compaction counter and the store are written
+    once in the package."""
+
+    classes = [
+        c for c in vars(event_stats).values()
+        if isinstance(c, type) and c.__module__ == event_stats.__name__
+        and c.__name__.startswith("Incremental")
+    ]
+    assert len(classes) == 8
+    for cls in classes + [IncrementalEdgeSupport]:
+        assert issubclass(cls, _TouchedKeyMaintainer), cls
+        for method in ("process_batch", "current"):
+            assert getattr(cls, method) is getattr(
+                _TouchedKeyMaintainer, method
+            ), (cls, method)
+
+    pkg = pathlib.Path(event_stats.__file__).resolve().parents[1]
+    text = "\n".join(p.read_text() for p in sorted(pkg.rglob("*.py")))
+    assert len(re.findall(r"_epochs = getattr", text)) <= 1
+    assert "_io = IncrementalDupNgram" not in text
+    assert "_GenerationalState()" not in text

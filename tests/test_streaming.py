@@ -1188,7 +1188,7 @@ def test_incremental_hll_matches_batch_across_compaction(spark, tmp_path):
     )
 
     ih = IncrementalHLL(spark, str(tmp_path / "hll_state"))
-    ih._io.compact_every = 2  # force a compaction mid-run
+    ih.compact_every = 2  # force a compaction mid-run
     seen = []
     for e in range(4):
         rows = [
@@ -1401,7 +1401,7 @@ def test_incremental_histogram_adds_and_retracts(spark, tmp_path):
     )
 
     ih = IncrementalHistogram(spark, str(tmp_path / "hist_state"))
-    ih._io.compact_every = 2  # cross the compaction boundary mid-run
+    ih.compact_every = 2  # cross the compaction boundary mid-run
     d1 = spark.createDataFrame(
         [(1, 10), (2, 300), (3, 5000), (4, 17)], ["doc_id", "n_chars"]
     )
@@ -2318,3 +2318,107 @@ def test_count_window_rejects_nonpositive_n(spark):
     for bad in (0, -3):
         with _pytest.raises(ValueError, match="n >= 1"):
             count_window_agg(df, bad, ["k"], ["t"], {"s": "sum(v)"})
+
+
+# ---------------------------------------------------------------------------
+# Lossless compaction on the generational store
+# ---------------------------------------------------------------------------
+
+_DOCS_A = [(1, "red blue green red"), (2, "blue sky high")]
+_DOCS_B = [(3, "green grass red sky")]
+# retracted in the first epoch, BEFORE it is added in the second: its
+# net support is zero, at any compaction schedule
+_DOC_X = [(9, "zebra quartz red blue")]
+
+
+def _docs(spark, rows):
+    return spark.createDataFrame(
+        [(i, t, i % 2 == 0, len(t), [float(i), float(len(t))])
+         for i, t in rows],
+        "doc_id long, text string, label boolean, n_chars long, "
+        "embedding array<double>",
+    )
+
+
+def _sided_step(m, adds, rets, epoch):
+    """Two-slice maintainers: the script runs on slice a; slice b holds
+    the first epoch's documents."""
+
+    m.retract(rets, "a")
+    m.add(adds, "a")
+    if epoch == 0:
+        m.add(adds, "b")
+
+
+def _corpus_cases():
+    from declarative_dataflow_spark.streaming import corpus_stats as cs
+
+    def signed(m, adds, rets, epoch):
+        m.process_batch(adds, rets, epoch=epoch)
+
+    def dsir(m, adds, rets, epoch):
+        m.process_batch(adds, rets, adds, None, epoch=epoch)
+
+    return {
+        "cms": (lambda s, d: cs.IncrementalCMS(s, d, width=64), signed,
+                lambda m, s: m.sketch()),
+        "histogram": (lambda s, d: cs.IncrementalHistogram(s, d), signed,
+                      lambda m, s: m.histogram()),
+        "bm25": (lambda s, d: cs.IncrementalBM25(
+            s, d, ["red", "blue", "zebra"]), signed,
+            lambda m, s: m.topk(10)),
+        "nb": (lambda s, d: cs.IncrementalNB(s, d), signed,
+               lambda m, s: m.score(_docs(s, _DOCS_A + _DOCS_B + _DOC_X))),
+        "bloom": (lambda s, d: cs.IncrementalBloom(s, d, n=2, m_bits=256),
+                  signed, lambda m, s: m.bit_counts()),
+        "dsir": (lambda s, d: cs.IncrementalDSIR(s, d, n_buckets=64), dsir,
+                 lambda m, s: m.model()),
+        "token_kl": (lambda s, d: cs.IncrementalTokenKL(s, d),
+                     _sided_step, lambda m, s: m.current()),
+        "embed_drift": (lambda s, d: cs.IncrementalEmbedDrift(s, d),
+                        _sided_step, lambda m, s: m.current()),
+    }
+
+
+def _run_corpus_case(spark, state_dir, name, every):
+    make, step, read = _corpus_cases()[name]
+    m = make(spark, state_dir)
+    m.compact_every = every
+    for epoch, (adds, rets) in enumerate(
+        [(_DOCS_A, _DOC_X), (_DOCS_B + _DOC_X, _DOCS_A[1:])]
+    ):
+        step(m, _docs(spark, adds), _docs(spark, rets), epoch)
+    return sorted(tuple(r) for r in read(m, spark).collect())
+
+
+@pytest.fixture(scope="module")
+def _corpus_runs(spark, tmp_path_factory):
+    """Every case under both schedules, side by side (independent state
+    dirs; Spark schedules concurrent jobs from driver threads)."""
+
+    import concurrent.futures
+
+    root = tmp_path_factory.mktemp("compaction")
+    pool = concurrent.futures.ThreadPoolExecutor(4)
+    runs = {
+        (name, every): pool.submit(
+            _run_corpus_case, spark, str(root / f"{name}_{every}"),
+            name, every,
+        )
+        for name in _corpus_cases()
+        for every in (1, 100)
+    }
+    pool.shutdown(wait=False)
+    return runs
+
+
+@pytest.mark.parametrize("name", sorted(_corpus_cases()))
+def test_signed_maintainer_compaction_is_lossless(_corpus_runs, name):
+    """Compaction folds the raw signed increments — never a read view
+    that drops negative rows — so compacting after every epoch and
+    never compacting give the same answer, with a retraction that
+    arrives before its add."""
+
+    always = _corpus_runs[name, 1].result(timeout=900)
+    assert always == _corpus_runs[name, 100].result(timeout=900)
+    assert always
