@@ -1212,7 +1212,7 @@ class IncrementalTokenKL(_GenerationalState):
             .agg((F.count(F.lit(1)) * sign).cast("long").alias("n"))
         )
         self._append(f"kl_{side}", counts, epoch=epoch)
-        self._end_epoch()
+        self._end_epoch(f"kl_{side}")
 
     def add(
         self, batch: DataFrame, side: str, epoch: Optional[int] = None
@@ -1301,7 +1301,7 @@ class IncrementalEmbedDrift(_GenerationalState):
             )
         )
         self._append(f"ed_{side}", d, epoch=epoch)
-        self._end_epoch()
+        self._end_epoch(f"ed_{side}")
 
     def add(
         self, batch: DataFrame, side: str, epoch: Optional[int] = None

@@ -340,8 +340,6 @@ class IncrementalAsOf(_TouchedKeyMaintainer):
     "latest knowledge" (every correction visible)."""
 
     WEIGHTS = {"facts": ("cnt",)}
-    KEY = "e"
-    OUT_KEY = "e"
 
     def __init__(
         self,
@@ -367,7 +365,7 @@ class IncrementalAsOf(_TouchedKeyMaintainer):
             else F.lit(False)
         )
         return facts.select(
-            F.col(self.key_col).alias("e"),
+            F.col(self.key_col).alias("k"),
             F.col(self.ev_col).alias("ev_t"),
             F.col(self.sys_col).alias("sys_t"),
             F.col(self.v_col).alias("v"),
@@ -379,5 +377,5 @@ class IncrementalAsOf(_TouchedKeyMaintainer):
 
         sys_hi = self.as_of_sys if self.as_of_sys is not None else (1 << 62)
         return as_of(
-            facts, sys_hi, ["e"], ev_col="ev_t", sys_col="sys_t"
-        ).select("e", "ev_t", "sys_t", "v")
+            facts, sys_hi, ["k"], ev_col="ev_t", sys_col="sys_t"
+        ).select("k", "ev_t", "sys_t", "v")

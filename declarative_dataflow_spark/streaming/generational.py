@@ -68,11 +68,13 @@ class _GenerationalState:
     retried epoch, and the one compaction schedule.
 
     Per-epoch persistence is append-only and O(batch). Every
-    ``compact_every`` epochs each weighted table in ``WEIGHTS`` folds
+    ``compact_every`` epochs of a weighted table in ``WEIGHTS`` fold
     its increments into one generation; without compaction an epoch
-    is still correct, it only reads more increment files. A
-    transactional table format replaces the pointer file at cluster
-    scale."""
+    is still correct, it only reads more increment files. Each table
+    has ONE writer thread: its appends, its schedule count and its
+    compaction run there, while other tables may be written
+    concurrently. A transactional table format replaces the pointer
+    file at cluster scale."""
 
     compact_every = 8
     #: weighted state tables -> their weight columns (every other
@@ -90,7 +92,8 @@ class _GenerationalState:
     def __init__(self, spark: SparkSession, state_dir: str) -> None:
         self.spark = spark
         self.state_dir = state_dir.rstrip("/")
-        self._epochs = 0
+        #: epochs counted per weighted table by the compaction schedule
+        self._epochs: dict = {}
 
     # -- generations -------------------------------------------------
     def _dir(self, name: str) -> Optional[str]:
@@ -231,13 +234,17 @@ class _GenerationalState:
             staged.write.mode("overwrite").parquet(new)
         self._commit_version(name, version)
 
-    def _end_epoch(self) -> None:
-        """The compaction schedule: count one epoch, and on every
-        ``compact_every``-th fold each weighted table."""
+    def _end_epoch(self, *names: str) -> None:
+        """The compaction schedule: count one epoch of each named
+        weighted table (default: every table in ``WEIGHTS``) and fold a
+        table on its every ``compact_every``-th epoch. A call touches
+        only the tables it names, so writers of different tables on
+        concurrent threads (one ``attach`` per slice) never swap a
+        generation under each other."""
 
-        self._epochs += 1
-        if self._epochs % self.compact_every == 0:
-            for name in self.WEIGHTS:
+        for name in names or self.WEIGHTS:
+            self._epochs[name] = self._epochs.get(name, 0) + 1
+            if self._epochs[name] % self.compact_every == 0:
                 self._compact(name)
 
 
@@ -266,9 +273,9 @@ class _TouchedKeyMaintainer(_GenerationalState):
     - ``WEIGHTS``: its one state table and that table's weight
       columns; the LAST weight is the support count, and a key row is
       live while it is positive;
-    - ``_project(rows)``: input rows -> the state's key columns, one
-      unit of support each (``_signed`` when weights are not a unit
-      count);
+    - ``_project(rows)``: input rows -> the state's key columns, the
+      touched key named ``k``, one unit of support each (``_signed``
+      when weights are not a unit count);
     - ``_core(state)``: the batch operator over live state rows;
     - ``OUT_KEY``: the result column renamed to ``self.key_col``;
     - ``DIFF_WEIGHT``: a result column that is itself a count, so a
@@ -278,8 +285,6 @@ class _TouchedKeyMaintainer(_GenerationalState):
     """
 
     WEIGHTS = {"events": ("cnt",)}
-    #: state column whose distinct values are the touched keys
-    KEY = "k"
     OUT_KEY: Optional[str] = "k"
     DIFF_WEIGHT: Optional[str] = None
 
@@ -300,10 +305,10 @@ class _TouchedKeyMaintainer(_GenerationalState):
         )
 
     def _touched(self, delta: DataFrame) -> DataFrame:
-        return delta.select(self.KEY).distinct()
+        return delta.select("k").distinct()
 
     def _slice(self, state: DataFrame, touched: DataFrame) -> DataFrame:
-        return self._core(state.join(touched, self.KEY, "left_semi"))
+        return self._core(state.join(touched, "k", "left_semi"))
 
     def _state(self) -> Optional[DataFrame]:
         cons = self._consolidated(self._name)

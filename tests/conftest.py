@@ -22,6 +22,25 @@ def engine(spark):
     return Engine(spark)
 
 
+@pytest.fixture(scope="session")
+def selected_params(request):
+    """``selected_params(test_fn, name)``: the values of parameter
+    ``name`` this session runs ``test_fn`` with, after ``-k``/``-m``
+    deselection — a module fixture that precomputes parametrized cases
+    in the background starts only these."""
+
+    def params(test_fn, name):
+        return sorted(
+            {
+                item.callspec.params[name]
+                for item in request.session.items
+                if getattr(item, "function", None) is test_fn
+            }
+        )
+
+    return params
+
+
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 

@@ -952,23 +952,26 @@ def _drive(spark, state_dir, name, compact_every):
 
 
 @pytest.fixture(scope="module")
-def _script_runs(spark, tmp_path_factory):
-    """Every maintainer under both schedules — after every epoch and
-    never — side by side: independent state dirs, and Spark schedules
-    concurrent jobs from driver threads. Each case reads its own two
-    futures, so one maintainer's failure fails only its case."""
+def _script_runs(spark, tmp_path_factory, selected_params):
+    """Every selected maintainer under both schedules — after every
+    epoch and never — side by side: independent state dirs, and Spark
+    schedules concurrent jobs from driver threads. Each case reads its
+    own two futures, so one maintainer's failure fails only its case;
+    teardown cancels what has not started and waits for the rest."""
 
     root = tmp_path_factory.mktemp("touched_key")
     pool = concurrent.futures.ThreadPoolExecutor(4)
-    runs = {
+    names = selected_params(
+        test_diff_stream_folds_to_current_at_any_compaction, "name"
+    )
+    yield {
         (name, every): pool.submit(
             _drive, spark, str(root / f"{name}_{every}"), name, every
         )
-        for name in _TOUCHED_KEY
+        for name in names
         for every in (1, 100)
     }
-    pool.shutdown(wait=False)
-    return runs
+    pool.shutdown(wait=True, cancel_futures=True)
 
 
 @pytest.mark.parametrize("name", sorted(_TOUCHED_KEY))

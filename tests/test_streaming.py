@@ -2392,24 +2392,27 @@ def _run_corpus_case(spark, state_dir, name, every):
 
 
 @pytest.fixture(scope="module")
-def _corpus_runs(spark, tmp_path_factory):
-    """Every case under both schedules, side by side (independent state
-    dirs; Spark schedules concurrent jobs from driver threads)."""
+def _corpus_runs(spark, tmp_path_factory, selected_params):
+    """Every selected case under both schedules, side by side
+    (independent state dirs; Spark schedules concurrent jobs from
+    driver threads); teardown cancels what has not started and waits
+    for the rest."""
 
     import concurrent.futures
 
     root = tmp_path_factory.mktemp("compaction")
     pool = concurrent.futures.ThreadPoolExecutor(4)
-    runs = {
+    names = selected_params(test_signed_maintainer_compaction_is_lossless,
+                            "name")
+    yield {
         (name, every): pool.submit(
             _run_corpus_case, spark, str(root / f"{name}_{every}"),
             name, every,
         )
-        for name in _corpus_cases()
+        for name in names
         for every in (1, 100)
     }
-    pool.shutdown(wait=False)
-    return runs
+    pool.shutdown(wait=True, cancel_futures=True)
 
 
 @pytest.mark.parametrize("name", sorted(_corpus_cases()))
@@ -2422,3 +2425,73 @@ def test_signed_maintainer_compaction_is_lossless(_corpus_runs, name):
     always = _corpus_runs[name, 1].result(timeout=900)
     assert always == _corpus_runs[name, 100].result(timeout=900)
     assert always
+
+
+@pytest.mark.parametrize("name", ["token_kl", "embed_drift"])
+def test_sided_attach_streams_compact_concurrently(spark, tmp_path, name):
+    """One attach stream per slice: each runs its foreachBatch on its
+    own driver thread and, at compact_every = 1, compacts only the
+    slice it wrote — so neither swaps the other's generation while the
+    other writes an increment into it. Both slices keep every batch:
+    the maintained drift equals the batch operator on all documents."""
+
+    from declarative_dataflow_spark.operators.profile import (
+        embed_drift,
+        token_kl_shift,
+    )
+    from declarative_dataflow_spark.streaming import corpus_stats as cs
+
+    make, batch_op = {
+        "token_kl": (cs.IncrementalTokenKL, token_kl_shift),
+        "embed_drift": (cs.IncrementalEmbedDrift, embed_drift),
+    }[name]
+    words = ["red", "blue", "green", "sky", "grass", "high"]
+    batches = {
+        side: [
+            [(i, " ".join(words[(i + j) % 6] for j in range(1 + i % 4)))
+             for i in range(base + 2 * b, base + 2 * b + 2)]
+            for b in range(3)
+        ]
+        for side, base in (("a", 0), ("b", 50))
+    }
+    state = tmp_path / "state"
+    m = make(spark, str(state))
+    m.compact_every = 1
+    queries = []
+    try:
+        for side, side_batches in batches.items():
+            src = tmp_path / f"in_{side}"
+            src.mkdir()
+            for b, rows in enumerate(side_batches):
+                (src / f"b{b}.json").write_text("\n".join(
+                    json.dumps({"doc_id": i, "text": t,
+                                "embedding": [float(i), float(len(t))]})
+                    for i, t in rows
+                ))
+            stream = (
+                spark.readStream.schema(
+                    "doc_id long, text string, embedding array<double>"
+                )
+                .option("maxFilesPerTrigger", 1)
+                .json(str(src))
+            )
+            queries.append(m.attach(
+                stream, side, str(tmp_path / f"ckpt_{side}"),
+                query_name=f"{name}_{side}",
+            ))
+        for q in queries:
+            q.processAllAvailable()
+    finally:
+        for q in queries:
+            q.stop()
+
+    got = m.current().collect()[0].asDict()
+    want = batch_op(*[
+        _docs(spark, [r for rows in batches[side] for r in rows])
+        for side in ("a", "b")
+    ]).collect()[0].asDict()
+    assert got == pytest.approx(want, abs=1e-5)
+    table = {"token_kl": "kl", "embed_drift": "ed"}[name]
+    for side in ("a", "b"):
+        # three epochs, each compacted once: generations v1..v3
+        assert (state / f"{table}_{side}.version").read_text() == "3"
