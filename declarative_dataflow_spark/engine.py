@@ -47,42 +47,23 @@ from .plan.compiler import (
     compile_plan,
     vcol,
 )
-from .plan.plans import Aggregate, Antijoin, NameExpr, Negate, Plan, Union
+from .plan.plans import (
+    Aggregate,
+    Antijoin,
+    NameExpr,
+    Negate,
+    Plan,
+    Union,
+    children,
+)
 from .scratch import materialize_count
-
-
-def _self_ref_count(plan: Plan, name: str) -> int:
-    """Number of NameExpr references to ``name`` (linearity check)."""
-
-    n = 1 if isinstance(plan, NameExpr) and plan.name == name else 0
-    for attr in getattr(plan, "__dataclass_fields__", {}):
-        v = getattr(plan, attr)
-        if isinstance(v, Plan):
-            n += _self_ref_count(v, name)
-        elif isinstance(v, list):
-            for item in v:
-                if isinstance(item, Plan):
-                    n += _self_ref_count(item, name)
-    return n
 
 
 def _occurrence_count(plan: Plan, recursive: set[str]) -> int:
     """Number of NameExpr references to any rule in ``recursive``."""
 
-    n = (
-        1
-        if isinstance(plan, NameExpr) and plan.name in recursive
-        else 0
-    )
-    for attr in getattr(plan, "__dataclass_fields__", {}):
-        v = getattr(plan, attr)
-        if isinstance(v, Plan):
-            n += _occurrence_count(v, recursive)
-        elif isinstance(v, list):
-            for item in v:
-                if isinstance(item, Plan):
-                    n += _occurrence_count(item, recursive)
-    return n
+    n = int(isinstance(plan, NameExpr) and plan.name in recursive)
+    return n + sum(_occurrence_count(c, recursive) for c in children(plan))
 
 
 def _substitute_occurrence(
@@ -165,15 +146,7 @@ def _is_monotone(plan: Plan, recursive: Optional[set[str]] = None) -> bool:
         if _rule_refs(plan.right_plan) & recursive:
             return False
         return _is_monotone(plan.left_plan, recursive)
-    for attr in getattr(plan, "__dataclass_fields__", {}):
-        v = getattr(plan, attr)
-        if isinstance(v, Plan) and not _is_monotone(v, recursive):
-            return False
-        if isinstance(v, list):
-            for item in v:
-                if isinstance(item, Plan) and not _is_monotone(item, recursive):
-                    return False
-    return True
+    return all(_is_monotone(c, recursive) for c in children(plan))
 
 
 class InputSemantics(str, Enum):
@@ -917,7 +890,7 @@ class Engine:
         while changed:
             changed = False
             for rn, plan in self.rules.items():
-                if rn not in dyn and self._dependencies(plan) & dyn:
+                if rn not in dyn and _rule_refs(plan) & dyn:
                     dyn.add(rn)
                     changed = True
         return dyn
@@ -994,24 +967,6 @@ class Engine:
 
     # -- recursion ---------------------------------------------------------
 
-    def _dependencies(self, plan: Plan) -> set[str]:
-        deps: set[str] = set()
-
-        def walk(p: Any) -> None:
-            if isinstance(p, NameExpr):
-                deps.add(p.name)
-            for attr in getattr(p, "__dataclass_fields__", {}):
-                v = getattr(p, attr)
-                if isinstance(v, Plan):
-                    walk(v)
-                elif isinstance(v, list):
-                    for item in v:
-                        if isinstance(item, Plan):
-                            walk(item)
-
-        walk(plan)
-        return deps
-
     def _recursive_rules(self, name: str) -> set[str]:
         """Rules in the dependency cycle(s) reachable from ``name``."""
 
@@ -1021,7 +976,7 @@ class Engine:
             n = stack.pop()
             if n in graph or n not in self.rules:
                 continue
-            graph[n] = {d for d in self._dependencies(self.rules[n]) if d in self.rules}
+            graph[n] = {d for d in _rule_refs(self.rules[n]) if d in self.rules}
             stack.extend(graph[n])
 
         # A rule is recursive if it can reach itself.

@@ -59,6 +59,7 @@ from .plans import (
     Transform,
     Union,
     Var,
+    children,
 )
 
 DIFF = "__diff"
@@ -272,12 +273,7 @@ def _rule_refs(plan: Plan) -> set[str]:
         p = stack.pop()
         if isinstance(p, NameExpr):
             refs.add(p.name)
-        for attr in getattr(p, "__dataclass_fields__", {}):
-            v = getattr(p, attr)
-            if isinstance(v, Plan):
-                stack.append(v)
-            elif isinstance(v, list):
-                stack.extend(item for item in v if isinstance(item, Plan))
+        stack.extend(children(p))
     return refs
 
 

@@ -69,6 +69,20 @@ class Plan:
         raise NotImplementedError
 
 
+def children(plan: Plan) -> list[Plan]:
+    """The direct sub-plans of ``plan``, in field order: every field
+    holding a Plan, and every Plan inside a list field."""
+
+    out: list[Plan] = []
+    for name in getattr(plan, "__dataclass_fields__", {}):
+        v = getattr(plan, name)
+        if isinstance(v, Plan):
+            out.append(v)
+        elif isinstance(v, list):
+            out.extend(item for item in v if isinstance(item, Plan))
+    return out
+
+
 # ---------------------------------------------------------------------------
 # Leaf scans (reference: src/plan/mod.rs:173-178, impl 341-401)
 # ---------------------------------------------------------------------------

@@ -30,6 +30,12 @@ from pyspark.sql import SparkSession
 from .engine import AttributeConfig, Datom, Engine, InputSemantics
 from .plan.wire import decode_value, encode_value, plan_from_dict
 from .streaming.reactive import ReactiveSession
+from .ws import (
+    WS_MAX_MESSAGE_BYTES,
+    accept_key,
+    read_frame,
+    write_frame,
+)
 
 
 def _decode_datom(raw: list) -> Datom:
@@ -305,91 +311,8 @@ def serve(
 # / output batch. This implements the server side of RFC 6455 directly
 # on the same JSON protocol the TCP listener speaks: handshake
 # (Sec-WebSocket-Accept = base64(sha1(key + GUID))), masked client
-# frames, fragmentation, ping/pong, and close.
-
-_WS_GUID = "258EAFA5-E914-47DA-95CA-C5AB0DC85B11"
-
-# Per-frame and per-message payload ceiling. The length field is
-# client-controlled (full unsigned 64-bit in the extended encoding);
-# without a cap one corrupt or malicious frame declaring 2^40 bytes
-# would make the handler buffer it on the driver. The JSON-lines TCP
-# transport is line-bounded by comparison.
-WS_MAX_MESSAGE_BYTES = 64 << 20  # 64 MiB
-
-
-def _ws_read_exact(rfile, n: int) -> Optional[bytes]:
-    buf = b""
-    while len(buf) < n:
-        chunk = rfile.read(n - len(buf))
-        if not chunk:
-            return None
-        buf += chunk
-    return buf
-
-
-def _ws_read_frame(rfile) -> Optional[tuple[bool, int, bytes, bool]]:
-    """One frame: (fin, opcode, unmasked payload, was_masked); None on
-    EOF. ``was_masked`` lets the server enforce RFC 6455 §5.1 (client
-    frames MUST be masked) without re-parsing the header."""
-
-    import struct
-
-    hdr = _ws_read_exact(rfile, 2)
-    if hdr is None:
-        return None
-    fin = bool(hdr[0] & 0x80)
-    opcode = hdr[0] & 0x0F
-    masked = bool(hdr[1] & 0x80)
-    length = hdr[1] & 0x7F
-    if length == 126:
-        ext = _ws_read_exact(rfile, 2)
-        if ext is None:
-            return None
-        (length,) = struct.unpack(">H", ext)
-    elif length == 127:
-        ext = _ws_read_exact(rfile, 8)
-        if ext is None:
-            return None
-        (length,) = struct.unpack(">Q", ext)
-    if length > WS_MAX_MESSAGE_BYTES:
-        return None  # oversized frame: drop the connection
-    mask = b""
-    if masked:
-        mask = _ws_read_exact(rfile, 4)
-        if mask is None:
-            return None
-    payload = _ws_read_exact(rfile, length) if length else b""
-    if payload is None:
-        return None
-    if masked and payload:
-        # Vectorized unmask: large Transact messages make this the
-        # data-plane hot path; a per-byte Python loop is ~100x slower.
-        import numpy as np
-
-        data = np.frombuffer(payload, dtype=np.uint8)
-        key = np.frombuffer(
-            (mask * ((length + 3) // 4))[:length], dtype=np.uint8
-        )
-        payload = (data ^ key).tobytes()
-    return fin, opcode, payload, masked
-
-
-def _ws_write_frame(wfile, payload: bytes, opcode: int = 0x1) -> None:
-    """Server frames are unmasked (RFC 6455 §5.1)."""
-
-    import struct
-
-    head = bytes([0x80 | opcode])
-    n = len(payload)
-    if n < 126:
-        head += bytes([n])
-    elif n < 1 << 16:
-        head += bytes([126]) + struct.pack(">H", n)
-    else:
-        head += bytes([127]) + struct.pack(">Q", n)
-    wfile.write(head + payload)
-    wfile.flush()
-
+# frames, fragmentation, ping/pong, and close. The frame codec is the
+# one ws.py shares with the client.
 
 def serve_ws(
     server: Server, host: str = "127.0.0.1", port: int = 0
@@ -399,9 +322,6 @@ def serve_ws(
     TEXT message the JSON array of outputs — the reference's wire shape
     (server/src/networking.rs:34-95). Returns (ws_server, thread,
     bound_port)."""
-
-    import base64
-    import hashlib
 
     class Handler(socketserver.StreamRequestHandler):
         def _handshake(self) -> bool:
@@ -419,9 +339,7 @@ def serve_ws(
             if key is None:
                 self.wfile.write(b"HTTP/1.1 400 Bad Request\r\n\r\n")
                 return False
-            accept = base64.b64encode(
-                hashlib.sha1((key + _WS_GUID).encode()).digest()
-            ).decode()
+            accept = accept_key(key)
             self.wfile.write(
                 (
                     "HTTP/1.1 101 Switching Protocols\r\n"
@@ -439,21 +357,23 @@ def serve_ws(
             import struct
 
             def _close(status: int) -> None:
-                _ws_write_frame(
-                    self.wfile, struct.pack(">H", status), opcode=0x8
-                )
+                write_frame(self.wfile, struct.pack(">H", status), opcode=0x8)
 
             message = b""
             while True:
-                frame = _ws_read_frame(self.rfile)
+                try:
+                    frame = read_frame(self.rfile)
+                except ValueError:  # frame declares too many bytes
+                    _close(1009)  # message too big
+                    return
                 if frame is None:
                     return
                 fin, opcode, payload, masked = frame
                 if opcode == 0x8:  # close: echo and finish
-                    _ws_write_frame(self.wfile, payload, opcode=0x8)
+                    write_frame(self.wfile, payload, opcode=0x8)
                     return
                 if opcode == 0x9:  # ping -> pong
-                    _ws_write_frame(self.wfile, payload, opcode=0xA)
+                    write_frame(self.wfile, payload, opcode=0xA)
                     continue
                 if opcode == 0xA:  # unsolicited pong
                     continue
@@ -480,9 +400,9 @@ def serve_ws(
                     out = server.handle(json.loads(text))
                 except Exception as exc:
                     out = [{"Error": str(exc)}]
-                _ws_write_frame(self.wfile, json.dumps(out).encode())
+                write_frame(self.wfile, json.dumps(out).encode())
                 if server.shutdown_requested:
-                    _ws_write_frame(self.wfile, b"", opcode=0x8)
+                    write_frame(self.wfile, b"", opcode=0x8)
                     return
 
     class _TCP(socketserver.ThreadingTCPServer):

@@ -27,10 +27,22 @@ compacted every few epochs.
 Weighted multisets come for free: delta joins multiply ``diff``
 columns, so retractions (diff < 0) propagate through every pipeline
 and cancel in consolidation.
+
+One contract covers every maintainer the reactive router builds
+(DeltaJoin, IncrementalAggregate, IncrementalTopK, IncrementalRecursion,
+and the RenamedMaintainer an aggregate over a named rule wraps):
+``transact(datoms)`` returns the epoch's weighted
+``(variables..., diff)`` changes, and ``current()`` the maintained
+state in the same shape — None while nothing is seeded. An Interest
+replays ``current()`` on subscription, and IncrementalAggregate /
+IncrementalTopK, the two faces of one touched-group reduce, seed from
+their inner maintainer's ``current()`` (ADR 0012). Every weighted fold
+here is ``generational._fold``.
 """
 
 from __future__ import annotations
 
+import functools
 from typing import Any, Iterable, Optional
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -65,9 +77,10 @@ from ..plan.plans import (
     MatchEA,
     Negate,
     Plan,
+    children,
 )
 from ..scratch import materialize, materialize_count
-from .generational import _TouchedKeyMaintainer
+from .generational import _TouchedKeyMaintainer, _fold
 
 
 def epoch_deltas(
@@ -122,13 +135,9 @@ def _negated_attributes(plan, negated: bool = False) -> set[str]:
             _negated_attributes(plan.right_plan, True)
         )
     negated = negated or isinstance(plan, (Negate, Aggregate))
-    out: set[str] = set()
-    for attr in getattr(plan, "__dataclass_fields__", {}):
-        v = getattr(plan, attr)
-        for item in v if isinstance(v, list) else [v]:
-            if isinstance(item, Plan):
-                out |= _negated_attributes(item, negated)
-    return out
+    return set().union(
+        *(_negated_attributes(c, negated) for c in children(plan))
+    )
 
 
 class SemanticsDeltaSource:
@@ -243,75 +252,75 @@ class DeltaJoin:
         # aid -> SemanticsDeltaSource for LWW/Distinct attributes: raw
         # datom batches translate to effective-view deltas first.
         self.semantics = dict(semantics or {})
+        # An attribute with no rows yet gets no snapshot: a binding
+        # without one makes its pipelines provably empty. The row count
+        # rides the seed checkpoint's own jobs.
         for aid, df in (initial or {}).items():
-            self.snapshots[aid] = materialize(df.select("e", "v", "diff"))
+            snap, n = materialize_count(df.select("e", "v", "diff"))
+            if n:
+                self.snapshots[aid] = snap
         self.epoch = 0
-
-    # -- snapshot algebra ------------------------------------------------
-
-    @staticmethod
-    def _consolidate(df: DataFrame) -> DataFrame:
-        return (
-            df.groupBy("e", "v")
-            .agg(F.sum("diff").alias("diff"))
-            .filter(F.col("diff") != 0)
-        )
 
     # -- the delta pipelines ---------------------------------------------
 
-    def _pipeline(
-        self,
-        i: int,
-        deltas: dict[str, DataFrame],
-        news: dict[str, DataFrame],
-    ) -> Optional[Any]:
-        """Compile core pipeline i: binding i at its delta, j<i at new,
-        j>i at old. Returns None when any required version is absent
-        (the join is provably empty)."""
+    def _core(self, frames: list[Optional[DataFrame]]) -> Optional[Relation]:
+        """Compile the core conjunction with attribute binding j read
+        from ``frames[j]`` — the caller picks each binding's version.
+        None when a version is absent (the join is provably empty)."""
 
+        if any(df is None for df in frames):
+            return None
         attrs: dict[str, AttributeSource] = {}
         synth_bindings: list[Binding] = []
         ai = 0
         for b in self.core_bindings:
-            if not isinstance(b, AttributeBinding):
-                synth_bindings.append(b)
-                continue
-            if ai < i:
-                df = news.get(b.attribute)
-            elif ai == i:
-                df = deltas.get(b.attribute)
-            else:
-                df = self.snapshots.get(b.attribute)
-            if df is None:
-                return None
-            key = f"__dj{ai}"
-            attrs[key] = AttributeSource(loader=(lambda d=df: d), has_diff=True)
-            synth_bindings.append(AttributeBinding(b.e, key, b.v))
-            ai += 1
-        cat = Catalog(attrs)
-        return compile_plan(Hector(self.variables, synth_bindings), cat)
+            if isinstance(b, AttributeBinding):
+                key = f"__dj{ai}"
+                attrs[key] = AttributeSource(
+                    loader=(lambda d=frames[ai]: d), has_diff=True
+                )
+                b = AttributeBinding(b.e, key, b.v)
+                ai += 1
+            synth_bindings.append(b)
+        return compile_plan(
+            Hector(self.variables, synth_bindings), Catalog(attrs)
+        )
 
-    def _core_at(
-        self, versions: dict[str, DataFrame]
-    ) -> Optional[Any]:
-        """Compile the core conjunction entirely at one snapshot set."""
+    def _at(self, versions: dict[str, DataFrame]) -> list:
+        """Every attribute binding read from one snapshot set."""
 
-        attrs: dict[str, AttributeSource] = {}
-        synth_bindings: list[Binding] = []
-        ai = 0
-        for b in self.core_bindings:
-            if not isinstance(b, AttributeBinding):
-                synth_bindings.append(b)
-                continue
-            df = versions.get(b.attribute)
-            if df is None:
-                return None
-            key = f"__dj{ai}"
-            attrs[key] = AttributeSource(loader=(lambda d=df: d), has_diff=True)
-            synth_bindings.append(AttributeBinding(b.e, key, b.v))
-            ai += 1
-        cat = Catalog(attrs)
-        return compile_plan(Hector(self.variables, synth_bindings), cat)
+        return [versions.get(b.attribute) for b in self.attr_bindings]
+
+    def _with_anti(self, rel: Relation, versions: dict[str, DataFrame]):
+        """``rel`` without the tuples any anti binding's ``versions``
+        snapshot blocks."""
+
+        for ab in self.anti_bindings:
+            rel = self._anti_filter(
+                rel, ab, self._positive_keys(versions.get(ab.attribute))
+            )
+        return rel
+
+    def _named(self, df: DataFrame) -> DataFrame:
+        """Weighted ``(vcol..., DIFF)`` tuples, folded, as the public
+        ``(variables..., diff)`` frame."""
+
+        return _fold(df, (DIFF,)).select(
+            *[F.col(vcol(v)).alias(str(v)) for v in self.variables],
+            F.col(DIFF).alias("diff"),
+        )
+
+    def current(self) -> Optional[DataFrame]:
+        """The maintained result as weighted ``(variables..., diff)``
+        rows: the core at the current snapshots, anti sides applied;
+        None while some attribute binding has no snapshot."""
+
+        core = self._core(self._at(self.snapshots))
+        if core is None:
+            return None
+        rel = self._with_anti(core, self.snapshots).with_diff()
+        sel = [vcol(v) for v in self.variables] + [DIFF]
+        return self._named(rel.df.select(*sel))
 
     @staticmethod
     def _positive_keys(df: Optional[DataFrame]) -> Optional[DataFrame]:
@@ -322,11 +331,7 @@ class DeltaJoin:
 
         if df is None:
             return None
-        return (
-            DeltaJoin._consolidate(df)
-            .filter(F.col("diff") > 0)
-            .select("e", "v")
-        )
+        return _fold(df, ("diff",)).filter(F.col("diff") > 0).select("e", "v")
 
     def _anti_filter(self, rel, ab: AntijoinBinding, keys: Optional[DataFrame]):
         """Drop tuples whose (ab.e, ab.v) valuation appears in keys."""
@@ -376,7 +381,7 @@ class DeltaJoin:
                 flipped, n_flipped = materialize_count(flipped)
                 if not n_flipped:
                     continue
-                core = self._core_at(self.snapshots)
+                core = self._core(self._at(self.snapshots))
                 if core is None:
                     continue
                 # Prune to the flipped keys (inner join IS the filter).
@@ -442,7 +447,7 @@ class DeltaJoin:
         deltas = {}
         for aid in aids:
             deltas[aid] = materialize(
-                self._consolidate(base.filter(F.col("a") == aid).drop("a"))
+                _fold(base.filter(F.col("a") == aid).drop("a"), ("diff",))
             )
         return self._advance(deltas)
 
@@ -454,7 +459,7 @@ class DeltaJoin:
                 merged = self.snapshots[aid].unionByName(deltas[aid])
                 appends = self._appends.get(aid, 0) + 1
                 if appends >= self.compact_every:
-                    merged = materialize(self._consolidate(merged))
+                    merged = materialize(_fold(merged, ("diff",)))
                     appends = 0
                 news[aid] = merged
                 self._appends[aid] = appends
@@ -468,14 +473,19 @@ class DeltaJoin:
         for i, b in enumerate(self.attr_bindings):
             if b.attribute not in deltas:
                 continue
-            pipe = self._pipeline(i, deltas, news)
+            # Pipeline i: binding i at its delta, j < i at new, j > i
+            # at old.
+            pipe = self._core(
+                [
+                    (news if j < i else deltas if j == i else self.snapshots)
+                    .get(o.attribute)
+                    for j, o in enumerate(self.attr_bindings)
+                ]
+            )
             if pipe is None:
                 continue
             # Core deltas see the anti sides at their NEW state.
-            for ab in self.anti_bindings:
-                pipe = self._anti_filter(
-                    pipe, ab, self._positive_keys(news.get(ab.attribute))
-                )
+            pipe = self._with_anti(pipe, news)
             pipes.append(pipe.with_diff().df.select(*sel))
 
         pipes.extend(self._toggle_terms(deltas, news, sel))
@@ -488,18 +498,7 @@ class DeltaJoin:
                 [f"`{v}` string" for v in self.variables] + ["diff long"]
             )
             return self.spark.createDataFrame([], schema=schema)
-        union = pipes[0]
-        for p in pipes[1:]:
-            union = union.unionByName(p)
-        out = (
-            union.groupBy(*[vcol(v) for v in self.variables])
-            .agg(F.sum(DIFF).alias(DIFF))
-            .filter(F.col(DIFF) != 0)
-        )
-        return out.select(
-            *[F.col(vcol(v)).alias(str(v)) for v in self.variables],
-            F.col(DIFF).alias("diff"),
-        )
+        return self._named(functools.reduce(DataFrame.unionByName, pipes))
 
 
 def stream_delta_join(
@@ -533,26 +532,79 @@ def stream_delta_join(
     return writer.start()
 
 
-class IncrementalAggregate:
-    """Incrementally-maintained grouped aggregation over a DeltaJoin —
-    the differential reduce: state is the consolidated (key, value,
-    weight) multiset of the join result, and each epoch re-aggregates
-    ONLY the keys its delta touched (the reference's aggregates sit on
-    differential reduce with the same property,
-    src/plan/aggregate_neu.rs).
+class _TouchedGroupReduce:
+    """The differential reduce over a maintainer's weighted output
+    (the reference's aggregates sit on differential reduce over any
+    maintained collection, src/plan/aggregate_neu.rs): the state is the
+    consolidated multiset of the inner maintainer's rows, projected and
+    weighted in ``__w``, and each epoch re-evaluates the per-slice
+    function ONLY on the groups its delta touched. The old slice's
+    output retracts (-1) and the new slice's asserts (+1) wherever they
+    differ, so a group that empties just retracts. An empty ``group``
+    re-evaluates the whole state (the unpartitioned top-k).
 
-    Output diffs are (key..., value, diff): the previous aggregate of a
-    touched key retracts (-1) and the new one asserts (+1); keys whose
-    group empties just retract. Supports MIN, MAX, COUNT, SUM, AVG.
+    The state seeds from ``inner.current()``, so a reduce built over a
+    maintainer that already holds rows starts from them. Subclasses
+    declare ``_project`` (the inner's ``(vars..., diff)`` rows as state
+    columns plus ``__w``) and ``_per_slice`` (a state slice to output
+    rows)."""
+
+    def __init__(self, inner, group: list[str]):
+        self.inner = inner
+        self.group = list(group)
+        self.state = self._weigh(inner.current())
+
+    def _weigh(self, rows: Optional[DataFrame]) -> Optional[DataFrame]:
+        if rows is None:
+            return None
+        return materialize(_fold(self._project(rows), ("__w",)))
+
+    def current(self) -> Optional[DataFrame]:
+        """The reduce's output over the whole state, at weight 1; None
+        while nothing is seeded."""
+
+        if self.state is None:
+            return None
+        return self._per_slice(self.state).withColumn("diff", F.lit(1))
+
+    def transact(self, datoms: Iterable[Datom]) -> DataFrame:
+        delta = self._weigh(self.inner.transact(datoms))
+        old = delta.limit(0) if self.state is None else self.state
+        new = materialize(_fold(old.unionByName(delta), ("__w",)))
+        old_slice, new_slice = old, new
+        if self.group:
+            # A USING join puts the key columns first; re-select the
+            # state's order so diffs and current() share one shape.
+            touched = delta.select(*self.group).distinct()
+            old_slice = old.join(touched, self.group, "left_semi").select(
+                *old.columns
+            )
+            new_slice = new.join(touched, self.group, "left_semi").select(
+                *old.columns
+            )
+        old_out = self._per_slice(old_slice)
+        new_out = self._per_slice(new_slice)
+        removed = old_out.exceptAll(new_out).withColumn("diff", F.lit(-1))
+        added = new_out.exceptAll(old_out).withColumn("diff", F.lit(1))
+        self.state = new
+        return removed.unionByName(added)
+
+
+class IncrementalAggregate(_TouchedGroupReduce):
+    """Incrementally-maintained grouped aggregation: the touched-group
+    reduce over the (key..., value) multiset of the inner maintainer's
+    rows, grouped by the key variables.
+
+    Output diffs are (key..., value, diff). Supports MIN, MAX, COUNT,
+    SUM, AVG, MEDIAN, VARIANCE, STDDEV.
     """
 
     def __init__(
         self,
-        delta_join: DeltaJoin,
+        inner,
         key_variables: list[str],
         aggregation_fn: AggregationFn,
         aggregation_variable: str,
-        seed_from_snapshots: bool = False,
     ):
         if aggregation_fn not in (
             AggregationFn.MIN,
@@ -565,49 +617,19 @@ class IncrementalAggregate:
             AggregationFn.STDDEV,
         ):
             raise ValueError(f"unsupported incremental fn {aggregation_fn}")
-        self.dj = delta_join
         self.keys = list(key_variables)
         self.fn = aggregation_fn
         self.agg_var = aggregation_variable
-        self.state: Optional[DataFrame] = None  # keys + __v + __w
-        if (
-            seed_from_snapshots
-            and hasattr(delta_join, "current")
-            # Maintainers tracking their own materialized state (e.g.
-            # IncrementalRecursion, or a renamed DeltaJoin re-deriving
-            # from snapshots) seed the reduce from it directly — the
-            # differential reduce-over-iterate composition. None means
-            # nothing is transacted yet; the state seeds empty.
-            and (cur := delta_join.current()) is not None
-        ):
-            self.state = (
-                cur.select(
-                    *[F.col(k) for k in self.keys],
-                    F.col(self.agg_var).alias("__v"),
-                    F.col("diff").alias("__w"),
-                )
-                .groupBy(*self.keys, "__v")
-                .agg(F.sum("__w").alias("__w"))
-                .filter(F.col("__w") != 0)
-                .transform(materialize)
-            )
-        elif seed_from_snapshots and delta_join.snapshots:
-            core = delta_join._core_at(delta_join.snapshots)
-            if core is not None:
-                rel = core.with_diff()
-                self.state = (
-                    rel.df.select(
-                        *[F.col(vcol(k)).alias(k) for k in self.keys],
-                        F.col(vcol(self.agg_var)).alias("__v"),
-                        F.col(DIFF).alias("__w"),
-                    )
-                    .groupBy(*self.keys, "__v")
-                    .agg(F.sum("__w").alias("__w"))
-                    .filter(F.col("__w") != 0)
-                    .transform(materialize)
-                )
+        super().__init__(inner, self.keys)
 
-    def _aggregate(self, slice_df: DataFrame) -> DataFrame:
+    def _project(self, rows: DataFrame) -> DataFrame:
+        return rows.select(
+            *self.keys,
+            F.col(self.agg_var).alias("__v"),
+            F.col("diff").alias("__w"),
+        )
+
+    def _per_slice(self, slice_df: DataFrame) -> DataFrame:
         v, w = F.col("__v"), F.col("__w")
         if self.fn == AggregationFn.MEDIAN:
             # Upper-middle element without interpolation
@@ -652,85 +674,30 @@ class IncrementalAggregate:
             out = F.max(F.when(w > 0, v))
         return slice_df.groupBy(*self.keys).agg(out.alias("value"))
 
-    def transact(self, datoms: Iterable[Datom]) -> DataFrame:
-        diffs = self.dj.transact(datoms)
-        dproj = (
-            diffs.select(
-                *[F.col(k) for k in self.keys],
-                F.col(self.agg_var).alias("__v"),
-                F.col("diff").alias("__w"),
-            )
-            .groupBy(*self.keys, "__v")
-            .agg(F.sum("__w").alias("__w"))
-            .filter(F.col("__w") != 0)
-            .transform(materialize)
-        )
-        affected = dproj.select(*self.keys).distinct()
 
-        if self.state is None:
-            old_slice = dproj.limit(0)
-            merged = dproj
-        else:
-            old_slice = self.state.join(affected, self.keys, "inner")
-            merged = self.state.unionByName(dproj)
-        new_state = (
-            merged.groupBy(*self.keys, "__v")
-            .agg(F.sum("__w").alias("__w"))
-            .filter(F.col("__w") != 0)
-            .transform(materialize)
-        )
-        new_slice = new_state.join(affected, self.keys, "inner")
-
-        old_out = self._aggregate(old_slice)
-        new_out = self._aggregate(new_slice)
-        removed = old_out.exceptAll(new_out).withColumn("diff", F.lit(-1))
-        added = new_out.exceptAll(old_out).withColumn("diff", F.lit(1))
-
-        self.state = new_state
-        return removed.unionByName(added)
-
-
-class IncrementalTopK:
-    """Incrementally-maintained top-k over a DeltaJoin (the streaming
-    form of plans.TopK): state is the consolidated tuple multiset, and
-    each epoch re-ranks ONLY the touched partitions (or the global
-    ranking when unpartitioned), emitting retract/assert diffs of the
-    top-k rows. Retraction of a ranked tuple pulls in the runner-up —
-    the case windowless approximations get wrong — because the full
-    multiset (not just the current top-k) is retained, exactly like
-    differential's arranged input to a reduce."""
+class IncrementalTopK(_TouchedGroupReduce):
+    """Incrementally-maintained top-k (the streaming form of
+    plans.TopK): the touched-group reduce over the inner maintainer's
+    tuple multiset, re-ranking only the touched partitions (the whole
+    state when unpartitioned). Retraction of a ranked tuple pulls in
+    the runner-up — the case windowless approximations get wrong —
+    because the full multiset, not just the current top-k, is
+    retained, exactly like differential's arranged input to a reduce."""
 
     def __init__(
         self,
-        delta_join: "DeltaJoin",
+        inner,
         order_by: list[tuple[str, bool]],
         k: int,
         partition_by: Optional[list[str]] = None,
-        seed_from_snapshots: bool = False,
     ):
-        self.dj = delta_join
         self.order_by = list(order_by)
         self.k = k
-        self.partition_by = list(partition_by or [])
-        self.vars = [str(v) for v in delta_join.variables]
-        self.state: Optional[DataFrame] = None  # vars + __w
-        if seed_from_snapshots and delta_join.snapshots:
-            core = delta_join._core_at(delta_join.snapshots)
-            if core is not None:
-                rel = core.with_diff()
-                self.state = (
-                    rel.df.select(
-                        *[
-                            F.col(vcol(v)).alias(str(v))
-                            for v in delta_join.variables
-                        ],
-                        F.col(DIFF).alias("__w"),
-                    )
-                    .groupBy(*self.vars)
-                    .agg(F.sum("__w").alias("__w"))
-                    .filter(F.col("__w") != 0)
-                    .transform(materialize)
-                )
+        self.vars = [str(v) for v in inner.variables]
+        super().__init__(inner, list(partition_by or []))
+
+    def _project(self, rows: DataFrame) -> DataFrame:
+        return rows.select(*self.vars, F.col("diff").alias("__w"))
 
     def _order_cols(self):
         return [
@@ -738,12 +705,12 @@ class IncrementalTopK:
             for v, asc in self.order_by
         ]
 
-    def _topk(self, slice_df: DataFrame) -> DataFrame:
+    def _per_slice(self, slice_df: DataFrame) -> DataFrame:
         from pyspark.sql.window import Window
 
         present = slice_df.filter(F.col("__w") > 0).drop("__w")
-        if self.partition_by:
-            w = Window.partitionBy(*self.partition_by).orderBy(
+        if self.group:
+            w = Window.partitionBy(*self.group).orderBy(
                 *self._order_cols()
             )
         else:
@@ -753,42 +720,6 @@ class IncrementalTopK:
             .filter(F.col("__rk") <= self.k)
             .drop("__rk")
         )
-
-    def transact(self, datoms: Iterable[Datom]) -> DataFrame:
-        diffs = self.dj.transact(datoms)
-        dproj = (
-            diffs.select(*self.vars, F.col("diff").alias("__w"))
-            .groupBy(*self.vars)
-            .agg(F.sum("__w").alias("__w"))
-            .filter(F.col("__w") != 0)
-            .transform(materialize)
-        )
-        merged = (
-            dproj if self.state is None else self.state.unionByName(dproj)
-        )
-        new_state = (
-            merged.groupBy(*self.vars)
-            .agg(F.sum("__w").alias("__w"))
-            .filter(F.col("__w") != 0)
-            .transform(materialize)
-        )
-        if self.partition_by:
-            touched = dproj.select(*self.partition_by).distinct()
-            old_slice = (
-                self.state.join(touched, self.partition_by, "inner")
-                if self.state is not None
-                else dproj.limit(0)
-            )
-            new_slice = new_state.join(touched, self.partition_by, "inner")
-        else:
-            old_slice = self.state if self.state is not None else dproj.limit(0)
-            new_slice = new_state
-        old_out = self._topk(old_slice)
-        new_out = self._topk(new_slice)
-        removed = old_out.exceptAll(new_out).withColumn("diff", F.lit(-1))
-        added = new_out.exceptAll(old_out).withColumn("diff", F.lit(1))
-        self.state = new_state
-        return removed.unionByName(added)
 
 
 class IncrementalRecursion:
@@ -863,7 +794,7 @@ class IncrementalRecursion:
         self.snapshots: dict[str, DataFrame] = {}
         for aid, df in (initial or {}).items():
             self.snapshots[aid] = materialize(
-                DeltaJoin._consolidate(df.select("e", "v", "diff"))
+                _fold(df.select("e", "v", "diff"), ("diff",))
             )
         # Seed T with a full generalized semi-naive fixpoint.
         cat = self._catalog()
@@ -937,9 +868,9 @@ class IncrementalRecursion:
                     any_negative = True
             elif aid in retracted:
                 any_negative = True
-            merged = DeltaJoin._consolidate(
-                self.snapshots[aid].unionByName(delta)
-            ).transform(materialize)
+            merged = materialize(
+                _fold(self.snapshots[aid].unionByName(delta), ("diff",))
+            )
             self.snapshots[aid] = merged
 
         cat = self._catalog()
@@ -1077,10 +1008,6 @@ class RenamedMaintainer:
             (str(a), str(b)) for a, b in zip(source_vars, names)
         ]
 
-    @property
-    def snapshots(self):
-        return self.inner.snapshots
-
     def _rename(self, df: DataFrame) -> DataFrame:
         for old, new in self.mapping:
             if old != new:
@@ -1091,24 +1018,31 @@ class RenamedMaintainer:
         return self._rename(self.inner.transact(datoms))
 
     def current(self) -> Optional[DataFrame]:
-        """The maintained relation as (vars..., diff) — from the
-        inner's own materialized state, or re-derived from a
-        DeltaJoin's snapshots; None when nothing is seeded yet."""
+        cur = self.inner.current()
+        return None if cur is None else self._rename(cur)
 
-        if hasattr(self.inner, "current"):
-            return self._rename(self.inner.current())
-        core = self.inner._core_at(self.inner.snapshots)
-        if core is None:
-            return None
-        rel = core.with_diff()
-        df = rel.df.select(
-            *[
-                F.col(vcol(v)).alias(str(v))
-                for v in self.inner.variables
-            ],
-            F.col(DIFF).alias("diff"),
-        )
-        return self._rename(df)
+
+def seed_inputs(engine, aids: set[str]):
+    """``(initial, semantics)`` for a maintainer over the transacted
+    attributes ``aids``: each attribute's weighted (e, v, diff) rows,
+    and a SemanticsDeltaSource per LWW/Distinct attribute (raw datom
+    batches translate to effective-view deltas, and the seed is the
+    effective view). None when some attribute is not transacted."""
+
+    from ..engine import InputSemantics
+
+    tas = {aid: engine._transacted.get(aid) for aid in aids}
+    if any(ta is None for ta in tas.values()):
+        return None
+    initial: dict[str, DataFrame] = {}
+    semantics: dict[str, SemanticsDeltaSource] = {}
+    for aid, ta in tas.items():
+        if ta.config.input_semantics == InputSemantics.RAW:
+            initial[aid] = ta.dataframe().select("e", "v", "diff")
+        else:
+            semantics[aid] = SemanticsDeltaSource(ta)
+            initial[aid] = semantics[aid].initial()
+    return initial, semantics
 
 
 def incremental_recursion_for(engine, name: str):
@@ -1119,7 +1053,8 @@ def incremental_recursion_for(engine, name: str):
     directly, LWW/Distinct via SemanticsDeltaSource adapters. Returns
     None otherwise."""
 
-    from ..engine import InputSemantics, _is_monotone
+    from ..engine import _is_monotone
+    from ..plan.compiler import _rule_refs
 
     cycle = engine._recursive_rules(name)
     if not cycle or name not in cycle:
@@ -1128,7 +1063,7 @@ def incremental_recursion_for(engine, name: str):
         plan = engine.rules[rn]
         if not _is_monotone(plan, cycle):
             return None
-        if not engine._dependencies(plan) <= cycle:
+        if not _rule_refs(plan) <= cycle:
             return None
 
     aids: set[str] = set()
@@ -1144,31 +1079,17 @@ def incremental_recursion_for(engine, name: str):
                     if isinstance(b, AntijoinBinding):
                         unsupported = True
                     aids.add(b.attribute)
-        for attr in getattr(p, "__dataclass_fields__", {}):
-            v = getattr(p, attr)
-            if isinstance(v, Plan):
-                walk(v)
-            elif isinstance(v, list):
-                for item in v:
-                    if isinstance(item, Plan):
-                        walk(item)
+        for c in children(p):
+            walk(c)
 
     for rn in cycle:
         walk(engine.rules[rn])
     if unsupported or not aids:
         return None
-    initial = {}
-    semantics = {}
-    for aid in aids:
-        ta = engine._transacted.get(aid)
-        if ta is None:
-            return None
-        if ta.config.input_semantics != InputSemantics.RAW:
-            adapter = SemanticsDeltaSource(ta)
-            semantics[aid] = adapter
-            initial[aid] = adapter.initial()
-        else:
-            initial[aid] = ta.dataframe().select("e", "v", "diff")
+    seeds = seed_inputs(engine, aids)
+    if seeds is None:
+        return None
+    initial, semantics = seeds
     return IncrementalRecursion(
         engine.spark,
         name,
@@ -1640,15 +1561,14 @@ class IncrementalCC:
         new_sub = connected_components(
             sub_edges, "u", "v", max_iters=self.max_iters, step=self.step
         ).transform(materialize)
-        diffs = (
-            old_sub.select("id", "component", F.lit(-1).alias("diff"))
-            .unionByName(
-                new_sub.select("id", "component", F.lit(1).alias("diff"))
+        diffs = materialize(
+            _fold(
+                old_sub.select("id", "component", F.lit(-1).alias("diff"))
+                .unionByName(
+                    new_sub.select("id", "component", F.lit(1).alias("diff"))
+                ),
+                ("diff",),
             )
-            .groupBy("id", "component")
-            .agg(F.sum("diff").alias("diff"))
-            .filter(F.col("diff") != 0)
-            .transform(materialize)
         )
         self.labels = (
             self.labels.join(old_sub, "id", "left_anti")

@@ -4,13 +4,18 @@ every registered interest (README.md:12-23; server loop
 server/src/main.rs:588-656).
 
 Spark-first realization: each transaction advances the epoch
-(micro-batch analog). Conjunctive rules (Hector over attribute /
-constant / predicate / antijoin bindings) are maintained
-INCREMENTALLY via DeltaJoin — per-epoch work tracks the change, the
-reference's delta-pipeline behavior. Every other rule is re-evaluated
-through the engine's Catalyst-compiled plan and diffed against the
-previous epoch's snapshot with a distributed exceptAll — no
-driver-side relation state. For the streaming-source path the same
+(micro-batch analog). Rules the router ``_delta_join_for`` recognizes
+are maintained INCREMENTALLY — conjunctions by DeltaJoin, monotone
+recursion by IncrementalRecursion, a single aggregate or a top-k over
+either by the touched-group reduce — so per-epoch work tracks the
+change, the reference's delta-pipeline behavior. Every maintainer
+answers ``transact(datoms)`` with the epoch's diffs and ``current()``
+with its maintained state; a new Interest replays ``current()``, the
+reference's replay of an already-maintained arrangement
+(src/server/mod.rs:109-119; ADR 0012). Every other rule is
+re-evaluated through the engine's Catalyst-compiled plan and diffed
+against the previous epoch's snapshot with a distributed exceptAll —
+no driver-side relation state. For the streaming-source path the same
 diffing runs inside foreachBatch (see diff_sink).
 
 Scale notes: every frame built from rows held in Python is an Arrow-built
@@ -31,6 +36,7 @@ job per epoch, which AQE sizes to the actual data.
 
 from __future__ import annotations
 
+import functools
 from collections import deque
 from dataclasses import dataclass, field
 from typing import Callable, Iterable, Optional
@@ -39,6 +45,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..engine import Datom, Engine
 from .diff_sink import DEFAULT_HISTORY_LIMIT, record_bounded
+from .generational import _fold
 
 
 @dataclass
@@ -59,7 +66,8 @@ class Interest:
         default_factory=lambda: deque(maxlen=DEFAULT_HISTORY_LIMIT)
     )
     on_evict: Optional[Callable[[int, list], None]] = None
-    delta_join: Optional[object] = None  # incremental path, if eligible
+    # Incremental maintainer (transact/current), if the rule is eligible.
+    delta_join: Optional[object] = None
     # True when the DeltaJoin was (re)seeded inside the current advance,
     # i.e. AFTER engine.transact — its snapshots already contain this
     # epoch's datoms, so the replay path must not transact them again.
@@ -72,8 +80,11 @@ class Interest:
 
 def _delta_join_for(engine: Engine, name: str):
     """Build the incremental maintainer for a rule: a DeltaJoin for
-    conjunctive (Hector) rules, an IncrementalAggregate for a
-    single-function Aggregate over one; None if ineligible."""
+    conjunctive (Hector) rules, an IncrementalRecursion for an eligible
+    recursive rule, an IncrementalTopK over a Hector, and an
+    IncrementalAggregate for a single-function Aggregate over a Hector
+    or a named rule maintained by either; None if ineligible. Every
+    one answers ``transact`` and ``current``."""
 
     from ..plan.plans import (
         Aggregate as AggregatePlan,
@@ -101,7 +112,6 @@ def _delta_join_for(engine: Engine, name: str):
             [(str(v), bool(asc)) for v, asc in plan.order_by],
             plan.k,
             [str(v) for v in plan.partition_by],
-            seed_from_snapshots=True,
         )
     if (
         isinstance(plan, AggregatePlan)
@@ -118,7 +128,6 @@ def _delta_join_for(engine: Engine, name: str):
                 list(plan.key_variables),
                 plan.aggregation_fns[0],
                 plan.aggregation_variables[0],
-                seed_from_snapshots=True,
             )
         except ValueError:
             return None
@@ -168,7 +177,6 @@ def _delta_join_for(engine: Engine, name: str):
                             list(plan.key_variables),
                             plan.aggregation_fns[0],
                             plan.aggregation_variables[0],
-                            seed_from_snapshots=True,
                         )
                     except ValueError:
                         return None
@@ -190,59 +198,44 @@ def _delta_join_for(engine: Engine, name: str):
 
 def _delta_join_for_plan(engine: Engine, plan):
     """DeltaJoin over a Hector plan's bindings, seeded from the current
-    transacted-attribute snapshots (RAW semantics only)."""
+    transacted-attribute snapshots; None if a binding is outside the
+    delta-join fragment or reads an attribute that is not transacted."""
 
-    from .incremental import DeltaJoin
     from ..plan.plans import (
         AntijoinBinding,
         AttributeBinding,
         BinaryPredicateBinding,
         ConstantBinding,
     )
-
-    from ..engine import InputSemantics
+    from .incremental import DeltaJoin, seed_inputs
 
     aids = set()
     for b in plan.bindings:
         if isinstance(b, (AttributeBinding, AntijoinBinding)):
-            ta = engine._transacted.get(b.attribute)
-            if ta is None:
-                return None
             aids.add(b.attribute)
         elif not isinstance(b, (ConstantBinding, BinaryPredicateBinding)):
             return None
-    from .incremental import SemanticsDeltaSource
+    seeds = seed_inputs(engine, aids)
+    if seeds is None:
+        return None
+    return DeltaJoin(engine.spark, plan.variables_, plan.bindings, *seeds)
 
-    initial = {}
-    semantics = {}
-    for aid in aids:
-        ta = engine._transacted[aid]
-        if ta.config.input_semantics != InputSemantics.RAW:
-            # LWW/Distinct rewrite history at ingest; an adapter turns
-            # raw datom batches into effective-view deltas so the
-            # pipelines still consume a plain weighted delta.
-            adapter = SemanticsDeltaSource(ta)
-            semantics[aid] = adapter
-            snap = adapter.initial()
-            if not snap.isEmpty():
-                initial[aid] = snap
-            continue
-        df = ta.dataframe()
-        if not df.isEmpty():
-            initial[aid] = df.select("e", "v", "diff")
-    return DeltaJoin(
-        engine.spark, plan.variables_, plan.bindings, initial, semantics
-    )
+
+def _no_diffs(spark) -> DataFrame:
+    """An epoch that has nothing to emit."""
+
+    return spark.createDataFrame([], schema="__epoch_diff int")
 
 
 def _coalesce_diffs(dfs: list[DataFrame]) -> DataFrame:
     """Coarsen a window of per-epoch diff frames into one consolidated
     batch: net weight per tuple, zero-net tuples (asserted then
     retracted inside the window) vanish — the reference's
-    delay(coarsen) + consolidate (server/src/main.rs:482-490)."""
+    delay(coarsen) + consolidate (server/src/main.rs:482-490). Epochs
+    that emitted nothing (``_no_diffs``) carry no tuple columns and
+    drop out."""
 
-    normalized = []
-    cols: list[str] = []
+    nets = []
     for df in dfs:
         cols = [c for c in df.columns if c not in ("diff", "__epoch_diff")]
         net = (
@@ -250,16 +243,11 @@ def _coalesce_diffs(dfs: list[DataFrame]) -> DataFrame:
             if "diff" in df.columns
             else F.col("__epoch_diff")
         )
-        normalized.append(df.select(*cols, net.alias("__net")))
-    out = normalized[0]
-    for df in normalized[1:]:
-        out = out.unionByName(df)
-    return (
-        out.groupBy(*cols)
-        .agg(F.sum("__net").alias("diff"))
-        .filter(F.col("diff") != 0)
-        .withColumn("__epoch_diff", F.lit(1))
-    )
+        nets.append(df.select(*cols, net.alias("diff")))
+    nets = [df for df in nets if len(df.columns) > 1] or nets[:1]
+    return _fold(
+        functools.reduce(DataFrame.unionByName, nets), ("diff",)
+    ).withColumn("__epoch_diff", F.lit(1))
 
 
 class ReactiveSession:
@@ -346,31 +334,25 @@ class ReactiveSession:
         self, sub: Interest, datoms: list[Datom]
     ) -> DataFrame:
         """Delta-pipeline path: per-epoch work tracks the change. On
-        the first advance the current state replays as +1 diffs (the
-        reference replays the arrangement on subscription); the
+        the first advance the maintainer's ``current()`` state replays
+        (the reference replays the arrangement on subscription); the
         weighted change rides in `diff`, `__epoch_diff` stays +1."""
 
-        if sub.previous is None:
-            sub.previous = True  # replay marker
-            # Consume this epoch's datoms so they are not re-applied —
-            # unless the maintainer was seeded post-transact in this
-            # very advance, in which case its snapshots already hold
-            # them and a second transact would double the weights.
-            if not sub.seeded_post_transact:
-                sub.delta_join.transact(datoms)
-            sub.seeded_post_transact = False
-            if hasattr(sub.delta_join, "current"):
-                # Maintainers tracking their own materialized state
-                # replay from it — no second fixpoint via the engine.
-                return sub.delta_join.current().withColumn(
-                    "__epoch_diff", F.lit(1)
-                )
-            full = self.engine.interest(sub.name)
-            if "diff" not in full.columns:
-                full = full.withColumn("diff", F.lit(1))
-            return full.withColumn("__epoch_diff", F.lit(1))
-        diffs = sub.delta_join.transact(datoms)
-        return diffs.withColumn("__epoch_diff", F.lit(1))
+        if sub.previous is not None:
+            diffs = sub.delta_join.transact(datoms)
+            return diffs.withColumn("__epoch_diff", F.lit(1))
+        sub.previous = True  # replay marker
+        # Consume this epoch's datoms so they are not re-applied —
+        # unless the maintainer was seeded post-transact in this very
+        # advance, in which case its snapshots already hold them and a
+        # second transact would double the weights.
+        if datoms and not sub.seeded_post_transact:
+            sub.delta_join.transact(datoms)
+        sub.seeded_post_transact = False
+        state = sub.delta_join.current()
+        if state is None:
+            return _no_diffs(self.engine.spark)
+        return state.withColumn("__epoch_diff", F.lit(1))
 
     def _advance_recompute(self, sub: Interest) -> DataFrame:
         try:
@@ -379,8 +361,7 @@ class ReactiveSession:
             # A rule may reference attributes registered AFTER the
             # subscription (reference: tests/registration_test.rs) —
             # until they exist the result is empty, not an error.
-            schema = "__epoch_diff int"
-            return self.engine.spark.createDataFrame([], schema=schema)
+            return _no_diffs(self.engine.spark)
         current.count()
         if sub.previous is None:
             diffs = current.withColumn("__epoch_diff", F.lit(1))

@@ -277,6 +277,71 @@ def test_incremental_aggregate_matches_full(spark, engine):
     assert acc == expected
 
 
+@pytest.mark.parametrize("reduce", ["aggregate", "topk"])
+def test_reduce_seeds_from_seeded_delta_join(spark, engine, reduce):
+    """A reduce built directly over a DeltaJoin that already holds
+    ``initial`` snapshots starts from them: the batch result before the
+    epochs, folded with the diffs of one add and one retract, equals
+    the batch plan after each."""
+
+    from declarative_dataflow_spark.plan.plans import (
+        Aggregate,
+        AggregationFn,
+        TopK,
+    )
+    from declarative_dataflow_spark.streaming.incremental import (
+        IncrementalAggregate,
+        IncrementalTopK,
+    )
+
+    bindings = [
+        AttributeBinding("?e", "group", "?g"),
+        AttributeBinding("?e", "amount", "?x"),
+    ]
+    engine.create_attribute("group")
+    engine.create_attribute("amount")
+    engine.transact(
+        [
+            Datom.add(1, "group", 0), Datom.add(1, "amount", 5),
+            Datom.add(2, "group", 0), Datom.add(2, "amount", 7),
+            Datom.add(3, "group", 1), Datom.add(3, "amount", 4),
+        ]
+    )
+    initial = {
+        a: engine._transacted[a].dataframe().select("e", "v", "diff")
+        for a in ("group", "amount")
+    }
+    dj = DeltaJoin(spark, ["?e", "?g", "?x"], bindings, initial)
+    if reduce == "aggregate":
+        maint = IncrementalAggregate(dj, ["?g"], AggregationFn.SUM, "?x")
+        plan = Aggregate(
+            ["?g", "?x"],
+            Hector(["?g", "?x", "?e"], bindings),
+            [AggregationFn.SUM],
+            ["?g"],
+            ["?x"],
+            with_variables=["?e"],
+        )
+    else:
+        order = [("?x", False), ("?e", True)]
+        maint = IncrementalTopK(dj, order, 2)
+        plan = TopK(
+            ["?e", "?g", "?x"], Hector(["?e", "?g", "?x"], bindings), order, 2
+        )
+
+    def batch_result() -> Counter:
+        return Counter({tuple(r): 1 for r in engine.implement(plan).collect()})
+
+    acc = batch_result()
+    for batch in (
+        [Datom.add(4, "group", 1), Datom.add(4, "amount", 9)],
+        [Datom.retract(1, "amount", 5)],
+    ):
+        engine.transact(batch)
+        acc = _apply(acc, maint.transact(batch))
+        assert acc == batch_result()
+
+
 def test_incremental_min_retraction(spark):
     """MIN must recover the runner-up when the minimum retracts —
     the case sum-style state cannot handle."""

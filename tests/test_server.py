@@ -4,6 +4,8 @@ Output::QueryDiff src/lib.rs:250-253, JSON shapes README.md:79-88)."""
 import json
 import socket
 
+import pytest
+
 from declarative_dataflow_spark.server import Server, serve
 
 
@@ -519,18 +521,15 @@ def test_ws_client_module_roundtrip(spark):
 def test_ws_frame_codec_property():
     """Property gate: any payload, masked with any key, at any length
     encoding (7-bit / 16-bit / 64-bit) is recovered exactly by the
-    server's frame reader; server-written frames echo back through a
-    masked re-read."""
+    shared frame reader; server-written (unmasked) and client-written
+    (masked) frames round-trip through it."""
 
     import io
     import struct
 
     from hypothesis import given, settings, strategies as st
 
-    from declarative_dataflow_spark.server import (
-        _ws_read_frame,
-        _ws_write_frame,
-    )
+    from declarative_dataflow_spark.ws import read_frame, write_frame
 
     def client_frame(payload: bytes, mask: bytes, opcode=0x1) -> bytes:
         head = bytes([0x80 | opcode])
@@ -557,17 +556,78 @@ def test_ws_frame_codec_property():
         import random as _random
 
         payload = _random.Random(seed).randbytes(size)
-        fin, opcode, got, was_masked = _ws_read_frame(
+        fin, opcode, got, was_masked = read_frame(
             io.BytesIO(client_frame(payload, mask))
         )
         assert (fin, opcode, got, was_masked) == (True, 0x1, payload, True)
-        # server-side writer round-trips through an unmasked read
-        out = io.BytesIO()
-        _ws_write_frame(out, payload)
-        fin2, op2, got2, m2 = _ws_read_frame(io.BytesIO(out.getvalue()))
-        assert (fin2, op2, got2, m2) == (True, 0x1, payload, False)
+        # server-side writer round-trips through an unmasked read, the
+        # client-side writer through a masked one
+        for masked in (False, True):
+            out = io.BytesIO()
+            write_frame(out, payload, mask=masked)
+            frame = read_frame(io.BytesIO(out.getvalue()))
+            assert frame == (True, 0x1, payload, masked)
 
     check()
+
+
+def test_ws_client_rejects_oversized_frame():
+    """The client holds the server's WS_MAX_MESSAGE_BYTES bound: a
+    server frame header declaring 2^40 bytes raises before any payload
+    is read, instead of blocking to buffer it. The fake server keeps
+    the socket open, so a client that tries to read the payload times
+    out instead."""
+
+    import base64
+    import hashlib
+    import struct
+    import threading
+
+    from declarative_dataflow_spark.ws import WsClient
+
+    listener = socket.create_server(("127.0.0.1", 0))
+    port = listener.getsockname()[1]
+    done = threading.Event()
+
+    def fake_server():
+        conn, _ = listener.accept()
+        with conn:
+            f = conn.makefile("rb")
+            key = None
+            while True:
+                line = f.readline()
+                if line in (b"\r\n", b"\n", b""):
+                    break
+                name, _, value = line.decode().partition(":")
+                if name.strip().lower() == "sec-websocket-key":
+                    key = value.strip()
+            guid = "258EAFA5-E914-47DA-95CA-C5AB0DC85B11"
+            accept = base64.b64encode(
+                hashlib.sha1((key + guid).encode()).digest()
+            ).decode()
+            conn.sendall(
+                (
+                    "HTTP/1.1 101 Switching Protocols\r\n"
+                    "Upgrade: websocket\r\n"
+                    "Connection: Upgrade\r\n"
+                    f"Sec-WebSocket-Accept: {accept}\r\n\r\n"
+                ).encode()
+            )
+            conn.sendall(bytes([0x81, 127]) + struct.pack(">Q", 1 << 40))
+            done.wait(30)
+
+    t = threading.Thread(target=fake_server, daemon=True)
+    t.start()
+    try:
+        c = WsClient("127.0.0.1", port)
+        c.sock.settimeout(5)
+        with pytest.raises(ValueError):
+            c.recv_text()
+        c.sock.close()
+    finally:
+        done.set()
+        t.join(10)
+        listener.close()
 
 
 def test_ws_protocol_error_closes(spark):
