@@ -34,7 +34,7 @@ from typing import Any, Callable, Iterable, Optional
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
-from pyspark.sql.types import _parse_datatype_string
+from pyspark.sql.types import StructType, _parse_datatype_string
 from pyspark.sql.window import Window
 
 from .plan.compiler import (
@@ -255,6 +255,20 @@ def local_frame(
         schema=to_arrow_schema(struct),
     )
     return spark.createDataFrame(table, schema=struct)
+
+
+def empty_frame(spark: SparkSession, schema: "str | StructType") -> DataFrame:
+    """A frame with no rows, ``schema`` a DDL string or a StructType:
+    an empty Arrow-built ``LocalRelation``, so reading it runs no Spark
+    job (``createDataFrame([], schema)`` scans an empty RDD instead,
+    one job per read)."""
+
+    struct = (
+        _parse_datatype_string(schema) if isinstance(schema, str) else schema
+    )
+    return spark.createDataFrame(
+        to_arrow_schema(struct).empty_table(), schema=struct
+    )
 
 
 class _TransactedAttribute:
@@ -862,15 +876,19 @@ class Engine:
 
         self.rules[name] = plan
 
-    _static_dedup: bool = False
-
     def catalog(
         self,
         bound: Optional[dict[str, Relation]] = None,
         unbound: Optional[set[str]] = None,
         static_cache: Optional[dict[str, Relation]] = None,
         dynamic_rules: Optional[set[str]] = None,
+        static_dedup: bool = False,
     ) -> Catalog:
+        """The compile catalog over this engine's attributes, rules and
+        tables. Fixpoints pass their ``static_cache`` and
+        ``dynamic_rules``, and ``static_dedup`` when the system is
+        monotone (see ``Catalog.static_dedup``)."""
+
         cat = Catalog(self._attributes, self.rules, bound or {}, unbound)
         cat.tables = {
             name: (lambda df=df: df) for name, df in self._table_cache.items()
@@ -878,7 +896,7 @@ class Engine:
         if static_cache is not None:
             cat.static_cache = static_cache
             cat.dynamic_rules = dynamic_rules or set()
-            cat.static_dedup = self._static_dedup
+            cat.static_dedup = static_dedup
         return cat
 
     def _dynamic_rules(self, recursive: set[str]) -> set[str]:
@@ -1018,7 +1036,6 @@ class Engine:
         monotone = all(
             _is_monotone(self.rules[rn], recursive) for rn in recursive
         )
-        self._static_dedup = monotone
         if monotone:
             totals = self._run_semi_naive(recursive, max_iterations)
         else:
@@ -1050,6 +1067,7 @@ class Engine:
                     unbound=recursive - set(current),
                     static_cache=static_cache,
                     dynamic_rules=dynamic,
+                    static_dedup=False,
                 )
                 try:
                     new_rel = compile_plan(self.rules[rn], cat).distinct()
@@ -1098,6 +1116,7 @@ class Engine:
                 unbound=unbound,
                 static_cache=static_cache,
                 dynamic_rules=dynamic,
+                static_dedup=True,
             )
 
         # Base cases: recursive references drop as unbound (Union

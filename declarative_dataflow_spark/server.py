@@ -26,6 +26,7 @@ import threading
 from typing import Any, Optional
 
 from pyspark.sql import SparkSession
+from pyspark.util import inheritable_thread_target
 
 from .engine import AttributeConfig, Datom, Engine, InputSemantics
 from .plan.wire import decode_value, encode_value, plan_from_dict
@@ -79,6 +80,9 @@ class Server:
         self.closed_inputs: set[str] = set()
         self.shutdown_requested = False
         self._outputs: list[dict] = []
+        # Per subscribed interest: the QueryDiff messages its callback
+        # produced and ``handle`` has not yet moved to the outputs.
+        self._diffs: dict[str, list[dict]] = {}
 
     # -- output plumbing -------------------------------------------------
 
@@ -88,6 +92,12 @@ class Server:
     DIFF_CHUNK_ROWS = 10_000
 
     def _emit_interest(self, name: str):
+        """The interest's callback. It runs on a session worker, so it
+        queues its messages; ``handle`` emits every interest's queue in
+        registration order, whatever order the workers finished in."""
+
+        queue = self._diffs.setdefault(name, [])
+
         def callback(diffs_df, epoch: int) -> None:
             # Transacted relations carry their multiset weight in a
             # `diff` column; it folds into the emitted diff
@@ -107,10 +117,10 @@ class Server:
                     [*[encode_value(v) for v in t[:-drop]], epoch, d]
                 )
                 if len(rows) >= self.DIFF_CHUNK_ROWS:
-                    self._outputs.append({"QueryDiff": [name, rows]})
+                    queue.append({"QueryDiff": [name, rows]})
                     rows = []
             if rows:
-                self._outputs.append({"QueryDiff": [name, rows]})
+                queue.append({"QueryDiff": [name, rows]})
 
         return callback
 
@@ -133,6 +143,11 @@ class Server:
                 self._outputs.append({"Error": f"unknown request {tag}"})
             except Exception as exc:  # surface per-request failures
                 self._outputs.append({"Error": f"{tag}: {exc}"})
+            finally:
+                for name in self.session.interests:
+                    queue = self._diffs.get(name, [])
+                    self._outputs.extend(queue)
+                    queue.clear()
         return self._outputs
 
     def _on_createattribute(self, body: dict) -> None:
@@ -166,6 +181,7 @@ class Server:
 
     def _on_uninterest(self, body: str) -> None:
         self.session.uninterest(body)
+        self._diffs.pop(body, None)
 
     def _on_subscribe(self, body: str) -> None:
         """Interest in an entire attribute: an implicit MatchA rule."""
@@ -262,7 +278,7 @@ class Server:
 
     def _on_disconnect(self, body: Any) -> None:
         for name in list(self.session.interests):
-            self.session.uninterest(name)
+            self._on_uninterest(name)
 
     def _on_shutdown(self, body: Any) -> None:
         self.shutdown_requested = True
@@ -296,7 +312,10 @@ def serve(
         daemon_threads = True
 
     tcp = _TCP((host, port), Handler)
-    thread = threading.Thread(target=tcp.serve_forever, daemon=True)
+    thread = threading.Thread(
+        target=inheritable_thread_target(server.spark)(tcp.serve_forever),
+        daemon=True,
+    )
     thread.start()
     return tcp, thread, tcp.server_address[1]
 
@@ -410,6 +429,9 @@ def serve_ws(
         daemon_threads = True
 
     ws = _TCP((host, port), Handler)
-    thread = threading.Thread(target=ws.serve_forever, daemon=True)
+    thread = threading.Thread(
+        target=inheritable_thread_target(server.spark)(ws.serve_forever),
+        daemon=True,
+    )
     thread.start()
     return ws, thread, ws.server_address[1]

@@ -51,6 +51,7 @@ from ..engine import (
     Datom,
     _delta_step_plan,
     delta_bindings,
+    empty_frame,
     local_frame,
     new_facts,
     semi_naive,
@@ -494,11 +495,22 @@ class DeltaJoin:
         self.epoch += 1
 
         if not pipes:
+            return self._no_change(news)
+        return self._named(functools.reduce(DataFrame.unionByName, pipes))
+
+    def _no_change(self, versions: dict[str, DataFrame]) -> DataFrame:
+        """An epoch without diffs, typed as the core over ``versions``
+        (all strings only while some binding has never had a row)."""
+
+        core = self._core(self._at(versions))
+        if core is None:
             schema = ", ".join(
                 [f"`{v}` string" for v in self.variables] + ["diff long"]
             )
-            return self.spark.createDataFrame([], schema=schema)
-        return self._named(functools.reduce(DataFrame.unionByName, pipes))
+        else:
+            sel = [vcol(v) for v in self.variables] + [DIFF]
+            schema = self._named(core.with_diff().df.select(*sel)).schema
+        return empty_frame(self.spark, schema)
 
 
 def stream_delta_join(
@@ -552,12 +564,14 @@ class _TouchedGroupReduce:
     def __init__(self, inner, group: list[str]):
         self.inner = inner
         self.group = list(group)
-        self.state = self._weigh(inner.current())
+        seed = inner.current()
+        self.state = None if seed is None else self._weigh(seed)[0]
 
-    def _weigh(self, rows: Optional[DataFrame]) -> Optional[DataFrame]:
-        if rows is None:
-            return None
-        return materialize(_fold(self._project(rows), ("__w",)))
+    def _weigh(self, rows: DataFrame) -> tuple[DataFrame, int]:
+        """The inner rows as folded, checkpointed state rows, and how
+        many there are."""
+
+        return materialize_count(_fold(self._project(rows), ("__w",)))
 
     def current(self) -> Optional[DataFrame]:
         """The reduce's output over the whole state, at weight 1; None
@@ -568,8 +582,13 @@ class _TouchedGroupReduce:
         return self._per_slice(self.state).withColumn("diff", F.lit(1))
 
     def transact(self, datoms: Iterable[Datom]) -> DataFrame:
-        delta = self._weigh(self.inner.transact(datoms))
+        delta, n = self._weigh(self.inner.transact(datoms))
         old = delta.limit(0) if self.state is None else self.state
+        if not n:
+            # The state stands; no union with an empty delta, whose
+            # column types may not be the state's.
+            out = self._per_slice(old).withColumn("diff", F.lit(1))
+            return empty_frame(delta.sparkSession, out.schema)
         new = materialize(_fold(old.unionByName(delta), ("__w",)))
         old_slice, new_slice = old, new
         if self.group:
@@ -806,8 +825,18 @@ class IncrementalRecursion:
     # -- helpers ---------------------------------------------------------
 
     def _empty_df(self, rn: str) -> DataFrame:
-        schema = ", ".join(f"`{c}` string" for c in self.cols[rn])
-        return self.spark.createDataFrame([], schema=schema)
+        """No tuples of rule ``rn``, typed as its maintained fixpoint
+        (or its base case while the fixpoint is empty; all strings
+        only when neither compiles)."""
+
+        df = self.totals[rn].df if rn in self.totals else self._eval(
+            self.rules[rn], self._catalog()({}, set(self.recursive))
+        )
+        if df is None:
+            schema = ", ".join(f"`{c}` string" for c in self.cols[rn])
+        else:
+            schema = df.select(*self.cols[rn]).schema
+        return empty_frame(self.spark, schema)
 
     def _catalog(self):
         """Catalog factory over the present facts per attribute (net

@@ -18,6 +18,16 @@ against the previous epoch's snapshot with a distributed exceptAll —
 no driver-side relation state. For the streaming-source path the same
 diffing runs inside foreachBatch (see diff_sink).
 
+All interests advance together, as the reference's one worker steps
+every registered dataflow in the same step: ``advance`` hands each
+interest's step (maintainer transact or replay, granularity window,
+callback) to one session-owned thread pool, sized to the interests up
+to the context's default parallelism, and waits for every step. One
+interest's driver-side plan building then overlaps the other
+interests' Spark jobs; the jobs themselves are unchanged. Each step
+is wrapped with ``inheritable_thread_target``, so its jobs carry the
+caller's job group, description and scheduler pool (ADR 0013).
+
 Scale notes: every frame built from rows held in Python is an Arrow-built
 ``LocalRelation`` with exact size statistics (``engine.local_frame``).
 That covers each transacted attribute's heap, which ad-hoc reads,
@@ -38,12 +48,14 @@ from __future__ import annotations
 
 import functools
 from collections import deque
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from typing import Callable, Iterable, Optional
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.util import inheritable_thread_target
 
-from ..engine import Datom, Engine
+from ..engine import Datom, Engine, empty_frame
 from .diff_sink import DEFAULT_HISTORY_LIMIT, record_bounded
 from .generational import _fold
 
@@ -224,7 +236,7 @@ def _delta_join_for_plan(engine: Engine, plan):
 def _no_diffs(spark) -> DataFrame:
     """An epoch that has nothing to emit."""
 
-    return spark.createDataFrame([], schema="__epoch_diff int")
+    return empty_frame(spark, "__epoch_diff int")
 
 
 def _coalesce_diffs(dfs: list[DataFrame]) -> DataFrame:
@@ -257,6 +269,8 @@ class ReactiveSession:
         self.engine = engine
         self.interests: dict[str, Interest] = {}
         self.epoch = 0
+        self._workers: Optional[ThreadPoolExecutor] = None
+        self._workers_size = 0
 
     def interest(
         self,
@@ -267,6 +281,15 @@ class ReactiveSession:
         history_limit: int = DEFAULT_HISTORY_LIMIT,
         on_evict: Optional[Callable[[int, list], None]] = None,
     ) -> None:
+        """Subscribe to rule ``name``'s diffs, maintained incrementally
+        when the router finds a maintainer (and ``incremental``), else
+        recomputed and diffed per epoch. Each epoch's diffs go to
+        ``callback(diffs, epoch)``, or, without one, into ``history``.
+
+        Callbacks run on the session's worker threads: different
+        interests' callbacks may run at the same time, one interest's
+        never do, and ``advance`` returns only after all of them."""
+
         if name not in self.engine.rules:
             raise KeyError(f"unknown rule {name}")
         dj = _delta_join_for(self.engine, name) if incremental else None
@@ -297,38 +320,81 @@ class ReactiveSession:
         return self.advance(datoms)
 
     def advance(self, datoms: Optional[list[Datom]] = None) -> int:
+        """Advance every interest by one epoch, all together: each
+        interest's step runs on the session's worker pool, so one
+        interest's driver-side planning overlaps the others' Spark
+        jobs. Every interest attempts the epoch; if steps raise, the
+        first error in registration order re-raises once all steps
+        are done, and the epoch does not advance."""
+
         epoch = self.epoch
-        for sub in self.interests.values():
-            if sub.delta_join is None and sub.previous is None:
-                # Attributes may appear after subscription; until the
-                # first successful epoch, keep probing for the
-                # incremental path. A DeltaJoin built here is seeded
-                # from snapshots that already include this epoch's
-                # datoms (engine.transact ran first).
-                sub.delta_join = _delta_join_for(self.engine, sub.name)
-                sub.seeded_post_transact = sub.delta_join is not None
-            if sub.delta_join is not None:
-                diffs = self._advance_incremental(sub, datoms or [])
-            else:
-                diffs = self._advance_recompute(sub)
-            if sub.granularity > 1:
-                sub.pending.append(diffs)
-                if (epoch + 1) % sub.granularity != 0:
-                    continue
-                diffs = _coalesce_diffs(sub.pending)
-                sub.pending = []
-            if sub.callback is not None:
-                sub.callback(diffs, epoch)
-            else:
-                record_bounded(
-                    sub.history, sub.on_evict, epoch, diffs.collect()
+        datoms = datoms or []
+        subs = list(self.interests.values())
+        pool = self._pool(len(subs))
+        # Wrapped at submit time, so every step's Spark jobs carry the
+        # caller's job group, description and scheduler pool.
+        steps = [
+            pool.submit(
+                inheritable_thread_target(self.engine.spark)(
+                    functools.partial(self._step, sub, epoch, datoms)
                 )
+            )
+            for sub in subs
+        ]
+        errors = [f.exception() for f in steps]
+        for error in errors:
+            if error is not None:
+                raise error
         self.epoch += 1
         # The reference advances domain traces as the frontier moves
         # (advance_traces, src/domain/mod.rs:291-341): attributes with
         # trace_slack compact history older than frontier - slack.
         self.engine.advance_traces()
         return epoch
+
+    def _pool(self, n: int) -> ThreadPoolExecutor:
+        """The session's worker pool, one worker per interest up to the
+        context's default parallelism; regrown when interests are
+        added past its size."""
+
+        size = max(
+            1, min(n, self.engine.spark.sparkContext.defaultParallelism)
+        )
+        if size > self._workers_size:
+            if self._workers is not None:
+                self._workers.shutdown(wait=False)
+            self._workers = ThreadPoolExecutor(
+                size, thread_name_prefix="reactive-advance"
+            )
+            self._workers_size = size
+        return self._workers
+
+    def _step(self, sub: Interest, epoch: int, datoms: list[Datom]) -> None:
+        """One interest's share of an epoch: its diffs, its
+        granularity window, its callback or history."""
+
+        if sub.delta_join is None and sub.previous is None:
+            # Attributes may appear after subscription; until the
+            # first successful epoch, keep probing for the
+            # incremental path. A DeltaJoin built here is seeded
+            # from snapshots that already include this epoch's
+            # datoms (engine.transact ran first).
+            sub.delta_join = _delta_join_for(self.engine, sub.name)
+            sub.seeded_post_transact = sub.delta_join is not None
+        if sub.delta_join is not None:
+            diffs = self._advance_incremental(sub, datoms)
+        else:
+            diffs = self._advance_recompute(sub)
+        if sub.granularity > 1:
+            sub.pending.append(diffs)
+            if (epoch + 1) % sub.granularity != 0:
+                return
+            diffs = _coalesce_diffs(sub.pending)
+            sub.pending = []
+        if sub.callback is not None:
+            sub.callback(diffs, epoch)
+        else:
+            record_bounded(sub.history, sub.on_evict, epoch, diffs.collect())
 
     def _advance_incremental(
         self, sub: Interest, datoms: list[Datom]
@@ -339,6 +405,9 @@ class ReactiveSession:
         weighted change rides in `diff`, `__epoch_diff` stays +1."""
 
         if sub.previous is not None:
+            if not datoms:
+                # Nothing to transact: the maintained state stands.
+                return _no_diffs(self.engine.spark)
             diffs = sub.delta_join.transact(datoms)
             return diffs.withColumn("__epoch_diff", F.lit(1))
         sub.previous = True  # replay marker

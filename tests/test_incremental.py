@@ -2147,3 +2147,41 @@ def test_incremental_edge_support_retry_is_noop(spark, tmp_path):
     assert first is not None and first.count() == 4
     retry = maint.process_batch(edges, epoch=0)
     assert retry is None or retry.count() == 0
+
+
+@pytest.mark.parametrize("over", ["hector", "recursion"])
+def test_empty_epoch_keeps_reduce_types(spark, engine, over):
+    """An epoch that touches none of a maintained MAX's attributes
+    leaves the reduce's state typed: without ANSI mode, an all-string
+    empty epoch used to coerce the state to strings, after which MAX
+    compared lexicographically ('9' > '10')."""
+
+    from declarative_dataflow_spark import Aggregate, Hector, NameExpr
+    from declarative_dataflow_spark.plan.plans import AggregationFn
+    from declarative_dataflow_spark.streaming.reactive import ReactiveSession
+
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        engine.create_attribute("edge")
+        engine.create_attribute("other")
+        if over == "hector":
+            inner = Hector(["?x", "?y"], [AttributeBinding("?x", "edge", "?y")])
+        else:
+            engine.register("reach", _reach_rule())
+            inner = NameExpr(["?x", "?y"], "reach")
+        engine.register(
+            "top", Aggregate(["?x", "?y"], inner, [AggregationFn.MAX], ["?x"], ["?y"])
+        )
+        engine.transact([Datom.add(1, "edge", 9)])
+        session = ReactiveSession(engine)
+        session.interest("top")
+        session.advance()  # replay
+        session.transact([Datom.add(5, "other", "x")])  # touches no edge
+        session.transact([Datom.add(1, "edge", 10)])
+        acc = _accumulate(session.interests["top"].history)
+        expected = Counter({tuple(r): 1 for r in engine.interest("top").collect()})
+        assert expected == Counter({(1, 10): 1})
+        assert acc == expected
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)

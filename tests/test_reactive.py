@@ -525,8 +525,10 @@ def test_maintainer_contract_sweep():
 
     import ast
     import inspect
+    import pathlib
 
-    from declarative_dataflow_spark import server
+    import declarative_dataflow_spark
+    from declarative_dataflow_spark import engine, server
     from declarative_dataflow_spark.streaming import incremental, reactive
 
     modules = {m.__name__: ast.parse(inspect.getsource(m)) for m in (incremental, reactive)}
@@ -574,3 +576,189 @@ def test_maintainer_contract_sweep():
     server_src = inspect.getsource(server)
     for codec in ("def _ws_read", "def _ws_write", "struct.unpack"):
         assert codec not in server_src, codec
+
+    # Job attribution: no package module starts a thread or submits a
+    # pool task without wrapping its target in
+    # ``inheritable_thread_target`` (else its Spark jobs lose the
+    # caller's job group, description and scheduler pool), and no
+    # fixpoint state lives on the shared Engine (``_static_dedup`` was
+    # an instance flag each fixpoint run wrote and ``catalog`` read).
+    def wrapped(node) -> bool:
+        """``inheritable_thread_target(f)`` or ``...(session)(f)``."""
+
+        while isinstance(node, ast.Call):
+            node = node.func
+            if isinstance(node, ast.Name) and node.id == "inheritable_thread_target":
+                return True
+        return False
+
+    root = pathlib.Path(declarative_dataflow_spark.__file__).parent
+    starts = []
+    for path in sorted(root.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(encoding="utf-8"))):
+            if not isinstance(node, ast.Call):
+                continue
+            func = node.func
+            name = func.attr if isinstance(func, ast.Attribute) else getattr(func, "id", None)
+            if name == "Thread":
+                target = [k.value for k in node.keywords if k.arg == "target"]
+            elif name in ("submit", "start_new_thread"):
+                target = node.args[:1]
+            else:
+                continue
+            starts.append(f"{path.name}:{node.lineno}")
+            assert target and wrapped(target[0]), starts[-1]
+    assert any(s.startswith("reactive.py:") for s in starts), starts
+
+    with open(engine.__file__, encoding="utf-8") as fh:
+        assert "_static_dedup" not in fh.read()
+
+
+def _people_rules(engine):
+    """``people`` (a DeltaJoin over name and age) and ``ages`` (a MAX
+    per name over the same conjunction, an IncrementalAggregate)."""
+
+    from declarative_dataflow_spark import Aggregate, Hector
+    from declarative_dataflow_spark.plan.plans import (
+        AggregationFn,
+        AttributeBinding,
+    )
+
+    engine.create_attribute("name")
+    engine.create_attribute("age")
+    hector = Hector(
+        ["?e", "?n", "?a"],
+        [AttributeBinding("?e", "name", "?n"), AttributeBinding("?e", "age", "?a")],
+    )
+    engine.register("people", hector)
+    engine.register(
+        "ages",
+        Aggregate(
+            ["?n", "?a"], hector, [AggregationFn.MAX], ["?n"], ["?a"],
+            with_variables=["?e"],
+        ),
+    )
+
+
+def _folded(history):
+    return _fold_rows(r for _, rows in history for r in rows)
+
+
+def test_interests_advance_concurrently(engine):
+    """Two interests' callbacks meet at a barrier: the session runs
+    their steps at the same time (one after the other, the first
+    callback would wait out the timeout)."""
+
+    import threading
+
+    _people_rules(engine)
+    barrier = threading.Barrier(2, timeout=60)
+    met = []
+
+    def meet(name):
+        def callback(diffs, epoch):
+            barrier.wait()
+            met.append((name, epoch))
+
+        return callback
+
+    session = ReactiveSession(engine)
+    session.interest("people", meet("people"))
+    session.interest("ages", meet("ages"))
+    session.transact([Datom.add(1, "name", "ann"), Datom.add(1, "age", 30)])
+    assert sorted(met) == [("ages", 0), ("people", 0)]
+
+
+def test_advance_keeps_the_callers_job_group(spark, engine):
+    """Every job started during ``transact`` under a caller's job group
+    is in that group, and a scratch checkpoint's jobs still name their
+    operator."""
+
+    import time
+
+    _people_rules(engine)
+    engine.transact([Datom.add(1, "name", "ann"), Datom.add(1, "age", 30)])
+    session = ReactiveSession(engine)
+    session.interest("people")
+    session.interest("ages")
+    session.advance()
+
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+
+    def jobs():
+        jsc.listenerBus().waitUntilEmpty()
+        seq = jsc.statusStore().jobsList(None)
+        return {seq.apply(i).jobId(): seq.apply(i) for i in range(seq.size())}
+
+    before = jobs()
+    group = f"test_reactive_{time.monotonic_ns()}"
+    sc.setJobGroup(group, "reactive transact", False)
+    try:
+        session.transact([Datom.add(2, "name", "bob"), Datom.add(2, "age", 40)])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    started = [j for i, j in jobs().items() if i not in before]
+    assert started
+    groups = {j.jobGroup().get() if j.jobGroup().isDefined() else None for j in started}
+    assert groups == {group}
+    described = {
+        j.description().get() for j in started if j.description().isDefined()
+    }
+    assert any("_TouchedGroupReduce" in d for d in described), described
+
+
+def test_empty_advance_runs_no_job(spark, engine):
+    """An advance without datoms (the server runs one per new
+    subscription) leaves an already-replayed maintainer alone: no
+    Spark job, and its folded diffs unchanged."""
+
+    import time
+
+    _people_rules(engine)
+    engine.transact([Datom.add(1, "name", "ann"), Datom.add(1, "age", 30)])
+    session = ReactiveSession(engine)
+    session.interest("ages")
+    session.advance()  # replay
+    history = session.interests["ages"].history
+    replayed = _folded(history)
+
+    sc = spark.sparkContext
+    group = f"test_reactive_{time.monotonic_ns()}"
+    sc.setJobGroup(group, "empty advance", False)
+    try:
+        session.advance()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert _folded(history) == replayed == _fold_rows(
+        engine.interest("ages").collect()
+    )
+
+
+def test_failing_interest_does_not_starve_the_others(engine):
+    """Interest ``people``'s callback raises once: ``transact`` raises,
+    but ``ages`` (registered after it) still advanced in that epoch,
+    so its folded diffs equal ``Engine.interest`` afterwards."""
+
+    _people_rules(engine)
+    session = ReactiveSession(engine)
+    calls = []
+
+    def flaky(diffs, epoch):
+        calls.append(epoch)
+        if len(calls) == 2:
+            raise RuntimeError("callback failed")
+
+    session.interest("people", flaky)
+    session.interest("ages")
+    session.transact([Datom.add(1, "name", "ann"), Datom.add(1, "age", 30)])
+    with pytest.raises(RuntimeError, match="callback failed"):
+        session.transact([Datom.add(2, "name", "ann"), Datom.add(2, "age", 41)])
+    assert session.epoch == 1  # a failed epoch does not advance
+    session.transact([Datom.add(3, "name", "bob"), Datom.add(3, "age", 20)])
+    assert _folded(session.interests["ages"].history) == _fold_rows(
+        engine.interest("ages").collect()
+    )

@@ -662,3 +662,69 @@ def test_ws_protocol_error_closes(spark):
     finally:
         ws.shutdown()
         ws.server_close()
+
+
+def test_query_diffs_in_registration_order(spark):
+    """An advance's QueryDiffs come out in interest registration order,
+    whatever order the session's workers finish their steps in."""
+
+    srv = Server(spark)
+    names = ["by_age", "people", "ages"]
+    srv.handle(
+        [
+            {"CreateAttribute": {"name": "name", "config": None}},
+            {"CreateAttribute": {"name": "age", "config": None}},
+            {
+                "Register": {
+                    "rules": [
+                        {
+                            "name": "by_age",
+                            "plan": {
+                                "Aggregate": {
+                                    "variables": [1, 2],
+                                    "plan": {
+                                        "Join": {
+                                            "variables": [0],
+                                            "left_plan": {"MatchA": [0, "name", 1]},
+                                            "right_plan": {"MatchA": [0, "age", 2]},
+                                        }
+                                    },
+                                    "aggregation_fns": ["MAX"],
+                                    "key_variables": [1],
+                                    "aggregation_variables": [2],
+                                    "with_variables": [0],
+                                }
+                            },
+                        },
+                        {
+                            "name": "people",
+                            "plan": {
+                                "Join": {
+                                    "variables": [0],
+                                    "left_plan": {"MatchA": [0, "name", 1]},
+                                    "right_plan": {"MatchA": [0, "age", 2]},
+                                }
+                            },
+                        },
+                        {"name": "ages", "plan": {"MatchA": [0, "age", 2]}},
+                    ],
+                    "publish": names,
+                }
+            },
+            *[{"Interest": {"name": n}} for n in names],
+        ]
+    )
+    for e in range(1, 5):
+        out = srv.handle(
+            [
+                {
+                    "Transact": [
+                        [{"Eid": e}, "name", f"n{e % 2}", None, 1],
+                        [{"Eid": e}, "age", {"Number": 10 * e}, None, 1],
+                    ]
+                }
+            ]
+        )
+        order = [o["QueryDiff"][0] for o in out]
+        assert order == sorted(order, key=names.index), order
+        assert set(order) == set(names), order
